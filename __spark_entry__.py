@@ -22,7 +22,7 @@ from xhs_ocr_spark.session import ship_package  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: derive an interleaved text+media corpus from the sf0.001
     documents table, run the full extraction pipeline (vectorized text
-    route + batched mapInPandas OCR route + offset re-merge), return the
+    route + batched mapInArrow OCR route + offset re-merge), return the
     flat span table."""
     ship_package(spark)  # executors need the package regardless of cwd
     return Q.q_extract_flagship(spark, "/root/testdata/sf0.001")

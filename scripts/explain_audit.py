@@ -151,7 +151,7 @@ def main() -> None:
             # broadcast), nothing quadratic, nothing python
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
             ("merge is a single sort-merge join", r"SortMergeJoin", True),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
         ],
     )
     for nm in ("q42_repetition", "q43_pii_scrub", "q46_stratified_sample"):
@@ -162,7 +162,7 @@ def main() -> None:
                 # pure per-row projections: scan-speed at 10^12 docs
                 ("no exchange (narrow plan)", r"\(\d+\) Exchange", False),
                 ("no join", r"Join", False),
-                ("no python anywhere", r"EvalPython|MapInPandas", False),
+                ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
             ],
         )
     audit(
@@ -176,7 +176,7 @@ def main() -> None:
             ("eval side broadcast", r"BroadcastHashJoin", True),
             ("no sort-merge join", r"SortMergeJoin", False),
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
         ],
     )
     audit(
@@ -189,7 +189,7 @@ def main() -> None:
             ("partial min before shuffle", r"partial_min", True),
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
             ("no window over fp", r"RunningWindowFunction|\(\d+\) Window", False),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
         ],
     )
 
@@ -210,7 +210,7 @@ def main() -> None:
             # at its order bracket)
             ("per-row window partitioned by shard", r"\], \[[^\]]*_shard[^\]]*\], \[", True),
             ("no sort-merge join", r"SortMergeJoin", False),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
         ],
     )
     audit(
@@ -223,7 +223,7 @@ def main() -> None:
             # shuffle at corpus scale), but nothing quadratic or python
             ("signature staging exchange present", r"REPARTITION", True),
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
         ],
     )
     # the group cardinality is CONFIGURABLE (round-5 verdict item 4:
@@ -250,7 +250,7 @@ def main() -> None:
                         True,
                     ),
                     ("no sort-merge join", r"SortMergeJoin", False),
-                    ("no python anywhere", r"EvalPython|MapInPandas", False),
+                    ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
                 ],
             )
     os.environ.pop("XHS_SHUFFLE_PREFIX_LEN", None)
@@ -263,7 +263,7 @@ def main() -> None:
             ("domain counts partially aggregated", r"partial_count", True),
             ("rate dim broadcast to rows", r"BroadcastHashJoin", True),
             ("no sort-merge join", r"SortMergeJoin", False),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
         ],
     )
 
@@ -276,7 +276,7 @@ def main() -> None:
             ("shuffle on the session key", r"hashpartitioning\(user_id", True),
             ("window partitioned by key", r"\], \[[^\]]*user_id[^\]]*\], \[", True),
             ("no join", r"Join", False),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
         ],
     )
     audit(
@@ -288,7 +288,7 @@ def main() -> None:
             # SUMMARY frame (one row per active bucket) windows by key
             ("event window partitioned by (key, bucket)", r"\], \[[^\]]*_bkt[^\]]*\], \[", True),
             ("stitch join is an equi-join", r"NestedLoop|CartesianProduct", False),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
         ],
     )
     audit(
@@ -301,7 +301,7 @@ def main() -> None:
             # blanket no-nested-loop invariant here); the tf x df term
             # join strategy is left to the planner
             ("partial counts before shuffles", r"partial_count", True),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
             ("no cartesian product", r"CartesianProduct", False),
         ],
     )
@@ -318,7 +318,7 @@ def main() -> None:
             # visible plan's partials are the per-term/per-doc SUMs over
             # that aggregate.
             ("partial aggregation before shuffles", r"partial_(count|sum)", True),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
             ("no cartesian product", r"CartesianProduct", False),
         ],
     )
@@ -329,7 +329,7 @@ def main() -> None:
             # pure projection: sequence+slice+posexplode in one narrow
             # stage — chunking must never shuffle or leave the JVM
             ("no shuffle anywhere", r"Exchange", False),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
             ("no join anywhere", r"Join", False),
         ],
     )
@@ -386,8 +386,8 @@ def main() -> None:
         [
             ("span skew-spread exchange", r"REPARTITION_BY_NUM", True),
             # unified routing: exactly ONE Arrow-batched python stage (the
-            # OCR mapInPandas), sitting ABOVE the spread exchange
-            ("arrow-batched python stage", r"MapInPandas|ArrowEvalPython", True),
+            # OCR mapInArrow), sitting ABOVE the spread exchange
+            ("arrow-batched python stage", r"MapInArrow", True),
             ("no sort-merge join anywhere", r"SortMergeJoin", False),
             ("no python row UDFs", r"BatchEvalPython", False),
         ],
@@ -397,7 +397,7 @@ def main() -> None:
     plan_txt = open(os.path.join(OUT, "flagship_flat.txt")).read()
     n_scan = len(re.findall(r"^\(\d+\) Scan parquet", plan_txt, re.M))
     n_py = len(
-        re.findall(r"^\(\d+\) (?:MapInPandas|ArrowEvalPython)", plan_txt, re.M)
+        re.findall(r"^\(\d+\) (?:MapInArrow|MapInPandas|ArrowEvalPython)", plan_txt, re.M)
     )
     for label, want in (
         ("exactly one parquet scan", n_scan == 1),
@@ -411,7 +411,7 @@ def main() -> None:
     # q48 composed corpus pipeline (round-4 verdict item 1): the funnel
     # plan sits entirely ABOVE the localCheckpoint of the extracted text,
     # so it must contain NO parquet scan and NO python stage at all (the
-    # one corpus scan + one mapInPandas ran exactly once, inside the
+    # one corpus scan + one mapInArrow ran exactly once, inside the
     # checkpointed flagship job whose shape flagship_flat pins); dedup
     # stages must aggregate (partial_min / partial_collect_set), never
     # window over a fingerprint; nothing quadratic.
@@ -422,7 +422,7 @@ def main() -> None:
             # default (stage-checkpointed) form: every stage materialized
             # exactly once — the funnel plan reads only checkpointed RDDs
             ("no parquet scan above the checkpoints", r"(?m)^\(\d+\) Scan parquet", False),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
         ],
     )
@@ -451,7 +451,7 @@ def main() -> None:
         Q.queries()["q63_bpe_budget"](spark, SF),
         [
             ("no parquet scan above the selection checkpoint", r"(?m)^\(\d+\) Scan parquet", False),
-            ("no python above the selection checkpoint", r"EvalPython|MapInPandas", False),
+            ("no python above the selection checkpoint", r"EvalPython|MapInPandas|MapInArrow", False),
             ("per-row window partitioned by shard", r"\], \[[^\]]*_shard[^\]]*\], \[", True),
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
         ],
@@ -471,7 +471,7 @@ def main() -> None:
         Q.queries()["q61_corpus_assembly"](spark, SF),
         [
             ("no parquet scan above the checkpoints", r"(?m)^\(\d+\) Scan parquet", False),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
             ("packing window partitioned by group", r"\], \[[^\]]*_grp[^\]]*\], \[", True),
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
         ],
@@ -491,7 +491,7 @@ def main() -> None:
         _cf(_dts(Q.queries()["q30_extract_flagship"](spark, SF)), stage_checkpoints=False),
         [
             ("no parquet scan above the base checkpoint", r"(?m)^\(\d+\) Scan parquet", False),
-            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
             ("paragraph dedup partial_min before shuffle", r"partial_min", True),
             ("no window over fp", r"RunningWindowFunction|\(\d+\) Window", False),
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),

@@ -40,7 +40,9 @@ FLAT_SCHEMA = (
     "doc_id string, kind string, text string, media_ref string, offset int, "
     "media_bytes binary"
 )
-OUT_SCHEMA = "doc_id string, kind string, text string, media_ref string, offset int"
+OUT_SCHEMA = (
+    "doc_id string, kind string, text string, media_ref string, offset int, reason string"
+)
 
 
 def _render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -99,9 +101,9 @@ def main() -> None:
         return best
 
     ocr = _make_ocr_routed(masks_bc)
-    naive = staged.repartition(parts, "doc_id").mapInPandas(ocr, schema=OUT_SCHEMA)
+    naive = staged.repartition(parts, "doc_id").mapInArrow(ocr, schema=OUT_SCHEMA)
     t_naive = timed(naive.where(F.col("text").isNotNull()))
-    spread = staged.repartition(parts, "doc_id", "offset").mapInPandas(
+    spread = staged.repartition(parts, "doc_id", "offset").mapInArrow(
         ocr, schema=OUT_SCHEMA
     )
     t_spread = timed(spread.where(F.col("text").isNotNull()))

@@ -1,0 +1,204 @@
+"""The flagship's Arrow OCR stage: the banded batch decoder against the
+per-payload extract_from_bytes oracle, dead-letter reasons through the
+mapInArrow stage, and the per-task zip re-read guard."""
+
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
+
+import numpy as np
+import pyarrow as pa
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from xhs_ocr_spark import _zipguard
+from xhs_ocr_spark.extraction import raw_image as RI
+from xhs_ocr_spark.extraction import semantics as S
+from xhs_ocr_spark.extraction.pipeline import extract_spans_with_deadletter
+
+MASKS = RI.masks_by_key(RI.mask_library())
+
+
+def _altered_library() -> dict:
+    """The full library with one fractional-alpha mask under every
+    (xhs, aibox, tag) key and one binary but non-row-uniform mask under
+    every (tiktok, futurecloud, tag) key — both force the fallback."""
+    out = dict(MASKS)
+    for tag in S.TAGS:
+        key = ("xhs", "aibox", tag)
+        m = RI.decode_image(out[key][1]).copy()
+        m[:, :, 3] = np.where(m[:, :, 3] == 255, 200, 0)  # fractional alpha
+        out[key] = [out[key][0], m.tobytes(), *out[key][2:]]
+        key = ("tiktok", "futurecloud", tag)
+        m = RI.decode_image(out[key][0]).copy()
+        m[RI.HEADER_BANDS * RI.BH :, RI.W // 2 :, 3] = 0  # right half of every band
+        out[key] = [m.tobytes(), *out[key][1:]]
+    return out
+
+
+ALTERED = _altered_library()
+
+
+def _per_payload(p, masks):
+    try:
+        txt = RI.extract_from_bytes(p, masks)
+    except Exception:
+        return None, "corrupt_payload"
+    return txt, (None if txt is not None else "all_masks_failed")
+
+
+_payload = st.builds(
+    lambda i, noise: RI.render_media_image(f"mem://doc-{i}/{i % 7}", noise_rows=noise),
+    st.integers(0, 100_000),
+    st.sampled_from([0, 0, 3, 40]),
+)
+
+
+@st.composite
+def _mangled(draw):
+    p = draw(_payload)
+    n_blocks = p[5]
+    op = draw(st.sampled_from(
+        ["none", "flip", "header", "n_blocks", "marker", "band_meta", "truncate", "cut_bands",
+         "empty", "null"]
+    ))
+    b = bytearray(p)
+    if op == "flip":
+        b[draw(st.integers(0, len(b) - 1))] ^= 1 << draw(st.integers(0, 7))
+    elif op == "header":  # magic, version, tag, app, n_blocks, hw bytes
+        b[draw(st.integers(0, 7))] = draw(st.integers(0, 255))
+    elif op == "n_blocks":  # trips the size guard or reads past the content
+        b[5] = draw(st.integers(0, n_blocks + 3))
+    elif op in ("marker", "band_meta"):  # MARKER, or geometry/score/text length
+        band = RI.HEADER_BANDS + draw(st.integers(0, max(n_blocks - 1, 0)))
+        at = 0 if op == "marker" else draw(st.integers(1, 9))
+        b[band * RI.BH * RI.W * 4 + at] = draw(st.integers(0, 255))
+    elif op == "truncate":
+        return p[: draw(st.integers(0, len(p)))]
+    elif op == "cut_bands":  # whole bands missing: too few for n_blocks
+        return p[: RI.BH * RI.W * 4 * draw(st.integers(0, RI.HEADER_BANDS + n_blocks))]
+    elif op == "empty":
+        return b""
+    elif op == "null":
+        return None
+    return bytes(b)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(_mangled(), min_size=1, max_size=25), st.booleans())
+def test_batch_decoder_equals_per_payload_oracle(payloads, altered):
+    masks = ALTERED if altered else MASKS
+    assert RI.extract_batch(payloads, masks) == [_per_payload(p, masks) for p in payloads]
+
+
+def test_batch_decoder_covers_both_routes():
+    """The altered keys really take the fallback, the rest stay banded,
+    and both agree with the oracle over a fixed rendered sample."""
+    for tag in S.TAGS:
+        assert RI._band_plan(ALTERED, ("xhs", "aibox", tag)) is None
+        assert RI._band_plan(ALTERED, ("tiktok", "futurecloud", tag)) is None
+        assert RI._band_plan(ALTERED, ("xhs", "futurecloud", tag)) is not None
+        assert RI._band_plan(MASKS, ("xhs", "aibox", tag)) is not None
+    payloads = [RI.render_media_image(f"mem://cov-{i}/{i % 5}") for i in range(400)]
+    payloads += [p[:-1] for p in payloads[:20]] + [b"", None]
+    for masks in (MASKS, ALTERED):
+        got = RI.extract_batch(payloads, masks)
+        assert got == [_per_payload(p, masks) for p in payloads]
+        reasons = {r for _, r in got}
+        assert {None, "all_masks_failed", "corrupt_payload"} <= reasons
+
+
+def test_dead_letter_reasons_through_arrow_stage(spark):
+    """corrupt_payload and all_masks_failed keep their reasons through
+    extract_spans_with_deadletter's mapInArrow stage."""
+    refs = [f"mem://dl/{i}" for i in range(60)]
+    good = next(r for r in refs if S.extract_media_span(r) is not None)
+    failing = next(r for r in refs if S.extract_media_span(r) is None)
+    text = "plain words that survive the classifier"
+    span = lambda kind, off, ref="", payload=None, text="": {  # noqa: E731
+        "kind": kind, "text": text, "media_ref": ref, "offset": off, "media_bytes": payload,
+    }
+    docs = spark.createDataFrame(
+        [
+            (
+                "d1",
+                [
+                    span("text", 0, text=text),
+                    span("media", 1, good, RI.render_media_image(good)),
+                    span("media", 2, failing, RI.render_media_image(failing)),
+                    span("media", 3, "bad:truncated", RI.render_media_image(good)[:-3]),
+                    span("media", 4, failing),  # no payload: the ref path
+                ],
+            )
+        ],
+        "doc_id string, spans array<struct<kind string, text string, "
+        "media_ref string, offset int, media_bytes binary>>",
+    )
+    ok, dead = extract_spans_with_deadletter(docs)
+    assert sorted((r["order"], r["text"]) for r in ok.collect()) == [
+        (0, S.classify_text_span(text)),
+        (1, S.extract_media_span(good)),
+    ]
+    assert sorted((r["order"], r["media_ref"], r["reason"]) for r in dead.collect()) == [
+        (2, failing, "all_masks_failed"),
+        (3, "bad:truncated", "corrupt_payload"),
+        (4, failing, "all_masks_failed"),
+    ]
+
+
+def _write_zip(path, modules: dict) -> None:
+    tmp = str(path) + ".tmp"
+    with zipfile.ZipFile(tmp, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+    os.replace(tmp, path)
+
+
+def test_zip_guard_rereads_only_changed_archives(tmp_path, monkeypatch):
+    assert _zipguard.installed() == (sys.version_info < (3, 13))
+    archive = tmp_path / "guarded.zip"
+    _write_zip(archive, {"_zg_probe_a": "X = 1\n"})
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        assert importlib.import_module("_zg_probe_a").X == 1
+        importlib.invalidate_caches()  # the importer records its archive key
+
+        reads = []
+        real = zipimport._read_directory
+
+        def counted(path):
+            reads.append(path)
+            return real(path)
+
+        monkeypatch.setattr(zipimport, "_read_directory", counted)
+        importlib.invalidate_caches()
+        assert reads == []  # no archive on sys.path changed
+
+        _write_zip(archive, {"_zg_probe_a": "X = 1\n", "_zg_probe_b": "Y = 2\n"})
+        importlib.invalidate_caches()
+        assert importlib.import_module("_zg_probe_b").Y == 2
+        assert str(archive) in reads
+    finally:
+        for name in ("_zg_probe_a", "_zg_probe_b"):
+            sys.modules.pop(name, None)
+
+
+def test_zip_guard_installed_in_every_worker(spark):
+    """Every Python worker that runs a package function has the guard."""
+
+    def probe(batches):
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"pid": [os.getpid()], "guarded": [_zipguard.installed()]}
+        )
+
+    rows = (
+        spark.range(0, 64, numPartitions=8)
+        .mapInArrow(probe, "pid long, guarded boolean")
+        .collect()
+    )
+    assert len(rows) == 8
+    assert all(r["guarded"] == (sys.version_info < (3, 13)) for r in rows)

@@ -5,7 +5,7 @@ single-threaded Python OCR/ETL tool) as an idiomatic Spark job:
 
 - interleaved text+media documents: ``doc_id string,
   spans array<struct<kind string, text string, media_ref string, offset int>>``
-- media spans routed through a batched ``mapInPandas`` OCR stage with a
+- media spans routed through a batched ``mapInArrow`` OCR stage with a
   per-executor engine (reference: one subprocess + one shared temp file per
   image, core/run.py:342-514),
 - text spans through a vectorized boilerplate classifier,
@@ -16,5 +16,7 @@ single-threaded Python OCR/ETL tool) as an idiomatic Spark job:
 No code is copied from the reference; file:line citations in docstrings point
 at the behavior being re-implemented.
 """
+
+from . import _zipguard  # noqa: F401  (per-task zip re-read guard, see module)
 
 __version__ = "0.1.0"

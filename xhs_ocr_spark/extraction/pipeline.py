@@ -10,7 +10,7 @@ Plan shape (designed for 100 TB / 1000 executors, tested on local[N]):
       → Project: text spans classified IN PLACE by a pure-expression
       │ boilerplate classifier (split/filter/size built-ins, JVM-side,
       │ NULL = boilerplate-dropped); media spans untouched
-      → ONE mapInPandas stage routing per-row inside the Arrow batch:
+      → ONE mapInArrow stage routing per-row inside the Arrow batch:
       │ media rows' raw-RGBA payloads decoded, alpha-composited against
       │ the BROADCAST mask library, text read from surviving pixel
       │ regions (engine initialized once per python worker, reused
@@ -18,7 +18,7 @@ Plan shape (designed for 100 TB / 1000 executors, tested on local[N]):
       │ and funnels every image through one temp file, core/run.py:407;
       │ here: no disk, no IPC, batched; corrupt payloads and
       │ all-masks-failed both -> NULL = F10 dead letter); text rows pass
-      │ through untouched
+      │ through as Arrow buffers, never converted to Python objects
       → filter text IS NOT NULL (stops at the python barrier — Catalyst
       │ never pushes predicates below a python eval, so nothing
       │ re-executes)
@@ -43,11 +43,13 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
+from .raw_image import ALL_MASKS_FAILED, extract_batch
 from .semantics import (
     BOILERPLATE_MAX_RATIO,
     BOILERPLATE_TOKENS,
@@ -103,95 +105,67 @@ class _Engine:
             cls._instance = cls()
         return cls._instance
 
-    def extract_batch(
-        self,
-        media_refs: pd.Series,
-        media_bytes: pd.Series | None = None,
-        masks: dict | None = None,
-    ) -> pd.Series:
-        # vectorized over the Arrow batch (U2/U3 bytes protocol,
-        # core/ppocr_api.py:128-140). When the span carries a raw RGBA
-        # payload, the engine DECODES THE BYTES: ordered mask fallback +
-        # alpha composite + OCR over surviving pixel regions
-        # (raw_image.extract_from_bytes = core/run.py:375-501). Spans
-        # without bytes (legacy corpora) fall back to the hash-derived
-        # stand-in; both paths share one semantics definition and are
-        # differential-tested equal.
-        if media_bytes is not None and masks is not None:
-            from .raw_image import extract_from_bytes
+    def extract_batch(self, media_refs: list, media_bytes: list, masks: dict) -> tuple[list, list]:
+        """(texts, reasons) for one Arrow batch's media rows (U2/U3 bytes
+        protocol, core/ppocr_api.py:128-140). A span carrying a raw RGBA
+        payload is DECODED FROM ITS BYTES: ordered mask fallback + alpha
+        composite + OCR over surviving pixel regions
+        (raw_image.extract_batch = core/run.py:375-501). Spans without
+        bytes (legacy corpora) fall back to the hash-derived stand-in;
+        both paths share one semantics definition and are
+        differential-tested equal."""
+        decoded = iter(extract_batch([b for b in media_bytes if b], masks))
+        out = [
+            next(decoded) if b else _ref_outcome(ref)
+            for ref, b in zip(media_refs, media_bytes)
+        ]
+        return [t for t, _ in out], [r for _, r in out]
 
-            def one(ref, payload):
-                if payload is not None and len(payload) > 0:
-                    try:
-                        txt = extract_from_bytes(bytes(payload), masks)
-                    except Exception:
-                        # corrupt/truncated payload (bad magic, wrong
-                        # length, mangled text bytes): F10 dead letter,
-                        # NOT a task failure — one bad image at 10^12
-                        # docs must never abort the wave (reference logs
-                        # and continues, core/run.py:640-642)
-                        return None, "corrupt_payload"
-                else:
-                    txt = extract_media_span(ref) if ref else None
-                return txt, (None if txt is not None else "all_masks_failed")
 
-            out = [one(r, b) for r, b in zip(media_refs, media_bytes)]
-            return (
-                pd.Series([t for t, _ in out], index=media_refs.index, dtype=object),
-                pd.Series([r for _, r in out], index=media_refs.index, dtype=object),
-            )
-        texts = media_refs.map(extract_media_span, na_action="ignore")
-        # na_action='ignore' yields NaN (not None) for a null media_ref;
-        # `t is not None` would then record a NULL reason for that dead
-        # letter (ADVICE r3) — pd.isna covers both None and NaN, and the
-        # texts series is normalized back to None for Arrow.
-        texts = texts.where(pd.notna(texts), None)
-        reasons = pd.Series(
-            ["all_masks_failed" if pd.isna(t) else None for t in texts],
-            index=media_refs.index,
-            dtype=object,
-        )
-        return texts, reasons
+def _ref_outcome(ref: str | None) -> tuple[str | None, str | None]:
+    txt = extract_media_span(ref) if ref else None
+    return txt, (None if txt is not None else ALL_MASKS_FAILED)
 
 
 _OUT_COLS = ["doc_id", "kind", "text", "media_ref", "offset", "reason"]
 
 
-def _ocr_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    engine = _Engine.get()  # init BEFORE the batch loop; reused across batches
-    for pdf in batches:
-        out = pdf.copy()
-        out["text"], out["reason"] = engine.extract_batch(pdf["media_ref"])
-        yield out[_OUT_COLS]
-
-
 def _make_ocr_routed(masks_bc):
-    """Unified-stream OCR stage factory: media rows get OCR'd (bytes path
-    when the span carries a payload), text rows pass through untouched
-    (their `text` already holds the JVM classifier output, NULL =
-    boilerplate-dropped). ``masks_bc`` is the broadcast mask library —
-    resolved to its value INSIDE the executor task, once per worker."""
+    """Unified-stream OCR stage factory (a mapInArrow function): media rows
+    get OCR'd, text rows pass through as Arrow buffers and never become
+    Python objects (their `text` already holds the JVM classifier output,
+    NULL = boilerplate-dropped). Only the media rows' media_ref and
+    media_bytes are taken into Python; the results go back with
+    replace_with_mask in the input column's Arrow type. ``masks_bc`` is
+    the broadcast mask library — resolved to its value INSIDE the
+    executor task, once per worker."""
 
-    def ocr_routed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        engine = _Engine.get()
-        masks = masks_bc.value if masks_bc is not None else None
-        for pdf in batches:
-            media = pdf["kind"].to_numpy() == "media"
-            if media.any():
-                out = pdf.copy()
-                out["reason"] = None
+    def ocr_routed(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        engine = _Engine.get()  # init BEFORE the batch loop; reused across batches
+        masks = masks_bc.value
+        for batch in batches:
+            text = batch.column("text")
+            reason = pa.nulls(batch.num_rows, text.type)
+            media = pc.fill_null(pc.equal(batch.column("kind"), "media"), False)
+            if pc.any(media).as_py():
                 texts, reasons = engine.extract_batch(
-                    pdf.loc[media, "media_ref"],
-                    pdf.loc[media, "media_bytes"]
-                    if "media_bytes" in pdf.columns
-                    else None,
+                    pc.filter(batch.column("media_ref"), media).to_pylist(),
+                    pc.filter(batch.column("media_bytes"), media).to_pylist(),
                     masks,
                 )
-                out.loc[media, "text"] = texts
-                out.loc[media, "reason"] = reasons
-            else:
-                out = pdf.assign(reason=None)
-            yield out[_OUT_COLS]
+                text = pc.replace_with_mask(text, media, pa.array(texts, text.type))
+                reason = pc.replace_with_mask(reason, media, pa.array(reasons, text.type))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("doc_id"),
+                    batch.column("kind"),
+                    text,
+                    batch.column("media_ref"),
+                    batch.column("offset"),
+                    reason,
+                ],
+                names=_OUT_COLS,
+            )
 
     return ocr_routed
 
@@ -231,41 +205,6 @@ def classify_text_expr(text_col) -> "F.Column":
         (F.size(ws) > 0) & (hits / F.size(ws) <= F.lit(BOILERPLATE_MAX_RATIO)),
         F.concat_ws(" ", ws),
     )
-
-
-def classify_text_route(flat_text: DataFrame) -> DataFrame:
-    """Row-level wrapper (standalone use): keep survivors, rewrite text."""
-    return flat_text.withColumn(
-        "text", classify_text_expr(F.col("text"))
-    ).where(F.col("text").isNotNull())
-
-
-def ocr_media_route(
-    flat_media: DataFrame,
-    spread_partitions: int | None = None,
-    keep_failures: bool = False,
-    pre_spread: bool = False,
-) -> DataFrame:
-    """Media spans through the batched OCR stage.
-
-    repartition by (doc_id, offset): each span is independent, so a
-    media-heavy document fans out across partitions instead of pinning one
-    executor (skew handling per north_star; AQE coalesces the tail).
-    ``pre_spread=True`` skips it — the extract_spans* pipelines already
-    spread ALL spans behind the single shared exchange.
-
-    ``keep_failures=False`` drops all-masks-failed spans (the reference
-    logs and skips, core/run.py:499-501); ``True`` keeps them with NULL
-    text so callers can route them to a dead-letter table."""
-    if pre_spread:
-        spread = flat_media
-    else:
-        parts = spread_partitions or flat_media.sparkSession.sparkContext.defaultParallelism * 2
-        spread = flat_media.repartition(parts, "doc_id", "offset")
-    done = spread.mapInPandas(_ocr_media, schema=_FLAT_SCHEMA)
-    if keep_failures:
-        return done
-    return done.where(F.col("text").isNotNull())  # F10 dead-letter drop
 
 
 def reassemble(extracted_flat: DataFrame) -> DataFrame:
@@ -324,7 +263,9 @@ def _spread_flat(docs: DataFrame, spread_partitions: int | None) -> DataFrame:
     pass at 800k docs, 331 MB compressed). But on SMALL inputs the extra
     waves cost more than the tail they amortize (measured ~10-25% slower
     at 50k docs / 24 MB on 32 cores: per-task overhead stops being
-    negligible when tasks shrink to ~0.2 MB of scan input). Policy:
+    negligible when tasks shrink to ~0.2 MB of scan input — measured
+    before the _zipguard fix removed most of the per-task Python worker
+    cost, so the clamp below may now be conservative). Policy:
     one spread task per ~4 MB of Catalyst-estimated input, clamped to
     [2x, 4x] parallelism — small corpora keep 2 waves, everything at
     scale (including unknown-stats inputs) gets the 4-wave tail
@@ -354,8 +295,9 @@ def _extracted(docs: DataFrame, spread_partitions: int | None) -> DataFrame:
     - the classifier runs ONCE per span, JVM-side, in the Project directly
       below the Python stage (text column = classifier output for text
       rows, untouched for media rows);
-    - ONE mapInPandas consumes the whole stream: media rows get OCR'd
-      (vectorized mask per Arrow batch), text rows pass through;
+    - ONE mapInArrow consumes the whole stream: media rows get OCR'd
+      (raw_image.extract_batch over the batch's media rows), text rows
+      pass through as Arrow buffers;
     - downstream NULL filters stop at the Python barrier (Catalyst never
       pushes predicates below a python eval), so nothing re-executes.
 
@@ -374,7 +316,7 @@ def _extracted(docs: DataFrame, spread_partitions: int | None) -> DataFrame:
         "media_bytes",
     )
     masks_bc = broadcast_mask_library(docs.sparkSession)
-    return staged.mapInPandas(_make_ocr_routed(masks_bc), schema=_FLAT_SCHEMA)
+    return staged.mapInArrow(_make_ocr_routed(masks_bc), schema=_FLAT_SCHEMA)
 
 
 def extract_spans(docs: DataFrame, spread_partitions: int | None = None) -> DataFrame:

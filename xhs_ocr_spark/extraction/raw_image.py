@@ -62,6 +62,13 @@ VERSION = 1
 MARKER = 0xA5   # first byte of a live block band; zeroed by the composite
 _META_LEN = 10  # marker + x(2) + y(2) + w + h + score(2) + text_len
 _ROW_BYTES = W * 4
+_BAND_BYTES = BH * _ROW_BYTES
+
+# dead-letter reasons of a media span, the two failure causes the
+# reference logs distinctly: decode errors (core/run.py:640-642) and mask
+# exhaustion (core/run.py:499-501)
+CORRUPT_PAYLOAD = "corrupt_payload"
+ALL_MASKS_FAILED = "all_masks_failed"
 
 # The reference's real hardware dimension: mask dirs are keyed
 # (app, hardware, tag) with distinct hardware directories —
@@ -251,12 +258,17 @@ def masks_by_key(rows: list[dict]) -> dict[tuple[str, str, str], list[bytes]]:
 _MASK_CACHE: dict = {}
 
 
-def _decoded_masks(masks, key):
+def _mask_cache(masks) -> dict:
     cache = _MASK_CACHE.get(id(masks))
     if cache is None:
         cache = {}
         _MASK_CACHE.clear()  # one broadcast value per worker lifetime
         _MASK_CACHE[id(masks)] = cache
+    return cache
+
+
+def _decoded_masks(masks, key):
+    cache = _mask_cache(masks)
     entry = cache.get(key)
     if entry is None:
         entry = []
@@ -324,13 +336,135 @@ def extract_from_bytes(
             t = normalize_ocr_text(str(b["text"]), tag, app)
             if t:
                 texts.append(t)
-        if tag.startswith(TRAFFIC_PREFIX):
-            if len(texts) == 8:
-                texts = ["|".join(f"{texts[i]}:{texts[i+1]}" for i in range(0, 8, 2))]
-            else:
-                texts = []
-        if len(texts) != len(fields):
-            continue  # F7 arity gate -> next mask
-        body = "|".join(f"{f}={v}" for f, v in zip(fields, texts))
-        return f"{strip_tag_digits(tag)};{content_type(tag, app)};{body}"
+        span = _gated_span(texts, tag, app, fields)
+        if span is not None:
+            return span
     return None
+
+
+def _gated_span(texts: list[str], tag: str, app: str, fields: list[str]) -> str | None:
+    """Traffic pairing + F7 arity gate over one mask try's normalized
+    texts in reading order; None = the gate failed, try the next mask."""
+    if tag.startswith(TRAFFIC_PREFIX):
+        if len(texts) == 8:
+            texts = ["|".join(f"{texts[i]}:{texts[i+1]}" for i in range(0, 8, 2))]
+        else:
+            texts = []
+    if len(texts) != len(fields):
+        return None
+    body = "|".join(f"{f}={v}" for f, v in zip(fields, texts))
+    return f"{strip_tag_digits(tag)};{content_type(tag, app)};{body}"
+
+
+def _band_plan(masks, key) -> list[tuple[int, tuple[int, ...]]] | None:
+    """Per worker, once per (app, hw, tag): ``(mask_rows, kept regions)``
+    per mask in mask order when EVERY mask's keep plane is binary and
+    uniform over each band — then the composite is exactly band selection
+    (a kept band is copied whole, every other band is zeroed, and a zeroed
+    band can never show MARKER, which is non-zero). None otherwise."""
+    cache = _mask_cache(masks)
+    plan_key = ("band_plan",) + key
+    if plan_key not in cache:
+        plan = []
+        for mask_rows, keep_u8, _, is_binary in _decoded_masks(masks, key):
+            if not is_binary or mask_rows % BH:
+                plan = None
+                break
+            per_band = keep_u8.reshape(mask_rows // BH, -1)
+            if not (per_band == per_band[:, :1]).all():
+                plan = None
+                break
+            kept = per_band[:, 0].tolist()
+            regions = tuple(
+                r for r in range(len(kept) - HEADER_BANDS) if kept[HEADER_BANDS + r]
+            )
+            plan.append((mask_rows, regions))
+        cache[plan_key] = plan
+    return cache[plan_key]
+
+
+_FALLBACK = object()  # the banded decoder cannot vouch for this payload
+
+
+def _decode_band(p: bytes, r: int, tag: str, app: str):
+    """(block, normalized text) of region r's band read straight from the
+    payload bytes — decode_blocks' per-band decode, byte for byte — or
+    None when the band carries no MARKER."""
+    off = (HEADER_BANDS + r) * _BAND_BYTES
+    if p[off] != MARKER:
+        return None
+    x = p[off + 1] | (p[off + 2] << 8)
+    y = p[off + 3] | (p[off + 4] << 8)
+    w, h = p[off + 5], p[off + 6]
+    score = (p[off + 7] | (p[off + 8] << 8)) / 1000.0
+    start = off + _META_LEN
+    end = min(start + p[off + 9], off + _BAND_BYTES)  # text clipped to its band
+    text = p[start:end].decode("utf-8")
+    block = {
+        "box": [[x, y], [x + w, y], [x + w, y + h], [x, y + h]],
+        "score": round(score, 3),
+        "text": text,
+        "region": r,
+    }
+    return block, normalize_ocr_text(text, tag, app)
+
+
+def _extract_banded(p, masks):
+    """extract_from_bytes for a well-formed payload whose masks are pure
+    band selection: each band is decoded at most once per image, and the
+    masks are tried against their kept band windows in the same order,
+    decoding the same bands in the same order (so a corrupt text band
+    raises on the same mask try). Returns _FALLBACK for anything else."""
+    if not isinstance(p, bytes) or len(p) % _ROW_BYTES or len(p) < HEADER_BANDS * _BAND_BYTES:
+        return _FALLBACK  # decode_image/read_header decide (raise)
+    if (p[0], p[1]) != MAGIC or p[2] != VERSION or p[3] >= len(TAGS):
+        return _FALLBACK
+    n_blocks = p[5]
+    if len(p) < (HEADER_BANDS + n_blocks) * _BAND_BYTES:
+        return _FALLBACK  # too few bands for the header's block count
+    tag = TAGS[p[3]]
+    app = "tiktok" if p[4] == 1 else "xhs"
+    plan = _band_plan(masks, (app, HW_VALUES[p[6] % len(HW_VALUES)], tag))
+    if plan is None:
+        return _FALLBACK
+    fields = TAG_FIELDS[tag]
+    content_rows = (HEADER_BANDS + n_blocks) * BH
+    decoded: dict = {}  # region -> (block, normalized text) | None
+    for mask_rows, regions in plan:
+        if mask_rows > content_rows:
+            continue  # size guard, as in extract_from_bytes
+        visible = []
+        for r in regions:
+            if r not in decoded:
+                decoded[r] = _decode_band(p, r, tag, app)
+            if decoded[r] is not None:
+                visible.append(decoded[r][0])
+        texts = [t for b in reading_order(visible) if (t := decoded[b["region"]][1])]
+        span = _gated_span(texts, tag, app, fields)
+        if span is not None:
+            return span
+    return None
+
+
+def extract_batch(payloads, masks) -> list[tuple[str | None, str | None]]:
+    """The OCR stage's batch decoder: ``(text, reason)`` per payload, equal
+    to extract_from_bytes per payload — reason CORRUPT_PAYLOAD when it
+    raises (bad magic, wrong length, mangled text bytes), ALL_MASKS_FAILED
+    when every mask fails the gates, else None. Payloads the banded
+    decoder cannot vouch for (bad length, magic, version or tag, too few
+    bands, a fractional or non-band-uniform mask) take extract_from_bytes
+    unchanged."""
+    out = []
+    for p in payloads:
+        try:
+            txt = _extract_banded(p, masks)
+            if txt is _FALLBACK:
+                txt = extract_from_bytes(p, masks)
+        except Exception:
+            # F10 dead letter, NOT a task failure — one bad image at
+            # 10^12 docs must never abort the wave (the reference logs and
+            # continues, core/run.py:640-642)
+            out.append((None, CORRUPT_PAYLOAD))
+            continue
+        out.append((txt, None if txt is not None else ALL_MASKS_FAILED))
+    return out

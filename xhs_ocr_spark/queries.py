@@ -1097,13 +1097,13 @@ SELECT q_id, n_id, CAST(rank AS BIGINT) AS rank FROM (
 
 
 # ---------------------------------------------------------------------------
-# Flagship (non-SQL-expressible: stand-in OCR inside mapInPandas)
+# Flagship (non-SQL-expressible: stand-in OCR inside mapInArrow)
 # ---------------------------------------------------------------------------
 
 
 def q_extract_flagship(spark, sf):
     """Full interleaved extraction over a corpus derived from documents:
-    media route (mapInPandas OCR over raw RGBA payloads: mask composite +
+    media route (mapInArrow OCR over raw RGBA payloads: mask composite +
     pixel decode) + text route + offset re-merge.
     No SQL oracle (engine semantics live in Python); pytest checks it
     against the reference oracle instead."""
