@@ -10,8 +10,10 @@ Checks:
 - q42/q43/q44: pure narrow projections (no exchange/join/python)
 - q45: first-occurrence dedup aggregates partially before its shuffle
 - bucketed sink lookup: partition-prunes in clean AND merge-on-read state
-- flagship: exactly 2 exchanges land in the flat plan (media spread + none
-  for text) and the text route stays in WholeStageCodegen
+- flagship (flat and full extract_spans plans): the span spread
+  exchange, exactly one parquet scan, exactly one python stage (the OCR
+  mapInArrow, which also classifies text) and no lambdafunction — an
+  interpreted HOF must not return to the span path
 
 Writes plans to BENCH/plans/*.txt; exits nonzero if an invariant fails.
 """
@@ -370,7 +372,7 @@ def main() -> None:
         if not ok:
             failures.append(("bucketed_lookup", label))
 
-    from xhs_ocr_spark.extraction.pipeline import extract_spans_flat
+    from xhs_ocr_spark.extraction.pipeline import extract_spans, extract_spans_flat
     from bench import staged_corpus
 
     # production shape: scan an existing bytes-carrying table (staging the
@@ -379,34 +381,37 @@ def main() -> None:
     import tempfile
 
     stage_dir = os.path.join(tempfile.gettempdir(), "xhs_audit_corpus_v2")
-    flat = extract_spans_flat(staged_corpus(spark, SF, 2, stage_dir))
-    audit(
-        "flagship_flat",
-        flat,
-        [
-            ("span skew-spread exchange", r"REPARTITION_BY_NUM", True),
-            # unified routing: exactly ONE Arrow-batched python stage (the
-            # OCR mapInArrow), sitting ABOVE the spread exchange
-            ("arrow-batched python stage", r"MapInArrow", True),
-            ("no sort-merge join anywhere", r"SortMergeJoin", False),
-            ("no python row UDFs", r"BatchEvalPython", False),
-        ],
-    )
-    # single-scan + single-python-stage invariants (round-2 item 5).
-    # formatted plans list each node twice (tree + detail); count details.
-    plan_txt = open(os.path.join(OUT, "flagship_flat.txt")).read()
-    n_scan = len(re.findall(r"^\(\d+\) Scan parquet", plan_txt, re.M))
-    n_py = len(
-        re.findall(r"^\(\d+\) (?:MapInArrow|MapInPandas|ArrowEvalPython)", plan_txt, re.M)
-    )
-    for label, want in (
-        ("exactly one parquet scan", n_scan == 1),
-        ("exactly one python stage", n_py == 1),
-    ):
-        tag = "OK " if want else "FAIL"
-        print(f"{tag} flagship_flat: {label}")
-        if not want:
-            failures.append(("flagship_flat", label))
+    corpus = staged_corpus(spark, SF, 2, stage_dir)
+    for name, df in (("flagship_flat", extract_spans_flat(corpus)), ("flagship_full", extract_spans(corpus))):
+        audit(
+            name,
+            df,
+            [
+                ("span skew-spread exchange", r"REPARTITION_BY_NUM", True),
+                # unified routing: exactly ONE Arrow-batched python stage (the
+                # OCR mapInArrow, text classifier included), ABOVE the spread
+                ("arrow-batched python stage", r"MapInArrow", True),
+                ("no sort-merge join anywhere", r"SortMergeJoin", False),
+                ("no python row UDFs", r"BatchEvalPython", False),
+                # HOF lambdas are CodegenFallback, interpreted per element
+                ("no interpreted HOF lambda", r"lambdafunction", False),
+            ],
+        )
+        # single-scan + single-python-stage invariants (round-2 item 5).
+        # formatted plans list each node twice (tree + detail); count details.
+        plan_txt = open(os.path.join(OUT, f"{name}.txt")).read()
+        n_scan = len(re.findall(r"^\(\d+\) Scan parquet", plan_txt, re.M))
+        n_py = len(
+            re.findall(r"^\(\d+\) (?:MapInArrow|MapInPandas|ArrowEvalPython)", plan_txt, re.M)
+        )
+        for label, want in (
+            ("exactly one parquet scan", n_scan == 1),
+            ("exactly one python stage", n_py == 1),
+        ):
+            tag = "OK " if want else "FAIL"
+            print(f"{tag} {name}: {label}")
+            if not want:
+                failures.append((name, label))
 
     # q48 composed corpus pipeline (round-4 verdict item 1): the funnel
     # plan sits entirely ABOVE the localCheckpoint of the extracted text,

@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 
 from xhs_ocr_spark.extraction import datagen, oracle
 from xhs_ocr_spark.extraction.pipeline import extract_spans, extract_spans_flat
+from xhs_ocr_spark.extraction.raw_image import render_media_image
 
 N_DOCS = 400
 
@@ -56,3 +57,29 @@ def test_skew_docs_are_spread(spark):
     )
     n_partitions = spread.select("pid").distinct().count()
     assert n_partitions > 4
+
+
+def test_unknown_span_kinds_match_oracle(spark):
+    """A span whose kind is neither text nor media, or is NULL, is dropped
+    by the engine and the oracle alike — even when it carries plain text
+    or a decodable payload."""
+
+    def unknown(kind, offset):
+        ref = f"mem://unknown/{offset}"
+        return {
+            "kind": kind, "text": "plain words that a text span would keep", "media_ref": ref,
+            "offset": offset, "media_bytes": render_media_image(ref),
+        }
+
+    rows = []
+    for i in range(1, 31):
+        doc_id, spans = datagen.corpus_rows(i)
+        rows.append((doc_id, spans + [unknown("video", len(spans)), unknown(None, len(spans) + 1)]))
+    rows.append(("doc-unknown-only", [unknown("video", 0), unknown(None, 1)]))
+    got = {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in r["spans_out"]]
+        for r in extract_spans(spark.createDataFrame(rows, datagen.DOCS_SCHEMA)).collect()
+    }
+    exp = {k: v for k, v in oracle.extract_corpus(rows).items() if v}
+    assert "doc-unknown-only" not in exp and len(exp) == 30
+    assert got == exp

@@ -1,6 +1,7 @@
 """The flagship's Arrow OCR stage: the banded batch decoder against the
-per-payload extract_from_bytes oracle, dead-letter reasons through the
-mapInArrow stage, and the per-task zip re-read guard."""
+per-payload extract_from_bytes oracle, the Arrow text classifier against
+semantics.classify_text_span, span kinds and dead-letter reasons through
+the mapInArrow stage, and the per-task zip re-read guard."""
 
 import importlib
 import os
@@ -10,13 +11,14 @@ import zipimport
 
 import numpy as np
 import pyarrow as pa
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from xhs_ocr_spark import _zipguard
+from xhs_ocr_spark.extraction import oracle
 from xhs_ocr_spark.extraction import raw_image as RI
 from xhs_ocr_spark.extraction import semantics as S
-from xhs_ocr_spark.extraction.pipeline import extract_spans_with_deadletter
+from xhs_ocr_spark.extraction.pipeline import classify_text_arrow, extract_spans_with_deadletter
 
 MASKS = RI.masks_by_key(RI.mask_library())
 
@@ -62,7 +64,7 @@ def _mangled(draw):
     n_blocks = p[5]
     op = draw(st.sampled_from(
         ["none", "flip", "header", "n_blocks", "marker", "band_meta", "truncate", "cut_bands",
-         "empty", "null"]
+         "empty", "null", "geometry"]
     ))
     b = bytearray(p)
     if op == "flip":
@@ -75,6 +77,15 @@ def _mangled(draw):
         band = RI.HEADER_BANDS + draw(st.integers(0, max(n_blocks - 1, 0)))
         at = 0 if op == "marker" else draw(st.integers(1, 9))
         b[band * RI.BH * RI.W * 4 + at] = draw(st.integers(0, 255))
+    elif op == "geometry":  # block centers that tie, or chain within the 20 px row threshold
+        for band in range(RI.HEADER_BANDS, RI.HEADER_BANDS + n_blocks):
+            at = band * RI.BH * RI.W * 4
+            b[at + 1 : at + 7] = bytes([
+                draw(st.sampled_from([0, 8, 16])), 0,  # x
+                draw(st.sampled_from([0, 5, 10, 19, 20, 21, 38, 40])), 0,  # y
+                draw(st.sampled_from([0, 16, 40])),  # w
+                draw(st.sampled_from([0, 2, 22])),  # h
+            ])
     elif op == "truncate":
         return p[: draw(st.integers(0, len(p)))]
     elif op == "cut_bands":  # whole bands missing: too few for n_blocks
@@ -110,41 +121,108 @@ def test_batch_decoder_covers_both_routes():
         assert {None, "all_masks_failed", "corrupt_payload"} <= reasons
 
 
+_SEPS = [" ", "  ", "\t", "\n", "\r\n", "\x0b", "\f", "\x1c", "\x1d", "\x1e", "\x1f",
+         "\xa0", "\u3000"]
+_WORDS = sorted(S.BOILERPLATE_TOKENS) + [
+    "Nav", "MENU", "nav,", "(footer)", "cookie.", "spark", "join", "数据", "x",
+]
+
+
+@st.composite
+def _span_text(draw):
+    """Words (boilerplate ones too, in other case or with punctuation)
+    between separators, leading and trailing ones included."""
+    words = draw(st.lists(st.sampled_from(_WORDS), max_size=8))
+    seps = draw(st.lists(st.sampled_from(_SEPS), min_size=len(words) + 1, max_size=len(words) + 1))
+    return seps[0] + "".join(w + sep for w, sep in zip(words, seps[1:]))
+
+
+_text_or_null = st.one_of(
+    _span_text(),
+    st.lists(st.sampled_from(["a", "nav", "é"] + _SEPS), max_size=12).map("".join),
+    st.none(),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_text_or_null, max_size=30), st.integers(0, 3))
+@example(
+    ["", " ", "\x0b", "\t\x0b\r\n", None, "nav spark", "nav menu spark query", "nav menu spark",
+     "\x0bnav\x0bspark\x0b", "nav\xa0menu spark", "Nav MENU spark", "x\x1cy \u3000 nav"],
+    0,
+)
+def test_arrow_classifier_equals_semantics(texts, offset):
+    """classify_text_arrow == classify_text_span per row (NULL reads as
+    ""), also over a sliced array whose buffers start at an offset."""
+    arr = pa.array(["nav menu"] * offset + texts, pa.string()).slice(offset)
+    assert classify_text_arrow(arr).to_pylist() == [S.classify_text_span(t or "") for t in texts]
+
+
+def _span(kind, off, ref="", payload=None, text=""):
+    return {"kind": kind, "text": text, "media_ref": ref, "offset": off, "media_bytes": payload}
+
+
+_DOCS_DDL = (
+    "doc_id string, spans array<struct<kind string, text string, "
+    "media_ref string, offset int, media_bytes binary>>"
+)
+_REFS = [f"mem://dl/{i}" for i in range(60)]
+_GOOD = next(r for r in _REFS if S.extract_media_span(r) is not None)
+_FAILING = next(r for r in _REFS if S.extract_media_span(r) is None)
+
+
+def test_mixed_kinds_through_arrow_stage(spark):
+    """Text, media and unknown-kind rows through the mapInArrow stage: text
+    rows classified as the semantics rule says, media decoded, rows of any
+    other or NULL kind in neither output."""
+    texts = ["plain\x0bwords  kept ", "nav menu footer spark", "nav spark", "nav\xa0menu spark",
+             " \x0b ", "", None, "Nav MENU footer"]
+    spans = [_span("text", i, text=t) for i, t in enumerate(texts)]
+    payload = RI.render_media_image(_GOOD)
+    spans += [
+        _span("media", 8, _GOOD, payload),
+        _span("video", 9, _GOOD, payload, text="plain words"),
+        _span(None, 10, text="plain words"),
+        _span("media", 11, _FAILING, RI.render_media_image(_FAILING)),
+    ]
+    ok, dead = extract_spans_with_deadletter(spark.createDataFrame([("d1", spans)], _DOCS_DDL))
+    got = sorted(
+        ((r["kind"], r["text"], r["media_ref"], r["order"]) for r in ok.collect()),
+        key=lambda t: t[3],
+    )
+    assert got == oracle.extract_document("d1", spans)
+    assert [t[3] for t in got] == [0, 2, 3, 7, 8]
+    assert [(r["order"], r["reason"]) for r in dead.collect()] == [(11, "all_masks_failed")]
+
+
 def test_dead_letter_reasons_through_arrow_stage(spark):
     """corrupt_payload and all_masks_failed keep their reasons through
     extract_spans_with_deadletter's mapInArrow stage."""
-    refs = [f"mem://dl/{i}" for i in range(60)]
-    good = next(r for r in refs if S.extract_media_span(r) is not None)
-    failing = next(r for r in refs if S.extract_media_span(r) is None)
     text = "plain words that survive the classifier"
-    span = lambda kind, off, ref="", payload=None, text="": {  # noqa: E731
-        "kind": kind, "text": text, "media_ref": ref, "offset": off, "media_bytes": payload,
-    }
     docs = spark.createDataFrame(
         [
             (
                 "d1",
                 [
-                    span("text", 0, text=text),
-                    span("media", 1, good, RI.render_media_image(good)),
-                    span("media", 2, failing, RI.render_media_image(failing)),
-                    span("media", 3, "bad:truncated", RI.render_media_image(good)[:-3]),
-                    span("media", 4, failing),  # no payload: the ref path
+                    _span("text", 0, text=text),
+                    _span("media", 1, _GOOD, RI.render_media_image(_GOOD)),
+                    _span("media", 2, _FAILING, RI.render_media_image(_FAILING)),
+                    _span("media", 3, "bad:truncated", RI.render_media_image(_GOOD)[:-3]),
+                    _span("media", 4, _FAILING),  # no payload: the ref path
                 ],
             )
         ],
-        "doc_id string, spans array<struct<kind string, text string, "
-        "media_ref string, offset int, media_bytes binary>>",
+        _DOCS_DDL,
     )
     ok, dead = extract_spans_with_deadletter(docs)
     assert sorted((r["order"], r["text"]) for r in ok.collect()) == [
         (0, S.classify_text_span(text)),
-        (1, S.extract_media_span(good)),
+        (1, S.extract_media_span(_GOOD)),
     ]
     assert sorted((r["order"], r["media_ref"], r["reason"]) for r in dead.collect()) == [
-        (2, failing, "all_masks_failed"),
+        (2, _FAILING, "all_masks_failed"),
         (3, "bad:truncated", "corrupt_payload"),
-        (4, failing, "all_masks_failed"),
+        (4, _FAILING, "all_masks_failed"),
     ]
 
 

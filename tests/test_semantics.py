@@ -25,6 +25,13 @@ def test_reading_order_chained_anchor():
     assert got == ["r", "q", "p"]  # one row, sorted by x
 
 
+def test_order_rows_ties_and_row_threshold():
+    # equal (y, x) centers keep their input order (stable sorts), a gap of
+    # exactly 20 starts a new row, and a chain of < 20 steps stays one row
+    keyed = [(39.0, 3.0, "d"), (0.0, 5.0, "b"), (59.0, 0.0, "e"), (0.0, 5.0, "a"), (19.5, 1.0, "c")]
+    assert S.order_rows(keyed) == ["c", "d", "b", "a", "e"]
+
+
 def test_reading_order_anchor_variant():
     # anchor semantics: y = 0, 4, 8 — chained would group all three
     # (each step <5), anchored groups only 0 and 4 (8 is >5 from anchor 0)

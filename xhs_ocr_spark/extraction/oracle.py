@@ -25,8 +25,9 @@ def extract_document(doc_id: str, spans: list[dict]) -> list[tuple[str, str, str
     """Reference extraction for one document.
 
     Returns ordered list of (kind, text, media_ref, order); order is the
-    original span offset; failed media spans (all masks exhausted) and
-    boilerplate text spans are dropped, everything else keeps its offset.
+    original span offset; failed media spans (all masks exhausted),
+    boilerplate text spans and spans of any other (or NULL) kind are
+    dropped, everything else keeps its offset.
 
     Media spans carrying a raw RGBA payload go through the BYTES path
     (mask composite + pixel decode, raw_image.extract_from_bytes) — the
@@ -45,7 +46,7 @@ def extract_document(doc_id: str, spans: list[dict]) -> list[tuple[str, str, str
                 txt = extract_media_span(s["media_ref"])
             if txt is not None:
                 out.append(("media", txt, s["media_ref"], s["offset"]))
-        else:
+        elif s["kind"] == "text":
             cleaned = classify_text_span(s["text"] or "")
             if cleaned is not None:
                 out.append(("text", cleaned, "", s["offset"]))

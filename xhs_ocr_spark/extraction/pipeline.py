@@ -7,23 +7,28 @@ Plan shape (designed for 100 TB / 1000 executors, tested on local[N]):
       → repartition(doc_id, offset)        [exchange #1: spreads skew — a
       │                                     media-heavy doc's spans land
       │                                     on MANY partitions]
-      → Project: text spans classified IN PLACE by a pure-expression
-      │ boilerplate classifier (split/filter/size built-ins, JVM-side,
-      │ NULL = boilerplate-dropped); media spans untouched
       → ONE mapInArrow stage routing per-row inside the Arrow batch:
-      │ media rows' raw-RGBA payloads decoded, alpha-composited against
+      │ text rows classified as Arrow compute over the batch's text
+      │ column (boilerplate -> NULL; never Python objects); media
+      │ rows' raw-RGBA payloads decoded, alpha-composited against
       │ the BROADCAST mask library, text read from surviving pixel
       │ regions (engine initialized once per python worker, reused
       │ across batches — the reference spawns one subprocess per PROCESS
       │ and funnels every image through one temp file, core/run.py:407;
       │ here: no disk, no IPC, batched; corrupt payloads and
-      │ all-masks-failed both -> NULL = F10 dead letter); text rows pass
-      │ through as Arrow buffers, never converted to Python objects
+      │ all-masks-failed both -> NULL = F10 dead letter); rows of any
+      │ other kind (or NULL kind) come out NULL
       → filter text IS NOT NULL (stops at the python barrier — Catalyst
       │ never pushes predicates below a python eval, so nothing
       │ re-executes)
       → groupBy(doc_id) + sort_array(collect_list(...))   [exchange #2]
-        restores original span order by offset (O7).
+        restores original span order by offset (O7); arrays_zip over the
+        sorted array's fields reorders them without a lambda.
+
+No per-word HOF lambda anywhere on the span path: filter/transform
+lambdas are CodegenFallback, interpreted per element (the JVM classifier
+they replaced cost ~0.5 s of a ~1.8 s perfbench extract_text operation,
+local[2] on a 4-CPU box).
 
 Why one python stage and no per-kind branch + union (round-1 verdict
 item 5): branch filters get pushed below the shared exchange,
@@ -43,6 +48,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
@@ -53,6 +59,7 @@ from .raw_image import ALL_MASKS_FAILED, extract_batch
 from .semantics import (
     BOILERPLATE_MAX_RATIO,
     BOILERPLATE_TOKENS,
+    WS_CLASS,
     extract_media_span,
 )
 
@@ -128,25 +135,41 @@ def _ref_outcome(ref: str | None) -> tuple[str | None, str | None]:
 
 
 _OUT_COLS = ["doc_id", "kind", "text", "media_ref", "offset", "reason"]
+_BOILERPLATE = pa.array(sorted(BOILERPLATE_TOKENS), pa.string())
+
+
+def classify_text_arrow(text: pa.Array) -> pa.Array:
+    """semantics.classify_text_span over a whole Arrow string column: the
+    whitespace-collapsed text, or NULL when it is NULL, empty or
+    boilerplate. Words are split on the explicit WS_CLASS (RE2's \\s
+    lacks \\x0b); the text never becomes Python objects."""
+    norm = pc.utf8_trim(pc.replace_substring_regex(text, WS_CLASS + "+", " "), " ")
+    words = pc.split_pattern(norm, " ")
+    hit = pc.is_in(pc.list_flatten(words), value_set=_BOILERPLATE).to_numpy(zero_copy_only=False)
+    hits = np.bincount(pc.list_parent_indices(words).to_numpy()[hit], minlength=len(text))
+    ratio = hits / pc.list_value_length(words).to_numpy(zero_copy_only=False)
+    keep = pc.and_(pc.not_equal(norm, ""), pa.array(ratio <= BOILERPLATE_MAX_RATIO))
+    return pc.if_else(keep, norm, pa.scalar(None, norm.type))
 
 
 def _make_ocr_routed(masks_bc):
-    """Unified-stream OCR stage factory (a mapInArrow function): media rows
-    get OCR'd, text rows pass through as Arrow buffers and never become
-    Python objects (their `text` already holds the JVM classifier output,
-    NULL = boilerplate-dropped). Only the media rows' media_ref and
-    media_bytes are taken into Python; the results go back with
-    replace_with_mask in the input column's Arrow type. ``masks_bc`` is
-    the broadcast mask library — resolved to its value INSIDE the
-    executor task, once per worker."""
+    """Unified-stream OCR stage factory (a mapInArrow function): text rows
+    are classified by classify_text_arrow (NULL = boilerplate-dropped),
+    media rows get OCR'd, rows of any other or NULL kind come out NULL.
+    Only the media rows' media_ref and media_bytes are taken into Python;
+    the results go back with replace_with_mask in the input column's
+    Arrow type. ``masks_bc`` is the broadcast mask library — resolved to
+    its value INSIDE the executor task, once per worker."""
 
     def ocr_routed(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         engine = _Engine.get()  # init BEFORE the batch loop; reused across batches
         masks = masks_bc.value
         for batch in batches:
-            text = batch.column("text")
+            kind = batch.column("kind")
+            text = classify_text_arrow(batch.column("text"))
+            text = pc.if_else(pc.equal(kind, "text"), text, pa.scalar(None, text.type))
             reason = pa.nulls(batch.num_rows, text.type)
-            media = pc.fill_null(pc.equal(batch.column("kind"), "media"), False)
+            media = pc.fill_null(pc.equal(kind, "media"), False)
             if pc.any(media).as_py():
                 texts, reasons = engine.extract_batch(
                     pc.filter(batch.column("media_ref"), media).to_pylist(),
@@ -158,7 +181,7 @@ def _make_ocr_routed(masks_bc):
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("doc_id"),
-                    batch.column("kind"),
+                    kind,
                     text,
                     batch.column("media_ref"),
                     batch.column("offset"),
@@ -190,46 +213,15 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-def classify_text_expr(text_col) -> "F.Column":
-    """Vectorized boilerplate classifier as ONE column expression — mirror
-    of semantics.classify_text_span using only built-in column functions:
-    normalized text, or NULL when the span is empty/boilerplate.
-
-    NB: .isin compiles to a static InSet; an F.array(...) literal here
-    would be re-allocated on EVERY lambda invocation (per word) in
-    interpreted HOF evaluation — measured as a GC-bound serial ceiling."""
-    ws = F.filter(F.split(text_col, r"\s+"), lambda w: w != "")
-    boiler = sorted(BOILERPLATE_TOKENS)
-    hits = F.size(F.filter(ws, lambda w: w.isin(boiler)))
-    return F.when(
-        (F.size(ws) > 0) & (hits / F.size(ws) <= F.lit(BOILERPLATE_MAX_RATIO)),
-        F.concat_ws(" ", ws),
-    )
-
-
 def reassemble(extracted_flat: DataFrame) -> DataFrame:
-    """O7: restore original span order per document (one shuffle)."""
-    span = F.struct(
-        F.col("offset").alias("order"),
-        F.col("kind").alias("kind"),
-        F.col("text").alias("text"),
-        F.col("media_ref").alias("media_ref"),
-    )
-    return (
-        extracted_flat.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(span)).alias("tmp"))
-        .select(
-            "doc_id",
-            F.transform(
-                "tmp",
-                lambda s: F.struct(
-                    s["kind"].alias("kind"),
-                    s["text"].alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    s["order"].alias("order"),
-                ),
-            ).alias("spans_out"),
-        )
+    """O7: restore original span order per document (one shuffle). The
+    sorted array's fields are zipped back in OUT_SPAN_SCHEMA order —
+    arrays_zip is codegen'd, a transform lambda is interpreted per span."""
+    span = F.struct(F.col("offset").alias("order"), "kind", "text", "media_ref")
+    tmp = F.sort_array(F.collect_list(span)).alias("tmp")
+    names = [f.name for f in OUT_SPAN_SCHEMA.elementType.fields]
+    return extracted_flat.groupBy("doc_id").agg(tmp).select(
+        "doc_id", F.arrays_zip(*(F.col("tmp")[n].alias(n) for n in names)).alias("spans_out")
     )
 
 
@@ -292,31 +284,19 @@ def _extracted(docs: DataFrame, spread_partitions: int | None) -> DataFrame:
     optimizer-barrier tricks like nondeterministic guards either got
     constant-folded or disabled codegen wholesale, measured 2-5x slower):
 
-    - the classifier runs ONCE per span, JVM-side, in the Project directly
-      below the Python stage (text column = classifier output for text
-      rows, untouched for media rows);
-    - ONE mapInArrow consumes the whole stream: media rows get OCR'd
-      (raw_image.extract_batch over the batch's media rows), text rows
-      pass through as Arrow buffers;
+    - ONE mapInArrow consumes the whole stream: text rows are classified
+      as Arrow compute over the batch's text column (classify_text_arrow),
+      media rows get OCR'd (raw_image.extract_batch over the batch's
+      media rows), rows of any other or NULL kind come out NULL;
     - downstream NULL filters stop at the Python barrier (Catalyst never
       pushes predicates below a python eval), so nothing re-executes.
 
     One parquet scan, one spread exchange, one python stage, no union."""
     from ..sources.mask_library import broadcast_mask_library
 
-    flat = _spread_flat(docs, spread_partitions)
-    staged = flat.select(
-        "doc_id",
-        "kind",
-        F.when(
-            F.col("kind") == "text", classify_text_expr(F.col("text"))
-        ).alias("text"),
-        "media_ref",
-        "offset",
-        "media_bytes",
-    )
     masks_bc = broadcast_mask_library(docs.sparkSession)
-    return staged.mapInArrow(_make_ocr_routed(masks_bc), schema=_FLAT_SCHEMA)
+    flat = _spread_flat(docs, spread_partitions)
+    return flat.mapInArrow(_make_ocr_routed(masks_bc), schema=_FLAT_SCHEMA)
 
 
 def extract_spans(docs: DataFrame, spread_partitions: int | None = None) -> DataFrame:

@@ -48,6 +48,7 @@ from .semantics import (
     media_app,
     media_tag,
     normalize_ocr_text,
+    order_rows,
     reading_order,
     run_standin_ocr,
     strip_tag_digits,
@@ -386,27 +387,22 @@ def _band_plan(masks, key) -> list[tuple[int, tuple[int, ...]]] | None:
 _FALLBACK = object()  # the banded decoder cannot vouch for this payload
 
 
-def _decode_band(p: bytes, r: int, tag: str, app: str):
-    """(block, normalized text) of region r's band read straight from the
-    payload bytes — decode_blocks' per-band decode, byte for byte — or
-    None when the band carries no MARKER."""
+def _band_key(p: bytes, r: int, tag: str, app: str):
+    """``(y_center, x_center, normalized text)`` of region r's band read
+    straight from the payload bytes — the centers with reading_order's
+    left-fold arithmetic over the four box corners decode_blocks would
+    build, the text byte for byte — or None when the band carries no
+    MARKER."""
     off = (HEADER_BANDS + r) * _BAND_BYTES
     if p[off] != MARKER:
         return None
     x = p[off + 1] | (p[off + 2] << 8)
     y = p[off + 3] | (p[off + 4] << 8)
-    w, h = p[off + 5], p[off + 6]
-    score = (p[off + 7] | (p[off + 8] << 8)) / 1000.0
+    x_w, y_h = x + p[off + 5], y + p[off + 6]
     start = off + _META_LEN
     end = min(start + p[off + 9], off + _BAND_BYTES)  # text clipped to its band
-    text = p[start:end].decode("utf-8")
-    block = {
-        "box": [[x, y], [x + w, y], [x + w, y + h], [x, y + h]],
-        "score": round(score, 3),
-        "text": text,
-        "region": r,
-    }
-    return block, normalize_ocr_text(text, tag, app)
+    text = normalize_ocr_text(p[start:end].decode("utf-8"), tag, app)
+    return (((y + y) + y_h) + y_h) / 4.0, (((x + x_w) + x_w) + x) / 4.0, text
 
 
 def _extract_banded(p, masks):
@@ -429,17 +425,17 @@ def _extract_banded(p, masks):
         return _FALLBACK
     fields = TAG_FIELDS[tag]
     content_rows = (HEADER_BANDS + n_blocks) * BH
-    decoded: dict = {}  # region -> (block, normalized text) | None
+    decoded: dict = {}  # region -> _band_key(...) | None
     for mask_rows, regions in plan:
         if mask_rows > content_rows:
             continue  # size guard, as in extract_from_bytes
         visible = []
         for r in regions:
             if r not in decoded:
-                decoded[r] = _decode_band(p, r, tag, app)
+                decoded[r] = _band_key(p, r, tag, app)
             if decoded[r] is not None:
-                visible.append(decoded[r][0])
-        texts = [t for b in reading_order(visible) if (t := decoded[b["region"]][1])]
+                visible.append(decoded[r])
+        texts = [t for t in order_rows(visible) if t]
         span = _gated_span(texts, tag, app, fields)
         if span is not None:
             return span

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+from operator import itemgetter
 
 # ---------------------------------------------------------------------------
 # Tag / field registry (reference: config.ini [tags], same arities)
@@ -188,31 +189,38 @@ def reading_order(blocks: list[dict]) -> list[dict]:
     row start — order-dependent, so this cannot be a pure sort key);
     each completed row is re-sorted by x_center.
     """
-    # centers computed ONCE per block (r7: they were recomputed in every
-    # sort-key call and again in the row loop — 3x per block in the per-
-    # image hot path). The explicit 4-term adds keep sum()'s left-fold
-    # float order, and the keyed sort keeps sorted()'s stability — the
-    # ordering is bit-identical to the previous form.
-    triples = []
+    # centers computed ONCE per block; the explicit 4-term adds keep
+    # sum()'s left-fold float order (raw_image's banded decoder derives
+    # the same centers straight from the band bytes)
+    keyed = []
     for b in blocks:
         (x0, y0), (x1, y1), (x2, y2), (x3, y3) = b["box"]
-        y_c = (((y0 + y1) + y2) + y3) / 4.0
-        x_c = (((x0 + x1) + x2) + x3) / 4.0
-        triples.append((y_c, x_c, b))
-    triples.sort(key=lambda t: (t[0], t[1]))
-    out: list[dict] = []
-    row: list[tuple[float, dict]] = []
+        keyed.append(((((y0 + y1) + y2) + y3) / 4.0, (((x0 + x1) + x2) + x3) / 4.0, b))
+    return order_rows(keyed)
+
+
+_YX = itemgetter(0, 1)
+_X = itemgetter(1)
+
+
+def order_rows(keyed: list[tuple]) -> list:
+    """The chained row grouping behind reading_order over ``(y_center,
+    x_center, item)`` triples: a stable sort by (y, x), then a triple joins
+    the current row iff |y - previous triple's y| < 20, and each row is
+    re-sorted (stably) by x. Returns the items; sorts ``keyed`` in place."""
+    keyed.sort(key=_YX)
+    out: list = []
+    row: list[tuple] = []
     prev_y: float | None = None
-    for y_c, x_c, b in triples:
-        if prev_y is None or abs(y_c - prev_y) < 20:
-            row.append((x_c, b))
-        else:
-            row.sort(key=lambda t: t[0])
-            out.extend(t[1] for t in row)
-            row = [(x_c, b)]
-        prev_y = y_c
-    row.sort(key=lambda t: t[0])
-    out.extend(t[1] for t in row)
+    for t in keyed:
+        if not (prev_y is None or abs(t[0] - prev_y) < 20):
+            row.sort(key=_X)
+            out += [r[2] for r in row]
+            row = []
+        row.append(t)
+        prev_y = t[0]
+    row.sort(key=_X)
+    out += [r[2] for r in row]
     return out
 
 
@@ -360,18 +368,23 @@ def extract_media_span(media_ref: str) -> str | None:
 # ---------------------------------------------------------------------------
 
 
-_WS_RE = re.compile(r"\s+", re.ASCII)  # ASCII \s to match Java/RE2 regex
-# semantics in the Spark route and DuckDB oracles exactly (str.split()
-# would additionally split on Unicode whitespace and silently diverge)
+# ASCII whitespace spelled out: Python's re.ASCII \s and Java's \s are
+# exactly this class, RE2's \s (the Arrow kernels) lacks \x0b; str.split()
+# would also split on \x1c-\x1f and Unicode spaces and silently diverge
+WS_CLASS = r"[\t\n\x0b\f\r ]"
+_WS_RE = re.compile(WS_CLASS + "+")
 
 
 def classify_text_span(text: str) -> str | None:
     """Return cleaned main-content text, or None if boilerplate.
 
-    Rule: tokenize on whitespace; drop the span when the fraction of
+    Rule: tokenize on WS_CLASS runs; drop the span when the fraction of
     boilerplate-vocabulary tokens exceeds BOILERPLATE_MAX_RATIO; otherwise
-    return whitespace-collapsed text. The Spark pipeline expresses the SAME
-    rule with built-in column functions (no Python in the hot path)."""
+    return whitespace-collapsed text. The Spark pipeline runs the SAME rule
+    as Arrow compute inside its OCR stage (pipeline.classify_text_arrow).
+
+    Span routing: kind 'text' takes this classifier, kind 'media' the OCR
+    path; a span of any other kind, or a NULL kind, is dropped."""
     words = [w for w in _WS_RE.split(text) if w]
     if not words:
         return None
