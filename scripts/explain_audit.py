@@ -219,11 +219,14 @@ def main() -> None:
         "q52_incremental_dedup",
         Q.queries()["q52_incremental_dedup"](spark, SF),
         [
-            # signature md5 work staged behind an id exchange once per
-            # side (inlining guard); index probes are equi-joins — join
-            # STRATEGY is left to the planner (broadcast at small scale,
-            # shuffle at corpus scale), but nothing quadratic or python
-            ("signature staging exchange present", r"REPARTITION", True),
+            # band keys come from lsh_band_rows' checkpointed Arrow
+            # stage on each side (the plan reads the stored rows); no
+            # interpreted JVM minhash chain re-derives them. Index probes
+            # are equi-joins — join STRATEGY is left to the planner
+            # (broadcast at small scale, shuffle at corpus scale), but
+            # nothing quadratic or python
+            ("band keys from the checkpointed Arrow stage", r"ExistingRDD", True),
+            ("no JVM minhash chain", r"array_min", False),
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
             ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),
         ],
@@ -483,7 +486,9 @@ def main() -> None:
     )
     # the fully-LAZY composed funnel (stage_checkpoints=False) pins the
     # logical composition: dedup stages aggregate (partial_min), no
-    # window ever partitions by a fingerprint, nothing quadratic. (The
+    # window ever partitions by a fingerprint, nothing quadratic, and
+    # the batch funnel's statically empty probe indexes are pruned — no
+    # anti-join survives (a non-static empty index leaves 68). (The
     # LSH partial_collect_set invariant is pinned on q25's plan; the pair
     # expansion runs inside the component labels' eager checkpoint jobs.)
     from xhs_ocr_spark.plans.corpus_pipeline import (
@@ -500,6 +505,7 @@ def main() -> None:
             ("paragraph dedup partial_min before shuffle", r"partial_min", True),
             ("no window over fp", r"RunningWindowFunction|\(\d+\) Window", False),
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
+            ("empty probe indexes pruned", r"LeftAnti", False),
         ],
     )
 

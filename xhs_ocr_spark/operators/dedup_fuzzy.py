@@ -13,6 +13,7 @@ Scale design (the part that matters at 100 TB):
 from __future__ import annotations
 
 import logging
+from functools import reduce
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -79,25 +80,10 @@ def signature_from_hashed(hs_col, k: int = DEFAULT_HASHES):
 
 def minhash_signature(text_col, k: int = DEFAULT_HASHES, n: int = DEFAULT_SHINGLE):
     """array<string> of k minhashes (engine-portable; DuckDB twin in
-    queries.py). Equivalent to signature_from_hashed(hashed_shingles(...));
-    when composing with banding, stage hashed_shingles behind an exchange
-    so the md5 work isn't re-inlined per consumer (see lsh_candidate_pairs)."""
+    queries.py). Equivalent to signature_from_hashed(hashed_shingles(...)).
+    LSH band keys do not compose on this: they come from lsh_band_rows'
+    one Arrow stage."""
     return signature_from_hashed(hashed_shingles(text_col, k, n), k)
-
-
-def band_keys(sig_col, bands: int = DEFAULT_BANDS, k: int = DEFAULT_HASHES):
-    """array<string> of band keys: band b = md5(b || joined rows)."""
-    rows_per_band = k // bands
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.md5(
-            F.concat(
-                b.cast("string"),
-                F.lit("#"),
-                F.concat_ws(",", F.slice(sig_col, b * rows_per_band + 1, rows_per_band)),
-            )
-        ),
-    )
 
 
 def pair_expansion(ids_col):
@@ -264,30 +250,32 @@ def sharded_bucket_pairs(
     )
 
 
-def lsh_candidate_pairs(
+def lsh_band_rows(
     df: DataFrame,
     id_col: str,
     text_col: str,
     k: int = DEFAULT_HASHES,
     bands: int = DEFAULT_BANDS,
     n: int = DEFAULT_SHINGLE,
-    bucket_cap: int = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) sharing >=1 LSH band.
+    """(id, band) rows: every MinHash LSH band key of every document, the
+    one band-key derivation in the engine. Band b of a document is
+    md5(b || '#' || its minhashes b*r .. b*r+r-1 joined by ','), over the
+    minhash_signature definition; NULL text yields no rows.
 
-    Plan (r7): ONE Arrow-batched python stage derives the band keys —
+    Plan (r7): ONE Arrow-batched python stage derives the keys —
     hashlib's C md5 over plain python shingle strings replaces the
     interpreted HOF chains (transform/substring/array_min per minhash)
-    that dominated the derivation (A/B at sf1.0, 50k docs: bands 2.8s
-    JVM -> 1.1s; full pair set 4.8s -> 2.8s; pair sets identical, since
-    md5 hex and the ASCII \\s+ tokenization are engine-identical by
-    repo convention — the same reason the DuckDB oracle and the
-    funnel's JVM-side probe indexes interoperate with these keys) ->
-    sharded_bucket_pairs (collect at (band, shard) granularity — no
-    O(|bucket|) aggregate row, see its docstring) -> distinct.
-    Shuffles on uniformly-distributed md5 band keys; no self-join of
-    ROW-level data. All routes yield the same pair set, so results are
-    cap/shard-invariant (tested)."""
+    (A/B at sf1.0, 50k docs: bands 2.8s JVM -> 1.1s). Tokenization is
+    TX.words' (split on ASCII \\s+, empty tokens dropped, no other
+    trimming), so the keys equal the JVM/DuckDB band composition over
+    minhash_signature (tested on edge whitespace).
+
+    The narrow rows are localCheckpoint'ed once: every consumer (both
+    sides of sharded_bucket_pairs' aggregated self-join, an index
+    probe, an index build) reads the stored rows instead of re-running
+    the scan + band stage — ~``bands`` x |docs| rows of two short
+    columns, cheap to store at any scale next to re-deriving."""
     import pyarrow as pa
 
     groups = (k + 3) // 4
@@ -305,8 +293,8 @@ def lsh_candidate_pairs(
             for row, txt in enumerate(batch.column("__text")):
                 t_ = txt.as_py()
                 if t_ is None:
-                    continue  # JVM form: null text -> null bands -> dropped
-                ws = [w for w in ws_re.split(t_.strip()) if w]
+                    continue
+                ws = [w for w in ws_re.split(t_) if w]
                 sh = [
                     " ".join(ws[i : i + n_shingle])
                     for i in range(max(len(ws) - (n_shingle - 1), 1))
@@ -340,16 +328,31 @@ def lsh_candidate_pairs(
         F.col(id_col).alias("__id"), F.col(text_col).alias("__text")
     ).repartition(parts, "__id")
     id_dt = df.schema[id_col].dataType.simpleString()
-    # narrow (id, band) rows materialized once: sharded_bucket_pairs'
-    # aggregated self-join consumes its input under BOTH join sides, and
-    # the whole derivation (scan + band stage) used to run twice — true
-    # of the pre-r7 JVM form too (the committed r6 q29 plan shows two
-    # full scan->aggregate chains). ~4 bands x |docs| rows of two short
-    # columns — cheap to store at any scale next to re-deriving.
-    sig = src.mapInArrow(band_rows, f"id {id_dt}, band string").localCheckpoint(
+    return src.mapInArrow(band_rows, f"id {id_dt}, band string").localCheckpoint(
         eager=True
     )
-    return sharded_bucket_pairs(sig, ["band"]).distinct()
+
+
+def lsh_candidate_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int = DEFAULT_HASHES,
+    bands: int = DEFAULT_BANDS,
+    n: int = DEFAULT_SHINGLE,
+    bucket_cap: int = DEFAULT_BUCKET_CAP,
+) -> DataFrame:
+    """Distinct candidate pairs (id_a < id_b) sharing >=1 LSH band:
+    lsh_band_rows -> sharded_bucket_pairs (collect at (band, shard)
+    granularity — no O(|bucket|) aggregate row, see its docstring) ->
+    distinct (A/B at sf1.0, 50k docs: full pair set 4.8s JVM bands ->
+    2.8s Arrow bands, pair sets identical). Shuffles on
+    uniformly-distributed md5 band keys; no self-join of ROW-level
+    data. All routes yield the same pair set, so results are
+    cap/shard-invariant (tested)."""
+    return sharded_bucket_pairs(
+        lsh_band_rows(df, id_col, text_col, k, bands, n), ["band"]
+    ).distinct()
 
 
 # neardup_components: edge-count ceiling for the exact driver-side
@@ -744,27 +747,37 @@ def paragraphs(text_col, size: int = 4):
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(ws, i * size + 1, size)))
 
 
-def paragraph_dedup(
+def first_occurrence(frame: DataFrame, key: str, order: list[str]) -> DataFrame:
+    """``frame`` plus an ``is_first`` flag: true on the row whose
+    (``order``...) tuple is the smallest within its ``key`` group — the
+    engine's one first-occurrence dedup shape.
+
+    Skew-safe at scale: groupBy(key) + min(struct(order)) — partial
+    aggregation collapses a boilerplate key repeated 10^9 times map-side
+    before the shuffle — then an equi-join back on the key, which AQE's
+    skew-join splitting handles (a Window row_number over the key would
+    funnel the whole hot key through one task with no mitigation).
+    Callers whose ``frame`` is derived per row (exploded, hashed) place
+    it behind a repartition(key) exchange, which both consumers (the
+    aggregate and the join's probe side) reuse at runtime, so the
+    derivation runs once and the exchange
+    already satisfies the aggregate's distribution — measured ~40%
+    faster than letting each branch re-derive (q45, sf0.1: 2.9s ->
+    1.7s). String ids compare lexicographically, matching the SQL
+    twins' ORDER BY."""
+    first = frame.groupBy(key).agg(F.min(F.struct(*order)).alias("_first"))
+    is_first = reduce(
+        lambda a, b: a & b, [F.col(c) == F.col(f"_first.{c}") for c in order]
+    )
+    return frame.join(first, key).select(*frame.columns, is_first.alias("is_first"))
+
+
+def paragraph_rows(
     df: DataFrame, id_col: str, text_col: str, size: int = 4
 ) -> DataFrame:
-    """Paragraph-level exact dedup (Falcon/RefinedWeb-style boilerplate
-    killer): explode documents to normalized paragraphs, fingerprint
-    each, keep the FIRST occurrence (min (doc_id, para_idx)) of every
-    fingerprint and flag the rest.
-
-    Skew-safe at scale: first-occurrence is found with groupBy(fp) +
-    min(struct(id, idx)) — partial aggregation collapses a boilerplate
-    paragraph repeated 10^9 times map-side before the shuffle — then an
-    equi-join back on fp, which AQE's skew-join splitting handles (a
-    Window row_number over fp would funnel the whole hot fingerprint
-    through one task with no mitigation). The paragraph frame sits
-    behind an explicit repartition(fp) exchange that BOTH consumers
-    (the first-occurrence aggregate and the join's probe side) reuse at
-    runtime, so the explode+md5 derivation runs once, and the exchange
-    already satisfies the aggregate's distribution — measured ~40%
-    faster than letting each branch re-derive (sf0.1: 2.9s -> 1.7s).
-
-    Returns (doc_id, para_idx, fp, keep 0/1).
+    """(doc_id, para_idx, para, fp) rows, one per non-empty paragraph,
+    fp = md5(lower(para)), behind a repartition(fp) exchange (see
+    first_occurrence); doc_id is cast to string.
 
     r7 derivation shape: raw rows are spread BEFORE the explode (the
     testdata parquet is one scan partition — the paragraph derivation
@@ -779,51 +792,7 @@ def paragraph_dedup(
     spread = df.select(
         F.col(id_col).cast("string").alias("doc_id"), F.col(text_col).alias("__text")
     ).repartition(parts, "doc_id")
-    p = spread.select(
-        "doc_id",
-        F.posexplode_outer(paragraphs(F.col("__text"), size)).alias(
-            "para_idx", "para"
-        ),
-    ).where(F.col("para") != "").select(
-        "doc_id",
-        F.col("para_idx").cast("long").alias("para_idx"),
-        F.md5(F.lower(F.col("para"))).alias("fp"),
-    ).repartition(parts, "fp")
-    first = p.groupBy("fp").agg(
-        F.min(F.struct("doc_id", "para_idx")).alias("first_occ")
-    )
-    return p.join(first, "fp").select(
-        "doc_id",
-        "para_idx",
-        "fp",
-        (
-            (F.col("doc_id") == F.col("first_occ.doc_id"))
-            & (F.col("para_idx") == F.col("first_occ.para_idx"))
-        )
-        .cast("long")
-        .alias("keep"),
-    )
-
-
-def paragraph_dedup_rebuild(
-    df: DataFrame, id_col: str, text_col: str, size: int = 4
-) -> DataFrame:
-    """paragraph_dedup, but returning the REBUILT documents: (doc_id,
-    text) where text is the doc's first-occurrence paragraphs re-joined
-    in order — the form a composed corpus pipeline consumes (duplicate
-    paragraphs deleted from the text, docs whose every paragraph is a
-    repeat vanish entirely). Same skew-safe shape as paragraph_dedup
-    (groupBy(fp) + min(struct) first-occurrence, never a window over a
-    hot fingerprint); first occurrence orders by (doc_id, para_idx) with
-    string doc_ids comparing lexicographically — matching the SQL twin's
-    ORDER BY."""
-    parts = df.sparkSession.sparkContext.defaultParallelism * 2
-    # same r7 derivation shape as paragraph_dedup: spread the raw rows
-    # first, outer-explode so no derived-size guard reaches the scan
-    spread = df.select(
-        F.col(id_col).cast("string").alias("doc_id"), F.col(text_col).alias("__text")
-    ).repartition(parts, "doc_id")
-    p = (
+    return (
         spread.select(
             "doc_id",
             F.posexplode_outer(paragraphs(F.col("__text"), size)).alias(
@@ -839,22 +808,43 @@ def paragraph_dedup_rebuild(
         )
         .repartition(parts, "fp")
     )
-    first = p.groupBy("fp").agg(
-        F.min(F.struct("doc_id", "para_idx")).alias("first_occ")
-    )
-    kept = p.join(first, "fp").where(
-        (F.col("doc_id") == F.col("first_occ.doc_id"))
-        & (F.col("para_idx") == F.col("first_occ.para_idx"))
-    )
+
+
+def rebuild_first_paragraphs(rows: DataFrame) -> DataFrame:
+    """paragraph_rows -> (doc_id, text): each doc's first-occurrence
+    paragraphs (min (doc_id, para_idx) per fp) re-joined in order; a doc
+    whose every paragraph is a repeat vanishes."""
+    kept = first_occurrence(rows, "fp", ["doc_id", "para_idx"]).where("is_first")
     return kept.groupBy("doc_id").agg(
         F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("para_idx", "para"))),
-                lambda s: s["para"],
-            ),
-            " ",
+            F.sort_array(F.collect_list(F.struct("para_idx", "para")))["para"], " "
         ).alias("text")
     )
+
+
+def paragraph_dedup(
+    df: DataFrame, id_col: str, text_col: str, size: int = 4
+) -> DataFrame:
+    """Paragraph-level exact dedup (Falcon/RefinedWeb-style boilerplate
+    killer): explode documents to normalized paragraphs, fingerprint
+    each (paragraph_rows), keep the FIRST occurrence (min (doc_id,
+    para_idx)) of every fingerprint and flag the rest
+    (first_occurrence). Returns (doc_id, para_idx, fp, keep 0/1)."""
+    rows = paragraph_rows(df, id_col, text_col, size).drop("para")
+    return first_occurrence(rows, "fp", ["doc_id", "para_idx"]).select(
+        "doc_id", "para_idx", "fp", F.col("is_first").cast("long").alias("keep")
+    )
+
+
+def paragraph_dedup_rebuild(
+    df: DataFrame, id_col: str, text_col: str, size: int = 4
+) -> DataFrame:
+    """paragraph_dedup, but returning the REBUILT documents: (doc_id,
+    text) where text is the doc's first-occurrence paragraphs re-joined
+    in order — the form a composed corpus pipeline consumes (duplicate
+    paragraphs deleted from the text, docs whose every paragraph is a
+    repeat vanish entirely)."""
+    return rebuild_first_paragraphs(paragraph_rows(df, id_col, text_col, size))
 
 
 def substring_windows(text_col, k: int = 8):
@@ -891,8 +881,7 @@ def substring_dedup_stats(
     Scale shape: windows explode to (id, win_idx, fp) rows — O(n_tokens)
     per doc, k x chars amplification paid in-expression (the suffix-array
     equivalent materializes the same order of state); first-occurrence is
-    groupBy(fp) + min(struct) — partial aggregation collapses a
-    boilerplate window repeated 10^9 times map-side, never a window
+    first_occurrence's groupBy(fp) + min(struct), never a window
     function over the hot fingerprint; covered positions stream out of a
     bounded explode (k per duplicate window). Fingerprints are
     xxhash64(window) — engine-side longs; the DuckDB twin uses md5. Both
@@ -913,13 +902,7 @@ def substring_dedup_stats(
         .select("id", "win_idx", F.xxhash64("win").alias("fp"))
         .repartition(parts, "fp")
     )
-    first = w.groupBy("fp").agg(F.min(F.struct("id", "win_idx")).alias("first_occ"))
-    dup = w.join(first, "fp").where(
-        ~(
-            (F.col("id") == F.col("first_occ.id"))
-            & (F.col("win_idx") == F.col("first_occ.win_idx"))
-        )
-    )
+    dup = first_occurrence(w, "fp", ["id", "win_idx"]).where(~F.col("is_first"))
     covered = (
         dup.select(
             "id",
@@ -945,19 +928,6 @@ def substring_dedup_stats(
             "CAST(CASE WHEN n_tokens > 0 THEN (coalesce(n_dup_tokens, 0) * 1000) "
             "DIV n_tokens ELSE 0 END AS BIGINT)"
         ).alias("dup_ratio_x1000"),
-    )
-
-
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exact dedup via fingerprint groupBy: groups with >1 member,
-    returning (fingerprint, n_dups, keep_id = min id)."""
-    from .textops import fingerprint
-
-    return (
-        df.select(F.col(id_col).alias("id"), fingerprint(F.col(text_col)).alias("fp"))
-        .groupBy("fp")
-        .agg(F.count("*").alias("n_dups"), F.min("id").alias("keep_id"))
-        .where(F.col("n_dups") > 1)
     )
 
 
@@ -1235,41 +1205,29 @@ def incremental_dedup_status(
     already exists in the corpus, else 'near' if ANY of its MinHash LSH
     band keys collides with a corpus band key, else 'new'.
 
-    Scale shape: each side's md5 signature work is staged behind an id
-    exchange ONCE (same inlining guard as lsh_candidate_pairs — the
-    corpus frame has two consumers, fp-index and band-index, which
-    reuse the exchange instead of re-deriving the signatures). The
-    probes are shuffle left-semi joins on uniformly-distributed md5
-    keys — no broadcast assumption on the corpus side, which is the
-    big side by construction. In a deployed pipeline the two distinct
-    index frames are the thing you'd persist as bucketed tables and
-    incrementally append to; their derivation here IS that index build.
+    Scale shape: band keys come from lsh_band_rows on each side (one
+    checkpointed Arrow stage per side, no JVM signature chain); the
+    fingerprint is a plain per-row projection. The probes are shuffle
+    left-semi joins on uniformly-distributed md5 keys — no broadcast
+    assumption on the corpus side, which is the big side by
+    construction. In a deployed pipeline the two distinct index frames
+    are the thing you'd persist as bucketed tables and incrementally
+    append to; their derivation here IS that index build.
     """
     from .textops import fingerprint
 
-    parts = new_df.sparkSession.sparkContext.defaultParallelism * 2
-
-    def derive(df: DataFrame) -> DataFrame:
-        staged = (
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-            .repartition(parts, "id")
-            .select(
-                "id",
-                fingerprint(F.col("__text")).alias("fp"),
-                hashed_shingles(F.col("__text"), k, n).alias("hs"),
-            )
-            .repartition(parts, "id")  # barrier: consumers reuse, not re-derive
-        )
-        return staged.select(
-            "id",
-            "fp",
-            band_keys(signature_from_hashed(F.col("hs"), k), bands, k).alias("bands"),
+    def fps(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias("id"), fingerprint(F.col(text_col)).alias("fp")
         )
 
-    newb = derive(new_df)
-    corp = derive(corpus_df)
-    corpus_fp = corp.select("fp").distinct()
-    corpus_band = corp.select(F.explode("bands").alias("band")).distinct()
+    newb = fps(new_df)
+    corpus_fp = fps(corpus_df).select("fp").distinct()
+    corpus_band = (
+        lsh_band_rows(corpus_df, id_col, text_col, k, bands, n)
+        .select("band")
+        .distinct()
+    )
 
     # distinct keeps the flag frames one-row-per-id; ids must be unique
     # within the incoming batch (dup ids would multiply through the
@@ -1281,7 +1239,7 @@ def incremental_dedup_status(
         .withColumn("_is_exact", F.lit(1))
     )
     near_ids = (
-        newb.select("id", F.explode("bands").alias("band"))
+        lsh_band_rows(new_df, id_col, text_col, k, bands, n)
         .join(corpus_band, "band", "left_semi")
         .select("id")
         .distinct()

@@ -8,15 +8,22 @@ Every operator here exists and is individually oracle-checked (q20-q47);
 what this module proves is that they COMPOSE without re-scans or
 re-derived python stages — the artifact a real 100 TB user actually runs.
 
+One funnel body (_funnel) serves every form: the batch funnel is the
+incremental core run against statically empty probe indexes, whose
+probe joins the optimizer deletes; the incremental and streaming forms
+pass real indexes.
+
 Composition discipline (the measured traps this avoids):
 - the extracted per-document text is localCheckpoint'ed once, so the
-  corpus parquet scan and the ONE mapInPandas OCR stage run exactly once
+  corpus parquet scan and the ONE mapInArrow OCR stage run exactly once
   no matter how many funnel branches consume them (a plain union of
   per-stage counts would re-derive the whole chain per branch — the
   documented round-2 union trap; the funnel plan below the checkpoint
   has NO scan and NO python stage, asserted by scripts/explain_audit.py);
-- both dedup stages use groupBy + min(struct) first-occurrence, never a
-  window over a hot fingerprint;
+- both dedup stages use dedup_fuzzy.first_occurrence (groupBy + min
+  (struct)), never a window over a hot fingerprint;
+- LSH band keys are derived once (dedup_fuzzy.lsh_band_rows) and feed
+  the pairs, the band-index probe and the band-index delta;
 - decontamination uses the broadcast-semi-join form (eval sets at corpus
   scale are far past the InSet crossover);
 - the near-dup stage routes through sharded_bucket_pairs and the
@@ -65,11 +72,7 @@ def doc_text_from_spans(extracted_flat: DataFrame) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("order", "text"))),
-                    lambda s: s["text"],
-                ),
-                " ",
+                F.sort_array(F.collect_list(F.struct("order", "text")))["text"], " "
             ).alias("text")
         )
     )
@@ -83,34 +86,40 @@ def _scrub(text):
     return F.regexp_replace(no_url, _EMAIL_RE, "[EMAIL]")
 
 
-def _gate_frames(base: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The stateless per-document gates (quality, repetition, PII scrub)
-    — shared verbatim by the batch funnel and the incremental form,
-    because per-doc gates are trivially incremental."""
-    ws = TX.words(F.col("text"))
-    m = base.select(
-        "doc_id",
-        "text",
-        F.size(ws).alias("n"),
-        F.size(F.array_distinct(ws)).alias("dw"),
-        TX.quality_score(F.col("text")).alias("qual"),
+def _checkpointed_base(doc_text: DataFrame) -> DataFrame:
+    """(doc_id string, text), localCheckpoint'ed so upstream derivation
+    (extraction!) runs once; callers on a real cluster can pre-checkpoint
+    reliably instead."""
+    return doc_text.select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    ).localCheckpoint(eager=True)
+
+
+def _eval_stand_in(base: DataFrame) -> DataFrame:
+    """Every EVAL_MOD-th document stands in for the external eval set."""
+    return base.where(F.col("doc_id").cast("bigint") % EVAL_MOD == 0)
+
+
+def _no_indexes(spark) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """STATICALLY empty probe indexes: limit(0) lets OptimizeLimitZero
+    turn each into an empty LocalRelation, so PropagateEmptyRelation
+    deletes every probe join from the batch funnel's plan (a plain
+    createDataFrame([]) is an RDD scan the optimizer cannot see through
+    — its anti-joins would survive into the plan)."""
+    return tuple(
+        spark.createDataFrame([], schema).limit(0)
+        for schema in ("fp string", "fp string", "band string")
     )
-    s1 = m.where(F.col("qual") >= QUALITY_MIN_X1000)
-    s2 = s1.where(
-        F.expr("CASE WHEN n > 0 THEN ((n - dw) * 1000) DIV n ELSE 0 END")
-        <= DUP_WORD_MAX_X1000
-    )
-    scrubbed = s2.select("doc_id", _scrub(F.col("text")).alias("text"))
-    return s1, s2, scrubbed
 
 
 def corpus_stages(
     doc_text: DataFrame, stage_checkpoints: bool = True
 ) -> dict[str, DataFrame]:
     """All funnel stages as (doc_id, ...) frames over a (doc_id, text)
-    corpus. ``doc_text`` is localCheckpoint'ed so upstream derivation
-    (extraction!) runs once; callers on a real cluster can pre-checkpoint
-    reliably instead.
+    corpus: the one funnel core (_funnel, which the incremental forms
+    also run) over the corpus' own checkpointed base, against
+    statically empty probe indexes, with the eval stand-in drawn from
+    that same base.
 
     ``stage_checkpoints=True`` (default) additionally materializes each
     post-shuffle stage frame once: the funnel emits EIGHT consumers, and
@@ -120,58 +129,10 @@ def corpus_stages(
     production multi-stage pipeline does between stages (persist the
     survivor set); pass False to get the single fully-lazy composed plan
     (what scripts/explain_audit.py pins invariants on)."""
-    base = doc_text.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).localCheckpoint(eager=True)
-
-    def stage(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True) if stage_checkpoints else df
-
-    s1, s2, scrubbed = _gate_frames(base)
-
-    # exact dedup first (cheapest): min doc_id per fingerprint keeps
-    fpf = scrubbed.select("doc_id", "text", TX.fingerprint(F.col("text")).alias("fp"))
-    first = fpf.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
-    s3 = stage(
-        fpf.join(first, "fp")
-        .where(F.col("doc_id") == F.col("keep_id"))
-        .select("doc_id", "text")
+    base = _checkpointed_base(doc_text)
+    return _funnel(
+        base, *_no_indexes(base.sparkSession), _eval_stand_in(base), stage_checkpoints
     )
-
-    s4 = stage(DF.paragraph_dedup_rebuild(s3, "doc_id", "text", size=4))
-
-    pairs = DF.lsh_candidate_pairs(s4, "doc_id", "text")
-    comp = DF.neardup_components(pairs).withColumnRenamed("id", "doc_id")
-    s5 = stage(
-        s4.join(comp, "doc_id", "left")
-        .where(F.col("comp").isNull() | (F.col("comp") == F.col("doc_id")))
-        .select("doc_id", "text")
-    )
-
-    ev = base.where(F.col("doc_id").cast("bigint") % EVAL_MOD == 0)
-    dc = DF.decontam_flags_join(s5, "doc_id", "text", ev, threshold_x1000=500)
-    s6 = stage(
-        s5.join(
-            dc.where(F.col("contaminated") == 0).select(F.col("id").alias("doc_id")),
-            "doc_id",
-            "left_semi",
-        )
-    )
-
-    s7 = TX.stratified_sample(
-        s6, "doc_id", TX.lang_id(F.col("text")), SAMPLE_RATES, SAMPLE_DEFAULT
-    )
-
-    return {
-        "input": base,
-        "quality_gate": s1,
-        "repetition_gate": s2,
-        "exact_dedup": s3,
-        "paragraph_dedup": s4,
-        "neardup_dedup": s5,
-        "decontam": s6,
-        "stratified_sample": s7,
-    }
 
 
 def corpus_funnel(
@@ -213,32 +174,15 @@ def funnel_probe_indexes(
     - para_index(fp): md5 of the kept paragraphs (a dropped paragraph
       shares its md5 with a kept one, so kept-para md5s cover all);
     - band_index(band): LSH band keys of every doc that reached the
-      near-dup stage (a doc dropped there still blocks new copies)."""
-    from ..operators.dedup_fuzzy import (
-        band_keys,
-        hashed_shingles,
-        paragraphs,
-        signature_from_hashed,
-    )
-
+      near-dup stage (a doc dropped there still blocks new copies) —
+      the funnel's own checkpointed band rows, never re-derived."""
     fp_index = stages["exact_dedup"].select(
         TX.fingerprint(F.col("text")).alias("fp")
     )
-    para_index = (
-        stages["paragraph_dedup"]
-        .select(F.explode(paragraphs(F.col("text"), 4)).alias("para"))
-        .where(F.col("para") != "")
-        .select(F.md5(F.lower(F.col("para"))).alias("fp"))
-    )
-    band_index = (
-        stages["paragraph_dedup"]
-        .select(
-            F.explode(
-                band_keys(signature_from_hashed(hashed_shingles(F.col("text"))))
-            ).alias("band")
-        )
-        .distinct()
-    )
+    para_index = DF.paragraph_rows(
+        stages["paragraph_dedup"], "doc_id", "text", 4
+    ).select("fp")
+    band_index = stages["bands"].select("band").distinct()
     return fp_index, para_index, band_index
 
 
@@ -254,64 +198,50 @@ def incremental_batch_stages(
     shape incremental_dedup_status (q52) exists for.
 
     Indexes (in production: persisted bucketed tables appended per
-    batch; here derived from the corpus funnel, which IS the index
-    build):
-    - exact-fp index: fingerprints of the corpus' exact-dedup survivors
-      (one survivor per fp, so the survivor fps are ALL corpus fps);
-    - paragraph-fp index: md5 of the kept paragraphs (dropped corpus
-      paras share an md5 with a kept one, so kept-para md5s cover all);
-    - LSH band index: band keys of every doc that REACHED the corpus'
-      near-dup stage (pre-neardup survivors — a corpus doc dropped as a
-      near-dup still blocks new copies of itself).
-
-    Batch semantics, stage by stage:
-    - per-doc gates: stateless, run on the batch alone (_gate_frames);
-    - exact dedup: within-batch first-wins, then drop fps already in
-      the corpus index;
-    - paragraph dedup: drop paragraphs whose md5 is in the corpus
-      index, then within-batch first-occurrence, rebuild;
-    - near-dup: LSH pairs WITHIN the batch -> connected components;
-      a batch doc is dropped if its component contains ANY member whose
-      band keys collide with the corpus index (the whole component is
-      corpus-adjacent — this is what makes the result match a full
-      re-run, where such a component would connect to the corpus doc
-      and lose representation to it), else the component representative
-      survives;
-    - decontam + stratified sample: stateless gates, batch side only
-      (the eval stand-in set spans corpus+batch bases, mirroring the
-      fixed external benchmark set a deployment holds constant).
+    batch; here funnel_probe_indexes of the corpus funnel, which IS the
+    index build): the corpus' exact-dedup fingerprints, kept-paragraph
+    md5s, and the band keys of every doc that REACHED its near-dup stage.
+    The eval stand-in set spans the corpus and batch bases, mirroring
+    the fixed external benchmark set a deployment holds constant.
 
     EQUIVALENCE CONTRACT (pinned by tests/test_incremental_pipeline):
     the batch's surviving set equals (full re-run over corpus UNION
     batch) ∩ batch, PROVIDED corpus doc_ids order before batch doc_ids
     (ingest order — earlier data wins every first-occurrence
-    tie-break, which is exactly how production assigns ids). NB (round-6
-    ADVICE): the ordering is lexicographic STRING order — doc_id is cast
-    to string on both sides and every min()/first-occurrence tie-break
-    compares strings — so numeric ids of differing width violate the
-    precondition silently ('9' > '10' as strings). Use zero-padded or
-    otherwise fixed-width ids, or compare max(corpus id) < min(batch id)
-    AS STRINGS before relying on the contract.
+    tie-break, which is exactly how production assigns ids). The
+    ordering is lexicographic STRING order — doc_id is cast to string
+    on both sides and every first-occurrence tie-break compares strings
+    — so numeric ids of differing width break it ('9' > '10' as
+    strings): this raises ValueError unless max(corpus doc_id) <
+    min(batch doc_id) as strings. Use zero-padded or otherwise
+    fixed-width ids.
 
     Returns the batch-side stage frames under the corpus_stages keys
     (counts comparable to a batch funnel) plus 'corpus_input'."""
-    corpus = corpus_stages(corpus_doc_text, stage_checkpoints=stage_checkpoints)
-    fp_index, para_index, band_index = funnel_probe_indexes(corpus)
-    cast = lambda d: d.select(  # noqa: E731
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    c_base = _checkpointed_base(corpus_doc_text)
+    b_base = _checkpointed_base(batch_doc_text)
+    c_max, b_min = (
+        c_base.agg(F.max("doc_id"))
+        .crossJoin(b_base.agg(F.min("doc_id")))
+        .first()
     )
-    ev = (
-        cast(corpus_doc_text)
-        .unionByName(cast(batch_doc_text))
-        .where(F.col("doc_id").cast("bigint") % EVAL_MOD == 0)
+    if c_max is not None and b_min is not None and not c_max < b_min:
+        raise ValueError(
+            "incremental_batch_stages needs every corpus doc_id to order "
+            f"before every batch doc_id as strings: max corpus id {c_max!r} "
+            f">= min batch id {b_min!r} (use fixed-width ids)"
+        )
+    corpus = _funnel(
+        c_base,
+        *_no_indexes(c_base.sparkSession),
+        _eval_stand_in(c_base),
+        stage_checkpoints,
     )
-    out = incremental_batch_stages_vs_indexes(
-        batch_doc_text,
-        fp_index,
-        para_index,
-        band_index,
-        ev,
-        stage_checkpoints=stage_checkpoints,
+    out = _funnel(
+        b_base,
+        *funnel_probe_indexes(corpus),
+        _eval_stand_in(c_base.unionByName(b_base)),
+        stage_checkpoints,
     )
     out["corpus_input"] = corpus["input"]
     return out
@@ -325,120 +255,103 @@ def incremental_batch_stages_vs_indexes(
     eval_doc_text: DataFrame,
     stage_checkpoints: bool = True,
 ) -> dict[str, DataFrame]:
-    """Core of the incremental funnel, taking the three probe indexes
-    DIRECTLY (fp_index(fp), para_index(fp), band_index(band)) plus the
-    eval stand-in frame — the form the STREAMING pipeline drives, where
-    the indexes are persisted tables appended per processed batch
-    (funnel_probe_indexes of each batch's own stages) rather than
-    re-derived from a corpus funnel. O(batch + index probes) per call;
-    semantics documented on incremental_batch_stages."""
-    from ..operators.dedup_fuzzy import (
-        band_keys,
-        hashed_shingles,
-        lsh_candidate_pairs,
-        neardup_components,
-        paragraphs,
-        signature_from_hashed,
+    """The funnel core, taking the three probe indexes DIRECTLY
+    (fp_index(fp), para_index(fp), band_index(band)) plus the eval
+    stand-in frame — the form the STREAMING pipeline drives, where the
+    indexes are persisted tables appended per processed batch
+    (funnel_probe_indexes of each batch's own stages). The streaming
+    form has no corpus ids to check, so the ingest-order precondition
+    of incremental_batch_stages is the caller's to keep. O(batch +
+    index probes) per call; see _funnel for the stage semantics."""
+    return _funnel(
+        _checkpointed_base(batch_doc_text),
+        fp_index,
+        para_index,
+        band_index,
+        eval_doc_text,
+        stage_checkpoints,
     )
 
-    base = batch_doc_text.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).localCheckpoint(eager=True)
+
+def _funnel(
+    base: DataFrame,
+    fp_index: DataFrame,
+    para_index: DataFrame,
+    band_index: DataFrame,
+    eval_doc_text: DataFrame,
+    stage_checkpoints: bool,
+) -> dict[str, DataFrame]:
+    """The one funnel body, over a checkpointed (doc_id string, text)
+    base and three probe indexes (statically empty for the batch form,
+    whose plan then carries no probe join at all). Stage by stage:
+    - per-doc gates (quality, repetition, PII scrub): stateless;
+    - exact dedup: first occurrence (min doc_id) per fingerprint, then
+      drop fps in fp_index;
+    - paragraph dedup: paragraph rows minus para_index fps, then
+      first occurrence per paragraph fp, rebuild (dropping whole fp
+      groups commutes with first-occurrence);
+    - near-dup: (id, band) rows derived ONCE (returned as 'bands', the
+      source of funnel_probe_indexes' band_index) feed the within-batch
+      LSH pairs -> connected components and the band_index probe; a
+      doc is dropped if its component contains ANY member whose bands
+      hit band_index (the whole component is corpus-adjacent — what
+      makes the result match a full re-run, where such a component
+      connects to the corpus doc and loses representation to it), else
+      the component representative survives;
+    - decontam vs the eval stand-in (broadcast semi-join form — eval
+      sets at corpus scale are far past the InSet crossover) +
+      stratified sample: stateless, batch side only."""
 
     def stage(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True) if stage_checkpoints else df
 
-    s1, s2, scrubbed = _gate_frames(base)
-
-    # ---- exact dedup: within-batch first-wins + corpus fp probe ----
-    bfp = scrubbed.select(
-        "doc_id", "text", TX.fingerprint(F.col("text")).alias("fp")
+    ws = TX.words(F.col("text"))
+    m = base.select(
+        "doc_id",
+        "text",
+        F.size(ws).alias("n"),
+        F.size(F.array_distinct(ws)).alias("dw"),
+        TX.quality_score(F.col("text")).alias("qual"),
     )
-    b_first = bfp.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
+    s1 = m.where(F.col("qual") >= QUALITY_MIN_X1000)
+    s2 = s1.where(
+        F.expr("CASE WHEN n > 0 THEN ((n - dw) * 1000) DIV n ELSE 0 END")
+        <= DUP_WORD_MAX_X1000
+    )
+
+    scrubbed = s2.select("doc_id", _scrub(F.col("text")).alias("text"))
+    fpf = scrubbed.select("doc_id", "text", TX.fingerprint(F.col("text")).alias("fp"))
     s3 = stage(
-        bfp.join(b_first, "fp")
-        .where(F.col("doc_id") == F.col("keep_id"))
+        DF.first_occurrence(fpf, "fp", ["doc_id"])
+        .where("is_first")
         .join(fp_index, "fp", "left_anti")
         .select("doc_id", "text")
     )
 
-    # ---- paragraph dedup: corpus para-fp probe + within-batch ----
-    parts = base.sparkSession.sparkContext.defaultParallelism * 2
-    p = (
-        s3.select(
-            "doc_id",
-            F.posexplode(paragraphs(F.col("text"), 4)).alias("para_idx", "para"),
-        )
-        .where(F.col("para") != "")
-        .select(
-            "doc_id",
-            F.col("para_idx").cast("long").alias("para_idx"),
-            "para",
-            F.md5(F.lower(F.col("para"))).alias("fp"),
-        )
-        .repartition(parts, "fp")
-        .join(para_index, "fp", "left_anti")
-    )
-    p_first = p.groupBy("fp").agg(
-        F.min(F.struct("doc_id", "para_idx")).alias("first_occ")
-    )
-    kept = p.join(p_first, "fp").where(
-        (F.col("doc_id") == F.col("first_occ.doc_id"))
-        & (F.col("para_idx") == F.col("first_occ.para_idx"))
-    )
     s4 = stage(
-        kept.groupBy("doc_id").agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("para_idx", "para"))),
-                    lambda s: s["para"],
-                ),
-                " ",
-            ).alias("text")
+        DF.rebuild_first_paragraphs(
+            DF.paragraph_rows(s3, "doc_id", "text", 4).join(
+                para_index, "fp", "left_anti"
+            )
         )
     )
 
-    # ---- near-dup: within-batch components + corpus band probe ----
-    b_bands = s4.select(
-        "doc_id",
-        F.explode(
-            band_keys(signature_from_hashed(hashed_shingles(F.col("text"))))
-        ).alias("band"),
+    bands = DF.lsh_band_rows(s4, "doc_id", "text")
+    pairs = DF.sharded_bucket_pairs(bands, ["band"]).distinct()
+    comp = DF.neardup_components(pairs).withColumnRenamed("id", "doc_id")
+    labeled = s4.join(comp, "doc_id", "left").select(
+        "doc_id", "text", F.coalesce(F.col("comp"), F.col("doc_id")).alias("comp")
     )
-    near_c = (
-        b_bands.join(band_index, "band", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("_near_c", F.lit(1))
+    hit = bands.join(band_index, "band", "left_semi").select(
+        F.col("id").alias("doc_id")
     )
-    comp = neardup_components(
-        lsh_candidate_pairs(s4, "doc_id", "text")
-    ).withColumnRenamed("id", "doc_id")
-    labeled = (
-        s4.join(comp, "doc_id", "left")
-        .join(near_c, "doc_id", "left")
-        .select(
-            "doc_id",
-            "text",
-            F.coalesce(F.col("comp"), F.col("doc_id")).alias("comp"),
-            F.coalesce(F.col("_near_c"), F.lit(0)).alias("_near_c"),
-        )
-    )
-    # a component is corpus-adjacent iff ANY member collides with the
-    # corpus band index — drop it whole (bounded aggregate per comp)
-    bad_comp = (
-        labeled.groupBy("comp")
-        .agg(F.max("_near_c").alias("_bad"))
-        .where(F.col("_bad") == 1)
-        .select("comp")
-    )
+    bad_comp = labeled.join(hit, "doc_id", "left_semi").select("comp").distinct()
     s5 = stage(
         labeled.join(bad_comp, "comp", "left_anti")
         .where(F.col("comp") == F.col("doc_id"))
         .select("doc_id", "text")
     )
 
-    # ---- decontam (fixed external eval stand-in) + stratified sample ----
     dc = DF.decontam_flags_join(
         s5, "doc_id", "text", eval_doc_text, threshold_x1000=500
     )
@@ -462,6 +375,7 @@ def incremental_batch_stages_vs_indexes(
         "neardup_dedup": s5,
         "decontam": s6,
         "stratified_sample": s7,
+        "bands": bands,
     }
 
 

@@ -222,6 +222,11 @@ def streaming_corpus_funnel(
     (doc_id, text) — constant across batches, exactly how a deployment
     holds its decontamination set.
 
+    Ingest order: parity with a batch re-run needs every batch's
+    doc_ids to order (as strings) after all earlier batches' — the
+    precondition incremental_batch_stages checks. It is not checked
+    here: the stream keeps only the probe indexes, no corpus ids.
+
     Recovery semantics (r7, closing the round-6 ADVICE defect — the old
     docstring claimed flat parquet appends were 'idempotent-by-content',
     which they are not: a crash after the survivors append duplicated
