@@ -6,6 +6,8 @@ Checks:
 - q01: the date predicate reaches the parquet scan (PushedFilters)
 - q15: partial aggregation (two HashAggregate levels) + only needed columns read
 - q16: dimension joins are broadcast (BroadcastHashJoin, no SortMergeJoin)
+- q27: one pair-expansion route (no Union, no flatten( pair array) under
+  exactly one df-guard Window
 - q41: full-outer CN-key merge is one sort-merge join, nothing quadratic
 - q42/q43/q44: pure narrow projections (no exchange/join/python)
 - q45: first-occurrence dedup aggregates partially before its shuffle
@@ -42,16 +44,22 @@ def main() -> None:
     spark = get_spark("explain-audit", cores=8, shuffle_partitions=16)
     failures = []
 
+    def check(name, desc, ok):
+        print(f"{'OK ' if ok else 'FAIL'} {name}: {desc}")
+        if not ok:
+            failures.append((name, desc))
+
     def audit(name, df, requirements):
         text = plan_of(df)
         with open(f"{OUT}/{name}.txt", "w") as f:
             f.write(text)
         for desc, pattern, expect in requirements:
-            ok = bool(re.search(pattern, text)) == expect
-            status = "OK " if ok else "FAIL"
-            print(f"{status} {name}: {desc}")
-            if not ok:
-                failures.append((name, desc))
+            check(name, desc, bool(re.search(pattern, text)) == expect)
+        return text
+
+    def n_nodes(text, node):
+        # formatted plans list each node twice (tree + detail); count details
+        return len(re.findall(rf"^\(\d+\) (?:{node})", text, re.M))
 
     audit(
         "q01_recent_filter",
@@ -126,6 +134,21 @@ def main() -> None:
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
         ],
     )
+    # q27 (n-gram Jaccard): ONE pair-expansion route — the df guard's
+    # single window, collect_set per posting, then a lambda-free
+    # posexplode+slice expansion. A Union would mean a second route
+    # re-deriving the guarded posting subtree; flatten( is the nested
+    # in-expression pair array (CodegenFallback HOF lambdas).
+    q27 = audit(
+        "q27_ngram_jaccard",
+        Q.queries()["q27_ngram_jaccard"](spark, SF),
+        [
+            ("no union (one expansion route)", r"Union", False),
+            ("no in-expression pair array", r"flatten\(", False),
+            ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
+        ],
+    )
+    check("q27_ngram_jaccard", "exactly one df-guard window", n_nodes(q27, "Window") == 1)
     audit(
         "q35_ivf_kmeans",
         Q.q_ivf_kmeans(spark, SF),
@@ -369,11 +392,11 @@ def main() -> None:
             plan_s,
         )
         bucketed = [pf for cols, pf in scans if "_mt_bucket" in cols]
-        ok = bucketed and all("_mt_bucket" in pf for pf in bucketed)
-        tag = "OK " if ok else "FAIL"
-        print(f"{tag} bucketed_lookup: {label}")
-        if not ok:
-            failures.append(("bucketed_lookup", label))
+        check(
+            "bucketed_lookup",
+            label,
+            bool(bucketed) and all("_mt_bucket" in pf for pf in bucketed),
+        )
 
     from xhs_ocr_spark.extraction.pipeline import extract_spans, extract_spans_flat
     from bench import staged_corpus
@@ -386,7 +409,7 @@ def main() -> None:
     stage_dir = os.path.join(tempfile.gettempdir(), "xhs_audit_corpus_v2")
     corpus = staged_corpus(spark, SF, 2, stage_dir)
     for name, df in (("flagship_flat", extract_spans_flat(corpus)), ("flagship_full", extract_spans(corpus))):
-        audit(
+        plan_txt = audit(
             name,
             df,
             [
@@ -400,21 +423,13 @@ def main() -> None:
                 ("no interpreted HOF lambda", r"lambdafunction", False),
             ],
         )
-        # single-scan + single-python-stage invariants (round-2 item 5).
-        # formatted plans list each node twice (tree + detail); count details.
-        plan_txt = open(os.path.join(OUT, f"{name}.txt")).read()
-        n_scan = len(re.findall(r"^\(\d+\) Scan parquet", plan_txt, re.M))
-        n_py = len(
-            re.findall(r"^\(\d+\) (?:MapInArrow|MapInPandas|ArrowEvalPython)", plan_txt, re.M)
+        # single-scan + single-python-stage invariants (round-2 item 5)
+        check(name, "exactly one parquet scan", n_nodes(plan_txt, "Scan parquet") == 1)
+        check(
+            name,
+            "exactly one python stage",
+            n_nodes(plan_txt, "MapInArrow|MapInPandas|ArrowEvalPython") == 1,
         )
-        for label, want in (
-            ("exactly one parquet scan", n_scan == 1),
-            ("exactly one python stage", n_py == 1),
-        ):
-            tag = "OK " if want else "FAIL"
-            print(f"{tag} {name}: {label}")
-            if not want:
-                failures.append((name, label))
 
     # q48 composed corpus pipeline (round-4 verdict item 1): the funnel
     # plan sits entirely ABOVE the localCheckpoint of the extracted text,

@@ -27,27 +27,9 @@ def small_embeddings(spark):
     return _vecs(spark, rows)
 
 
-def _pairs(df):
-    return sorted((r["id_a"], r["id_b"]) for r in df.collect())
-
-
-def test_lsh_near_neighbors_cap_invariance(spark, small_embeddings):
-    """Streamed (cap=2) and in-expression (cap=10^6) routes must yield the
-    same verified pair set — mirrors test_lsh_cap_invariance for text."""
-    hi = SS.lsh_near_neighbors(
-        small_embeddings, dim=8, n_planes=4, min_cos=0.9, bucket_cap=10**6
-    )
-    lo = SS.lsh_near_neighbors(
-        small_embeddings, dim=8, n_planes=4, min_cos=0.9, bucket_cap=2
-    )
-    got_hi, got_lo = _pairs(hi), _pairs(lo)
-    assert got_hi == got_lo
-    assert len(got_hi) > 0  # the clusters must actually collide
-
-
 def test_lsh_near_neighbors_hot_bucket_completes(spark):
     """A degenerate corpus (every vector identical -> ONE sign-bit bucket)
-    must stream through expand_bucket_pairs' guarded path instead of
+    must stream through the sharded grouped verify instead of
     sending |bucket|^2 cosines to a single self-join task (round-2 verdict
     item 1). 2000 identical vectors -> C(2000,2) pairs, all cos=1."""
     n = 2000
@@ -70,6 +52,7 @@ def test_lsh_near_neighbors_no_bucket_join(spark, small_embeddings):
     (partial_collect_list + the _shard machinery), no row-LEVEL vector
     column ever appears in a join key, and exactly one python stage."""
     df = SS.lsh_near_neighbors(small_embeddings, dim=8, n_planes=4, min_cos=0.9)
+    assert df.count() > 0  # the clusters must actually collide
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )

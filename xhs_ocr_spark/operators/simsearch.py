@@ -268,17 +268,6 @@ def fit_centroids_spark(
     return kmeans_centroids([r[0] for r in rows], n_cells)
 
 
-def cell_assign(vec_col, centroids: list[list[float]]):
-    """argmax-dot cell over explicit centroid literals (first max wins —
-    same tie rule as numpy argmax and DuckDB list_position). Centroids
-    are unit vectors (spherical fit), so this is argmax-cosine without
-    needing to normalize the corpus vectors."""
-    dots = F.array(
-        *[dot(vec_col, F.array([F.lit(v) for v in c]), len(c)) for c in centroids]
-    )
-    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
-
-
 def probe_cells(vec_col, centroids: list[list[float]], nprobe: int):
     """The nprobe nearest cells for a query (by dot, descending; ties by
     cell index). array<int> of length min(nprobe, n_cells)."""
@@ -371,7 +360,6 @@ def lsh_near_neighbors(
     dim: int = 64,
     n_planes: int = N_PLANES,
     min_cos: float = 0.6,
-    bucket_cap: int = 64,
     n_shards: int = N_VERIFY_SHARDS,
 ) -> DataFrame:
     """Candidate pairs sharing an LSH bucket, verified by exact cosine.
@@ -405,9 +393,7 @@ def lsh_near_neighbors(
     never pass the verify (null cosine) in the old route.
 
     Each vector lands in exactly ONE bucket, so emitted pairs are
-    already distinct. ``bucket_cap`` is retained for API compatibility;
-    since r7 there is no in-expression-vs-streamed expansion regime for
-    it to select (the grouped verify has a single shape).
+    already distinct.
     Measured sf1.0: 22.2s (r6) -> 2.0-2.7s; output equality checked
     pair-for-pair (1.67M pairs)."""
     import numpy as np

@@ -62,11 +62,6 @@ def stopword_ratio(text: Column) -> Column:
     ) / F.size(ws)
 
 
-def punct_ratio(text: Column) -> Column:
-    stripped = F.regexp_replace(text, r"[^\p{L}\p{N}\s]", "")
-    return (F.length(text) - F.length(stripped)) / F.length(text)
-
-
 def quality_score(text: Column) -> Column:
     """Composite quality score in [0,1]: length band + low punctuation +
     healthy stopword presence. Integer-scaled to x1000 for exact

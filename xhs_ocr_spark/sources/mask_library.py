@@ -62,8 +62,3 @@ def broadcast_mask_library(spark: SparkSession, hws: tuple[str, ...] = HW_VALUES
         bc = spark.sparkContext.broadcast(masks_by_key(mask_library(hws)))
         _BC_CACHE[key] = bc
     return bc
-
-
-def load_mask_library(spark: SparkSession, path: str) -> DataFrame:
-    """Read a materialized mask library table (parity with S5's disk scan)."""
-    return spark.read.parquet(path)
