@@ -9,7 +9,9 @@ Checks:
 - q27: one pair-expansion route (no Union, no flatten( pair array) under
   exactly one df-guard Window
 - q41: full-outer CN-key merge is one sort-merge join, nothing quadratic
-- q42/q43/q44: pure narrow projections (no exchange/join/python)
+- q42/q43/q46: pure narrow projections (no exchange/join/python)
+- q44: decontamination broadcasts the eval shingle set (BroadcastHashJoin,
+  no sort-merge join, nothing quadratic, no python)
 - q45: first-occurrence dedup aggregates partially before its shuffle
 - bucketed sink lookup: partition-prunes in clean AND merge-on-read state
 - flagship (flat and full extract_spans plans): the span spread
@@ -195,9 +197,9 @@ def main() -> None:
         Q.queries()["q44_decontam"](spark, SF),
         [
             # broadcast-semi decontamination: eval shingles broadcast
-            # (never shuffled), the corpus pays one groupBy(id); the
-            # InSet form is only for small eval sets (measured 50x
-            # slower past the crossover — see decontam_flags docstring)
+            # (never shuffled), the corpus pays one groupBy(id); an
+            # in-plan InSet form measured 50x slower at sf0.1 (see the
+            # q_decontam docstring)
             ("eval side broadcast", r"BroadcastHashJoin", True),
             ("no sort-merge join", r"SortMergeJoin", False),
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),

@@ -18,10 +18,7 @@ from xhs_ocr_spark.extraction.datagen import (
     generate_corpus,
 )
 from xhs_ocr_spark.extraction.pipeline import extract_spans_flat
-from xhs_ocr_spark.sources.mask_library import (
-    broadcast_mask_library,
-    mask_library_df,
-)
+from xhs_ocr_spark.sources.mask_library import broadcast_mask_library
 
 MASKS = RI.masks_by_key(RI.mask_library())
 
@@ -75,11 +72,19 @@ def test_mask_size_guard():
 
 
 def test_mask_library_dim_table(spark):
-    df = mask_library_df(spark)
-    assert df.columns == ["app", "hw", "tag", "mask_order", "mask_bytes"]
-    rows = df.count()
+    rows = RI.mask_library(RI.HW_VALUES)
+    assert all(
+        set(r) == {"app", "hw", "tag", "mask_order", "mask_bytes"} for r in rows
+    )
     # 2 apps x 2 hardware subtrees (aibox/futurecloud) x tags x orders
-    assert rows == 2 * len(RI.HW_VALUES) * len(S.TAGS) * S.N_MASKS
+    assert len(rows) == 2 * len(RI.HW_VALUES) * len(S.TAGS) * S.N_MASKS
+    assert {(r["app"], r["hw"], r["tag"], r["mask_order"]) for r in rows} == {
+        (app, hw, tag, order)
+        for app in ("xhs", "tiktok")
+        for hw in RI.HW_VALUES
+        for tag in S.TAGS
+        for order in range(S.N_MASKS)
+    }
     bc = broadcast_mask_library(spark)
     for hw in RI.HW_VALUES:
         assert len(bc.value[("xhs", hw, S.TAGS[0])]) == S.N_MASKS
@@ -148,72 +153,31 @@ def test_generate_corpus_carries_bytes(spark):
 
 
 def test_raw_rgba_codec_real_ops(spark):
-    """RawRGBACodec is a REAL decoder: metadata from pixels, pixel-stat
-    features, numpy resize — over actual payload bytes."""
-    from xhs_ocr_spark.operators.multimodal import (
-        RawRGBACodec,
-        raw_media_metadata,
-        resize_media,
-    )
+    """raw_media_metadata (q39) decodes the REAL raw-RGBA payload: its
+    header fields equal read_header/read_hw of the decoded pixels, and
+    an undecodable payload is dropped, not a task failure."""
+    from xhs_ocr_spark.operators.multimodal import raw_media_metadata
 
-    codec = RawRGBACodec()
-    ref = "mem://codec/0"
-    content = RI.render_media_image(ref)
-    kind, w, h, n_frames = codec.decode_meta(content)
-    assert (kind, w, n_frames) == ("image", RI.W, 1)
-    tag, app, n_blocks = codec.header(content)
-    assert tag == S.media_tag(ref) and app == S.media_app(ref)
-    assert h == (RI.HEADER_BANDS + n_blocks) * RI.BH
-
-    feats = codec.extract_features(content)
-    assert len(feats) == 8 and all(0.0 <= f <= 1.0 for f in feats)
-    assert feats == codec.extract_features(content)  # deterministic
-    assert codec.decode_meta(b"not an image") is None
-
-    small = codec.resize(content, 4, 8)
-    assert len(small) == 4 * 8 * 4
-    import numpy as np
-
-    arr = np.frombuffer(small, dtype=np.uint8).reshape(4, 8, 4)
-    orig = RI.decode_image(content)
-    assert (arr[0, 0] == orig[0, 0]).all()  # nearest-neighbor keeps corners
-
+    refs = [f"mem://codec/{i}" for i in range(12)]
+    payloads = {r: RI.render_media_image(r) for r in refs}
     media = spark.createDataFrame(
-        [(ref, content), ("bad", b"junkjunkjunkjunk" * 8)],
+        [(r, payloads[r]) for r in refs] + [("bad", b"junkjunkjunkjunk" * 8)],
         "media_ref string, media_bytes binary",
     )
-    meta = raw_media_metadata(media).collect()
-    assert len(meta) == 1 and meta[0]["tag"] == tag  # bad payload dropped
-    rs = resize_media(media, 4, 8).collect()
-    assert len(rs) == 1 and len(bytes(rs[0]["media_bytes"])) == 4 * 8 * 4
-
-
-def test_preprocess_x2_x4_real_math():
-    """X2-X4 (disabled in the reference itself, core/run.py:409-411;
-    implementations core/run.py:49-104) re-expressed as real numpy ops."""
-    from xhs_ocr_spark.operators.multimodal import RawRGBACodec
-
-    codec = RawRGBACodec()
-    ref = "mem://prep/0"
-    content = RI.render_media_image(ref)
-    orig = RI.decode_image(content)
-    rows, w = orig.shape[:2]
-
-    up = np.frombuffer(codec.upscale(content, 2), dtype=np.uint8).reshape(
-        rows * 2, w * 2, 4
-    )
-    assert (up[::2, ::2] == orig).all()  # nearest-neighbor repeat
-
-    enh = np.frombuffer(
-        codec.enhance(content, alpha=1.5, beta=50), dtype=np.uint8
-    ).reshape(rows, w, 4)
-    expect = np.clip(1.5 * orig.astype(np.float64) + 50, 0, 255).astype(np.uint8)
-    assert (enh == expect).all()
-
-    binary = np.frombuffer(codec.denoise_binarize(content), dtype=np.uint8)
-    assert binary.shape[0] == rows * w
-    assert set(np.unique(binary)) <= {0, 255}
-    assert (binary == 255).any() and (binary == 0).any()
+    got = {r["media_ref"]: r for r in raw_media_metadata(media).collect()}
+    assert set(got) == set(refs)  # bad payload dropped
+    for ref in refs:
+        img = RI.decode_image(payloads[ref])
+        tag, app, n_blocks = RI.read_header(img)
+        row = got[ref]
+        assert (row["tag"], row["app"], row["hw"], row["n_blocks"]) == (
+            tag, app, RI.read_hw(img), n_blocks
+        )
+        assert row["n_bytes"] == len(payloads[ref])
+        # and the pixels carry what the renderer derived from the ref
+        assert (tag, app) == (S.media_tag(ref), S.media_app(ref))
+        assert row["hw"] == RI.media_hw(ref)
+    assert {got[r]["hw"] for r in refs} == set(RI.HW_VALUES)  # both exercised
 
 
 def test_corrupt_payload_dead_letters_not_crashes(spark):

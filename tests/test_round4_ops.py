@@ -22,62 +22,13 @@ def test_decontam_flags_planted_eval_sentence(spark):
     )
     out = {
         r["id"]: r.asDict()
-        for r in DF.decontam_flags(
-            corpus, "doc_id", "text", DF.eval_shingle_set(eval_df)
-        ).collect()
+        for r in DF.decontam_flags_join(corpus, "doc_id", "text", eval_df).collect()
     }
     assert out["leak"]["contaminated"] == 1
     assert out["leak"]["n_eval_hits"] >= 7  # the full planted sentence overlaps
     assert out["clean"]["contaminated"] == 0 and out["clean"]["n_eval_hits"] == 0
     assert out["trace"]["contaminated"] == 0
     assert 0 < out["trace"]["n_eval_hits"] < out["trace"]["n_shingles"] // 2
-
-
-def test_decontam_join_variant_matches_inset_variant(spark):
-    """The broadcast-join path (big eval sets) and the InSet path (small
-    eval sets) must produce identical flags."""
-    eval_df = spark.createDataFrame(
-        [Row(text=EVAL_SENT), Row(text="another benchmark prompt goes right here now")]
-    )
-    corpus = spark.createDataFrame(
-        [
-            Row(doc_id=f"d{i}", text=t)
-            for i, t in enumerate(
-                [
-                    EVAL_SENT,
-                    "prefix " + EVAL_SENT,
-                    "another benchmark prompt goes right here now indeed",
-                    "nothing shared with any eval document at all",
-                    "",
-                ]
-            )
-        ]
-    )
-    a = sorted(
-        tuple(r)
-        for r in DF.decontam_flags(
-            corpus, "doc_id", "text", DF.eval_shingle_set(eval_df)
-        ).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in DF.decontam_flags_join(corpus, "doc_id", "text", eval_df).collect()
-    )
-    assert a == b
-    assert any(r[3] == 1 for r in a) and any(r[3] == 0 for r in a)
-
-
-def test_eval_shingle_set_cap_fails_loudly(spark):
-    import pytest
-
-    big = spark.range(200).select(
-        F.concat_ws(
-            " ",
-            *[F.concat(F.lit(f"w{j}_"), F.col("id").cast("string")) for j in range(8)],
-        ).alias("text")
-    )
-    with pytest.raises(ValueError, match="decontam_flags_join"):
-        DF.eval_shingle_set(big, max_shingles=100)
 
 
 def test_paragraph_dedup_planted_repeats(spark):

@@ -283,10 +283,10 @@ def test_corpus_pipeline_resume_through_sink(spark, tmp_path):
     insert_ignore; an at-least-once REPLAY of the same batch (the crash/
     retry contract checkpointed extraction relies on) must not duplicate
     rows, and a later incremental batch adds only its own docs."""
-    from xhs_ocr_spark.plans.corpus_pipeline import corpus_survivors
+    from xhs_ocr_spark.plans.corpus_pipeline import corpus_stages
     from xhs_ocr_spark.sinks import BucketedMergeTable
 
-    surv = corpus_survivors(_planted_corpus(spark))
+    surv = corpus_stages(_planted_corpus(spark))["stratified_sample"]
     t = BucketedMergeTable(spark, str(tmp_path / "corpus"), keys=["doc_id"], n_buckets=4)
     t.insert_ignore(surv)
     first = sorted(r["doc_id"] for r in t.read().collect())

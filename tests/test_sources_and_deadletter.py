@@ -80,73 +80,3 @@ def test_null_media_ref_dead_letter_has_reason(spark):
     assert len(rows) == 1
     assert rows[0]["reason"] == "all_masks_failed"
     assert [r["kind"] for r in ok.collect()] == ["text"]
-
-
-# ---------------------------------------------------------------------------
-# JSONL / CSV ingestion with dead-letter routing (sources/text_formats.py)
-# ---------------------------------------------------------------------------
-
-
-def test_jsonl_deadletter_split(spark, tmp_path):
-    from xhs_ocr_spark.sources.text_formats import read_jsonl_with_deadletter
-
-    p = tmp_path / "in.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "hello world", "lang": "en", "source": "web"}\n'
-        '{"doc_id": 2, "text": "guten tag", "lang": "de", "source": "web"}\n'
-        "{not json at all\n"
-        '{"unrelated_shape": true}\n'
-        '{"doc_id": 3, "text": "partial ok"}\n'
-    )
-    good, dead = read_jsonl_with_deadletter(spark, str(p))
-    got = {(r["doc_id"], r["text"], r["lang"]) for r in good.collect()}
-    # partial rows (some nulls) are GOOD — only corrupt / all-null die
-    assert got == {
-        (1, "hello world", "en"),
-        (2, "guten tag", "de"),
-        (3, "partial ok", None),
-    }
-    dl = dead.collect()
-    assert len(dl) == 2
-    by_reason = {r["reason"]: r["raw_line"] for r in dl}
-    # malformed JSON and valid-JSON-wrong-shape are distinct classes,
-    # and BOTH keep the original input line verbatim for replay
-    # (round-5 ADVICE: the old reader degraded wrong-shape raw_line
-    # to an all-null '{}')
-    assert set(by_reason) == {"jsonl_parse", "jsonl_shape"}
-    assert "not json" in by_reason["jsonl_parse"]
-    assert by_reason["jsonl_shape"] == '{"unrelated_shape": true}'
-
-
-def test_csv_deadletter_split(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from xhs_ocr_spark.sources.text_formats import read_csv_with_deadletter
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("_corrupt_record", T.StringType()),
-        ]
-    )
-    p = tmp_path / "in.csv"
-    p.write_text("doc_id,text\n1,alpha\nnot_a_number,beta\n2,gamma\n")
-    good, dead = read_csv_with_deadletter(spark, str(p), schema)
-    assert {(r["doc_id"], r["text"]) for r in good.collect()} == {
-        (1, "alpha"),
-        (2, "gamma"),
-    }
-    dl = dead.collect()
-    assert len(dl) == 1 and "not_a_number" in dl[0]["raw_line"]
-
-
-def test_jsonl_schema_must_declare_corrupt_col(spark):
-    import pytest as _pytest
-    from pyspark.sql import types as T
-
-    from xhs_ocr_spark.sources.text_formats import read_jsonl_with_deadletter
-
-    s = T.StructType([T.StructField("doc_id", T.LongType())])
-    with _pytest.raises(ValueError):
-        read_jsonl_with_deadletter(spark, "/nonexistent", schema=s)

@@ -33,11 +33,6 @@ DEFAULT_BANDS = 4  # rows-per-band = DEFAULT_HASHES / DEFAULT_BANDS = 2
 # collect_set row).
 DEFAULT_SHARDS = 16
 
-# decontam_flags InSet crossover: above this many eval shingles the
-# per-lambda-invocation probe-set rebuild dominates (measured) and the
-# broadcast-join form should be used instead.
-DECONTAM_INSET_MAX = 2048
-
 
 def shingles(text_col, n: int = DEFAULT_SHINGLE):
     """Word n-gram shingles as an array<string> (space-joined)."""
@@ -547,87 +542,6 @@ def simhash64_hex(text_col):
     return sh64(text_col)
 
 
-def eval_shingle_set(
-    eval_df: DataFrame,
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    max_shingles: int = 500_000,
-) -> list[str]:
-    """Distinct word n-gram shingles of a (small) eval/benchmark table,
-    collected to the driver. Eval sets are small by definition (a
-    benchmark is thousands of documents, not billions), so this is a
-    bounded metadata collect; the cap fails loudly if someone points it
-    at a corpus. For an eval set that genuinely exceeds the cap, use
-    decontam_flags_join (broadcast join, nothing collected)."""
-    rows = (
-        eval_df.select(
-            F.explode(F.array_distinct(shingles(F.col(text_col), n))).alias("sh")
-        )
-        .distinct()
-        .limit(max_shingles + 1)
-        .collect()
-    )
-    if len(rows) > max_shingles:
-        raise ValueError(
-            f"eval set has > {max_shingles} distinct shingles — "
-            "use decontam_flags_join for eval sets this large"
-        )
-    return sorted(r["sh"] for r in rows)
-
-
-def decontam_flags(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    eval_shingles: list[str],
-    n: int = DEFAULT_SHINGLE,
-    threshold_x1000: int = 500,
-) -> DataFrame:
-    """Benchmark decontamination — flag documents whose n-gram overlap
-    with an eval set exceeds a threshold, the standard guard against
-    test-set leakage into training corpora (round-3 verdict item 3).
-
-    Scale shape: the eval shingle set rides in the plan as a static
-    InSet, so the whole operator is a narrow per-row projection: no
-    join, no shuffle, no python. CROSSOVER CAVEAT (measured): inside an
-    interpreted HOF lambda the InSet's probe set is rebuilt PER
-    INVOCATION, so cost grows with |eval shingles| per row — at ~16k
-    shingles this form took 10.8s where decontam_flags_join took 0.2s
-    (sf0.1). Use this form for small eval sets (a few hundred
-    shingles); decontam_flags_join for anything bigger. A warning fires
-    past DECONTAM_INSET_MAX.
-
-    Exact integer arithmetic ((hits * 1000) DIV total, like
-    q42_repetition) so the DuckDB oracle matches bit-for-bit.
-    Returns (id, n_shingles, n_eval_hits, contaminated 0/1)."""
-    if len(eval_shingles) > DECONTAM_INSET_MAX:
-        log.warning(
-            "decontam_flags: %d eval shingles is past the InSet crossover "
-            "(~%d) — decontam_flags_join will be much faster.",
-            len(eval_shingles),
-            DECONTAM_INSET_MAX,
-        )
-    sh = F.array_distinct(shingles(F.col(text_col), n))
-    if eval_shingles:
-        hits = F.size(F.filter(sh, lambda s: s.isin(list(eval_shingles))))
-    else:
-        hits = F.lit(0)
-    m = df.select(
-        F.col(id_col).alias("id"),
-        F.size(sh).cast("long").alias("n_shingles"),
-        hits.cast("long").alias("n_eval_hits"),
-    )
-    return m.select(
-        "id",
-        "n_shingles",
-        "n_eval_hits",
-        F.expr(
-            "CAST(CASE WHEN n_shingles > 0 AND (n_eval_hits * 1000) DIV n_shingles "
-            f">= {int(threshold_x1000)} THEN 1 ELSE 0 END AS BIGINT)"
-        ).alias("contaminated"),
-    )
-
-
 def decontam_flags_join(
     df: DataFrame,
     id_col: str,
@@ -637,10 +551,17 @@ def decontam_flags_join(
     n: int = DEFAULT_SHINGLE,
     threshold_x1000: int = 500,
 ) -> DataFrame:
-    """decontam_flags for eval sets too large to ride the plan as an
-    InSet: broadcast LEFT SEMI join of the corpus shingle index against
-    the eval shingle set (still no shuffle of eval data; the corpus pays
-    one groupBy(id) shuffle to count hits). Same output contract."""
+    """Benchmark decontamination — flag documents whose n-gram overlap
+    with an eval set exceeds a threshold, the standard guard against
+    test-set leakage into training corpora (round-3 verdict item 3).
+
+    Broadcast LEFT SEMI join of the corpus shingle index against the
+    eval shingle set: no shuffle of eval data; the corpus pays one
+    groupBy(id) shuffle to count hits.
+
+    Exact integer arithmetic ((hits * 1000) DIV total, like
+    q42_repetition) so the DuckDB oracle matches bit-for-bit.
+    Returns (id, n_shingles, n_eval_hits, contaminated 0/1)."""
     ex = _shingle_index(df, id_col, text_col, n, None)
     ev = (
         eval_df.select(

@@ -1,239 +1,17 @@
-"""Multimodal columns: images/audio/video as opaque binary + typed metadata.
+"""Multimodal columns: header metadata decoded from the engine's raw-RGBA
+screenshot payloads (extraction/raw_image.py), the q39 path.
 
-The Spark-side plumbing is real and tested — schemas, Arrow batching,
-mapInPandas signatures, partitioning — while the codec itself is stubbed:
-the container has no image/audio libraries, so `RealCodec` raises
-NotImplementedError with the drop-in point documented, and tests run the
-deterministic `SyntheticCodec` over a self-describing binary format.
-
-Binary format (synthetic): b"XMED" | kind(1B: 0=image,1=audio,2=video) |
-width(2B BE) | height(2B BE) | n_frames(2B BE) | payload bytes.
+The decode is real numpy array math over the payload bytes inside one
+Arrow-batched Python stage; no external image library is needed.
 """
 
 from __future__ import annotations
 
-import hashlib
-import struct
 from collections.abc import Iterator
 
 import pandas as pd
-import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
-
-MAGIC = b"XMED"
-KINDS = {0: "image", 1: "audio", 2: "video"}
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("content", T.BinaryType()),
-    ]
-)
-META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def synth_media_bytes(media_id: str) -> bytes:
-    """Deterministic self-describing payload for tests/datagen."""
-    h = int(hashlib.md5(media_id.encode()).hexdigest()[:12], 16)
-    kind = h % 3
-    w, hgt = 64 + h % 512, 64 + (h >> 9) % 512
-    frames = 1 if kind == 0 else 8 + h % 24
-    payload = hashlib.md5(media_id.encode()).digest() * 4
-    return MAGIC + struct.pack(">BHHH", kind, w, hgt, frames) + payload
-
-
-class SyntheticCodec:
-    """Deterministic decode of the synthetic format (per-executor init,
-    same lifecycle slot a real codec would occupy)."""
-
-    def decode_meta(self, content: bytes):
-        if content[:4] != MAGIC:
-            return None
-        kind, w, h, frames = struct.unpack(">BHHH", content[4:11])
-        return KINDS.get(kind, "unknown"), w, h, frames
-
-    def extract_features(self, content: bytes, dim: int = 8):
-        meta = self.decode_meta(content)
-        if meta is None:
-            return None
-        payload = content[11:]
-        return [round(b / 255.0, 6) for b in payload[:dim]]
-
-
-class RealCodec:
-    """Drop-in point for EXTERNAL formats (png/jpeg/mp4 via cv2/PIL/
-    ffmpeg/soundfile — not in this container). For the engine's own raw
-    RGBA format, RawRGBACodec below is a REAL decoder, not a stub."""
-
-    def decode_meta(self, content: bytes):
-        raise NotImplementedError(
-            "external media decoding requires cv2/PIL/ffmpeg — not in "
-            "this container; RawRGBACodec handles the raw RGBA format, "
-            "SyntheticCodec the XMED test format"
-        )
-
-    extract_features = decode_meta
-
-
-class RawRGBACodec:
-    """REAL decoder for the engine's raw-RGBA screenshot payloads
-    (extraction/raw_image.py): numpy-only decode, pixel-statistics
-    feature extraction, and nearest-neighbor resize — actual array math
-    over actual image bytes, no external libraries needed."""
-
-    def _img(self, content: bytes):
-        from ..extraction import raw_image as RI
-
-        return RI.decode_image(bytes(content))
-
-    def try_decode(self, content: bytes):
-        """ONE decode for the whole stage: (img, tag, app, n_blocks) or
-        None on corrupt bytes — the hot-path stages call this once per
-        payload instead of decode_meta + a second decode."""
-        from ..extraction import raw_image as RI
-
-        try:
-            img = self._img(content)
-            tag, app, n_blocks = RI.read_header(img)
-        except Exception:
-            return None
-        return img, tag, app, n_blocks
-
-    def decode_meta(self, content: bytes):
-        d = self.try_decode(content)
-        if d is None:
-            return None
-        img = d[0]
-        return "image", img.shape[1], img.shape[0], 1
-
-    def header(self, content: bytes):
-        """(tag, app, n_blocks) from the payload's header band."""
-        from ..extraction import raw_image as RI
-
-        return RI.read_header(self._img(content))
-
-    def extract_features(self, content: bytes, dim: int = 8):
-        """Pixel statistics: 4 global per-channel means + 4 row-quadrant
-        red-channel means, all in [0,1]. Deterministic, REAL math."""
-        import numpy as np
-
-        d = self.try_decode(content)
-        if d is None:
-            return None
-        img = d[0].astype(np.float64)
-        feats = [img[..., c].mean() / 255.0 for c in range(4)]
-        rows = img.shape[0]
-        for q in range(4):
-            sl = img[q * rows // 4 : (q + 1) * rows // 4, :, 0]
-            feats.append(float(sl.mean()) / 255.0 if sl.size else 0.0)
-        return [round(float(f), 6) for f in feats[:dim]]
-
-    def resize(self, content: bytes, out_h: int, out_w: int) -> bytes:
-        """Nearest-neighbor resize (index-select — exact, no float
-        resampling): the thumbnailing step of a multimodal pipeline."""
-        import numpy as np
-
-        img = self._img(content)
-        ri = (np.arange(out_h) * img.shape[0]) // out_h
-        ci = (np.arange(out_w) * img.shape[1]) // out_w
-        return img[ri][:, ci].tobytes()
-
-    # -- X2-X4 preprocessing (DISABLED in the reference itself:
-    # core/run.py:409-411 comments out upscale/enhance before OCR; the
-    # implementations live at core/run.py:49-104. Re-expressed here as
-    # real numpy array math, default-off exactly like the reference.) ----
-
-    def upscale(self, content: bytes, scale_factor: int = 2) -> bytes:
-        """X2 (core/run.py:49-60): integer upscaling. cv2 INTER_CUBIC is
-        unavailable; nearest-neighbor repeat preserves the byte-encoded
-        payload exactly, which cubic interpolation would corrupt."""
-        import numpy as np
-
-        img = self._img(content)
-        return np.repeat(np.repeat(img, scale_factor, 0), scale_factor, 1).tobytes()
-
-    def denoise_binarize(self, content: bytes) -> bytes:
-        """X3 (core/run.py:62-89): grayscale -> 3x3 mean blur -> adaptive
-        threshold (inverted binary), numpy equivalents of the cv2 chain.
-        Output is a single-channel uint8 array (0/255)."""
-        import numpy as np
-
-        img = self._img(content).astype(np.float64)
-        gray = img[..., :3].mean(axis=2)
-        padded = np.pad(gray, 1, mode="edge")
-        blurred = sum(
-            padded[dy : dy + gray.shape[0], dx : dx + gray.shape[1]]
-            for dy in range(3)
-            for dx in range(3)
-        ) / 9.0
-        thresh = blurred.mean() - 2  # adaptive-mean analog, C=2
-        return ((blurred < thresh) * 255).astype(np.uint8).tobytes()
-
-    def enhance(self, content: bytes, alpha: float = 1.5, beta: float = 50) -> bytes:
-        """X4 (core/run.py:92-104): contrast/brightness
-        `output = alpha * input + beta`, clipped to uint8."""
-        import numpy as np
-
-        img = self._img(content).astype(np.float64)
-        return np.clip(alpha * img + beta, 0, 255).astype(np.uint8).tobytes()
-
-
-def media_metadata(media: DataFrame, codec_factory=SyntheticCodec) -> DataFrame:
-    """(media_id, content) -> typed metadata. Batched; codec built once
-    per python worker (iterator-of-batches pattern)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codec = codec_factory()
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                meta = codec.decode_meta(bytes(content))
-                if meta is None:
-                    continue  # undecodable -> dead-letter by omission
-                kind, w, h, frames = meta
-                rows.append((mid, kind, w, h, frames, len(content)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "width", "height", "n_frames", "n_bytes"]
-            )
-
-    return media.mapInPandas(run, schema=META_SCHEMA)
-
-
-def media_features(media: DataFrame, dim: int = 8, codec_factory=SyntheticCodec) -> DataFrame:
-    """(media_id, content) -> feature vectors (the embed step of a
-    multimodal training-data pipeline)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codec = codec_factory()
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                meta = codec.decode_meta(bytes(content))
-                if meta is None:
-                    continue
-                feats = codec.extract_features(bytes(content), dim)
-                rows.append((mid, meta[0], feats))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "features"])
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
 
 RAW_META_SCHEMA = T.StructType(
     [
@@ -249,20 +27,20 @@ RAW_META_SCHEMA = T.StructType(
 
 def raw_media_metadata(media: DataFrame) -> DataFrame:
     """(media_ref, media_bytes) -> header metadata DECODED FROM PIXELS
-    (RawRGBACodec over Arrow batches). Undecodable payloads drop
-    (dead-letter by omission, like media_metadata)."""
+    over Arrow batches. Undecodable payloads drop (dead-letter by
+    omission)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..extraction import raw_image as RI
 
-        codec = RawRGBACodec()
         for pdf in batches:
             rows = []
             for ref, content in zip(pdf["media_ref"], pdf["media_bytes"]):
-                d = codec.try_decode(content)  # decode ONCE per payload
-                if d is None:
+                try:  # decode ONCE per payload
+                    img = RI.decode_image(bytes(content))
+                    tag, app, n_blocks = RI.read_header(img)
+                except Exception:
                     continue
-                img, tag, app, n_blocks = d
                 # hardware that captured the screenshot (header byte 6) —
                 # the reference's images/<app>/<hw>/ dimension
                 rows.append((ref, tag, app, RI.read_hw(img), n_blocks, len(content)))
@@ -271,46 +49,3 @@ def raw_media_metadata(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=RAW_META_SCHEMA)
-
-
-def resize_media(media: DataFrame, out_h: int, out_w: int) -> DataFrame:
-    """(media_ref, media_bytes) -> resized payloads (real numpy
-    index-select resize) — the thumbnail stage of a training pipeline."""
-    schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("media_bytes", T.BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        codec = RawRGBACodec()
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["media_ref"], pdf["media_bytes"]):
-                d = codec.try_decode(content)  # decode ONCE per payload
-                if d is None:
-                    continue
-                img = d[0]
-                ri = (np.arange(out_h) * img.shape[0]) // out_h
-                ci = (np.arange(out_w) * img.shape[1]) // out_w
-                rows.append((ref, img[ri][:, ci].tobytes()))
-            yield pd.DataFrame(rows, columns=["media_ref", "media_bytes"])
-
-    return media.mapInPandas(run, schema=schema)
-
-
-def frame_sample_plan(meta: DataFrame, every_k: int = 4) -> DataFrame:
-    """Video frame-sampling plan: one row per sampled frame index —
-    pure column ops (sequence/explode), no Python."""
-    return (
-        meta.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_k))
-            ).alias("frame_idx"),
-        )
-    )

@@ -155,12 +155,6 @@ def corpus_funnel(
     return reduce(lambda a, b: a.unionByName(b), counts)
 
 
-def corpus_survivors(doc_text: DataFrame) -> DataFrame:
-    """The pipeline's output corpus: (doc_id, stratum, bucket_x1000) of
-    documents surviving every stage — the frame a MERGE sink lands."""
-    return corpus_stages(doc_text)["stratified_sample"]
-
-
 def funnel_probe_indexes(
     stages: dict[str, DataFrame],
 ) -> tuple[DataFrame, DataFrame, DataFrame]:

@@ -698,11 +698,13 @@ def q_decontam(spark, sf):
     """Benchmark decontamination (round-3 verdict item 3): every 11th
     document stands in for the eval/benchmark set; documents whose
     distinct word-3-gram overlap with the eval shingle set is >= 50% are
-    flagged contaminated. Uses the broadcast-semi-join form: the eval
-    shingle set here is ~16k shingles at sf0.1, far past the InSet
-    crossover (interpreted HOF eval rebuilds the probe set PER LAMBDA
-    INVOCATION — measured 10.8s vs 0.2s for the join at sf0.1; the
-    InSet form wins only for small eval sets, see decontam_flags)."""
+    flagged contaminated. Uses the broadcast-semi-join form. The eval
+    shingle set here is ~16k shingles at sf0.1, and an earlier form that
+    carried it in the plan as a static InSet probed inside a
+    filter(shingles, s -> s IN (...)) lambda was measured at 10.8s vs
+    0.2s for the join at sf0.1: interpreted HOF eval rebuilds the probe
+    set PER LAMBDA INVOCATION, so that form only won for eval sets of a
+    few hundred shingles, and it was removed."""
     d = _t(spark, sf, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
@@ -2274,7 +2276,7 @@ FROM base, UNNEST([
 def q_media_metadata(spark, sf):
     """Multimodal decode as a first-class op: header metadata decoded
     FROM THE PIXELS of every media span's raw-RGBA payload
-    (operators/multimodal.RawRGBACodec). The oracle cross-checks by
+    (operators/multimodal.raw_media_metadata). The oracle cross-checks by
     deriving the same fields arithmetically from media_ref (the payload
     renderer is a deterministic function of the ref) — bytes in Spark vs
     arithmetic in DuckDB is a genuine two-sided check."""

@@ -1,6 +1,6 @@
 """Mask library source — the reference's mask/<app>/<hw>/<tag>/*.png
-directory tree (core/run.py:360-373: os.listdir + .sort per tag) as a
-proper dimension table:
+directory tree (core/run.py:360-373: os.listdir + .sort per tag) as
+dimension rows (raw_image.mask_library):
 
     (app string, hw string, tag string, mask_order int, mask_bytes binary)
 
@@ -12,32 +12,9 @@ tag) inside the Arrow batch loop, never joins.
 
 from __future__ import annotations
 
-import pyspark.sql.types as T
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ..extraction.raw_image import HW_VALUES, mask_library, masks_by_key
-
-MASK_SCHEMA = T.StructType(
-    [
-        T.StructField("app", T.StringType()),
-        T.StructField("hw", T.StringType()),
-        T.StructField("tag", T.StringType()),
-        T.StructField("mask_order", T.IntegerType()),
-        T.StructField("mask_bytes", T.BinaryType()),
-    ]
-)
-
-
-def mask_library_df(spark: SparkSession, hws: tuple[str, ...] = HW_VALUES) -> DataFrame:
-    """The mask dim table as a DataFrame (writable to parquet like any
-    other table; synthesized here because the sandbox has no mask dir),
-    covering every hardware subtree (images/xhs/{aibox,futurecloud})."""
-    rows = [
-        (r["app"], r["hw"], r["tag"], r["mask_order"], r["mask_bytes"])
-        for r in mask_library(hws)
-    ]
-    return spark.createDataFrame(rows, MASK_SCHEMA)
-
 
 _BC_CACHE: dict = {}
 

@@ -1,9 +1,7 @@
 """Structured Streaming surface."""
 
 from .incremental import (  # noqa: F401
-    incremental_extraction_dedup_to_sink,
-    incremental_extraction_stream,
-    incremental_extraction_to_sink,
+    extraction_stream,
     streaming_dedup_within_watermark,
     streaming_sessions,
     windowed_event_counts,
