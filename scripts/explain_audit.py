@@ -7,7 +7,12 @@ Checks:
 - q15: partial aggregation (two HashAggregate levels) + only needed columns read
 - q16: dimension joins are broadcast (BroadcastHashJoin, no SortMergeJoin)
 - q27: one pair-expansion route (no Union, no flatten( pair array) under
-  exactly one df-guard Window
+  exactly one df-guard Window, and no hot-key anti-join
+- q28: brute-force top-k broadcasts the query side (BroadcastNestedLoopJoin,
+  no sort-merge join) and ranks in a window
+- q31/q35: IVF top-k broadcasts the query side (BroadcastHashJoin on
+  `cell`, no sort-merge join) and ranks in a window; q31 (one cell per
+  side) has no dedupe HashAggregate
 - q41: full-outer CN-key merge is one sort-merge join, nothing quadratic
 - q42/q43/q46: pure narrow projections (no exchange/join/python)
 - q44: decontamination broadcasts the eval shingle set (BroadcastHashJoin,
@@ -148,9 +153,33 @@ def main() -> None:
             ("no union (one expansion route)", r"Union", False),
             ("no in-expression pair array", r"flatten\(", False),
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
+            ("no hot-key anti-join", r"LeftAnti", False),
         ],
     )
     check("q27_ngram_jaccard", "exactly one df-guard window", n_nodes(q27, "Window") == 1)
+    # q28/q31/q35 share simsearch._rank_topk: a broadcast query side
+    # (cross join for brute force, `cell` equi-join for IVF) under one
+    # row_number window
+    audit(
+        "q28_cosine_topk",
+        Q.q_cosine_topk(spark, SF),
+        [
+            ("query side broadcast (cross join)", r"BroadcastNestedLoopJoin", True),
+            ("no sort-merge join", r"SortMergeJoin", False),
+            ("final top-k is a window, not a global sort", r"RunningWindowFunction|Window", True),
+        ],
+    )
+    audit(
+        "q31_ivf_ann",
+        Q.q_ivf_ann(spark, SF),
+        [
+            ("query side broadcast", r"BroadcastHashJoin", True),
+            ("no sort-merge join", r"SortMergeJoin", False),
+            ("final top-k is a window, not a global sort", r"RunningWindowFunction|Window", True),
+            # one cell per side: no pair can meet twice, so no dedupe
+            ("no dedupe aggregate at nprobe = assign_cells = 1", r"HashAggregate", False),
+        ],
+    )
     audit(
         "q35_ivf_kmeans",
         Q.q_ivf_kmeans(spark, SF),

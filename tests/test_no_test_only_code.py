@@ -26,7 +26,7 @@ ALLOWED = {
     "bpe_text_token_count": "reference spec for the BPE token-count tests",
     "render_text": "reference spec for the tbpu render parity tests",
     "extract_corpus": "the span oracle the e2e equality tests compare against",
-    "cosine": "reference for cosine_topk's precomputed-norm division",
+    "cosine": "reference for _rank_topk's precomputed-norm division",
     # library surface with no in-repo driver yet
     "apply_layout": "tbpu layout as a Spark stage (COVERAGE tbpu rows)",
     "write_docs_table": "S2 source: writes the partitioned docs table",

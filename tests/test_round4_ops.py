@@ -112,30 +112,6 @@ def test_sharded_pairs_shard_invariance(spark):
         assert _pairs(DF.sharded_bucket_pairs(rows, ["band"], **kw)) == baseline, kw
 
 
-def test_sharded_pairs_other_id_column(spark):
-    """The id column may carry any name: the shard is computed after the
-    rename to ``id``, so a ``doc_id`` input pairs like an ``id`` one."""
-    rows = _bucket_rows(spark, [5, 40])
-    want = _pairs(DF.sharded_bucket_pairs(rows, ["band"], n_shards=4))
-    got = _pairs(
-        DF.sharded_bucket_pairs(
-            rows.withColumnRenamed("id", "doc_id"), ["band"], "doc_id", n_shards=4
-        )
-    )
-    assert got == want and len(got) == 5 * 4 // 2 + 40 * 39 // 2
-
-
-def test_sharded_pairs_max_total_drop(spark):
-    """max_total drops whole buckets (the n-gram max_df policy) the same
-    way regardless of sharding."""
-    rows = _bucket_rows(spark, [5, 120])
-    got = _pairs(
-        DF.sharded_bucket_pairs(rows, ["band"], max_total=100, n_shards=4)
-    )
-    assert got and all(a.startswith("00_") for a, _ in got)  # 120-bucket dropped
-    assert len(got) == 5 * 4 // 2
-
-
 def test_degenerate_bucket_bounded_aggregate_rows(spark):
     """A single bucket far above shard_cap: (1) no aggregate row holds
     more than ~|bucket|/n_shards ids, (2) the expanded pair set is exact."""

@@ -163,23 +163,33 @@ def test_bucket_keys_backfill_on_legacy_table(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_neardup_components_reliable_checkpoint_dir(spark, tmp_path):
-    """checkpoint_dir switches localCheckpoint -> reliable checkpoint();
-    labels must be identical and checkpoint files must actually land in
-    the given dir (lineage truncated through the reliable path)."""
+def test_neardup_components_reliable_checkpoint_dir(spark, tmp_path, monkeypatch):
+    """checkpoint_dir switches the distributed loop from localCheckpoint
+    to reliable checkpoint(): labels must be identical and checkpoint
+    files must actually land in the given dir. Under the edge cap it
+    does not pick the route — the driver route runs and still returns
+    the same labels."""
     import os as _os
 
     pairs = spark.createDataFrame(
         [Row(id_a=a, id_b=b) for a, b in [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)]]
     )
+    want = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20), (21, 20), (22, 20)}
+    driver_dir = str(tmp_path / "driver")
+    driver = {
+        (r["id"], r["comp"])
+        for r in DF.neardup_components(pairs, checkpoint_dir=driver_dir).collect()
+    }
+    assert driver == want
+    assert not _os.path.exists(driver_dir)  # the driver route checkpoints nothing
+    monkeypatch.setattr(DF, "NEARDUP_DRIVER_MAX_EDGES", -1)  # distributed loop
     local = {(r["id"], r["comp"]) for r in DF.neardup_components(pairs).collect()}
     ckdir = str(tmp_path / "ck")
     reliable = {
         (r["id"], r["comp"])
         for r in DF.neardup_components(pairs, checkpoint_dir=ckdir).collect()
     }
-    assert local == reliable
-    assert local == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20), (21, 20), (22, 20)}
+    assert local == reliable == want
     found = any(files for _r, _d, files in _os.walk(ckdir))
     assert found, "reliable checkpoint wrote nothing under checkpoint_dir"
 

@@ -9,6 +9,8 @@ threshold predicates are data-dependent at double precision.
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from xhs_ocr_spark.operators import simsearch as SS
 
@@ -80,14 +82,55 @@ def test_union_find_matches_iterative_components(spark, monkeypatch):
     assert len(fast) > 0
 
 
-def test_ngram_hot_route_matches_window_route(spark, monkeypatch):
-    """q27's two guard routes must drop identically: a planted hot
-    shingle (df > max_df) is excluded by both, and all surviving pairs
-    agree. The hot route's plan must contain no Window node (the r6
-    straggler shape: every row of the hottest posting through one
-    task's sort) — round-6 verdict item 3."""
+@st.composite
+def _graphs(draw):
+    """Up to 40 nodes: a chain cut at random points (so components have
+    diameters the distributed loop needs several rounds for) plus random
+    extra edges, with ids permuted so the min id sits anywhere."""
+    n = draw(st.integers(2, 40))
+    perm = draw(st.permutations(range(n)))
+    cuts = draw(st.sets(st.integers(1, n - 1), max_size=n // 4))
+    edges = {(i - 1, i) for i in range(1, n) if i not in cuts}
+    extra = draw(
+        st.lists(st.tuples(st.integers(0, n - 1), st.integers(0, n - 1)), max_size=n // 2)
+    )
+    edges |= {(a, b) for a, b in extra if a != b}
+    return n, sorted((f"d{perm[a]:02d}", f"d{perm[b]:02d}") for a, b in edges)
+
+
+@settings(max_examples=8, deadline=None, derandomize=True)
+@given(_graphs())
+def test_components_routes_agree_on_random_graphs(spark, graph):
+    """The driver union-find route and the forced distributed route
+    return identical labels on any graph."""
+    from unittest import mock
+
     from xhs_ocr_spark.operators import dedup_fuzzy as DF
 
+    n, edges = graph
+    pairs = spark.createDataFrame(edges, "id_a string, id_b string")
+    driver = sorted(tuple(r) for r in DF.neardup_components(pairs).collect())
+    with mock.patch.object(DF, "NEARDUP_DRIVER_MAX_EDGES", -1):
+        dist = sorted(
+            tuple(r) for r in DF.neardup_components(pairs, max_iter=n).collect()
+        )
+    assert driver == dist
+
+
+def test_ngram_window_guard_matches_python_jaccard(spark):
+    """q27's one df guard drops a planted hot shingle (df > max_df) and
+    keeps the rest: the result equals a pure-Python Jaccard in which the
+    intersection counts only shared distinct 3-grams with df <= max_df,
+    while each side's size counts all its distinct 3-grams. The plan
+    holds exactly one Window (the guard) and no anti-join."""
+    import math
+    import re
+    from collections import Counter
+    from itertools import combinations
+
+    from xhs_ocr_spark.operators import dedup_fuzzy as DF
+
+    max_df, threshold = 10, 0.3
     rows = []
     # 40 docs all sharing the hot trigram "zz zz zz" (df 40 > max_df 10),
     # plus paired near-dups that must still be found without it
@@ -95,35 +138,31 @@ def test_ngram_hot_route_matches_window_route(spark, monkeypatch):
         extra = f"alpha{i % 4} beta{i % 4} gamma{i % 4} delta{i % 4}"
         rows.append((f"d{i:03d}", f"zz zz zz {extra}", "en"))
     docs = spark.createDataFrame(rows, "doc_id string, text string, lang string")
-
-    def run():
-        return sorted(
-            (r["id_a"], r["id_b"], r["jacc_x1000"])
-            for r in DF.ngram_jaccard_pairs(
-                docs, "doc_id", "text", threshold=0.3, scope_col="lang", max_df=10
-            ).collect()
-        )
-
-    monkeypatch.setattr(DF, "_SKETCH_SKIP_BYTES", 1 << 60)  # force window route
-    monkeypatch.setattr(DF, "_HOT_ROUTE_MIN_DF", 1 << 60)
-    window_route = run()
-    monkeypatch.setattr(DF, "_SKETCH_SKIP_BYTES", 0)  # force the sketch
-    monkeypatch.setattr(DF, "_DF_SKETCH_MOD", 1)  # sample everything
-    monkeypatch.setattr(DF, "_HOT_ROUTE_MIN_DF", 10)  # est 40 > 10 -> hot route
-    hot_df = DF.ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.3, scope_col="lang", max_df=10
+    out = DF.ngram_jaccard_pairs(
+        docs, "doc_id", "text", threshold=threshold, scope_col="lang", max_df=max_df
     )
-    plan = hot_df._sc._jvm.PythonSQLUtils.explainString(
-        hot_df._jdf.queryExecution(), "formatted"
+    # the plan before execution: an executed AQE plan prints its initial
+    # plan next to the final one, so every node would count twice
+    plan = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "formatted"
     )
-    import re
+    assert len(re.findall(r"^\(\d+\) Window", plan, re.M)) == 1
+    assert "LeftAnti" not in plan
+    got = sorted((r["id_a"], r["id_b"], r["jacc_x1000"]) for r in out.collect())
 
-    assert not re.search(r"\(\d+\) Window", plan), "hot route must not window"
-    hot_route = sorted(
-        (r["id_a"], r["id_b"], r["jacc_x1000"]) for r in hot_df.collect()
-    )
-    assert hot_route == window_route
-    assert len(hot_route) > 0  # the near-dup pairs survive the drop
+    grams = {}
+    for doc_id, text, _lang in rows:
+        ws = text.split()
+        grams[doc_id] = {" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)}
+    df = Counter(g for gs in grams.values() for g in gs)
+    want = []
+    for a, b in combinations(sorted(grams), 2):
+        inter = sum(1 for g in grams[a] & grams[b] if df[g] <= max_df)
+        jacc = inter / (len(grams[a]) + len(grams[b]) - inter)
+        if jacc >= threshold:
+            want.append((a, b, math.floor(jacc * 1000 + 0.5)))
+    assert got == want
+    assert got  # the near-dup pairs survive the drop
 
 
 def test_lsh_near_neighbors_matches_hof_verify(spark, rand_vecs):

@@ -17,7 +17,7 @@ from functools import reduce
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 
 from .textops import words
 
@@ -96,9 +96,7 @@ def expand_bucket_pairs(buckets: DataFrame) -> DataFrame:
 def sharded_bucket_pairs(
     rows: DataFrame,
     key_cols: list[str],
-    id_col: str = "id",
     n_shards: int = DEFAULT_SHARDS,
-    max_total: int | None = None,
 ) -> DataFrame:
     """(key..., id) rows -> (id_a < id_b) candidate pairs, with no
     aggregate row or task ever holding more than O(bucket / n_shards)
@@ -130,26 +128,15 @@ def sharded_bucket_pairs(
       single-member buckets vanish on their own (empty slice).
 
     The pair set is invariant to n_shards (tested) — a pure
-    memory/placement knob. ``max_total`` drops buckets whose total size
-    exceeds it (the n-gram max_df policy) via a window sum over the
-    aggregated shard rows (<= n_shards rows per key — no skew).
+    memory/placement knob.
     """
-    from pyspark.sql import Window
-
     shard = F.pmod(F.xxhash64(F.col("id").cast("string")), F.lit(n_shards))
     g = (
-        rows.select(*key_cols, F.col(id_col).alias("id"))
+        rows.select(*key_cols, "id")
         .withColumn("_shard", shard)
         .groupBy(*key_cols, "_shard")
         .agg(F.sort_array(F.collect_set("id")).alias("ids"))
     )
-    if max_total is not None:
-        w = Window.partitionBy(*key_cols)
-        g = (
-            g.withColumn("_total", F.sum(F.size("ids")).over(w))
-            .where(F.col("_total") <= max_total)
-            .drop("_total")
-        )
     g1 = g.select(
         *key_cols, F.col("_shard").alias("_s1"), F.col("ids").alias("_ids1")
     )
@@ -339,21 +326,23 @@ def neardup_components(
     representative, drop the rest; only ids that appear in a pair are
     returned, everything else is trivially its own component).
 
-    Iterative min-label propagation: each round joins labels across the
-    (symmetrized) edge list, takes the neighborhood minimum, and
-    early-stops when no label changes — converges within the component
-    diameter (near-dup clusters are clique-ish, so a handful of rounds
-    in practice; the large-star/small-star variant halves rounds if
-    diameters ever bite). Labels are localCheckpoint'ed every round:
-    persist alone is NOT enough for iterative algorithms — it caches
-    data but the LOGICAL PLAN still compounds per round until the
-    planner itself OOMs (reproduced at ~29 rounds on a 30-node path
-    graph); checkpointing truncates lineage. By default labels are
-    localCheckpoint'ed (fast, but cached partitions die with an
-    executor); pass ``checkpoint_dir`` (HDFS/S3 on a real cluster) to
-    use RELIABLE checkpoint() instead — the production setting is a
-    config, not a code edit (round-4 verdict item 4). One shuffle per
-    round on uniformly distributed ids.
+    Two routes, picked by ONE job: ``limit(NEARDUP_DRIVER_MAX_EDGES + 1)``
+    collects the symmetrized edge list, and if it fits under the cap
+    exact union-find runs on the driver (bounded metadata, ~10 ms).
+    Past the cap the graph stays distributed, so driver memory does not
+    grow with it: iterative min-label propagation joins labels across
+    the persisted edges, takes the neighborhood minimum and early-stops
+    when no label changes (rounds = component diameter; near-dup
+    clusters are clique-ish). Both routes return identical labels
+    (property-tested).
+
+    Labels are checkpointed every round: persist alone is NOT enough for
+    iterative algorithms — it caches data but the LOGICAL PLAN still
+    compounds per round until the planner itself OOMs (reproduced at ~29
+    rounds on a 30-node path graph). By default that is localCheckpoint
+    (fast, but cached partitions die with an executor); ``checkpoint_dir``
+    (HDFS/S3 on a real cluster) makes the loop use RELIABLE checkpoint()
+    instead. It does not pick the route.
 
     If max_iter rounds pass with labels still changing (component
     diameter > max_iter — e.g. a long chain of pairwise near-dups), the
@@ -367,6 +356,29 @@ def neardup_components(
     closure (exact, but quadratic — oracle-scale only)."""
     from pyspark.storagelevel import StorageLevel
 
+    edges = (
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .unionByName(
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+        )
+        .distinct()
+    )
+    # One job decides the route and, under the cap, fetches the graph.
+    # The labels are IDENTICAL on both routes: union-find computes the
+    # same transitive closure, and python's str ordering equals Spark's
+    # UTF8 binary ordering (UTF-8 is code-point order-preserving), so
+    # `comp = min id in component` matches bit-for-bit.
+    head = edges.limit(NEARDUP_DRIVER_MAX_EDGES + 1).collect()
+    if len(head) <= NEARDUP_DRIVER_MAX_EDGES:
+        import pyspark.sql.types as T
+
+        comp = _union_find_components([(r["src"], r["dst"]) for r in head])
+        id_type = pairs.schema["id_a"].dataType
+        schema = T.StructType(
+            [T.StructField("id", id_type), T.StructField("comp", id_type)]
+        )
+        return pairs.sparkSession.createDataFrame(sorted(comp.items()), schema)
+    del head  # over the cap: free the driver copy before the loop
     if checkpoint_dir is not None:
         pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
@@ -375,46 +387,7 @@ def neardup_components(
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Scale-adaptive route (r7, guide §2/§5): the count materializes the
-    # persisted edges either way (the first propagation round used to).
-    # Below NEARDUP_DRIVER_MAX_EDGES the whole graph is bounded driver
-    # metadata (like the capped IVF fit sample), and exact union-find on
-    # the driver replaces 3-5 distributed rounds of shuffle joins over
-    # stats-less checkpointed frames (~7s of fixed per-round overhead on
-    # a 12k-edge graph, measured at the sf1.0 funnel) with ~10ms. The
-    # labels are IDENTICAL: union-find computes the same transitive
-    # closure the converged min-label propagation does, and python's str
-    # ordering equals Spark's UTF8 binary ordering (UTF-8 is code-point
-    # order-preserving), so `comp = min id in component` matches
-    # bit-for-bit (pinned by tests/test_round7_opt.py). Above the cap
-    # the distributed loop below is unchanged.
-    # An explicit checkpoint_dir is the production fault-tolerance
-    # posture — the caller wants the distributed loop with RELIABLE
-    # checkpoints, so the driver shortcut never engages there.
-    n_edges = edges.count()
-    if checkpoint_dir is None and n_edges <= NEARDUP_DRIVER_MAX_EDGES:
-        import pyspark.sql.types as T
-
-        comp = _union_find_components(
-            [(r["src"], r["dst"]) for r in edges.collect()]
-        )
-        id_type = pairs.schema["id_a"].dataType
-        schema = T.StructType(
-            [T.StructField("id", id_type), T.StructField("comp", id_type)]
-        )
-        out = pairs.sparkSession.createDataFrame(
-            sorted(comp.items()), schema
-        )
-        edges.unpersist()
-        return out
+    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
     labels = _ckpt(
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -862,46 +835,6 @@ def ngram_df_drop_stats(
     )
 
 
-# ngram_jaccard_pairs hot-route selection (round-6 verdict item 3): the
-# window guard single-tasks the hottest posting's rows, so above this
-# estimated max document frequency the anti-join route takes over.
-_HOT_ROUTE_MIN_DF = 1_000_000
-# Deterministic doc-sample modulus for the df sketch (hash-gated like
-# sample_bucket_x1000; est = max sampled df x mod).
-_DF_SKETCH_MOD = 100
-# Inputs whose Catalyst size estimate is below this cannot contain a
-# _HOT_ROUTE_MIN_DF posting (even at ~10 compressed bytes/row that is
-# < 10^6 rows), so the sketch job is skipped outright — at bench scale
-# the route decision costs nothing; unknown-stats inputs run the sketch
-# (the safe at-scale default).
-_SKETCH_SKIP_BYTES = 10 << 20
-
-
-def _max_df_estimate(df, id_col, text_col, n, scope_col) -> int:
-    """Scaled-up max document frequency of a deterministic 1/mod doc
-    sample — the cheap df sketch that picks ngram_jaccard_pairs' guard
-    route (stand-in for consulting table statistics). Misestimates cost
-    speed only: both routes compute exact df and drop identically."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        size = None
-    if size is not None and size < _SKETCH_SKIP_BYTES:
-        return 0
-    samp = df.where(
-        F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(_DF_SKETCH_MOD)) == 0
-    )
-    ex_s = _shingle_index(samp, id_col, text_col, n, scope_col, hash_keys=True)
-    keys = ["sh", "scope"] if scope_col else ["sh"]
-    row = (
-        ex_s.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .agg(F.max("_c").alias("_m"))
-        .first()
-    )
-    return int(row["_m"] or 0) * _DF_SKETCH_MOD
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -957,40 +890,20 @@ def ngram_jaccard_pairs(
         "dropped; run ngram_df_drop_stats(...) for the audited count.",
         max_df,
     )
-    # Hot-posting guard (round-5 ADVICE high; round-6 verdict item 3
-    # adds the extreme-df escape hatch). Two guards, identical output
-    # (both compute df exactly and drop exactly the df > max_df postings;
-    # the sketch below only picks WHICH guard runs):
-    #
-    # - window guard (default): a window count(*) over the posting
-    #   partition, filtered BEFORE the collect_set; its (sh, scope)
-    #   exchange is reused by the aggregate, so the guard costs one
-    #   in-exchange sort. Memory-safe at any df (external sort), but ALL
-    #   rows of the hottest shingle transit ONE task's sort —
-    #   straggler-shaped at a 10^8-df stopword shingle.
-    # - hot guard (sketch est > _HOT_ROUTE_MIN_DF): document frequencies
-    #   via plain groupBy count — map-side PARTIAL aggregation collapses
-    #   a 10^8-row posting to one partial row per map task — then a
-    #   left-anti equi-join of the index against only the df > max_df
-    #   keys (metadata-sized). No single task scans a whole posting.
-    #
-    # Both alternatives to this split were measured slower (q27, sf0.1,
-    # 4 CPUs, 5 interleaved runs per side): always taking the hot guard
-    # 3.78 -> 4.49 s; sharded_bucket_pairs(max_total=max_df) in place of
-    # guard + collect_set + expand_bucket_pairs 4.05 -> 4.63 s. The
-    # sketch misjudging a borderline corpus costs only speed. Pinned by
-    # test_ngram_hot_route_matches_window_route.
-    est = _max_df_estimate(df, id_col, text_col, n, scope_col)
-    if est > _HOT_ROUTE_MIN_DF:
-        tf = ex.groupBy(*group_keys).agg(F.count(F.lit(1)).alias("_df"))
-        hot = tf.where(F.col("_df") > max_df).select(*group_keys)
-        guarded = ex.join(hot, group_keys, "left_anti")
-    else:
-        from pyspark.sql import Window
-
-        guarded = ex.withColumn(
-            "_df", F.count(F.lit(1)).over(Window.partitionBy(*group_keys))
-        ).where(F.col("_df") <= max_df)
+    # Hot-posting guard (round-5 ADVICE high): a window count(*) over
+    # the posting partition, filtered BEFORE the collect_set; its
+    # (sh, scope) exchange is reused by the aggregate, so the guard costs
+    # one in-exchange sort, and the external sort keeps it memory-safe at
+    # any df. This is the only guard. A map-side df count + left-anti
+    # join of the df > max_df keys spares one task the hottest posting's
+    # rows, but no workload has a posting with df > 10^6, and taking it
+    # on every run measured slower (q27, sf0.1, 4 CPUs, 5 interleaved
+    # runs per side: 3.78 -> 4.49 s); a window sum of bucket sizes over
+    # sharded_bucket_pairs' shard rows in place of guard + collect_set +
+    # expand_bucket_pairs measured 4.05 -> 4.63 s.
+    guarded = ex.withColumn(
+        "_df", F.count(F.lit(1)).over(Window.partitionBy(*group_keys))
+    ).where(F.col("_df") <= max_df)
     buckets = guarded.groupBy(*group_keys).agg(
         F.sort_array(F.collect_set("id")).alias("ids")
     )

@@ -7,13 +7,19 @@
   candidates only within buckets. Hyperplanes are deterministic rationals
   so the DuckDB oracle reproduces them exactly.
 
-All dot products via F.zip_with + F.aggregate (JVM-side); no Python.
+- IVF: the query probes its nearest centroid cells and is scored only
+  against corpus vectors indexed under them.
+
+Brute force and IVF share one top-k core (_rank_topk). Their dot
+products are F.zip_with + F.aggregate folds on the JVM; only LSH's
+verify runs in Python, as one numpy mapInArrow over shard pairs that
+reproduces the fold's arithmetic exactly.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
 N_PLANES = 8
 PLANE_MOD = 997
@@ -25,12 +31,11 @@ def hyperplane(dim: int, p: int) -> list[float]:
     return [((2654435761 * (p * dim + j + 1)) % PLANE_MOD) / PLANE_MOD - 0.5 for j in range(dim)]
 
 
-def dot(a, b, dim: int | None = None):
+def dot(a, b):
     """Dot product of two array columns in double precision (HOF left
     fold: products via zip_with, sequential sum from 0.0).
 
-    ``dim`` is accepted for API stability but does not change the
-    evaluation: an r7 A/B unrolled the fold into a fixed-width
+    An r7 A/B unrolled the fold into a fixed-width
     ``((0.0 + a[1]*b[1]) + a[2]*b[2]) + ...`` element_at chain expecting
     whole-stage codegen to beat the CodegenFallback HOF — measured the
     OPPOSITE at the driver's sf1.0 scale (19M-pair verify stage: HOF
@@ -38,7 +43,7 @@ def dot(a, b, dim: int | None = None):
     method past the JIT's huge-method limit, so it runs as interpreted
     bytecode over a much deeper expression tree). The fold stays HOF;
     the per-PAIR cost is instead cut by hoisting per-VECTOR work (norms)
-    out of the pair predicate — see lsh_near_neighbors/cosine_topk."""
+    out of the pair predicate — see lsh_near_neighbors/_rank_topk."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -46,52 +51,61 @@ def dot(a, b, dim: int | None = None):
     )
 
 
-def norm(a, dim: int | None = None):
-    return F.sqrt(dot(a, a, dim))
+def norm(a):
+    return F.sqrt(dot(a, a))
 
 
-def cosine(a, b, dim: int | None = None):
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
+def cosine(a, b):
+    return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_topk(
+def _rank_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    dim: int | None = None,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    cells: tuple[Column, Column] | None = None,
+    dedupe: bool = False,
 ) -> DataFrame:
-    """For each query vector: top-k corpus neighbors by cosine (self
-    excluded). Query side is broadcast; ranking via window.
+    """The one top-k body: (q_id, n_id, rank) for the k best cosine
+    neighbors of each query, its own id excluded, ties to the lower
+    n_id. The query side is broadcast. With ``cells`` = (corpus cell,
+    query cell) column expressions over ``n_vec`` / ``q_vec`` it is
+    equi-joined on ``cell``; without them it is a cross join.
+    ``dedupe`` collapses a (q_id, n_id) pair that met in two cells.
 
     Per-pair work is ONE dot fold: each side's norm — a per-VECTOR
     quantity — is computed once in its own projection and the pair
     cosine divides by the product of the two precomputed norms, which
-    multiplies the SAME two sqrt values the inline cosine() did
-    (bit-identical; r7, same hoist as lsh_near_neighbors)."""
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_nrm"),
-    )
+    multiplies the SAME two sqrt values cosine() does (bit-identical;
+    r7, same hoist as lsh_near_neighbors)."""
     parts = corpus.sparkSession.sparkContext.defaultParallelism * 2
+    # spread on n_id only (the scan is 1 file): the query side is
+    # broadcast, so the join needs no corpus distribution —
+    # repartitioning on `cell` (a handful of values) would collapse
+    # scoring to <= n_cells tasks and pin hot cells on single cores
+    # (review finding, round 2).
     c = corpus.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")
-    ).repartition(parts, "n_id")  # scan is 1 file; spread the scoring
-    cn = c.select("n_id", "n_vec", norm(F.col("n_vec")).alias("n_nrm"))
-    scored = (
-        cn.crossJoin(F.broadcast(q))
-        .where(F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "n_id",
-            (
-                dot(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_nrm") * F.col("n_nrm"))
-            ).alias("cos"),
-        )
+    ).repartition(parts, "n_id")
+    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+    c_cols, q_cols = ["n_id", "n_vec"], ["q_id", "q_vec"]
+    if cells is not None:
+        c_cols.append(cells[0].alias("cell"))
+        q_cols.append(cells[1].alias("cell"))
+    c = c.select(*c_cols, norm(F.col("n_vec")).alias("n_nrm"))
+    q = q.select(*q_cols, norm(F.col("q_vec")).alias("q_nrm"))
+    pairs = c.crossJoin(F.broadcast(q)) if cells is None else c.join(F.broadcast(q), "cell")
+    scored = pairs.where(F.col("n_id") != F.col("q_id")).select(
+        "q_id",
+        "n_id",
+        (dot(F.col("q_vec"), F.col("n_vec")) / (F.col("q_nrm") * F.col("n_nrm"))).alias(
+            "cos"
+        ),
     )
+    if dedupe:
+        scored = scored.groupBy("q_id", "n_id").agg(F.max("cos").alias("cos"))
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -100,13 +114,26 @@ def cosine_topk(
     )
 
 
+def cosine_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 3,
+) -> DataFrame:
+    """For each query vector: top-k corpus neighbors by cosine (self
+    excluded), scoring every corpus vector against the broadcast query
+    side."""
+    return _rank_topk(corpus, queries, id_col, vec_col, k)
+
+
 def lsh_bucket(vec_col, dim: int, n_planes: int = N_PLANES):
     """Sign-bit bucket id: bit p set iff dot(vec, plane_p) > 0."""
     out = F.lit(0).cast("long")
     for p in range(n_planes):
         plane = F.array([F.lit(v) for v in hyperplane(dim, p)])
         out = out + F.when(
-            dot(vec_col, plane, dim) > 0, F.lit(2**p).cast("long")
+            dot(vec_col, plane) > 0, F.lit(2**p).cast("long")
         ).otherwise(F.lit(0).cast("long"))
     return out
 
@@ -127,74 +154,6 @@ def centroid(dim: int, c: int) -> list[float]:
     ]
     n = sum(v * v for v in raw) ** 0.5
     return [v / n for v in raw]
-
-
-def ivf_cell(vec_col, dim: int, n_cells: int = N_CELLS):
-    """Index of the max-dot-product centroid (coarse quantizer assign).
-
-    At real scale centroids come from k-means over a sample; here they are
-    deterministic so the DuckDB oracle reproduces the assignment exactly."""
-    dots = F.array(
-        *[
-            dot(vec_col, F.array([F.lit(v) for v in centroid(dim, c)]), dim)
-            for c in range(n_cells)
-        ]
-    )
-    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    k: int = 3,
-    n_cells: int = N_CELLS,
-) -> DataFrame:
-    """IVF approximate top-k: score only corpus vectors in the query's
-    cell (nprobe=1). The cell assignment prunes ~ (n_cells-1)/n_cells of
-    the corpus before any pairwise scoring — the scale path when LSH
-    recall is insufficient."""
-    parts = corpus.sparkSession.sparkContext.defaultParallelism * 2
-    # spread on n_id only: the query side is BROADCAST, so the join needs
-    # no corpus distribution — repartitioning on `cell` (n_cells distinct
-    # values) would collapse scoring to <= n_cells tasks and pin hot
-    # cells on single cores (review finding, round 2).
-    c = (
-        corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
-        .repartition(parts, "n_id")
-        .select(
-            "n_id",
-            "n_vec",
-            ivf_cell(F.col("n_vec"), dim, n_cells).alias("cell"),
-            norm(F.col("n_vec")).alias("n_nrm"),  # per-vector, not per-pair (r7)
-        )
-    )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        ivf_cell(F.col(vec_col), dim, n_cells).alias("cell"),
-        norm(F.col(vec_col)).alias("q_nrm"),
-    )
-    scored = (
-        c.join(F.broadcast(q), on="cell")
-        .where(F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "n_id",
-            (
-                dot(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_nrm") * F.col("n_nrm"))
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", F.col("rank").cast("long").alias("rank"))
-    )
 
 
 SAMPLE_MOD = 7  # minimum sample modulus (small corpora sample 1/7)
@@ -275,16 +234,14 @@ def probe_cells(vec_col, centroids: list[list[float]], nprobe: int):
         F.array(
             *[
                 F.struct(
-                    (-dot(vec_col, F.array([F.lit(v) for v in c]), len(c))).alias(
-                        "nd"
-                    ),
+                    (-dot(vec_col, F.array([F.lit(v) for v in c]))).alias("nd"),
                     F.lit(i).cast("int").alias("cell"),
                 )
                 for i, c in enumerate(centroids)
             ]
         )
     )
-    return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"])
+    return F.slice(ranked, 1, nprobe)["cell"]
 
 
 def ivf_topk_kmeans(
@@ -305,49 +262,19 @@ def ivf_topk_kmeans(
     bench corpus it lifts recall@3 at nprobe=4 from 0.73 to 0.92 for a 2x
     index size); each query probes its ``nprobe`` nearest cells and scores
     only those inverted lists. Raising nprobe trades compute for recall —
-    the standard IVF knob. Query side stays broadcast; duplicate
-    candidates (pairs sharing >1 probed cell) are collapsed by a (q_id,
-    n_id) aggregate before the ranking window."""
-    parts = corpus.sparkSession.sparkContext.defaultParallelism * 2
-    # n_id spread only — no `cell` exchange; see ivf_topk's comment.
-    c = (
-        corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
-        .repartition(parts, "n_id")
-        .select(
-            "n_id",
-            "n_vec",
-            F.explode(
-                probe_cells(F.col("n_vec"), centroids, assign_cells)
-            ).alias("cell"),
-            norm(F.col("n_vec")).alias("n_nrm"),  # per-vector, not per-pair (r7)
-        )
+    the standard IVF knob. With nprobe = assign_cells = 1 this is the
+    plain coarse quantizer: one argmax cell per side, ties to the lower
+    cell index.
+
+    A pair can meet in two cells only if both sides list more than one,
+    so only then does a (q_id, n_id) aggregate collapse duplicate
+    candidates before the ranking window."""
+    cells = (
+        F.explode(probe_cells(F.col("n_vec"), centroids, assign_cells)),
+        F.explode(probe_cells(F.col("q_vec"), centroids, nprobe)),
     )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(probe_cells(F.col(vec_col), centroids, nprobe)).alias("cell"),
-        norm(F.col(vec_col)).alias("q_nrm"),
-    )
-    scored = (
-        c.join(F.broadcast(q), on="cell")
-        .where(F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "n_id",
-            (
-                dot(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_nrm") * F.col("n_nrm"))
-            ).alias("cos"),
-        )
-        .groupBy("q_id", "n_id")
-        .agg(F.max("cos").alias("cos"))  # dedupe multi-cell matches
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", F.col("rank").cast("long").alias("rank"))
-    )
+    dedupe = nprobe > 1 and assign_cells > 1
+    return _rank_topk(corpus, queries, id_col, vec_col, k, cells, dedupe)
 
 
 N_VERIFY_SHARDS = 16  # shard width of the grouped verify (memory knob)
@@ -410,7 +337,7 @@ def lsh_near_neighbors(
     vb = v.select(
         "id",
         "vec",
-        norm(F.col("vec"), dim).alias("nrm"),
+        norm(F.col("vec")).alias("nrm"),
         lsh_bucket(F.col("vec"), dim, n_planes).alias("bucket"),
         F.pmod(F.xxhash64(F.col("id").cast("string")), F.lit(n_shards)).alias(
             "_shard"

@@ -26,9 +26,11 @@ Composition discipline (the measured traps this avoids):
   the pairs, the band-index probe and the band-index delta;
 - decontamination uses the broadcast-semi-join form (eval sets at corpus
   scale are far past the InSet crossover);
-- the near-dup stage routes through sharded_bucket_pairs and the
-  checkpointed label propagation — nothing all-pairs, nothing
-  driver-bottlenecked.
+- the near-dup stage routes through sharded_bucket_pairs and
+  neardup_components — nothing all-pairs; the components run as
+  union-find on the driver only while the edge list is under
+  NEARDUP_DRIVER_MAX_EDGES (bounded metadata), and as checkpointed
+  label propagation above it.
 
 Reference relation: the reference has no corpus pipeline (it extracts
 and upserts, db/pipeline.py:8-76); this is the engine's training-data

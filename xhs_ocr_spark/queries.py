@@ -1067,10 +1067,14 @@ WHERE list_cosine_similarity(a.vec, b2.vec) >= 0.2
 
 
 def q_ivf_ann(spark, sf):
-    """IVF approximate top-k (nprobe=1 coarse quantizer), queries = first
-    5 vectors."""
+    """IVF approximate top-k (nprobe=1 coarse quantizer over the fixed
+    deterministic centroids the oracle embeds), queries = first 5
+    vectors."""
     e = _t(spark, sf, "embeddings")
-    return SS.ivf_topk(e, e.where(F.col("vec_id") < 5), k=3)
+    cents = [SS.centroid(64, c) for c in range(SS.N_CELLS)]
+    return SS.ivf_topk_kmeans(
+        e, e.where(F.col("vec_id") < 5), cents, k=3, nprobe=1, assign_cells=1
+    )
 
 
 def _sql_ivf_ann() -> str:
