@@ -24,7 +24,11 @@ Checks:
   mapInArrow, which also classifies text) and no lambdafunction — an
   interpreted HOF must not return to the span path
 
-Writes plans to BENCH/plans/*.txt; exits nonzero if an invariant fails.
+Writes plans to BENCH/plans/*.txt with run-dependent ids renumbered in
+order of first appearance (expression ids, plan_id, RDD ids, lambda
+variable numbers), so a dump differs from the committed one only when
+the plan does; the checks match the raw plan text. Exits nonzero if an
+invariant fails.
 """
 
 from __future__ import annotations
@@ -46,6 +50,22 @@ def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
+_RUN_IDS = re.compile(r"(#|plan_id=|RDD\[|\b[xyz]_)(\d+)")
+
+
+def normalized(text: str) -> str:
+    """Renumber each id family in order of first appearance: the
+    numbers come from JVM-wide counters, so they shift with whatever ran
+    earlier in the session while the plan's structure stays put."""
+    ids: dict[str, dict[str, int]] = {}
+
+    def renumber(m: re.Match) -> str:
+        family = ids.setdefault(m.group(1), {})
+        return f"{m.group(1)}{family.setdefault(m.group(2), len(family) + 1)}"
+
+    return _RUN_IDS.sub(renumber, text)
+
+
 def main() -> None:
     os.makedirs(OUT, exist_ok=True)
     spark = get_spark("explain-audit", cores=8, shuffle_partitions=16)
@@ -59,7 +79,7 @@ def main() -> None:
     def audit(name, df, requirements):
         text = plan_of(df)
         with open(f"{OUT}/{name}.txt", "w") as f:
-            f.write(text)
+            f.write(normalized(text))
         for desc, pattern, expect in requirements:
             check(name, desc, bool(re.search(pattern, text)) == expect)
         return text

@@ -508,6 +508,59 @@ def test_checkpoint_into_merge_sink_resume_no_dups(spark, tmp_path):
     } == exp_rows
 
 
+@pytest.mark.parametrize("route", ["parquet", "sink"])
+def test_crash_after_commit_before_lineage_resumes_exactly_once(spark, tmp_path, route):
+    """Injected crash in the "data committed, lineage lost" window: the
+    second wave's spans and dead letters are written, then its lineage
+    append raises. The resume must redo that wave over its own committed
+    output (parquet: dynamic partition overwrite; sink: insert_ignore)
+    and end with every expected span exactly once, on both write
+    routes."""
+    import collections
+
+    import pyspark.sql.functions as F
+
+    from xhs_ocr_spark.extraction.checkpointed import make_span_sink
+
+    docs = datagen.generate_corpus(spark, N_DOCS, partitions=4)
+    sink = make_span_sink(spark, str(tmp_path / "table"), n_buckets=8) if route == "sink" else None
+    ck = CheckpointedExtraction(
+        spark, str(tmp_path / "run"), n_buckets=8, waves=4, span_sink=sink
+    )
+    append_lineage, waves = ck._append_lineage, []
+
+    def crash_on_second_wave(rows):
+        waves.append({r["bucket"] for r in rows})
+        if len(waves) == 2:
+            raise RuntimeError("injected crash: lineage lost")
+        append_lineage(rows)
+
+    ck._append_lineage = crash_on_second_wave
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ck.run(docs)
+    ck._append_lineage = append_lineage
+    assert ck.completed_buckets() == waves[0]
+
+    committed = sink.read() if sink is not None else spark.read.parquet(ck.data_dir)
+    lost_wave_rows = committed.where(
+        F.pmod(F.xxhash64("doc_id"), F.lit(8)).isin(sorted(waves[1]))
+    ).count()
+    assert lost_wave_rows > 0  # the crashed wave's spans ARE committed
+
+    out = ck.run(docs)  # resume: the crashed wave runs again
+    got = collections.Counter(
+        tuple(r) for r in out.select("doc_id", "kind", "text", "media_ref", "order").collect()
+    )
+    assert got == collections.Counter(_expected_flat())  # multiset: no dups, no gaps
+
+    lineage = ck.lineage().where("status = 'ok'")
+    per_bucket = collections.Counter(r["bucket"] for r in lineage.collect())
+    assert per_bucket == collections.Counter(range(8))  # every bucket, once
+    dead = ck.dead_letter()
+    assert dead.count() == lineage.groupBy().sum("dead_out").collect()[0][0]
+    assert dead.count() == dead.dropDuplicates(["doc_id", "order"]).count()
+
+
 # -- DELETE: the fourth MERGE shape -------------------------------------------
 
 

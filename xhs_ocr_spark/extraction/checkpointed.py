@@ -35,7 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-from .pipeline import _extracted
+from .pipeline import _extracted, _ok_dead, split_extracted
 
 
 class CheckpointedExtraction:
@@ -187,9 +187,7 @@ class CheckpointedExtraction:
         todo = sorted(set(range(self.n_buckets)) - done)
         wave_size = max(1, (len(todo) + self.waves - 1) // self.waves) if todo else 1
 
-        bucket_expr = F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)).cast(
-            "int"
-        ).alias("bucket")
+        bucket_expr = F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)).cast("int")
 
         for w in range(0, len(todo), wave_size):
             if fail_after_waves is not None and w // wave_size >= fail_after_waves:
@@ -205,25 +203,17 @@ class CheckpointedExtraction:
             # ONE pipeline computation per wave: the routed frame is
             # persisted (a wave is the sized-to-fit unit of work, so its
             # footprint is bounded by construction), then the ok/dead
-            # splits, both writes, and the lineage aggregates all read the
-            # cache — the OCR stage never re-executes, and nothing re-reads
-            # the output directories (round-1 verdict item 6: at 10^12 docs
-            # that re-read scans everything written so far, per wave).
-            # bucket is re-derived from doc_id (deterministic hash), not
-            # joined back — two shuffle joins gone.
+            # splits, both writes, and the one lineage aggregate all read
+            # the cache — the OCR stage never re-executes, and nothing
+            # re-reads the output directories (round-1 verdict item 6: at
+            # 10^12 docs that re-read scans everything written so far, per
+            # wave). bucket is re-derived from doc_id (deterministic
+            # hash), not joined back — two shuffle joins gone.
             ex = _extracted(wave_docs.select("doc_id", "spans"), None).persist(
                 StorageLevel.MEMORY_AND_DISK
             )
-            out = ex.where(F.col("text").isNotNull()).select(
-                "doc_id", "kind", "text", "media_ref",
-                F.col("offset").alias("order"), bucket_expr,
-            )
-            dead_out = ex.where(
-                (F.col("kind") == "media") & F.col("text").isNull()
-            ).select(
-                "doc_id", "media_ref", F.col("offset").alias("order"),
-                "reason",  # 'corrupt_payload' vs 'all_masks_failed'
-                bucket_expr,
+            out, dead_out = (
+                df.withColumn("bucket", bucket_expr) for df in split_extracted(ex)
             )
             # idempotent wave writes, two interchangeable mechanisms:
             # - parquet path: dynamic partition overwrite replaces only
@@ -248,33 +238,24 @@ class CheckpointedExtraction:
             # recorded on each of the wave's buckets (bucket-level timing
             # would need per-task instrumentation; wave granularity is what
             # resume decisions use)
+            # ONE lineage job over the cached frame; docs_in counts the
+            # docs with a surviving span, as the ok split would
+            ok, dead = _ok_dead()
             stats = {
-                r["bucket"]: (r["rows_out"], r["docs_in"])
-                for r in out.groupBy("bucket")
+                r["bucket"]: r.asDict()
+                for r in ex.groupBy(bucket_expr.alias("bucket"))
                 .agg(
-                    F.count("*").alias("rows_out"),
-                    F.countDistinct("doc_id").alias("docs_in"),
+                    F.count(F.when(ok, 1)).alias("rows_out"),
+                    F.countDistinct(F.when(ok, F.col("doc_id"))).alias("docs_in"),
+                    F.count(F.when(dead, 1)).alias("dead_out"),
                 )
-                .collect()
-            }
-            dead_stats = {
-                r["bucket"]: r["dead_out"]
-                for r in dead_out.groupBy("bucket")
-                .agg(F.count("*").alias("dead_out"))
                 .collect()
             }
             ex.unpersist()
             self._append_lineage(
                 [
-                    {
-                        "bucket": int(b),
-                        "rows_out": int(stats.get(b, (0, 0))[0]),
-                        "docs_in": int(stats.get(b, (0, 0))[1]),
-                        "dead_out": int(dead_stats.get(b, 0)),
-                        "wall_ms": wall_ms,
-                        "run_id": run_id,
-                        "status": "ok",
-                    }
+                    {"rows_out": 0, "docs_in": 0, "dead_out": 0, **stats.get(b, {}),
+                     "bucket": b, "wall_ms": wall_ms, "run_id": run_id, "status": "ok"}
                     for b in wave_buckets
                 ]
             )

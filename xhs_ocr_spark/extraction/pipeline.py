@@ -12,7 +12,7 @@ Plan shape (designed for 100 TB / 1000 executors, tested on local[N]):
       │ column (boilerplate -> NULL; never Python objects); media
       │ rows' raw-RGBA payloads decoded, alpha-composited against
       │ the BROADCAST mask library, text read from surviving pixel
-      │ regions (engine initialized once per python worker, reused
+      │ regions (mask library resolved once per python worker, reused
       │ across batches — the reference spawns one subprocess per PROCESS
       │ and funnels every image through one temp file, core/run.py:407;
       │ here: no disk, no IPC, batched; corrupt payloads and
@@ -90,45 +90,6 @@ _FLAT_SCHEMA = T.StructType(
 )
 
 
-class _Engine:
-    """Per-python-worker OCR engine handle.
-
-    Stands in for the reference's subprocess lifecycle
-    (core/ppocr_api.py:16-72: spawn once, handshake, reuse). On a real
-    cluster the model weights arrive via SparkFiles/broadcast and are
-    loaded HERE, once per executor python worker — never per row/batch.
-    """
-
-    _instance: "_Engine | None" = None
-    init_count = 0  # observable by tests via accumulator-free assertion
-
-    def __init__(self) -> None:
-        _Engine.init_count += 1
-        self.ready = True
-
-    @classmethod
-    def get(cls) -> "_Engine":
-        if cls._instance is None:
-            cls._instance = cls()
-        return cls._instance
-
-    def extract_batch(self, media_refs: list, media_bytes: list, masks: dict) -> tuple[list, list]:
-        """(texts, reasons) for one Arrow batch's media rows (U2/U3 bytes
-        protocol, core/ppocr_api.py:128-140). A span carrying a raw RGBA
-        payload is DECODED FROM ITS BYTES: ordered mask fallback + alpha
-        composite + OCR over surviving pixel regions
-        (raw_image.extract_batch = core/run.py:375-501). Spans without
-        bytes (legacy corpora) fall back to the hash-derived stand-in;
-        both paths share one semantics definition and are
-        differential-tested equal."""
-        decoded = iter(extract_batch([b for b in media_bytes if b], masks))
-        out = [
-            next(decoded) if b else _ref_outcome(ref)
-            for ref, b in zip(media_refs, media_bytes)
-        ]
-        return [t for t, _ in out], [r for _, r in out]
-
-
 def _ref_outcome(ref: str | None) -> tuple[str | None, str | None]:
     txt = extract_media_span(ref) if ref else None
     return txt, (None if txt is not None else ALL_MASKS_FAILED)
@@ -162,7 +123,8 @@ def _make_ocr_routed(masks_bc):
     its value INSIDE the executor task, once per worker."""
 
     def ocr_routed(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        engine = _Engine.get()  # init BEFORE the batch loop; reused across batches
+        # on a real cluster the OCR model weights load here, once per
+        # python worker, before the batch loop (core/ppocr_api.py:16-72)
         masks = masks_bc.value
         for batch in batches:
             kind = batch.column("kind")
@@ -171,11 +133,17 @@ def _make_ocr_routed(masks_bc):
             reason = pa.nulls(batch.num_rows, text.type)
             media = pc.fill_null(pc.equal(kind, "media"), False)
             if pc.any(media).as_py():
-                texts, reasons = engine.extract_batch(
-                    pc.filter(batch.column("media_ref"), media).to_pylist(),
-                    pc.filter(batch.column("media_bytes"), media).to_pylist(),
-                    masks,
-                )
+                # spans carrying raw RGBA bytes are decoded from them
+                # (raw_image.extract_batch = core/run.py:375-501); spans
+                # without bytes (legacy corpora) take the hash-derived
+                # stand-in — one semantics definition, differential-tested
+                refs = pc.filter(batch.column("media_ref"), media).to_pylist()
+                payloads = pc.filter(batch.column("media_bytes"), media).to_pylist()
+                decoded = iter(extract_batch([b for b in payloads if b], masks))
+                texts, reasons = zip(*(
+                    next(decoded) if b else _ref_outcome(ref)
+                    for ref, b in zip(refs, payloads)
+                ))
                 text = pc.replace_with_mask(text, media, pa.array(texts, text.type))
                 reason = pc.replace_with_mask(reason, media, pa.array(reasons, text.type))
             yield pa.RecordBatch.from_arrays(
@@ -305,13 +273,31 @@ def extract_spans(docs: DataFrame, spread_partitions: int | None = None) -> Data
     return reassemble(ok)
 
 
+def _ok_dead():
+    """The survivor and dead-letter predicates over the routed frame:
+    text survived, or a media span's text came out NULL."""
+    return F.col("text").isNotNull(), (F.col("kind") == "media") & F.col("text").isNull()
+
+
+def split_extracted(ex: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The one ok/dead-letter split of the routed frame: (ok_flat, dead).
+
+    ok = surviving spans (doc_id, kind, text, media_ref, order); dead =
+    media spans whose text came out NULL (doc_id, media_ref, order,
+    reason) — the python stage emits reason 'corrupt_payload' (decode
+    raised) vs 'all_masks_failed' (every mask failed the status/arity
+    gates), the two causes the reference logs distinctly."""
+    ok, dead = _ok_dead()
+    return (
+        ex.where(ok).select("doc_id", "kind", "text", "media_ref", F.col("offset").alias("order")),
+        ex.where(dead).select("doc_id", "media_ref", F.col("offset").alias("order"), "reason"),
+    )
+
+
 def extract_spans_flat(docs: DataFrame, spread_partitions: int | None = None) -> DataFrame:
     """Flat variant: one row per surviving span (doc_id, kind, text,
     media_ref, order) — handy for SQL-shaped comparisons and sinks."""
-    ok = _extracted(docs, spread_partitions).where(F.col("text").isNotNull())
-    return ok.select(
-        "doc_id", "kind", "text", "media_ref", F.col("offset").alias("order")
-    )
+    return split_extracted(_extracted(docs, spread_partitions))[0]
 
 
 def extract_spans_with_deadletter(
@@ -326,19 +312,4 @@ def extract_spans_with_deadletter(
     The two outputs share one lazy computation; a caller that ACTIONS both
     should persist (or use CheckpointedExtraction, which persists per
     wave) so the OCR stage runs once."""
-    ex = _extracted(docs, spread_partitions)
-    ok = ex.where(F.col("text").isNotNull()).select(
-        "doc_id", "kind", "text", "media_ref", F.col("offset").alias("order")
-    )
-    dead = ex.where(
-        (F.col("kind") == "media") & F.col("text").isNull()
-    ).select(
-        "doc_id",
-        "media_ref",
-        F.col("offset").alias("order"),
-        # emitted by the python stage: 'corrupt_payload' (decode raised)
-        # vs 'all_masks_failed' (every mask failed the status/arity gates)
-        # — the two causes the reference logs distinctly
-        "reason",
-    )
-    return ok, dead
+    return split_extracted(_extracted(docs, spread_partitions))

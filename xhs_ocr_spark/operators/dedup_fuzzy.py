@@ -406,23 +406,18 @@ def neardup_components(
             .agg(F.min("dst_comp").alias("nb_min"))
             .withColumnRenamed("src", "id")
         )
-        new = _ckpt(
-            labels.join(nb, on="id", how="left")
-            .select(
+        # the round's change flag rides in the checkpointed frame, so
+        # convergence is a count over the checkpoint, not a second join
+        labels = _ckpt(
+            labels.join(nb, on="id", how="left").select(
                 "id",
                 F.least(
                     F.col("comp"), F.coalesce(F.col("nb_min"), F.col("comp"))
                 ).alias("comp"),
+                (F.col("nb_min") < F.col("comp")).alias("changed"),
             )
         )
-        changed = (
-            new.join(
-                labels.select("id", F.col("comp").alias("old_comp")), on="id"
-            )
-            .where(F.col("comp") != F.col("old_comp"))
-            .count()
-        )
-        labels = new
+        changed = labels.where("changed").count()
         if changed == 0:
             break
     edges.unpersist()
@@ -433,7 +428,7 @@ def neardup_components(
             "exceeds max_iter, so its labels would be wrong. Raise "
             "max_iter (rounds needed = component diameter)."
         )
-    return labels
+    return labels.select("id", "comp")
 
 
 def simhash(text_col, bits: int = 16):

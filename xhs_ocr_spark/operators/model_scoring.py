@@ -2,9 +2,9 @@
 (round-4 verdict item 6) — the batch-inference pattern a real
 fastText / sklearn / ONNX quality classifier drops into: the model loads
 ONCE per executor python worker (never per row or per Arrow batch), and
-scoring is vectorized over each batch. This mirrors the OCR engine
-lifecycle in extraction/pipeline._Engine (U1, the reference's one-
-subprocess-per-process engine handle, core/ppocr_api.py:40-78) — swap
+scoring is vectorized over each batch. This mirrors the reference's
+one-subprocess-per-process OCR engine handle (U1, core/ppocr_api.py:
+40-78), which the OCR stage keeps as per-worker mask state — swap
 ``_ScoringEngine._load_model`` for the real model load and everything
 else stands.
 

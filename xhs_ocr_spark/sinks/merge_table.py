@@ -75,42 +75,44 @@ class ParquetMergeTable:
                 upd = upd.withColumn(c, F.lit(""))
         return cur, upd.select(cur.columns)
 
+    @staticmethod
+    def _resolve(cur: DataFrame, upd: DataFrame, keys: list[str], mode: str) -> DataFrame:
+        """The one MERGE resolution of a table with a batch. ``mode``:
+        'insert_ignore' keeps the table's row on a key clash,
+        'upsert' keeps the batch's row, 'append' keeps both."""
+        if mode == "upsert":
+            cur = cur.join(upd.select(keys).dropDuplicates(keys), on=keys, how="left_anti")
+        elif mode == "insert_ignore":
+            upd = upd.join(cur.select(keys).dropDuplicates(keys), on=keys, how="left_anti")
+        return cur.unionByName(upd)
+
+    def _merge(self, updates: DataFrame, keys: list[str] | None, mode: str) -> None:
+        """Batch dedup on the keys (appends pass None: no dedup), then resolve.
+        First-wins by arbitrary-but-stable key order is NOT assumed:
+        callers pre-dedup when order matters."""
+        if mode != "append":
+            updates = updates.dropDuplicates(keys)
+        cur = self.read()
+        if cur is None:
+            self._commit(updates)
+            return
+        cur, updates = self._align(cur, updates)
+        self._commit(self._resolve(cur, updates, keys, mode))
+
     def overwrite(self, df: DataFrame) -> None:
         self._commit(df)
 
     def insert_ignore(self, updates: DataFrame, keys: list[str]) -> None:
-        """Iceberg: MERGE INTO ... WHEN NOT MATCHED THEN INSERT.
-
-        Also dedups within the batch (first wins by arbitrary-but-stable
-        key order is NOT assumed — callers pre-dedup when order matters)."""
-        updates = updates.dropDuplicates(keys)
-        cur = self.read()
-        if cur is None:
-            self._commit(updates)
-            return
-        cur, updates = self._align(cur, updates)
-        fresh = updates.join(cur.select(keys).dropDuplicates(keys), on=keys, how="left_anti")
-        self._commit(cur.unionByName(fresh))
+        """Iceberg: MERGE INTO ... WHEN NOT MATCHED THEN INSERT."""
+        self._merge(updates, keys, "insert_ignore")
 
     def upsert(self, updates: DataFrame, keys: list[str]) -> None:
         """Iceberg: MERGE INTO ... WHEN MATCHED UPDATE WHEN NOT MATCHED
         INSERT (last-write-wins on the key)."""
-        updates = updates.dropDuplicates(keys)
-        cur = self.read()
-        if cur is None:
-            self._commit(updates)
-            return
-        cur, updates = self._align(cur, updates)
-        kept = cur.join(updates.select(keys).dropDuplicates(keys), on=keys, how="left_anti")
-        self._commit(kept.unionByName(updates))
+        self._merge(updates, keys, "upsert")
 
     def append(self, updates: DataFrame) -> None:
-        cur = self.read()
-        if cur is None:
-            self._commit(updates)
-            return
-        cur, updates = self._align(cur, updates)
-        self._commit(cur.unionByName(updates))
+        self._merge(updates, None, "append")
 
     def delete(self, keys_df: DataFrame, keys: list[str]) -> None:
         """Iceberg: DELETE FROM t WHERE (keys) IN (...). Removes every
@@ -575,6 +577,19 @@ class BucketedMergeTable(ParquetMergeTable):
         ):
             self.compact()
 
+    def _check_keys(self, keys: list[str] | None) -> None:
+        if keys is not None and list(keys) != self.keys:
+            raise ValueError(f"table is keyed by {self.keys}, got {keys}")
+
+    def _scattered(self, touched: set[int]) -> bool:
+        """Merge-on-read routing: hash bucketing spreads ANY large key set
+        near-uniformly, so a batch touching >= half the buckets would make
+        copy-on-write a full table rewrite (O(batch) write instead; see
+        class docstring). Once deltas exist every commit stays
+        merge-on-read until compact(), so the base remains immutable
+        between compactions."""
+        return self.in_mor_state() or len(touched) >= max(1, self.n_buckets // 2)
+
     def delete(self, keys_df: DataFrame, keys: list[str] | None = None) -> None:
         """Iceberg: DELETE FROM t WHERE (keys) IN (...) — the fourth
         MERGE shape, free once equality deletes exist. Point batches in
@@ -584,8 +599,7 @@ class BucketedMergeTable(ParquetMergeTable):
         equality-delete file alone — O(batch) bytes, no delta rows —
         which the sequence rule applies to everything earlier. A later
         upsert of the same key re-inserts it (higher sequence)."""
-        if keys is not None and list(keys) != self.keys:
-            raise ValueError(f"table is keyed by {self.keys}, got {keys}")
+        self._check_keys(keys)
         prev = self._latest_id()
         if prev is None:
             return
@@ -593,7 +607,7 @@ class BucketedMergeTable(ParquetMergeTable):
         touched = self._touched(kb)
         if not touched:
             return
-        if not self.in_mor_state() and len(touched) < max(1, self.n_buckets // 2):
+        if not self._scattered(touched):
             cur_t = self._read_raw().where(
                 F.col(self.BUCKET_COL).isin(sorted(touched))
             )
@@ -628,8 +642,10 @@ class BucketedMergeTable(ParquetMergeTable):
         # prev_sid=None: write every bucket fresh, carry no delta trees
         self._commit_buckets(live, set(range(self.n_buckets)), None)
 
-    def _merge(self, updates: DataFrame, updates_win: bool) -> None:
-        updates = updates.dropDuplicates(self.keys)
+    def _merge(self, updates: DataFrame, keys: list[str] | None, mode: str) -> None:
+        self._check_keys(keys)
+        if mode != "append":
+            updates = updates.dropDuplicates(self.keys)
         prev = self._latest_id()
         if prev is None:
             self._commit_buckets(self._with_bucket(updates), set(), None)
@@ -640,88 +656,27 @@ class BucketedMergeTable(ParquetMergeTable):
             # to a full rewrite for this (rare) merge, like Iceberg's
             # non-metadata-compatible type changes. Layout is preserved.
             cur_flat, updates = self._align(cur.drop(self.BUCKET_COL), updates)
-            if updates_win:
-                kept = cur_flat.join(
-                    updates.select(self.keys).dropDuplicates(self.keys),
-                    on=self.keys,
-                    how="left_anti",
-                )
-                merged = kept.unionByName(updates)
-            else:
-                fresh = updates.join(
-                    cur_flat.select(self.keys).dropDuplicates(self.keys),
-                    on=self.keys,
-                    how="left_anti",
-                )
-                merged = cur_flat.unionByName(fresh)
+            merged = self._resolve(cur_flat, updates, self.keys, mode)
             self._commit_buckets(
                 self._with_bucket(merged), set(range(self.n_buckets)), prev
             )
             return
         updates_b = self._with_bucket(updates)
         touched = self._touched(updates_b)
-        if self.in_mor_state() or len(touched) >= max(1, self.n_buckets // 2):
-            # Scattered batch: hash bucketing spreads ANY large key set
-            # near-uniformly, so copy-on-write would degrade to a full
-            # table rewrite — route through merge-on-read instead
-            # (O(batch) write; see class docstring). Once deltas exist,
-            # every merge stays merge-on-read until compact() so the base
-            # remains immutable between compactions.
-            self._mor_commit(updates_b, "upsert" if updates_win else "insert_ignore")
+        if self._scattered(touched):
+            self._mor_commit(updates_b, mode)
             return
         # partition-pruned read: only the touched buckets are scanned
         cur_t = cur.where(F.col(self.BUCKET_COL).isin(sorted(touched)))
-        if updates_win:
-            kept = cur_t.join(
-                updates_b.select(self.keys).dropDuplicates(self.keys),
-                on=self.keys,
-                how="left_anti",
-            )
-            merged = kept.unionByName(updates_b.select(kept.columns))
-        else:
-            fresh = updates_b.join(
-                cur_t.select(self.keys).dropDuplicates(self.keys),
-                on=self.keys,
-                how="left_anti",
-            )
-            merged = cur_t.unionByName(fresh.select(cur_t.columns))
-        self._commit_buckets(merged, touched, prev)
+        self._commit_buckets(self._resolve(cur_t, updates_b, self.keys, mode), touched, prev)
 
     # -- MERGE shapes (same semantics/statements as the parent) ---------------
 
     def insert_ignore(self, updates: DataFrame, keys: list[str] | None = None) -> None:
-        if keys is not None and list(keys) != self.keys:
-            raise ValueError(f"table is bucketed by {self.keys}, got {keys}")
-        self._merge(updates, updates_win=False)
+        self._merge(updates, keys, "insert_ignore")
 
     def upsert(self, updates: DataFrame, keys: list[str] | None = None) -> None:
-        if keys is not None and list(keys) != self.keys:
-            raise ValueError(f"table is bucketed by {self.keys}, got {keys}")
-        self._merge(updates, updates_win=True)
-
-    def append(self, updates: DataFrame) -> None:
-        prev = self._latest_id()
-        if prev is None:
-            self._commit_buckets(self._with_bucket(updates), set(), None)
-            return
-        cur = self._read_raw()
-        if set(cur.columns) - {self.BUCKET_COL} != set(updates.columns):
-            cur_flat, updates = self._align(cur.drop(self.BUCKET_COL), updates)
-            self._commit_buckets(
-                self._with_bucket(cur_flat.unionByName(updates)),
-                set(range(self.n_buckets)),
-                prev,
-            )
-            return
-        updates_b = self._with_bucket(updates)
-        touched = self._touched(updates_b)
-        if self.in_mor_state() or len(touched) >= max(1, self.n_buckets // 2):
-            self._mor_commit(updates_b, "append")  # scattered: see _merge
-            return
-        cur_t = cur.where(F.col(self.BUCKET_COL).isin(sorted(touched)))
-        self._commit_buckets(
-            cur_t.unionByName(updates_b.select(cur_t.columns)), touched, prev
-        )
+        self._merge(updates, keys, "upsert")
 
     def overwrite(self, df: DataFrame) -> None:
         self._commit_buckets(
