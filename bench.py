@@ -45,7 +45,7 @@ import pyspark.sql.functions as F  # noqa: E402
 from xhs_ocr_spark import queries as Q  # noqa: E402
 from xhs_ocr_spark.extraction.datagen import corpus_from_documents  # noqa: E402
 from xhs_ocr_spark.extraction.pipeline import extract_spans_flat  # noqa: E402
-from xhs_ocr_spark.session import get_spark  # noqa: E402
+from xhs_ocr_spark.session import get_spark, spread  # noqa: E402
 
 BENCH_QUERIES = [
     "q02_related_merge",
@@ -108,14 +108,12 @@ def amplified_corpus(spark, sf_dir: str, replicate: int, with_bytes: bool = True
     raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
-    parts = spark.sparkContext.defaultParallelism * 2
     if replicate > 1:
         reps = spark.range(replicate).select(F.col("id").alias("rep"))
         raw = raw.crossJoin(reps).select(
             F.concat_ws("#", "doc_id", "rep").alias("doc_id"), "text"
         )
-    spread = raw.repartition(parts, "doc_id")
-    corpus = corpus_from_documents(spread)
+    corpus = corpus_from_documents(spread(raw, "doc_id"))
     return attach_media_bytes(corpus) if with_bytes else corpus
 
 

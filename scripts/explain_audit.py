@@ -6,6 +6,8 @@ Checks:
 - q01: the date predicate reaches the parquet scan (PushedFilters)
 - q15: partial aggregation (two HashAggregate levels) + only needed columns read
 - q16: dimension joins are broadcast (BroadcastHashJoin, no SortMergeJoin)
+- q25/q29: candidate pairs aggregate before the shuffle and come from
+  the one (key, shard) self-join (`_s1 <= _s2` join condition)
 - q27: one pair-expansion route (no Union, no flatten( pair array) under
   exactly one df-guard Window, and no hot-key anti-join
 - q28: brute-force top-k broadcasts the query side (BroadcastNestedLoopJoin,
@@ -115,13 +117,15 @@ def main() -> None:
             ("no sort-merge join", r"SortMergeJoin", False),
         ],
     )
-    # q25/q29 candidate pairs come from sharded_bucket_pairs (round-4):
-    # ids aggregate at (key, shard) granularity, then the AGGREGATED
-    # shard rows self-join — joins over row-level data never appear, so
-    # every join input sits above a partial_collect_set aggregation and
-    # nothing quadratic reaches a single task. The regex invariants pin
-    # what regex can see: the aggregation is present, the joins are the
-    # equi kind (no nested-loop/cartesian), and no python runs; the
+    # q25/q29 candidate pairs come from dedup_fuzzy.shard_pairs, the one
+    # (key, shard) self-join (round-4): ids aggregate at (key, shard)
+    # granularity, then the AGGREGATED shard rows self-join with
+    # s1 <= s2 — joins over row-level data never appear, so every join
+    # input sits above a partial_collect_set aggregation and nothing
+    # quadratic reaches a single task. The regex invariants pin what
+    # regex can see: the aggregation is present, the s1 <= s2 shard
+    # self-join is there (both plans), the joins are the equi kind (no
+    # nested-loop/cartesian), and no python runs; the
     # O(bucket/n_shards) row bound itself is pinned by
     # tests/test_round4_ops.py's degenerate-bucket tests.
     # r7: band keys derive in ONE Arrow stage (hashlib md5 beats the
@@ -137,6 +141,7 @@ def main() -> None:
         Q.q_lsh_pairs(spark, SF),
         [
             ("partial collect_set before shuffle", r"partial_collect_set", True),
+            ("(key, shard) self-join", r"Join condition: \(_s1#\d+L? <= _s2#\d+L?\)", True),
             ("no parquet scan above the band checkpoint", r"(?m)^\(\d+\) Scan parquet", False),
             ("no python above the band checkpoint", r"EvalPython|MapInPandas|MapInArrow", False),
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
@@ -151,6 +156,7 @@ def main() -> None:
         Q.queries()["q29_embedding_neardup"](spark, SF),
         [
             ("aggregate-before-join (collect_list)", r"partial_collect_list", True),
+            ("(key, shard) self-join", r"Join condition: \(_s1#\d+L? <= _s2#\d+L?\)", True),
             ("grouped-verify arrow stage", r"MapInArrow", True),
             (
                 "exactly one python stage",

@@ -68,6 +68,27 @@ def test_lsh_near_neighbors_no_bucket_join(spark, small_embeddings):
         assert "vec" not in m.group(1), f"row-level vector join: {m.group(0)}"
 
 
+def test_lsh_near_neighbors_pairs_invariant_to_n_shards(spark, small_embeddings):
+    """n_shards is a memory/placement knob only: with one shard every
+    bucket verifies through the same-shard upper triangle, with 3 or 16
+    mostly through the cross-shard min/max emission, and the verified
+    pair set must be the same. min_cos=0 keeps every same-bucket pair
+    whose vectors point the same way, not just the planted clusters."""
+    def pairs(n_shards):
+        return sorted(
+            (r["id_a"], r["id_b"])
+            for r in SS.lsh_near_neighbors(
+                small_embeddings, dim=8, n_planes=4, min_cos=0.0, n_shards=n_shards
+            ).collect()
+        )
+
+    base = pairs(1)
+    assert len(base) >= 10 * 15  # every planted cluster collides
+    assert all(a < b for a, b in base) and len(set(base)) == len(base)
+    for n_shards in (3, 16):
+        assert pairs(n_shards) == base, n_shards
+
+
 def test_ivf_sample_mod_is_bounded():
     """ADVICE r2: the k-means fit sample must be capped, not a constant
     fraction — at 10^12 rows the old vec_id%7 sample collects ~10^11

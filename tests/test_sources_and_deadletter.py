@@ -75,7 +75,7 @@ def test_null_media_ref_dead_letter_has_reason(spark):
         schema="doc_id string, spans array<struct<kind:string,text:string,"
                "media_ref:string,offset:int>>",
     )
-    ok, dead = extract_spans_with_deadletter(docs, spread_partitions=2)
+    ok, dead = extract_spans_with_deadletter(docs)
     rows = dead.collect()
     assert len(rows) == 1
     assert rows[0]["reason"] == "all_masks_failed"

@@ -35,6 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
+from ..sources.docs_table import doc_bucket
 from .pipeline import _extracted, _ok_dead, split_extracted
 
 
@@ -161,10 +162,7 @@ class CheckpointedExtraction:
                 self.n_buckets, self.spark.sparkContext.defaultParallelism
             )
             (
-                docs.withColumn(
-                    "bucket",
-                    F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)).cast("int"),
-                )
+                docs.withColumn("bucket", doc_bucket(self.n_buckets))
                 .repartition(parts, "bucket")
                 .write.mode("overwrite")
                 .partitionBy("bucket")
@@ -187,7 +185,7 @@ class CheckpointedExtraction:
         todo = sorted(set(range(self.n_buckets)) - done)
         wave_size = max(1, (len(todo) + self.waves - 1) // self.waves) if todo else 1
 
-        bucket_expr = F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)).cast("int")
+        bucket_expr = doc_bucket(self.n_buckets)
 
         for w in range(0, len(todo), wave_size):
             if fail_after_waves is not None and w // wave_size >= fail_after_waves:
@@ -209,7 +207,7 @@ class CheckpointedExtraction:
             # 10^12 docs that re-read scans everything written so far, per
             # wave). bucket is re-derived from doc_id (deterministic
             # hash), not joined back — two shuffle joins gone.
-            ex = _extracted(wave_docs.select("doc_id", "spans"), None).persist(
+            ex = _extracted(wave_docs.select("doc_id", "spans")).persist(
                 StorageLevel.MEMORY_AND_DISK
             )
             out, dead_out = (
@@ -269,7 +267,8 @@ def make_span_sink(spark: SparkSession, path: str, n_buckets: int = 64):
     (doc_id, order) — one row per surviving span — physically bucketed
     by doc_id alone so a document's spans colocate and a checkpoint
     wave's merge touches exactly the wave's bucket set (the wave and
-    sink bucket functions are both pmod(xxhash64(doc_id), n))."""
+    sink bucket functions are both pmod(xxhash64(doc_id), n): the
+    wave's is docs_table.doc_bucket)."""
     from ..sinks.merge_table import BucketedMergeTable
 
     return BucketedMergeTable(

@@ -26,6 +26,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import spread
+
 SPAN_SCHEMA = T.StructType(
     [
         T.StructField("kind", T.StringType()),
@@ -128,37 +130,29 @@ def generate_corpus(spark: SparkSession, n_docs: int, partitions: int | None = N
     )
 
 
-def corpus_from_documents(
-    documents: DataFrame, chunk_words: int = 7, spread: bool = True
-) -> DataFrame:
+def corpus_from_documents(documents: DataFrame, chunk_words: int = 7) -> DataFrame:
     """Derive an interleaved corpus from the driver-provided ``documents``
     parquet table (doc_id, text, ...): split each text into ``chunk_words``
     word chunks -> text spans; insert a deterministic media span every 3rd
     position. Pure DataFrame ops (no Python row loop) so Catalyst sees the
     whole derivation; used by ``entry()`` and the benchmarks.
 
-    ``spread=True`` (default) spreads the RAW rows across cores before
-    any derivation (r7): the testdata parquet is a single scan
-    partition, so without the exchange the split/chunk work — and, for a
-    non-outer downstream explode, the PUSHED ``size(spans) > 0`` guard,
-    which re-evaluates the whole derivation per row — serializes on one
-    task. Consumers that explode the spans should prefer explode_outer
-    so that guard never exists (spans is never empty: split() yields
-    >= 1 token, hence >= 1 chunk). A second exchange between split and
+    The RAW rows are spread across cores before any derivation (r7):
+    the testdata parquet is a single scan partition, so without the
+    exchange the split/chunk work — and, for a non-outer downstream
+    explode, the PUSHED ``size(spans) > 0`` guard, which re-evaluates
+    the whole derivation per row — serializes on one task. Consumers
+    that explode the spans should prefer explode_outer so that guard
+    never exists (spans is never empty: split() yields >= 1 token,
+    hence >= 1 chunk). A second exchange between split and
     chunking was A/B'd and is NOT needed: CollapseProject declines to
     inline a multiply-referenced non-cheap column, so ``words``
     evaluates once per row either way (one exchange 0.55s vs two 0.75s
     on the sf1.0 q13 shape).
     """
-    if spread:
-        parts = documents.sparkSession.sparkContext.defaultParallelism * 2
-        documents = documents.select(
-            F.col("doc_id").cast("string").alias("doc_id"), "text"
-        ).repartition(parts, "doc_id")
-    d = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.split(F.trim(F.col("text")), r"\s+").alias("words"),
-    )
+    d = spread(
+        documents.select(F.col("doc_id").cast("string").alias("doc_id"), "text"), "doc_id"
+    ).select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("words"))
     n_chunks = (F.size("words") + F.lit(chunk_words - 1)) / F.lit(chunk_words)
     d = d.select(
         "doc_id",

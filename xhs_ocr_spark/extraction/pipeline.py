@@ -241,7 +241,7 @@ def _spread_flat(docs: DataFrame, spread_partitions: int | None) -> DataFrame:
     return explode_spans(docs).repartition(parts, "doc_id", "offset")
 
 
-def _extracted(docs: DataFrame, spread_partitions: int | None) -> DataFrame:
+def _extracted(docs: DataFrame) -> DataFrame:
     """Single-scan unified routing: flat spans with `text` rewritten to the
     route result, NULL = boilerplate-dropped (text) or all-masks-failed
     (media).
@@ -263,13 +263,13 @@ def _extracted(docs: DataFrame, spread_partitions: int | None) -> DataFrame:
     from ..sources.mask_library import broadcast_mask_library
 
     masks_bc = broadcast_mask_library(docs.sparkSession)
-    flat = _spread_flat(docs, spread_partitions)
+    flat = _spread_flat(docs, None)
     return flat.mapInArrow(_make_ocr_routed(masks_bc), schema=_FLAT_SCHEMA)
 
 
-def extract_spans(docs: DataFrame, spread_partitions: int | None = None) -> DataFrame:
+def extract_spans(docs: DataFrame) -> DataFrame:
     """Full pipeline: (doc_id, spans) -> (doc_id, spans_out)."""
-    ok = _extracted(docs, spread_partitions).where(F.col("text").isNotNull())
+    ok = _extracted(docs).where(F.col("text").isNotNull())
     return reassemble(ok)
 
 
@@ -294,15 +294,13 @@ def split_extracted(ex: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
 
 
-def extract_spans_flat(docs: DataFrame, spread_partitions: int | None = None) -> DataFrame:
+def extract_spans_flat(docs: DataFrame) -> DataFrame:
     """Flat variant: one row per surviving span (doc_id, kind, text,
     media_ref, order) — handy for SQL-shaped comparisons and sinks."""
-    return split_extracted(_extracted(docs, spread_partitions))[0]
+    return split_extracted(_extracted(docs))[0]
 
 
-def extract_spans_with_deadletter(
-    docs: DataFrame, spread_partitions: int | None = None
-) -> tuple[DataFrame, DataFrame]:
+def extract_spans_with_deadletter(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(ok_flat, dead_letter): F10 routing as data instead of log lines.
 
     dead_letter = media spans whose every mask failed the status/arity
@@ -312,4 +310,4 @@ def extract_spans_with_deadletter(
     The two outputs share one lazy computation; a caller that ACTIONS both
     should persist (or use CheckpointedExtraction, which persists per
     wave) so the OCR stage runs once."""
-    return split_extracted(_extracted(docs, spread_partitions))
+    return split_extracted(_extracted(docs))

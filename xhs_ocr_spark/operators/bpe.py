@@ -41,6 +41,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..session import spread
+
 # The merges table, in rank order (earlier = higher priority, applied
 # first). A tiny public-knowledge English-digraph table — a stand-in for
 # a learned merges.txt; composed rules (e.g. ti+on) exercise multi-level
@@ -203,8 +205,7 @@ def bpe_token_counts(
         F.col(id_col).alias("__id"), F.col(text_col).alias("__text"), *keep
     )
     if not pre_spread:
-        parts = df.sparkSession.sparkContext.defaultParallelism * 2
-        src = src.repartition(parts, "__id")
+        src = spread(src, "__id")
     keep_schema = "".join(
         f", {k} {src.schema[k].dataType.simpleString()}" for k in keep
     )

@@ -16,6 +16,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 
+from ..session import spread
+
 
 def sessionize(
     df: DataFrame,
@@ -105,8 +107,7 @@ def sessionize_bucketed(
     # — and re-derived whole under each. A repartition on the window's
     # own partition keys gives both consumers one shared exchange
     # (ReusedExchange), so the event scan and the window run once.
-    parts = df.sparkSession.sparkContext.defaultParallelism * 2
-    rows = rows.repartition(parts, key_col, "_bkt")
+    rows = spread(rows, key_col, "_bkt")
 
     summ = rows.groupBy(key_col, "_bkt").agg(
         F.min(ts_col).alias("_first_ts"),

@@ -21,6 +21,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from ..session import spread
+from .dedup_fuzzy import DEFAULT_SHARDS, shard_pairs
+
 N_PLANES = 8
 PLANE_MOD = 997
 
@@ -80,7 +83,6 @@ def _rank_topk(
     cosine divides by the product of the two precomputed norms, which
     multiplies the SAME two sqrt values cosine() does (bit-identical;
     r7, same hoist as lsh_near_neighbors)."""
-    parts = corpus.sparkSession.sparkContext.defaultParallelism * 2
     # spread on n_id only (the scan is 1 file): the query side is
     # broadcast, so the join needs no corpus distribution —
     # repartitioning on `cell` (a handful of values) would collapse
@@ -88,7 +90,7 @@ def _rank_topk(
     # (review finding, round 2).
     c = corpus.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")
-    ).repartition(parts, "n_id")
+    ).transform(spread, "n_id")
     q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
     c_cols, q_cols = ["n_id", "n_vec"], ["q_id", "q_vec"]
     if cells is not None:
@@ -277,9 +279,6 @@ def ivf_topk_kmeans(
     return _rank_topk(corpus, queries, id_col, vec_col, k, cells, dedupe)
 
 
-N_VERIFY_SHARDS = 16  # shard width of the grouped verify (memory knob)
-
-
 def lsh_near_neighbors(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -287,7 +286,7 @@ def lsh_near_neighbors(
     dim: int = 64,
     n_planes: int = N_PLANES,
     min_cos: float = 0.6,
-    n_shards: int = N_VERIFY_SHARDS,
+    n_shards: int = DEFAULT_SHARDS,
 ) -> DataFrame:
     """Candidate pairs sharing an LSH bucket, verified by exact cosine.
     Returns (id_a, id_b) with cosine >= min_cos, id_a < id_b.
@@ -298,14 +297,13 @@ def lsh_near_neighbors(
     and attached both vectors to every pair (two joins), then folded an
     interpreted HOF dot per pair — at the driver's sf1.0 scale that is
     19M pair rows and 22s (r6), still 8.4s after hoisting the norms.
-    Now vectors aggregate once at (bucket, shard) granularity — sorted
-    (id, vec, nrm) structs, no aggregate row ever holding more than
-    O(|bucket|/n_shards) vectors (the round-2/4 hot-bucket invariant,
-    unchanged; ``n_shards`` is the memory/placement knob) — the
-    aggregated shard rows self-join on the bucket (<= S^2/2 rows per
-    bucket, metadata-scale), an exchange spreads the shard pairs, and
-    ONE mapInArrow stage emits the verified pairs per shard-pair from a
-    numpy accumulation. Shuffle bytes are O(n_shards x vectors), never
+    Now vectors go through dedup_fuzzy.shard_pairs, the one (key,
+    shard) self-join: sorted (id, vec, nrm) structs aggregate once per
+    (bucket, shard), no aggregate row ever holding more than
+    O(|bucket|/n_shards) vectors (the round-2/4 hot-bucket invariant;
+    ``n_shards`` is the memory/placement knob), the shard rows self-join
+    on the bucket and are spread, and ONE mapInArrow stage emits the
+    verified pairs per shard-pair from a numpy accumulation. Shuffle bytes are O(n_shards x vectors), never
     O(pairs x vectors).
 
     Bit-identity (pinned by tests/test_round7_opt.py and full-output
@@ -326,34 +324,22 @@ def lsh_near_neighbors(
     import numpy as np
     import pyarrow as pa
 
-    parts = df.sparkSession.sparkContext.defaultParallelism * 2
     # spread before the bucket expression (the testdata parquet is a
     # single scan partition)
     v = (
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
         .where(F.col("vec").isNotNull())
-        .repartition(parts, "id")
+        .transform(spread, "id")
     )
     vb = v.select(
         "id",
         "vec",
         norm(F.col("vec")).alias("nrm"),
         lsh_bucket(F.col("vec"), dim, n_planes).alias("bucket"),
-        F.pmod(F.xxhash64(F.col("id").cast("string")), F.lit(n_shards)).alias(
-            "_shard"
-        ),
     )
-    g = vb.groupBy("bucket", "_shard").agg(
-        F.sort_array(F.collect_list(F.struct("id", "vec", "nrm"))).alias("items")
-    )
-    g1 = g.select("bucket", F.col("_shard").alias("_s1"), F.col("items").alias("_i1"))
-    g2 = g.select("bucket", F.col("_shard").alias("_s2"), F.col("items").alias("_i2"))
-    rows = (
-        g1.join(g2, "bucket")
-        .where(F.col("_s1") <= F.col("_s2"))
-        .repartition(parts)
-        .select("_s1", "_s2", "_i1", "_i2")
-    )
+    rows = shard_pairs(
+        vb, ["bucket"], F.sort_array(F.collect_list(F.struct("id", "vec", "nrm"))), n_shards
+    ).select("_s1", "_s2", "_i1", "_i2")
 
     def verify(batches):
         def unpack(col, row):

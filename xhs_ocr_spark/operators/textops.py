@@ -13,6 +13,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
+from ..session import spread
+
 # language-marker stopwords for the n-gram-free heuristic language ID.
 # Deterministic function of the text only (the corpus vocabulary is
 # synthetic, so this checks the operator, not real-world accuracy).
@@ -29,6 +31,14 @@ ENGLISH_STOPWORDS = (
 def words(text: Column) -> Column:
     """Whitespace tokenization, empty tokens removed."""
     return F.filter(F.split(F.trim(text), r"\s+"), lambda w: w != "")
+
+
+def ordered_join(order: str, part: str) -> Column:
+    """Aggregate: the group's ``part`` strings space-joined in ``order``
+    order — the one re-join of ordered pieces (span texts, paragraphs)
+    back into a document. Lambda-free: the sorted structs' field is
+    extracted as an array, not through a transform."""
+    return F.array_join(F.sort_array(F.collect_list(F.struct(order, part)))[part], " ")
 
 
 def h64(c: Column) -> Column:
@@ -189,10 +199,9 @@ def tfidf_topk(df, id_col: str, text_col: str, k: int = 3):
     # join, and the join's pushed isnotnull(term) otherwise specializes
     # the two subtrees so no exchange is ever reused (the same effect
     # token_budget_select documents). sf1.0: 5.1s -> ~0.9s.
-    parts = df.sparkSession.sparkContext.defaultParallelism * 2
     src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
     tf = (
-        src.repartition(parts, "id")
+        src.transform(spread, "id")
         .select("id", F.explode(words(F.lower(F.col("__text")))).alias("term"))
         .groupBy("id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -303,10 +312,9 @@ def unigram_rarity(df, id_col: str, text_col: str, keep_max_x1000: int = 200_000
     # sum(_sur) over the occurrences EXACTLY (integer multiply), and
     # n_tokens = sum(cnt). One scan, one explode; the occurrence frame
     # itself never crosses a shuffle. sf1.0: 2.4s -> ~1.1s.
-    parts = df.sparkSession.sparkContext.defaultParallelism * 2
     occ = (
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-        .repartition(parts, "id")
+        .transform(spread, "id")
         .select("id", F.explode(words(F.lower(F.col("__text")))).alias("term"))
     )
     # materialized once: tfd feeds both the term-frequency aggregate and

@@ -72,11 +72,7 @@ def doc_text_from_spans(extracted_flat: DataFrame) -> DataFrame:
     return (
         extracted_flat.where(F.col("kind") == "text")
         .groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.sort_array(F.collect_list(F.struct("order", "text")))["text"], " "
-            ).alias("text")
-        )
+        .agg(TX.ordered_join("order", "text").alias("text"))
     )
 
 

@@ -26,6 +26,7 @@ from .operators import dedup_fuzzy as DF
 from .operators import selection as SEL
 from .operators import simsearch as SS
 from .operators import textops as TX
+from .session import spread
 
 CUTOFF = "2024-01-24"  # S2 recent-date filter, fixed for determinism
 
@@ -360,15 +361,7 @@ def q_span_reorder(spark, sf):
     text_spans = flat.where((F.col("kind") == "text") & (F.col("text") != ""))
     return (
         text_spans.groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("offset", "text"))),
-                    lambda s: s["text"],
-                ),
-                " ",
-            ).alias("reassembled")
-        )
+        .agg(TX.ordered_join("offset", "text").alias("reassembled"))
         .select(F.col("doc_id").cast("long").alias("doc_id"), "reassembled")
     )
 
@@ -1171,9 +1164,7 @@ def q_model_quality(spark, sf):
     pipeline. Integer logits, so the DuckDB twin matches bit-for-bit."""
     from .operators.model_scoring import model_quality_scores
 
-    d = _t(spark, sf, "documents")
-    parts = spark.sparkContext.defaultParallelism * 2
-    return model_quality_scores(d.repartition(parts, "doc_id"), "doc_id", "text")
+    return model_quality_scores(spread(_t(spark, sf, "documents"), "doc_id"), "doc_id", "text")
 
 
 SQL_MODEL_QUALITY = r"""
@@ -1679,10 +1670,8 @@ def q_bpe_budget(spark, sf):
     # derivation (spread raw rows first — the parquet is one scan
     # partition; deriving above it would serialize the scoring on one
     # task), so bpe_token_counts must not add a second one (pre_spread).
-    parts = spark.sparkContext.defaultParallelism * 2
-    spread = d.select("doc_id", "text").repartition(parts, "doc_id")
     scored = bpe_token_counts(
-        spread.select(
+        spread(d.select("doc_id", "text"), "doc_id").select(
             "doc_id", "text", TX.quality_score(F.col("text")).alias("quality_x1000")
         ),
         "doc_id",

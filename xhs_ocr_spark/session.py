@@ -14,11 +14,21 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def spread(df: DataFrame, *cols) -> DataFrame:
+    """The one spread width: repartition to 2x the default parallelism,
+    hashing on ``cols`` (round-robin without them). Raw scans of the
+    single-file testdata parquet are one partition; every operator that
+    derives heavily per row spreads through here first. The size-aware
+    span spread of the extraction pipeline (``_spread_flat``) is the one
+    exchange sized otherwise."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism * 2, *cols)
 
 
 def get_spark(

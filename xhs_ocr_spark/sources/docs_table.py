@@ -9,14 +9,24 @@ lists, let alone reads, out-of-window partitions). On Iceberg the same
 write uses `days(collect_date)` + `bucket(N, doc_id)` transforms; the
 call sites don't change.
 
-The bucket column doubles as the resume/checkpoint key
-(extraction/checkpointed.py uses the same xxhash64 derivation).
+The bucket column doubles as the resume/checkpoint key: doc_bucket is
+the one derivation, shared with extraction/checkpointed.py's staging
+and waves.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+
+
+def doc_bucket(n_buckets: int) -> Column:
+    """The document bucket, pmod(xxhash64(doc_id), n_buckets) as int: the
+    partition column here and the staging and wave key of
+    CheckpointedExtraction. The span sink's bucket function over a
+    string doc_id gives the same value, which is what lets a wave's
+    merge touch only its own buckets."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
 
 
 def with_partition_columns(docs: DataFrame, n_buckets: int = 16) -> DataFrame:
@@ -27,9 +37,7 @@ def with_partition_columns(docs: DataFrame, n_buckets: int = 16) -> DataFrame:
     return docs.withColumn(
         "collect_date",
         F.date_add(F.lit("2024-01-01").cast("date"), day),
-    ).withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
+    ).withColumn("bucket", doc_bucket(n_buckets))
 
 
 def write_docs_table(docs: DataFrame, path: str, n_buckets: int = 16) -> None:
