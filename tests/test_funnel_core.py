@@ -56,8 +56,13 @@ def test_incremental_rejects_out_of_order_string_ids(spark):
     text = "the quick brown fox jumps over the lazy dog near the river bank"
     corpus = spark.createDataFrame([("9", text)], "doc_id string, text string")
     batch = spark.createDataFrame([("10", text)], "doc_id string, text string")
+    eval_df = corpus.unionByName(batch).where(
+        F.col("doc_id").cast("bigint") % CP.EVAL_MOD == 0
+    )
     with pytest.raises(ValueError, match="'9' >= min batch id '10'"):
-        CP.incremental_batch_stages(corpus, batch)
+        CP.incremental_batch_stages(
+            batch, CP.funnel_probe_indexes(CP.corpus_stages(corpus)), eval_df
+        )
 
 
 def test_batch_funnel_plan_has_no_probe_joins(spark):

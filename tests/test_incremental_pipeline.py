@@ -10,7 +10,9 @@ from __future__ import annotations
 from pyspark.sql import Row
 
 from xhs_ocr_spark.plans.corpus_pipeline import (
+    EVAL_MOD,
     corpus_stages,
+    funnel_probe_indexes,
     incremental_batch_stages,
 )
 
@@ -155,9 +157,17 @@ def test_incremental_matches_full_rerun(spark):
     corpus, batch = planted_corpus_and_batch()
     c_df = _mk(spark, corpus)
     b_df = _mk(spark, batch)
-    u_df = _mk(spark, {**corpus, **batch})
+    both = {**corpus, **batch}
+    u_df = _mk(spark, both)
+    # the fixed external benchmark stand-in: every EVAL_MOD-th doc of
+    # corpus ∪ batch, the set the full re-run derives for itself
+    eval_df = _mk(
+        spark, {k: v for k, v in both.items() if int(k) % EVAL_MOD == 0}
+    )
 
-    inc = incremental_batch_stages(c_df, b_df)
+    inc = incremental_batch_stages(
+        b_df, funnel_probe_indexes(corpus_stages(c_df)), eval_df
+    )
     full = corpus_stages(u_df)
     c_only = corpus_stages(c_df)
 

@@ -32,11 +32,7 @@ ALLOWED = {
     "write_docs_table": "S2 source: writes the partitioned docs table",
     "read_recent": "S2 source: the date-window read of the docs table",
     "extraction_stream": "streaming surface: the one incremental extraction writer",
-    "streaming_sessions": "streaming surface: session_window sessionization",
     "streaming_corpus_funnel": "streaming surface: the corpus funnel as a stream",
-    "stateful_user_totals": "streaming surface: arbitrary stateful processing",
-    "windowed_event_counts": "streaming surface: watermarked tumbling windows (T5)",
-    "incremental_batch_stages": "incremental funnel: batch vs corpus, ingest order checked",
     "ngram_df_drop_stats": "the audit q27's max_df drop warning tells a user to run",
     "generate_corpus": "synthetic docs table the e2e tests and the verify recipe run on",
 }

@@ -1,13 +1,16 @@
 """Structured Streaming: incremental extraction (availableNow) into the
 MERGE sink matches the batch pipeline; a second run with new files
-processes only the delta."""
+processes only the delta; watermarked dedup keeps one row per key."""
 
 import os
 
 import pyspark.sql.functions as F
 
 from xhs_ocr_spark.extraction import datagen, oracle
-from xhs_ocr_spark.streaming import extraction_stream, windowed_event_counts
+from xhs_ocr_spark.streaming import (
+    extraction_stream,
+    streaming_dedup_within_watermark,
+)
 
 
 def _write_docs(spark, tmp, lo, hi, name):
@@ -20,22 +23,6 @@ def _write_docs(spark, tmp, lo, hi, name):
 def _expected(lo, hi):
     exp = oracle.extract_corpus([datagen.corpus_rows(i) for i in range(lo, hi)])
     return {(d, k, t, m, o) for d, seq in exp.items() for (k, t, m, o) in seq}
-
-
-def test_windowed_counts_batch_parity(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    out = windowed_event_counts(ev, window="1 hour", watermark="2 hours")
-    rows = out.collect()
-    assert sum(r["n"] for r in rows) == ev.count()
-    # spot-check one window against a direct groupBy
-    direct = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .count()
-        .select(F.col("w.start").alias("window_start"), "event_type", F.col("count"))
-    )
-    d = {(r["window_start"], r["event_type"]): r["count"] for r in direct.collect()}
-    for r in rows:
-        assert d[(r["window_start"], r["event_type"])] == r["n"]
 
 
 def test_incremental_extraction_into_merge_sink(spark, tmp_path):
@@ -131,57 +118,23 @@ def test_streaming_content_dedup_rejects_mutated_replay(spark, tmp_path):
     assert not any(d.startswith("dup_") for d, *_ in got)  # ...mutated replay rejected
 
 
-def test_streaming_sessions_batch_parity(spark):
-    """session_window on a batch frame agrees with the lag+cumsum
-    sessionizer (gap_sec = window_gap - 1: session_window's end is
-    exclusive, so an exact-gap arrival opens a new session there)."""
-    from xhs_ocr_spark.operators.sessionize import sessionize
-    from xhs_ocr_spark.streaming import streaming_sessions
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    sw = streaming_sessions(ev, gap="30 minutes")
-    batch = sessionize(ev, "user_id", "ts", "event_id", gap_sec=1799)
-    got = {
-        (r["user_id"], r["n_sessions"], r["n_events"])
-        for r in sw.groupBy("user_id")
-        .agg(F.count("*").alias("n_sessions"), F.sum("n_events").alias("n_events"))
-        .collect()
-    }
-    exp = {
-        (r["user_id"], r["n_sessions"], r["n_events"])
-        for r in batch.groupBy("user_id")
-        .agg(
-            F.countDistinct("session_idx").alias("n_sessions"),
-            F.count("*").alias("n_events"),
-        )
-        .collect()
-    }
-    assert got == exp
-
-
-def test_streaming_sessions_append_mode_emits_finalized(spark, tmp_path):
-    from datetime import datetime
-
-    from pyspark.sql import Row
-
-    from xhs_ocr_spark.streaming import streaming_sessions
-
+def test_streaming_dedup_within_watermark(spark, tmp_path):
+    """Duplicates within the watermark window are dropped with BOUNDED
+    state; each unique key survives exactly once."""
     tmp = str(tmp_path)
     rows = [
-        Row(event_id=1, ts=datetime(2024, 1, 1, 0, 0), user_id=1,
-            event_type="view", value=1.0, props="{}"),
-        Row(event_id=2, ts=datetime(2024, 1, 1, 0, 10), user_id=1,
-            event_type="view", value=1.0, props="{}"),      # same session
-        Row(event_id=3, ts=datetime(2024, 1, 1, 2, 0), user_id=1,
-            event_type="view", value=1.0, props="{}"),      # new session
-        Row(event_id=9, ts=datetime(2024, 1, 2, 0, 0), user_id=99,
-            event_type="view", value=1.0, props="{}"),      # watermark pusher
+        (k, v, f"2024-01-01 10:{m:02d}:00")
+        for k, v, m in [
+            ("a", 1, 0), ("a", 2, 5), ("b", 3, 1), ("b", 4, 2), ("c", 5, 9),
+        ]
     ]
-    src = spark.createDataFrame(rows)
-    src.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/in")
-    stream = spark.readStream.schema(src.schema).parquet(f"{tmp}/in")
+    df = spark.createDataFrame(rows, "k string, v long, ts_s string").select(
+        "k", "v", F.col("ts_s").cast("timestamp").alias("ts")
+    )
+    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/in")
+    stream = spark.readStream.schema(df.schema).parquet(f"{tmp}/in")
     q = (
-        streaming_sessions(stream, gap="30 minutes", watermark="1 hour")
+        streaming_dedup_within_watermark(stream, ["k"], watermark="30 minutes")
         .writeStream.format("parquet")
         .option("path", f"{tmp}/out")
         .option("checkpointLocation", f"{tmp}/ck")
@@ -190,12 +143,8 @@ def test_streaming_sessions_append_mode_emits_finalized(spark, tmp_path):
         .start()
     )
     q.awaitTermination(300)
-    got = {
-        (r["user_id"], r["first_event_id"], r["n_events"])
-        for r in spark.read.parquet(f"{tmp}/out").collect()
-    }
-    # user 1's two sessions end long before the watermark (max ts - 1h),
-    # so append mode emits them finalized; the pusher's own session may
-    # or may not have emitted — assert only on the finalized ones
-    assert {(1, 1, 2), (1, 3, 1)} <= got
-    assert all(u == 99 for (u, f, n) in got - {(1, 1, 2), (1, 3, 1)})
+    got = spark.read.parquet(f"{tmp}/out").collect()
+    assert sorted(r["k"] for r in got) == ["a", "b", "c"]
+    # batch path: plain dedup
+    assert streaming_dedup_within_watermark(df, ["k"]).count() == 3
+    assert os.path.exists(f"{tmp}/ck")

@@ -10,8 +10,9 @@ re-derived python stages — the artifact a real 100 TB user actually runs.
 
 One funnel body (_funnel) serves every form: the batch funnel is the
 incremental core run against statically empty probe indexes, whose
-probe joins the optimizer deletes; the incremental and streaming forms
-pass real indexes.
+probe joins the optimizer deletes; the one incremental entry point
+(incremental_batch_stages, which the streaming form drives too) passes
+real indexes and checks ingest order first.
 
 Composition discipline (the measured traps this avoids):
 - the extracted per-document text is localCheckpoint'ed once, so the
@@ -155,9 +156,9 @@ def corpus_funnel(
 
 def funnel_probe_indexes(
     stages: dict[str, DataFrame],
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The three dedup probe indexes a funnel run contributes, derived
-    from its stage frames — the same derivation serves (a) building the
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The four probe indexes a funnel run contributes, derived from its
+    stage frames — the same derivation serves (a) building the
     corpus-side indexes for incremental_batch_stages and (b) computing a
     processed batch's index DELTA in the streaming form (the batch's
     own survivors/entrants are tomorrow's corpus):
@@ -167,7 +168,10 @@ def funnel_probe_indexes(
       shares its md5 with a kept one, so kept-para md5s cover all);
     - band_index(band): LSH band keys of every doc that reached the
       near-dup stage (a doc dropped there still blocks new copies) —
-      the funnel's own checkpointed band rows, never re-derived."""
+      the funnel's own checkpointed band rows, never re-derived;
+    - id_index(max_id): the largest input doc_id (as a string), the
+      one fact the ingest-order check needs (one row; NULL when the
+      input was empty)."""
     fp_index = stages["exact_dedup"].select(
         TX.fingerprint(F.col("text")).alias("fp")
     )
@@ -175,46 +179,48 @@ def funnel_probe_indexes(
         stages["paragraph_dedup"], "doc_id", "text", 4
     ).select("fp")
     band_index = stages["bands"].select("band").distinct()
-    return fp_index, para_index, band_index
+    id_index = stages["input"].agg(F.max("doc_id").alias("max_id"))
+    return fp_index, para_index, band_index, id_index
 
 
 def incremental_batch_stages(
-    corpus_doc_text: DataFrame,
     batch_doc_text: DataFrame,
-    stage_checkpoints: bool = True,
+    indexes: tuple[DataFrame, DataFrame, DataFrame, DataFrame],
+    eval_doc_text: DataFrame,
 ) -> dict[str, DataFrame]:
     """The funnel's steady-state INCREMENTAL form (round-5 verdict item
     7): yesterday's corpus is already filtered/deduped/indexed; today's
-    batch runs the funnel against three probe indexes instead of
+    batch runs the funnel against its probe indexes instead of
     re-pairing the whole corpus — O(batch + index probes) per day, the
     shape incremental_dedup_status (q52) exists for.
 
-    Indexes (in production: persisted bucketed tables appended per
-    batch; here funnel_probe_indexes of the corpus funnel, which IS the
-    index build): the corpus' exact-dedup fingerprints, kept-paragraph
-    md5s, and the band keys of every doc that REACHED its near-dup stage.
-    The eval stand-in set spans the corpus and batch bases, mirroring
-    the fixed external benchmark set a deployment holds constant.
+    ``indexes`` is funnel_probe_indexes' 4-tuple (fp_index, para_index,
+    band_index, id_index): of the corpus funnel in the batch form, or
+    the persisted per-batch deltas in the streaming form
+    (streaming_corpus_funnel). ``eval_doc_text`` is the (doc_id, text)
+    eval stand-in, the fixed external benchmark set a deployment holds
+    constant across batches.
 
-    EQUIVALENCE CONTRACT (pinned by tests/test_incremental_pipeline):
-    the batch's surviving set equals (full re-run over corpus UNION
-    batch) ∩ batch, PROVIDED corpus doc_ids order before batch doc_ids
-    (ingest order — earlier data wins every first-occurrence
-    tie-break, which is exactly how production assigns ids). The
-    ordering is lexicographic STRING order — doc_id is cast to string
-    on both sides and every first-occurrence tie-break compares strings
-    — so numeric ids of differing width break it ('9' > '10' as
-    strings): this raises ValueError unless max(corpus doc_id) <
-    min(batch doc_id) as strings. Use zero-padded or otherwise
-    fixed-width ids.
+    EQUIVALENCE CONTRACT (pinned by tests/test_incremental_pipeline and
+    tests/test_streaming_corpus): the batch's surviving set equals
+    (full re-run over corpus UNION batch) ∩ batch, PROVIDED corpus
+    doc_ids order before batch doc_ids (ingest order — earlier data
+    wins every first-occurrence tie-break, which is exactly how
+    production assigns ids). The ordering is lexicographic STRING order
+    — doc_id is cast to string on both sides and every first-occurrence
+    tie-break compares strings — so numeric ids of differing width
+    break it ('9' > '10' as strings): this raises ValueError unless
+    max(id_index max_id) < min(batch doc_id) as strings, one job over
+    the checkpointed batch base before any funnel work. Use zero-padded
+    or otherwise fixed-width ids.
 
     Returns the batch-side stage frames under the corpus_stages keys
-    (counts comparable to a batch funnel) plus 'corpus_input'."""
-    c_base = _checkpointed_base(corpus_doc_text)
-    b_base = _checkpointed_base(batch_doc_text)
+    (counts comparable to a batch funnel)."""
+    fp_index, para_index, band_index, id_index = indexes
+    base = _checkpointed_base(batch_doc_text)
     c_max, b_min = (
-        c_base.agg(F.max("doc_id"))
-        .crossJoin(b_base.agg(F.min("doc_id")))
+        id_index.agg(F.max("max_id"))
+        .crossJoin(base.agg(F.min("doc_id")))
         .first()
     )
     if c_max is not None and b_min is not None and not c_max < b_min:
@@ -223,46 +229,7 @@ def incremental_batch_stages(
             f"before every batch doc_id as strings: max corpus id {c_max!r} "
             f">= min batch id {b_min!r} (use fixed-width ids)"
         )
-    corpus = _funnel(
-        c_base,
-        *_no_indexes(c_base.sparkSession),
-        _eval_stand_in(c_base),
-        stage_checkpoints,
-    )
-    out = _funnel(
-        b_base,
-        *funnel_probe_indexes(corpus),
-        _eval_stand_in(c_base.unionByName(b_base)),
-        stage_checkpoints,
-    )
-    out["corpus_input"] = corpus["input"]
-    return out
-
-
-def incremental_batch_stages_vs_indexes(
-    batch_doc_text: DataFrame,
-    fp_index: DataFrame,
-    para_index: DataFrame,
-    band_index: DataFrame,
-    eval_doc_text: DataFrame,
-    stage_checkpoints: bool = True,
-) -> dict[str, DataFrame]:
-    """The funnel core, taking the three probe indexes DIRECTLY
-    (fp_index(fp), para_index(fp), band_index(band)) plus the eval
-    stand-in frame — the form the STREAMING pipeline drives, where the
-    indexes are persisted tables appended per processed batch
-    (funnel_probe_indexes of each batch's own stages). The streaming
-    form has no corpus ids to check, so the ingest-order precondition
-    of incremental_batch_stages is the caller's to keep. O(batch +
-    index probes) per call; see _funnel for the stage semantics."""
-    return _funnel(
-        _checkpointed_base(batch_doc_text),
-        fp_index,
-        para_index,
-        band_index,
-        eval_doc_text,
-        stage_checkpoints,
-    )
+    return _funnel(base, fp_index, para_index, band_index, eval_doc_text, True)
 
 
 def _funnel(
