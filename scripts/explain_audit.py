@@ -4,12 +4,16 @@ scale and dump them for review.
 
 Checks:
 - q01: the date predicate reaches the parquet scan (PushedFilters)
+- q04/q05/q06: the pick-one-row aggregate (dedup.pick_one) combines
+  map-side (partial_min/partial_max before the shuffle), no Window
 - q15: partial aggregation (two HashAggregate levels) + only needed columns read
 - q16: dimension joins are broadcast (BroadcastHashJoin, no SortMergeJoin)
 - q25/q29: candidate pairs aggregate before the shuffle and come from
   the one (key, shard) self-join (`_s1 <= _s2` join condition)
 - q27: one pair-expansion route (no Union, no flatten( pair array) under
-  exactly one df-guard Window, and no hot-key anti-join
+  exactly one df-guard Window, and no hot-key anti-join; the max_df
+  guard drops no posting on the audited data (ngram_df_drop_stats), the
+  regime where the DuckDB oracle is exact
 - q28: brute-force top-k broadcasts the query side (BroadcastNestedLoopJoin,
   no sort-merge join) and ranks in a window
 - q31/q35: IVF top-k broadcasts the query side (BroadcastHashJoin on
@@ -98,6 +102,22 @@ def main() -> None:
             ("partial agg present", r"HashAggregate", True),
         ],
     )
+    # one pick-one-row shape (dedup.pick_one): groupBy(keys) +
+    # min|max(struct) combines a hot key map-side; a row_number window
+    # would send all of its rows to one task
+    for nm, agg in (
+        ("q04_dedup_first_wins", "partial_min"),
+        ("q05_dedup_last_wins", "partial_max"),
+        ("q06_mask_fallback_top1", "partial_min"),
+    ):
+        audit(
+            nm,
+            Q.queries()[nm](spark, SF),
+            [
+                ("no window", r"RunningWindowFunction|\(\d+\) Window", False),
+                (f"{agg} before the shuffle", rf"(?s){agg}.*\(\d+\) Exchange", True),
+            ],
+        )
     audit(
         "q15_lineitem_agg",
         Q.q_lineitem_agg(spark, SF),
@@ -183,6 +203,12 @@ def main() -> None:
         ],
     )
     check("q27_ngram_jaccard", "exactly one df-guard window", n_nodes(q27, "Window") == 1)
+    from xhs_ocr_spark.operators.dedup_fuzzy import ngram_df_drop_stats
+
+    drops = ngram_df_drop_stats(
+        spark.read.parquet(f"{SF}/documents.parquet"), "doc_id", "text", scope_col="lang"
+    ).first()["dropped_postings"]
+    check("q27_ngram_jaccard", f"max_df guard drops no posting ({drops})", drops == 0)
     # q28/q31/q35 share simsearch._rank_topk: a broadcast query side
     # (cross join for brute force, `cell` equi-join for IVF) under one
     # row_number window
@@ -557,7 +583,8 @@ def main() -> None:
         ],
     )
     # the fully-LAZY composed funnel (stage_checkpoints=False) pins the
-    # logical composition: dedup stages aggregate (partial_min), no
+    # logical composition: both dedup stages keep one row per fp with
+    # pick_one's aggregate (partial_min) and no join back, no
     # window ever partitions by a fingerprint, nothing quadratic, and
     # the batch funnel's statically empty probe indexes are pruned — no
     # anti-join survives (a non-static empty index leaves 68). (The

@@ -139,13 +139,13 @@ def main() -> None:
             "scattered_series",
             {
                 "batches": n_series,
-                "auto_compact_deltas": t.auto_compact_deltas,
+                "auto_compact_deltas": t.AUTO_COMPACT_DELTAS,
                 "max_outstanding_deltas": max(deltas),
                 "read_sec_max": max(reads),
                 "read_sec_median": round(statistics.median(reads), 2),
                 "read_sec_first5": reads[:5],
                 "read_sec_last5": reads[-5:],
-                "bounded": max(deltas) < (t.auto_compact_deltas or 10**9),
+                "bounded": max(deltas) < t.AUTO_COMPACT_DELTAS,
             },
         )
     spark.stop()

@@ -3,12 +3,7 @@
 import pyspark.sql.functions as F
 from pyspark.sql import Row
 
-from xhs_ocr_spark.operators import (
-    dedup_first_wins,
-    dedup_last_wins,
-    related_merge,
-    unrelated_merge,
-)
+from xhs_ocr_spark.operators import pick_one, related_merge, unrelated_merge
 
 
 def test_related_merge_last_nonempty_wins(spark):
@@ -62,12 +57,19 @@ def test_dedup_first_and_last(spark):
             Row(k="a", seq=3, v="last"),
             Row(k="a", seq=2, v="mid"),
             Row(k="b", seq=9, v="only"),
-        ]
+            # a tie on seq: the rest of the row decides
+            Row(k="c", seq=5, v="y"),
+            Row(k="c", seq=5, v="x"),
+            # NULL seq sorts first (ASC NULLS FIRST / DESC NULLS LAST)
+            Row(k="d", seq=1, v="one"),
+            Row(k="d", seq=None, v="null"),
+        ],
+        "k string, seq long, v string",
     )
-    first = {r["k"]: r["v"] for r in dedup_first_wins(df, ["k"], "seq").collect()}
-    last = {r["k"]: r["v"] for r in dedup_last_wins(df, ["k"], "seq").collect()}
-    assert first == {"a": "first", "b": "only"}
-    assert last == {"a": "last", "b": "only"}
+    first = {r["k"]: r["v"] for r in pick_one(df, ["k"], ["seq"]).collect()}
+    last = {r["k"]: r["v"] for r in pick_one(df, ["k"], ["seq"], last=True).collect()}
+    assert first == {"a": "first", "b": "only", "c": "x", "d": "null"}
+    assert last == {"a": "last", "b": "only", "c": "y", "d": "one"}
 
 
 def test_merge_pipeline_dag(spark):

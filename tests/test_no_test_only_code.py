@@ -33,7 +33,6 @@ ALLOWED = {
     "read_recent": "S2 source: the date-window read of the docs table",
     "extraction_stream": "streaming surface: the one incremental extraction writer",
     "streaming_corpus_funnel": "streaming surface: the corpus funnel as a stream",
-    "ngram_df_drop_stats": "the audit q27's max_df drop warning tells a user to run",
     "generate_corpus": "synthetic docs table the e2e tests and the verify recipe run on",
 }
 

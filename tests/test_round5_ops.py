@@ -52,12 +52,12 @@ def test_ngram_jaccard_hash_modes_same_pairs(spark):
 
 def test_default_auto_compact_bounds_deltas(spark, tmp_path):
     """The DEFAULT table bounds MOR accumulation: across many scattered
-    batches the outstanding delta count never exceeds auto_compact_deltas
+    batches the outstanding delta count never exceeds AUTO_COMPACT_DELTAS
     (sawtooth, not monotone growth) and the content stays correct."""
     from xhs_ocr_spark.sinks import BucketedMergeTable
 
     t = BucketedMergeTable(spark, str(tmp_path / "bounded"), keys=["k"], n_buckets=4)
-    assert t.auto_compact_deltas is not None  # bounded by default now
+    assert t.AUTO_COMPACT_DELTAS is not None  # bounded by default now
     t.upsert(spark.createDataFrame([Row(k=f"k{i}", v="0") for i in range(40)]))
     max_seen = 0
     for b in range(1, 13):
@@ -68,7 +68,7 @@ def test_default_auto_compact_bounds_deltas(spark, tmp_path):
         )
         n = len(t._delta_seqs(t._latest_id()))
         max_seen = max(max_seen, n)
-        assert n < t.auto_compact_deltas, (b, n)
+        assert n < t.AUTO_COMPACT_DELTAS, (b, n)
     assert max_seen > 0  # MOR actually engaged between compactions
     got = {r["k"]: r["v"] for r in t.read().collect()}
     assert got["k0"] == "12" and got["k1"] == "0" and len(got) == 40
@@ -80,14 +80,9 @@ def test_delete_byte_volume_triggers_compact(spark, tmp_path):
     (ADVICE r4)."""
     from xhs_ocr_spark.sinks import BucketedMergeTable
 
-    t = BucketedMergeTable(
-        spark,
-        str(tmp_path / "bytes"),
-        keys=["k"],
-        n_buckets=4,
-        auto_compact_deltas=None,
-        auto_compact_delete_bytes=1,
-    )
+    t = BucketedMergeTable(spark, str(tmp_path / "bytes"), keys=["k"], n_buckets=4)
+    t.AUTO_COMPACT_DELTAS = 10**9  # unreachable: only the byte bound acts
+    t.AUTO_COMPACT_DELETE_BYTES = 1
     t.upsert(spark.createDataFrame([Row(k=f"k{i}", v="0") for i in range(40)]))
     t.upsert(spark.createDataFrame([Row(k=f"k{i}", v="1") for i in range(0, 40, 2)]))
     assert not t.in_mor_state()  # any delete file trips the 1-byte bound
@@ -103,14 +98,9 @@ def test_large_delete_set_reads_without_broadcast_hint(spark, tmp_path):
     from xhs_ocr_spark.sinks import BucketedMergeTable
 
     def mk(name, threshold):
-        t = BucketedMergeTable(
-            spark,
-            str(tmp_path / name),
-            keys=["k"],
-            n_buckets=4,
-            auto_compact_deltas=None,
-            auto_compact_delete_bytes=None,
-        )
+        t = BucketedMergeTable(spark, str(tmp_path / name), keys=["k"], n_buckets=4)
+        t.AUTO_COMPACT_DELTAS = 10**9  # unreachable bounds: stay merge-on-read
+        t.AUTO_COMPACT_DELETE_BYTES = 1 << 62
         t.BROADCAST_DELETE_BYTES = threshold
         t.upsert(spark.createDataFrame([Row(k=f"k{i}", v="0") for i in range(40)]))
         t.upsert(

@@ -27,6 +27,34 @@ def test_upsert_last_write_wins_with_schema_evolution(spark, tmp_path):
     assert got["a"]["extra"] == "42"  # K5: new column added on write
 
 
+def test_conflicting_batch_resolves_the_same_every_run(spark, tmp_path):
+    """A batch that holds two rows for one key resolves the same way
+    whatever its row order: the smallest whole row wins, on both tables
+    and through both MERGE shapes."""
+    from xhs_ocr_spark.sinks import BucketedMergeTable
+
+    others = [Row(k=f"k{i}", v=str(i)) for i in range(2, 10)]
+    orders = {
+        "xy": [Row(k="k1", v="x"), Row(k="k1", v="y")] + others,
+        "yx": [Row(k="k1", v="y"), Row(k="k1", v="x")] + others,
+    }
+    for table in ("flat", "bucketed"):
+        for mode in ("insert_ignore", "upsert"):
+            got = {}
+            for name, rows in orders.items():
+                path = str(tmp_path / f"{table}_{mode}_{name}")
+                t = (
+                    ParquetMergeTable(spark, path)
+                    if table == "flat"
+                    else BucketedMergeTable(spark, path, keys=["k"], n_buckets=4)
+                )
+                batch = spark.createDataFrame(rows).coalesce(1)
+                getattr(t, mode)(batch, ["k"])
+                got[name] = sorted((r["k"], r["v"]) for r in t.read().collect())
+            assert got["xy"] == got["yx"], (table, mode)
+            assert dict(got["xy"])["k1"] == "x", (table, mode)
+
+
 def test_snapshot_isolation(spark, tmp_path):
     t = ParquetMergeTable(spark, str(tmp_path / "t3"))
     assert t.read() is None
@@ -405,10 +433,8 @@ def test_mor_semantics_match_flat_and_compact(spark, tmp_path):
 def test_mor_auto_compact(spark, tmp_path):
     from xhs_ocr_spark.sinks import BucketedMergeTable
 
-    t = BucketedMergeTable(
-        spark, str(tmp_path / "ac"), keys=["k"], n_buckets=4,
-        auto_compact_deltas=2,
-    )
+    t = BucketedMergeTable(spark, str(tmp_path / "ac"), keys=["k"], n_buckets=4)
+    t.AUTO_COMPACT_DELTAS = 2
     t.upsert(spark.createDataFrame([Row(k=f"k{i}", v="0") for i in range(40)]))
     t.upsert(spark.createDataFrame([Row(k=f"k{i}", v="1") for i in range(0, 40, 2)]))
     assert t.in_mor_state()  # one delta: below threshold

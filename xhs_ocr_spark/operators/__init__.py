@@ -1,4 +1,4 @@
 """Relational operators re-expressing the reference's merge/dedup logic."""
 
 from .merges import related_merge, unrelated_merge  # noqa: F401
-from .dedup import dedup_first_wins, dedup_last_wins  # noqa: F401
+from .dedup import pick_one  # noqa: F401

@@ -20,6 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from ..session import spread
+from .dedup import pick_one
 from .textops import ordered_join, words
 
 log = logging.getLogger(__name__)
@@ -581,7 +582,9 @@ def paragraphs(text_col, size: int = 4):
 def first_occurrence(frame: DataFrame, key: str, order: list[str]) -> DataFrame:
     """``frame`` plus an ``is_first`` flag: true on the row whose
     (``order``...) tuple is the smallest within its ``key`` group — the
-    engine's one first-occurrence dedup shape.
+    engine's one first-occurrence FLAG, for callers that need every row
+    (q45, q49); a caller that keeps only the first rows calls
+    dedup.pick_one, which needs no join back.
 
     Skew-safe at scale: groupBy(key) + min(struct(order)) — partial
     aggregation collapses a boilerplate key repeated 10^9 times map-side
@@ -643,9 +646,9 @@ def paragraph_rows(
 
 def rebuild_first_paragraphs(rows: DataFrame) -> DataFrame:
     """paragraph_rows -> (doc_id, text): each doc's first-occurrence
-    paragraphs (min (doc_id, para_idx) per fp) re-joined in order; a doc
-    whose every paragraph is a repeat vanishes."""
-    kept = first_occurrence(rows, "fp", ["doc_id", "para_idx"]).where("is_first")
+    paragraphs (pick_one: min (doc_id, para_idx) per fp) re-joined in
+    order; a doc whose every paragraph is a repeat vanishes."""
+    kept = pick_one(rows, ["fp"], ["doc_id", "para_idx"])
     return kept.groupBy("doc_id").agg(ordered_join("para_idx", "para").alias("text"))
 
 

@@ -21,8 +21,9 @@ Composition discipline (the measured traps this avoids):
   per-stage counts would re-derive the whole chain per branch — the
   documented round-2 union trap; the funnel plan below the checkpoint
   has NO scan and NO python stage, asserted by scripts/explain_audit.py);
-- both dedup stages use dedup_fuzzy.first_occurrence (groupBy + min
-  (struct)), never a window over a hot fingerprint;
+- both dedup stages keep one row per fingerprint with dedup.pick_one
+  (groupBy + min(struct), no join back), never a window over a hot
+  fingerprint;
 - LSH band keys are derived once (dedup_fuzzy.lsh_band_rows) and feed
   the pairs, the band-index probe and the band-index delta;
 - decontamination uses the broadcast-semi-join form (eval sets at corpus
@@ -47,6 +48,7 @@ from pyspark.sql import DataFrame
 
 from ..operators import dedup_fuzzy as DF
 from ..operators import textops as TX
+from ..operators.dedup import pick_one
 
 QUALITY_MIN_X1000 = 501  # keep docs scoring above the degraded band
 DUP_WORD_MAX_X1000 = 500  # Gopher-style repeated-word gate
@@ -281,8 +283,7 @@ def _funnel(
     scrubbed = s2.select("doc_id", _scrub(F.col("text")).alias("text"))
     fpf = scrubbed.select("doc_id", "text", TX.fingerprint(F.col("text")).alias("fp"))
     s3 = stage(
-        DF.first_occurrence(fpf, "fp", ["doc_id"])
-        .where("is_first")
+        pick_one(fpf, ["fp"], ["doc_id"])
         .join(fp_index, "fp", "left_anti")
         .select("doc_id", "text")
     )
@@ -342,9 +343,7 @@ ASSEMBLY_BUDGET = 50_000  # token budget for the selection stage
 ASSEMBLY_SEQ_LEN = 512  # training-sequence length for packing
 
 
-def corpus_assembly(
-    doc_text: DataFrame, stage_checkpoints: bool = True, prefix_len: int = 2
-) -> DataFrame:
+def corpus_assembly(doc_text: DataFrame) -> DataFrame:
     """The assembly tail composed onto the funnel (round-5 verdict item
     4): filtered/deduped/sampled survivors -> token-budget selection
     (q51) -> epoch-shuffle packing (q54/q55) — corpus in, per-document
@@ -363,7 +362,7 @@ def corpus_assembly(
     JVM (no python stage below the extraction checkpoint)."""
     from ..operators import selection as SEL
 
-    stages = corpus_stages(doc_text, stage_checkpoints=stage_checkpoints)
+    stages = corpus_stages(doc_text)
     survivors = stages["decontam"].join(
         stages["stratified_sample"].select("doc_id"), "doc_id", "left_semi"
     )
@@ -372,20 +371,14 @@ def corpus_assembly(
         TX.quality_score(F.col("text")).cast("long").alias("quality_x1000"),
         TX.token_count(F.col("text")).cast("long").alias("n_tokens"),
     )
+    # round-6 verdict item 1: ``sel`` feeds BOTH pack_sequences and the
+    # final join; unstaged, the whole selection (windows + the scoring
+    # above it) re-derives under each consumer. Same localCheckpoint
+    # discipline as every funnel stage.
     sel = SEL.token_budget_select(
         scored, "doc_id", "quality_x1000", "n_tokens", budget=ASSEMBLY_BUDGET
-    )
-    if stage_checkpoints:
-        # round-6 verdict item 1: ``sel`` feeds BOTH pack_sequences and
-        # the final join; unstaged, the whole selection (windows + the
-        # scoring above it) re-derives under each consumer. Same
-        # localCheckpoint discipline as every funnel stage.
-        sel = sel.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     packed = SEL.pack_sequences(
-        sel.select("doc_id", "n_tokens"),
-        "doc_id",
-        "n_tokens",
-        seq_len=ASSEMBLY_SEQ_LEN,
-        prefix_len=prefix_len,
+        sel.select("doc_id", "n_tokens"), "doc_id", "n_tokens", seq_len=ASSEMBLY_SEQ_LEN
     )
     return sel.join(packed.select("doc_id", "seq_id", "offset_in_seq"), "doc_id")

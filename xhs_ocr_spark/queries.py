@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .extraction.datagen import corpus_from_documents
 from .extraction.pipeline import extract_spans_flat
-from .operators import dedup_first_wins, dedup_last_wins, related_merge, unrelated_merge
+from .operators import pick_one, related_merge, unrelated_merge
 from .operators import dedup_fuzzy as DF
 from .operators import selection as SEL
 from .operators import simsearch as SS
@@ -111,10 +111,8 @@ SELECT CAST(doc_id AS VARCHAR) AS doc_id, '' AS lang, source FROM documents
 
 def q_dedup_first_wins(spark, sf):
     """G7: INSERT OR IGNORE first-write-wins (db/__init__.py:110-116)."""
-    ev = _t(spark, sf, "events")
-    return dedup_first_wins(ev, ["user_id", "event_type"], "event_id").select(
-        "user_id", "event_type", "event_id"
-    )
+    ev = _t(spark, sf, "events").select("user_id", "event_type", "event_id")
+    return pick_one(ev, ["user_id", "event_type"], ["event_id"])
 
 
 SQL_DEDUP_FIRST = """
@@ -128,10 +126,8 @@ SELECT user_id, event_type, event_id FROM (
 
 def q_dedup_last_wins(spark, sf):
     """G8: upsert last-write-wins (db/data_dms.py:293-312)."""
-    ev = _t(spark, sf, "events")
-    return dedup_last_wins(ev, ["user_id", "event_type"], "event_id").select(
-        "user_id", "event_type", "event_id"
-    )
+    ev = _t(spark, sf, "events").select("user_id", "event_type", "event_id")
+    return pick_one(ev, ["user_id", "event_type"], ["event_id"], last=True)
 
 
 SQL_DEDUP_LAST = """
@@ -146,16 +142,12 @@ SELECT user_id, event_type, event_id FROM (
 def q_mask_fallback_top1(spark, sf):
     """J3's success-selection shape: ordered alternatives per key, first
     passing a validation gate wins (core/run.py:375-501 as a relational
-    plan: row_number over mask_order, rn=1)."""
-    ev = _t(spark, sf, "events")
-    from pyspark.sql import Window
-
-    ok = ev.where(F.col("value") > 15)  # "OCR accepted" gate
-    w = Window.partitionBy("user_id").orderBy(F.col("event_id").asc())
-    return (
-        ok.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", "event_id", F.col("event_type").alias("winner_type"))
+    plan: the smallest mask_order per key wins)."""
+    ok = _t(spark, sf, "events").where(F.col("value") > 15)  # "OCR accepted" gate
+    return pick_one(
+        ok.select("user_id", "event_id", F.col("event_type").alias("winner_type")),
+        ["user_id"],
+        ["event_id"],
     )
 
 
@@ -432,7 +424,7 @@ def q_user_info_path(spark, sf):
         F.col("doc_id").alias("doc_id"),
         chinese_number_to_long(fans_raw).alias("fans"),
     )
-    return dedup_first_wins(profiles, ["account_id"], "doc_id").select("account_id", "fans")
+    return pick_one(profiles, ["account_id"], ["doc_id"]).select("account_id", "fans")
 
 
 SQL_USER_INFO = """

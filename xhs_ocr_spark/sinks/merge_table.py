@@ -24,6 +24,8 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.dedup import pick_one
+
 
 class ParquetMergeTable:
     def __init__(self, spark: SparkSession, path: str) -> None:
@@ -87,11 +89,12 @@ class ParquetMergeTable:
         return cur.unionByName(upd)
 
     def _merge(self, updates: DataFrame, keys: list[str] | None, mode: str) -> None:
-        """Batch dedup on the keys (appends pass None: no dedup), then resolve.
-        First-wins by arbitrary-but-stable key order is NOT assumed:
-        callers pre-dedup when order matters."""
+        """Batch dedup on the keys (appends pass None: no dedup), then
+        resolve. A batch that holds two rows for one key keeps the
+        smallest whole row (pick_one), so it resolves the same way on
+        every run whatever its row order."""
         if mode != "append":
-            updates = updates.dropDuplicates(keys)
+            updates = pick_one(updates, keys, [])
         cur = self.read()
         if cur is None:
             self._commit(updates)
@@ -214,7 +217,7 @@ class BucketedMergeTable(ParquetMergeTable):
     equality deletes — with the (small) delete frames broadcast. A
     scattered upsert therefore writes O(batch) bytes instead of
     O(table); reads pay one broadcast anti-join per MOR commit until
-    ``compact()`` (explicit, or automatic via ``auto_compact_deltas``)
+    ``compact()`` (explicit, or automatic past ``AUTO_COMPACT_DELTAS``)
     rewrites the buckets clean. While deltas exist, EVERY merge routes
     through merge-on-read (the base stays immutable between
     compactions, which is what makes sequence 0 sound).
@@ -230,14 +233,19 @@ class BucketedMergeTable(ParquetMergeTable):
     # threshold the anti-join runs as a plain shuffle join.
     BROADCAST_DELETE_BYTES = 32 * 1024 * 1024
 
+    # bounded MOR read amplification (round-4 verdict item 2: opt-in
+    # compaction let a user accumulate one anti-join per outstanding
+    # delta on every read, unbounded): a MOR commit that leaves >= this
+    # many deltas, or >= this many delete-key bytes, triggers compact().
+    AUTO_COMPACT_DELTAS = 8
+    AUTO_COMPACT_DELETE_BYTES = 256 * 1024 * 1024
+
     def __init__(
         self,
         spark: SparkSession,
         path: str,
         keys: list[str],
         n_buckets: int = 64,
-        auto_compact_deltas: int | None = 8,
-        auto_compact_delete_bytes: int | None = 256 * 1024 * 1024,
         bucket_keys: list[str] | None = None,
     ) -> None:
         """``bucket_keys`` decouples the physical partitioning from the
@@ -248,19 +256,9 @@ class BucketedMergeTable(ParquetMergeTable):
         subset of ``keys`` (bucket placement must be a function of the
         merge key, or copy-on-write couldn't locate a key's bucket).
         Pinned by the first commit via a BUCKET_KEYS file, like
-        n_buckets.
-
-        ``auto_compact_deltas`` / ``auto_compact_delete_bytes`` bound MOR
-        read amplification BY DEFAULT (round-4 verdict item 2: opt-in
-        compaction let a user accumulate one anti-join per outstanding
-        delta on every read, unbounded): a MOR commit that leaves >= the
-        delta count, or >= the delete-key byte volume, triggers
-        ``compact()``. Pass None to disable either bound (the old
-        accumulate-until-explicit-compact behavior)."""
+        n_buckets."""
         super().__init__(spark, path)
         self.keys = list(keys)
-        self.auto_compact_deltas = auto_compact_deltas
-        self.auto_compact_delete_bytes = auto_compact_delete_bytes
         self._buckets_file = os.path.join(path, "BUCKETS")
         self._bucket_keys_file = os.path.join(path, "BUCKET_KEYS")
         try:
@@ -563,17 +561,9 @@ class BucketedMergeTable(ParquetMergeTable):
         if sid is None:
             return
         n_deltas = len(self._delta_seqs(sid))
-        if not n_deltas:
-            return
-        if (
-            self.auto_compact_deltas is not None
-            and n_deltas >= self.auto_compact_deltas
-        ):
-            self.compact()
-            return
-        if (
-            self.auto_compact_delete_bytes is not None
-            and self._delete_bytes(sid) >= self.auto_compact_delete_bytes
+        if n_deltas and (
+            n_deltas >= self.AUTO_COMPACT_DELTAS
+            or self._delete_bytes(sid) >= self.AUTO_COMPACT_DELETE_BYTES
         ):
             self.compact()
 
@@ -643,9 +633,12 @@ class BucketedMergeTable(ParquetMergeTable):
         self._commit_buckets(live, set(range(self.n_buckets)), None)
 
     def _merge(self, updates: DataFrame, keys: list[str] | None, mode: str) -> None:
+        """ParquetMergeTable's batch dedup (the smallest whole row per
+        key wins, every run), then copy-on-write or merge-on-read by
+        _scattered."""
         self._check_keys(keys)
         if mode != "append":
-            updates = updates.dropDuplicates(self.keys)
+            updates = pick_one(updates, self.keys, [])
         prev = self._latest_id()
         if prev is None:
             self._commit_buckets(self._with_bucket(updates), set(), None)
