@@ -25,10 +25,11 @@ Checks:
   no sort-merge join, nothing quadratic, no python)
 - q45: first-occurrence dedup aggregates partially before its shuffle
 - bucketed sink lookup: partition-prunes in clean AND merge-on-read state
-- flagship (flat and full extract_spans plans): the span spread
-  exchange, exactly one parquet scan, exactly one python stage (the OCR
-  mapInArrow, which also classifies text) and no lambdafunction — an
-  interpreted HOF must not return to the span path
+- flagship (flat and full extract_spans plans): the chunk spread hashes
+  (doc_id, chunk), the full plan regroups on doc_id (two Exchanges in
+  all, one in the flat plan), exactly one parquet scan, exactly one
+  python stage (the OCR mapInArrow, which also classifies text) and no
+  lambdafunction — an interpreted HOF must not return to the span path
 
 Writes plans to BENCH/plans/*.txt with run-dependent ids renumbered in
 order of first appearance (expression ids, plan_id, RDD ids, lambda
@@ -492,11 +493,21 @@ def main() -> None:
     stage_dir = os.path.join(tempfile.gettempdir(), "xhs_audit_corpus_v2")
     corpus = staged_corpus(spark, SF, 2, stage_dir)
     for name, df in (("flagship_flat", extract_spans_flat(corpus)), ("flagship_full", extract_spans(corpus))):
+        full = name == "flagship_full"
         plan_txt = audit(
             name,
             df,
             [
-                ("span skew-spread exchange", r"REPARTITION_BY_NUM", True),
+                (
+                    "chunk spread hashes (doc_id, chunk)",
+                    r"hashpartitioning\(doc_id#\d+, chunk#\d+, \d+\), REPARTITION_BY_NUM",
+                    True,
+                ),
+                (
+                    "regroup hashes doc_id" if full else "no regroup",
+                    r"hashpartitioning\(doc_id#\d+, \d+\)",
+                    full,
+                ),
                 # unified routing: exactly ONE Arrow-batched python stage (the
                 # OCR mapInArrow, text classifier included), ABOVE the spread
                 ("arrow-batched python stage", r"MapInArrow", True),
@@ -508,6 +519,11 @@ def main() -> None:
         )
         # single-scan + single-python-stage invariants (round-2 item 5)
         check(name, "exactly one parquet scan", n_nodes(plan_txt, "Scan parquet") == 1)
+        check(
+            name,
+            f"exactly {1 + full} Exchange(s)",
+            n_nodes(plan_txt, "Exchange") == 1 + full,
+        )
         check(
             name,
             "exactly one python stage",

@@ -1,14 +1,16 @@
 #!/usr/bin/env python
-"""Skew evidence: media-heavy documents vs the per-span spread, with REAL
+"""Skew evidence: media-heavy documents vs the chunk spread, with REAL
 binary payloads flowing through the OCR stage.
 
 Builds a corpus where a handful of documents carry thousands of media
 spans (the reference's multi-screenshot accounts, amplified), every span
 carrying a raw RGBA payload padded to a realistic screenshot size
 (PAYLOAD_NOISE_ROWS of deterministic noise), materialized to parquet once
-(payload synthesis excluded from timing). Then times the bytes-consuming
-OCR stage (a) naive: partitioned by doc_id — heavy docs pin single
-tasks, (b) production path: repartition(doc_id, offset) — spans spread.
+as (doc_id, spans) documents (payload synthesis excluded from timing).
+Then times the bytes-consuming OCR stage over the pipeline's chunk rows
+(at most CHUNK_SPANS spans each) (a) naive: partitioned by doc_id — a
+heavy doc's chunks pin a single task, (b) production path:
+repartition(doc_id, chunk) — chunks spread.
 
 Appends results to BENCH/BASELINE.md.
 """
@@ -26,7 +28,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pandas as pd  # noqa: E402
 import pyspark.sql.functions as F  # noqa: E402
 
-from xhs_ocr_spark.extraction.pipeline import _make_ocr_routed  # noqa: E402
+from xhs_ocr_spark.extraction.pipeline import (  # noqa: E402
+    _CHUNK_OUT,
+    _chunk_rows,
+    _make_ocr_routed,
+)
 from xhs_ocr_spark.session import get_spark  # noqa: E402
 from xhs_ocr_spark.sources.mask_library import broadcast_mask_library  # noqa: E402
 
@@ -39,9 +45,6 @@ PAYLOAD_NOISE_ROWS = 180  # ~25 KB per image (32 px * 4 ch * (180+content) rows)
 FLAT_SCHEMA = (
     "doc_id string, kind string, text string, media_ref string, offset int, "
     "media_bytes binary"
-)
-OUT_SCHEMA = (
-    "doc_id string, kind string, text string, media_ref string, offset int, reason string"
 )
 
 
@@ -61,7 +64,7 @@ def main() -> None:
     spark = get_spark("skew-bench", cores=16)
     parts = 16  # = cores: each core owns one partition, so the max partition IS the critical path
 
-    stage_dir = os.path.join(tempfile.gettempdir(), "xhs_skew_corpus_v2")
+    stage_dir = os.path.join(tempfile.gettempdir(), "xhs_skew_corpus_v3")
     if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
         docs = spark.range(N_DOCS).select(
             F.concat(F.lit("doc-"), F.col("id").cast("string")).alias("doc_id"),
@@ -82,12 +85,16 @@ def main() -> None:
             F.col("offset").cast("int").alias("offset"),
             F.lit(None).cast("binary").alias("media_bytes"),
         )
-        flat.repartition(64).mapInPandas(_render, schema=FLAT_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(stage_dir)
+        span = F.struct("kind", "text", "media_ref", "offset", "media_bytes")
+        flat.repartition(64).mapInPandas(_render, schema=FLAT_SCHEMA).groupBy("doc_id").agg(
+            F.collect_list(span).alias("spans")
+        ).write.mode("overwrite").parquet(stage_dir)
     staged = spark.read.parquet(stage_dir)
-    n_spans = staged.count()
-    payload_mb = staged.agg(F.sum(F.length("media_bytes"))).collect()[0][0] / 2**20
+    n_spans, payload = staged.select(F.inline("spans")).agg(
+        F.count(F.lit(1)), F.sum(F.length("media_bytes"))
+    ).first()
+    payload_mb = payload / 2**20
+    chunks = _chunk_rows(staged)
 
     masks_bc = broadcast_mask_library(spark)
 
@@ -101,31 +108,31 @@ def main() -> None:
         return best
 
     ocr = _make_ocr_routed(masks_bc)
-    naive = staged.repartition(parts, "doc_id").mapInArrow(ocr, schema=OUT_SCHEMA)
-    t_naive = timed(naive.where(F.col("text").isNotNull()))
-    spread = staged.repartition(parts, "doc_id", "offset").mapInArrow(
-        ocr, schema=OUT_SCHEMA
-    )
-    t_spread = timed(spread.where(F.col("text").isNotNull()))
+    naive = chunks.repartition(parts, "doc_id").mapInArrow(ocr, schema=_CHUNK_OUT)
+    t_naive = timed(naive.where(F.size("ok") > 0))
+    spread = chunks.repartition(parts, "doc_id", "chunk").mapInArrow(ocr, schema=_CHUNK_OUT)
+    t_spread = timed(spread.where(F.size("ok") > 0))
 
-    # partition balance evidence
+    # partition balance evidence, in spans per partition
     def histo(df):
-        rows = df.groupBy(F.spark_partition_id().alias("p")).count().collect()
-        counts = sorted((r["count"] for r in rows), reverse=True)
+        rows = df.groupBy(F.spark_partition_id().alias("p")).agg(
+            F.sum(F.size("spans")).alias("n")
+        ).collect()
+        counts = sorted((r["n"] for r in rows), reverse=True)
         return counts[0], counts[len(counts) // 2]
 
-    max_naive, med_naive = histo(staged.repartition(parts, "doc_id"))
-    max_spread, med_spread = histo(staged.repartition(parts, "doc_id", "offset"))
+    max_naive, med_naive = histo(chunks.repartition(parts, "doc_id"))
+    max_spread, med_spread = histo(chunks.repartition(parts, "doc_id", "chunk"))
 
     out = (
         f"\n## Skew evidence (scripts/skew_bench.py, {n_spans} media spans with "
         f"{payload_mb:.0f} MB of raw RGBA payloads (~{payload_mb * 2**20 / n_spans / 1024:.0f} KB/image), "
         f"{N_DOCS} docs, {N_DOCS // HEAVY_EVERY + 1} heavy @ {HEAVY_SPANS} spans, local[16])\n\n"
-        f"| strategy | max/median partition rows | OCR stage best-of-3 |\n|---|---|---|\n"
-        f"| partition by doc_id (naive) | {max_naive}/{med_naive} | {t_naive:.2f}s |\n"
-        f"| repartition (doc_id, offset) — production path | {max_spread}/{med_spread} | {t_spread:.2f}s |\n\n"
+        f"| strategy | max/median partition spans | OCR stage best-of-3 |\n|---|---|---|\n"
+        f"| chunk rows by doc_id (naive) | {max_naive}/{med_naive} | {t_naive:.2f}s |\n"
+        f"| repartition (doc_id, chunk) — production path | {max_spread}/{med_spread} | {t_spread:.2f}s |\n\n"
         f"Speedup {t_naive / t_spread:.2f}x with the bytes-consuming engine (mask "
-        f"composite + pixel decode per span); the per-span spread keeps the heavy "
+        f"composite + pixel decode per span); the chunk spread keeps the heavy "
         f"documents from pinning single executors (north_star skew requirement).\n"
     )
     print(out)

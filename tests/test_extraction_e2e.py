@@ -7,7 +7,14 @@ BASELINE.json invariant: per-document span-sequence equality on
 import pyspark.sql.functions as F
 
 from xhs_ocr_spark.extraction import datagen, oracle
-from xhs_ocr_spark.extraction.pipeline import extract_spans, extract_spans_flat
+from xhs_ocr_spark.extraction import semantics as S
+from xhs_ocr_spark.extraction.pipeline import (
+    CHUNK_SPANS,
+    _spread_flat,
+    extract_spans,
+    extract_spans_flat,
+    extract_spans_with_deadletter,
+)
 from xhs_ocr_spark.extraction.raw_image import render_media_image
 
 N_DOCS = 400
@@ -44,19 +51,83 @@ def test_flat_variant_matches(spark):
 
 
 def test_skew_docs_are_spread(spark):
-    # media-heavy docs must not pin a single partition: the media route
-    # repartitions by (doc_id, offset), so one heavy doc's spans land on
-    # many partitions.
-    docs = datagen.generate_corpus(spark, datagen.SKEW_EVERY + 1, partitions=4)
-    heavy_id = datagen.doc_id_for(0)
-    from xhs_ocr_spark.extraction.pipeline import explode_spans
+    """The pipeline's own spread cuts a media-heavy document into
+    ceil(n / CHUNK_SPANS) chunk rows that land on more than one
+    partition, next to the light datagen documents (one row each)."""
+    n = 5 * CHUNK_SPANS
+    heavy = [
+        {"kind": "media", "text": "", "media_ref": f"mem://heavy/{j}", "offset": j, "media_bytes": None}
+        for j in range(n)
+    ]
+    rows = [datagen.corpus_rows(i) for i in range(1, 40)] + [("doc-heavy", heavy)]
+    docs = spark.createDataFrame(rows, datagen.DOCS_SCHEMA)
+    spread = _spread_flat(docs, None).select(
+        "doc_id", "chunk", F.size("spans").alias("n"), F.spark_partition_id().alias("pid")
+    ).collect()
+    chunks = [r for r in spread if r["doc_id"] == "doc-heavy"]
+    assert sorted(r["chunk"] for r in chunks) == list(range(-(-n // CHUNK_SPANS)))
+    assert sum(r["n"] for r in chunks) == n
+    assert len({r["pid"] for r in chunks}) > 1
+    assert len(spread) == len(chunks) + 39
 
-    flat = explode_spans(docs).where((F.col("kind") == "media") & (F.col("doc_id") == heavy_id))
-    spread = flat.repartition(16, "doc_id", "offset").withColumn(
-        "pid", F.spark_partition_id()
-    )
-    n_partitions = spread.select("pid").distinct().count()
-    assert n_partitions > 4
+
+def _boundary_span(doc: str, i: int, offset: int) -> dict:
+    """Span i of a boundary document: plain or boilerplate text, or media
+    with a rendered payload or without one (the ref path)."""
+    ref = f"mem://{doc}/{i}"
+    if i % 3 == 0:
+        text = "nav menu footer" if i % 6 == 3 else f"words {i} kept"
+        return {"kind": "text", "text": text, "media_ref": "", "offset": offset, "media_bytes": None}
+    payload = render_media_image(ref) if i % 5 else None
+    return {"kind": "media", "text": "", "media_ref": ref, "offset": offset, "media_bytes": payload}
+
+
+def test_chunk_boundaries_match_oracle(spark):
+    """Documents around the CHUNK_SPANS boundary, through extract_spans,
+    the flat form and the dead letters, against oracle.extract_document:
+    K-1, K, K+1 and 2K+1 spans, offsets out of order across a chunk
+    boundary, duplicate offsets, empty and NULL span arrays, and a
+    document whose every span drops. Ties on a duplicate offset break by
+    (kind, text, media_ref), as sort_array over the span struct does."""
+    K = CHUNK_SPANS
+    rows = [(f"n{n}", [_boundary_span(f"n{n}", i, i) for i in range(n)]) for n in (K - 1, K, K + 1, 2 * K + 1)]
+    rows.append(("shuffled", [_boundary_span("shuffled", i, (7 * i + 3) % (K + 9)) for i in range(K + 9)]))
+    rows.append(("dups", [_boundary_span("dups", i, i // 3) for i in range(K + 5)]))
+    failing = [r for r in (f"mem://drop/{i}" for i in range(200)) if S.extract_media_span(r) is None]
+    rows.append(("all_drop", [
+        {"kind": "media", "text": "", "media_ref": ref, "offset": j, "media_bytes": render_media_image(ref)}
+        if j % 2 else
+        {"kind": "text", "text": "nav menu", "media_ref": "", "offset": j, "media_bytes": None}
+        for j, ref in enumerate(failing[: K + 2])
+    ]))
+    rows += [("empty", []), ("null", None)]
+    docs = spark.createDataFrame(rows, datagen.DOCS_SCHEMA)
+
+    exp = {}
+    exp_dead = []
+    for doc_id, spans in rows:
+        out = oracle.extract_document(doc_id, spans or [])
+        exp[doc_id] = sorted(out, key=lambda t: (t[3], t[0], t[1], t[2]))
+        kept = {(t[2], t[3]) for t in out if t[0] == "media"}
+        exp_dead += [
+            (doc_id, s["media_ref"], s["offset"], "all_masks_failed")
+            for s in spans or [] if s["kind"] == "media" and (s["media_ref"], s["offset"]) not in kept
+        ]
+    assert exp["all_drop"] == [] and exp["dups"] and exp_dead
+
+    got = {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in r["spans_out"]]
+        for r in extract_spans(docs).collect()
+    }
+    assert got == {d: v for d, v in exp.items() if v}
+    ok, dead = extract_spans_with_deadletter(docs)
+    flat = {}
+    for r in ok.collect():
+        flat.setdefault(r["doc_id"], []).append((r["kind"], r["text"], r["media_ref"], r["order"]))
+    assert {d: sorted(v, key=lambda t: (t[3], t[0], t[1], t[2])) for d, v in flat.items()} == got
+    assert "all_drop" not in flat
+    assert sorted(tuple(r) for r in dead.collect()) == sorted(exp_dead)
+    assert _spread_flat(docs, None).count() == sum(-(-len(s or []) // K) for _, s in rows)
 
 
 def test_unknown_span_kinds_match_oracle(spark):

@@ -1,5 +1,5 @@
-"""The flagship's Arrow OCR stage: the banded batch decoder against the
-per-payload extract_from_bytes oracle, the Arrow text classifier against
+"""The flagship's Arrow OCR stage: the vectorized batch decoder against
+the per-payload extract_from_bytes oracle, the Arrow text classifier against
 semantics.classify_text_span, span kinds and dead-letter reasons through
 the mapInArrow stage, and the per-task zip re-read guard."""
 
@@ -97,11 +97,72 @@ def _mangled(draw):
     return bytes(b)
 
 
+def _batch(payloads, masks):
+    """extract_batch over the payloads as one Arrow binary column, as
+    (text, reason) pairs."""
+    text, reason = RI.extract_batch(pa.array(payloads, pa.binary()), masks)
+    return list(zip(text.to_pylist(), reason.to_pylist()))
+
+
+def _one_per_key() -> list[bytes]:
+    """One rendered payload for each of the 24 (tag, app, hw) keys."""
+    by_key = {}
+    i = 0
+    while len(by_key) < len(S.TAGS) * 2 * len(RI.HW_VALUES):
+        ref = f"mem://key-{i}/0"
+        by_key.setdefault((S.media_tag(ref), S.media_app(ref), RI.media_hw(ref)), ref)
+        i += 1
+    return [RI.render_media_image(ref) for _, ref in sorted(by_key.items())]
+
+
+_KEYED = _one_per_key()
+_BAND0 = RI.HEADER_BANDS * RI.BH * RI.W * 4  # first byte of region 0's band
+
+
+def _rows_at_gap(p: bytes) -> bytes:
+    """p with block r moved to y = ROW_GAP * r and x alternating 16 / 8:
+    every block starts its own row, while a gap one pixel wider would
+    chain them all into one row sorted by x."""
+    b = bytearray(p)
+    for r in range(p[5]):
+        at = _BAND0 + r * RI.BH * RI.W * 4
+        y = S.ROW_GAP * r
+        b[at + 1 : at + 7] = bytes([16 - 8 * (r % 2), 0, y & 0xFF, y >> 8, 0, 0])
+    return bytes(b)
+
+
+def _with_s(p: bytes) -> bytes:
+    """p with an "s" for the leading digit of every block's text (the
+    stand-in never writes one; tiktok's chain strips it, xhs's keeps it)."""
+    b = bytearray(p)
+    for r in range(p[5]):
+        at = _BAND0 + r * RI.BH * RI.W * 4 + RI._META_LEN
+        if chr(b[at]).isdigit():
+            b[at] = ord("s")
+    return bytes(b)
+
+
+# all 24 keys, each also with its blocks exactly ROW_GAP apart and with
+# an "s" in its texts, interleaved with a bad magic byte, invalid UTF-8 in a band's text, a
+# truncated payload, a cut to the header band, empty and NULL
+_MIXED = [
+    p for i, good in enumerate(_KEYED) for p in (
+        good,
+        _rows_at_gap(good),
+        _with_s(good),
+        [bytes([0]) + good[1:], good[: _BAND0 + RI._META_LEN] + b"\xff" + good[_BAND0 + 11 :],
+         good[:-5], good[:_BAND0], b"", None][i % 6],
+    )
+]
+
+
 @settings(max_examples=150, deadline=None)
 @given(st.lists(_mangled(), min_size=1, max_size=25), st.booleans())
+@example(_MIXED, False)
+@example(_MIXED, True)
 def test_batch_decoder_equals_per_payload_oracle(payloads, altered):
     masks = ALTERED if altered else MASKS
-    assert RI.extract_batch(payloads, masks) == [_per_payload(p, masks) for p in payloads]
+    assert _batch(payloads, masks) == [_per_payload(p, masks) for p in payloads]
 
 
 def test_batch_decoder_covers_both_routes():
@@ -115,7 +176,7 @@ def test_batch_decoder_covers_both_routes():
     payloads = [RI.render_media_image(f"mem://cov-{i}/{i % 5}") for i in range(400)]
     payloads += [p[:-1] for p in payloads[:20]] + [b"", None]
     for masks in (MASKS, ALTERED):
-        got = RI.extract_batch(payloads, masks)
+        got = _batch(payloads, masks)
         assert got == [_per_payload(p, masks) for p in payloads]
         reasons = {r for _, r in got}
         assert {None, "all_masks_failed", "corrupt_payload"} <= reasons

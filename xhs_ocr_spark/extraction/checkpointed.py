@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from ..sources.docs_table import doc_bucket
-from .pipeline import _extracted, _ok_dead, split_extracted
+from .pipeline import _extracted, split_extracted
 
 
 class CheckpointedExtraction:
@@ -236,16 +236,15 @@ class CheckpointedExtraction:
             # recorded on each of the wave's buckets (bucket-level timing
             # would need per-task instrumentation; wave granularity is what
             # resume decisions use)
-            # ONE lineage job over the cached frame; docs_in counts the
-            # docs with a surviving span, as the ok split would
-            ok, dead = _ok_dead()
+            # ONE lineage job over the cached chunk frame; docs_in counts
+            # the docs with a surviving span, as the ok split would
             stats = {
                 r["bucket"]: r.asDict()
                 for r in ex.groupBy(bucket_expr.alias("bucket"))
                 .agg(
-                    F.count(F.when(ok, 1)).alias("rows_out"),
-                    F.countDistinct(F.when(ok, F.col("doc_id"))).alias("docs_in"),
-                    F.count(F.when(dead, 1)).alias("dead_out"),
+                    F.sum(F.size("ok")).alias("rows_out"),
+                    F.countDistinct(F.when(F.size("ok") > 0, F.col("doc_id"))).alias("docs_in"),
+                    F.sum(F.size("dead")).alias("dead_out"),
                 )
                 .collect()
             }

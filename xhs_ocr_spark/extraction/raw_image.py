@@ -39,20 +39,25 @@ stand-in and the pixel path are two faces of one semantics definition.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .semantics import (
+    CJK_PATTERN,
     N_MASKS,
+    REPLACE_STEPS,
+    ROW_GAP,
     TAG_FIELDS,
     TAGS,
     TRAFFIC_PREFIX,
+    content_type,
     media_app,
     media_tag,
     normalize_ocr_text,
-    order_rows,
     reading_order,
     run_standin_ocr,
     strip_tag_digits,
-    content_type,
+    strips_cjk,
 )
 
 W = 32          # pixels per row -> 128 bytes per pixel row
@@ -384,83 +389,210 @@ def _band_plan(masks, key) -> list[tuple[int, tuple[int, ...]]] | None:
     return cache[plan_key]
 
 
-_FALLBACK = object()  # the banded decoder cannot vouch for this payload
+_APPS = ("xhs", "tiktok")  # header byte 4 == 1 reads tiktok, anything else xhs
 
 
-def _band_key(p: bytes, r: int, tag: str, app: str):
-    """``(y_center, x_center, normalized text)`` of region r's band read
-    straight from the payload bytes — the centers with reading_order's
-    left-fold arithmetic over the four box corners decode_blocks would
-    build, the text byte for byte — or None when the band carries no
-    MARKER."""
-    off = (HEADER_BANDS + r) * _BAND_BYTES
-    if p[off] != MARKER:
-        return None
-    x = p[off + 1] | (p[off + 2] << 8)
-    y = p[off + 3] | (p[off + 4] << 8)
-    x_w, y_h = x + p[off + 5], y + p[off + 6]
-    start = off + _META_LEN
-    end = min(start + p[off + 9], off + _BAND_BYTES)  # text clipped to its band
-    text = normalize_ocr_text(p[start:end].decode("utf-8"), tag, app)
-    return (((y + y) + y_h) + y_h) / 4.0, (((x + x_w) + x_w) + x) / 4.0, text
+def _arrow_tables(masks) -> dict:
+    """Per worker, once per mask library: the Arrow decoder's lookup tables.
+
+    Keys (app, hw, tag) are indexed ``ta * len(HW_VALUES) + hw_idx`` with
+    ``ta = tag_idx * 2 + is_tiktok``:
+    - ``vouched[key]``: the key's masks are pure band selection (_band_plan);
+    - ``rows[key, j]`` / ``keep[key, j, r]``: mask j's height and its kept
+      regions (a missing mask j never applies);
+    - per ``ta``: the gate arity and ``leads``, the pieces _gated_span puts
+      before the p-th text (the span prefix and field name before the
+      first), flat at ``ta * width + p``."""
+    cache = _mask_cache(masks)
+    if "arrow" not in cache:
+        keys = [(app, hw, tag) for tag in TAGS for app in _APPS for hw in HW_VALUES]
+        plans = [_band_plan(masks, k) for k in keys]
+        n_masks = max([1] + [len(p) for p in plans if p])
+        n_regions = 1 + max([0] + [r for p in plans if p for _, rs in p for r in rs])
+        rows = np.full((len(keys), n_masks), np.iinfo(np.int64).max)
+        keep = np.zeros((len(keys), n_masks, n_regions), dtype=bool)
+        for k, plan in enumerate(plans):
+            for j, (mask_rows, regions) in enumerate(plan or ()):
+                rows[k, j] = mask_rows
+                keep[k, j, list(regions)] = True
+        leads = []
+        for tag in TAGS:
+            for app in _APPS:
+                f = TAG_FIELDS[tag]
+                head = f"{strip_tag_digits(tag)};{content_type(tag, app)};{f[0]}="
+                if tag.startswith(TRAFFIC_PREFIX):  # 8 texts pair into f[0]
+                    leads.append([head] + [":" if p % 2 else "|" for p in range(1, 8)])
+                else:
+                    leads.append([head] + [f"|{name}=" for name in f[1:]])
+        width = max(map(len, leads))
+        cache["arrow"] = {
+            "vouched": np.array([p is not None for p in plans]),
+            "rows": rows,
+            "keep": keep,
+            "arity": np.array([len(lead) for lead in leads]),
+            "cjk": np.array([strips_cjk(tag, app) for tag in TAGS for app in _APPS]),
+            "width": width,
+            "leads": pa.array([x for lead in leads for x in lead + [""] * (width - len(lead))]),
+        }
+    return cache["arrow"]
 
 
-def _extract_banded(p, masks):
-    """extract_from_bytes for a well-formed payload whose masks are pure
-    band selection: each band is decoded at most once per image, and the
-    masks are tried against their kept band windows in the same order,
-    decoding the same bands in the same order (so a corrupt text band
-    raises on the same mask try). Returns _FALLBACK for anything else."""
-    if not isinstance(p, bytes) or len(p) % _ROW_BYTES or len(p) < HEADER_BANDS * _BAND_BYTES:
-        return _FALLBACK  # decode_image/read_header decide (raise)
-    if (p[0], p[1]) != MAGIC or p[2] != VERSION or p[3] >= len(TAGS):
-        return _FALLBACK
-    n_blocks = p[5]
-    if len(p) < (HEADER_BANDS + n_blocks) * _BAND_BYTES:
-        return _FALLBACK  # too few bands for the header's block count
-    tag = TAGS[p[3]]
-    app = "tiktok" if p[4] == 1 else "xhs"
-    plan = _band_plan(masks, (app, HW_VALUES[p[6] % len(HW_VALUES)], tag))
-    if plan is None:
-        return _FALLBACK
-    fields = TAG_FIELDS[tag]
+def _binary_view(arr: pa.Array):
+    """(starts, lengths, data, valid) of a binary Arrow array as numpy
+    views over its buffers."""
+    _, offsets, data = arr.buffers()
+    dtype = np.dtype(np.int64 if pa.types.is_large_binary(arr.type) else np.int32)
+    o = np.frombuffer(offsets, dtype, len(arr) + 1, arr.offset * dtype.itemsize).astype(np.int64)
+    data = np.zeros(0, np.uint8) if data is None else np.frombuffer(data, np.uint8)
+    return o[:-1], np.diff(o), data, arr.is_valid().to_numpy(zero_copy_only=False)
+
+
+def _gather(data: np.ndarray, starts: np.ndarray, lengths: np.ndarray) -> pa.Array:
+    """The byte ranges [starts, starts + lengths) of ``data`` as one binary
+    array."""
+    ends = np.cumsum(lengths)
+    pos = np.repeat(starts - (ends - lengths), lengths) + np.arange(lengths.sum())
+    offsets = np.concatenate([[0], ends]).astype(np.int32)
+    return pa.Array.from_buffers(
+        pa.binary(), len(starts), [None, pa.py_buffer(offsets), pa.py_buffer(data[pos])]
+    )
+
+
+def _is_utf8(b: bytes) -> bool:
+    try:
+        b.decode("utf-8")
+    except UnicodeDecodeError:
+        return False
+    return True
+
+
+def _normalized(text: pa.Array, cjk: np.ndarray, tiktok: np.ndarray) -> pa.Array:
+    """semantics.normalize_ocr_text per row: the CJK strip where ``cjk``,
+    then the tiktok replace chain where ``tiktok``, else the xhs one."""
+    for where, app in ((cjk, None), (~tiktok, "xhs"), (tiktok, "tiktok")):
+        if where.any():
+            mask = pa.array(where)
+            sub = text.filter(mask)
+            if app is None:
+                sub = pc.replace_substring_regex(sub, CJK_PATTERN, "")
+            else:
+                for old, new in REPLACE_STEPS[app]:
+                    sub = pc.replace_substring(sub, old, new)
+            text = pc.replace_with_mask(text, mask, sub)
+    return text
+
+
+def extract_batch(payloads: pa.Array, masks) -> tuple[pa.Array, pa.Array]:
+    """The OCR stage's batch decoder over an Arrow binary column: ``(text,
+    reason)`` string arrays, per payload equal to extract_from_bytes —
+    reason CORRUPT_PAYLOAD when it raises (bad magic, wrong length,
+    mangled text bytes), ALL_MASKS_FAILED when every mask fails the gates,
+    else NULL.
+
+    The whole batch is decoded at once: header bytes, band markers and
+    band text slices are numpy gathers over the column's buffers, the
+    normalization chain runs as pc.replace_substring steps, the arity
+    gate is a per-image count of non-empty visible texts, the chained
+    reading order a stable lexsort plus a cumsum of ROW_GAP row breaks,
+    and the span string one binary_join. Payloads it cannot vouch for
+    (NULL, bad length, magic, version or tag, no blocks, too few bands, a
+    mask that is not pure band selection, invalid UTF-8 in a band) take
+    extract_from_bytes one by one."""
+    n = len(payloads)
+    if not n:
+        return pa.nulls(0, pa.string()), pa.nulls(0, pa.string())
+    tb = _arrow_tables(masks)
+    starts, lengths, data, valid = _binary_view(payloads)
+    fast = np.zeros(n, dtype=bool)
+    c = np.flatnonzero(
+        valid & (lengths % _ROW_BYTES == 0) & (lengths >= HEADER_BANDS * _BAND_BYTES)
+    )
+    h = data[starts[c, None] + np.arange(7)].astype(np.int64)  # header bytes 0-6
+    n_blocks = h[:, 5]
+    ta = np.minimum(h[:, 3], len(TAGS) - 1) * 2 + (h[:, 4] == 1)
+    key = ta * len(HW_VALUES) + h[:, 6] % len(HW_VALUES)
+    fast[c] = (
+        (h[:, 0] == MAGIC[0]) & (h[:, 1] == MAGIC[1]) & (h[:, 2] == VERSION)
+        & (h[:, 3] < len(TAGS)) & (n_blocks > 0)
+        & (lengths[c] >= (HEADER_BANDS + n_blocks) * _BAND_BYTES)
+        & tb["vouched"][key]
+    )
+
+    # one element per band that carries MARKER, in (image, region) order;
+    # regions no mask keeps are never decoded
+    nb = np.where(fast[c], np.minimum(n_blocks, tb["keep"].shape[2]), 0)
+    img = np.repeat(np.arange(len(c)), nb)
+    region = np.arange(len(img)) - np.repeat(np.cumsum(nb) - nb, nb)
+    band = starts[c][img] + (HEADER_BANDS + region) * _BAND_BYTES
+    marked = data[band] == MARKER
+    img, region, band = img[marked], region[marked], band[marked]
+    raw = _gather(
+        data, band + _META_LEN, np.minimum(data[band + 9], _BAND_BYTES - _META_LEN).astype(np.int64)
+    )
+    try:
+        text = raw.cast(pa.string())
+    except pa.ArrowInvalid:  # a mangled band: its image goes one by one
+        bad = np.zeros(len(c), dtype=bool)
+        bad[img[[not _is_utf8(b) for b in raw.to_pylist()]]] = True
+        fast[c[bad]] = False
+        kept = ~bad[img]
+        img, region, band = img[kept], region[kept], band[kept]
+        text = raw.filter(pa.array(kept)).cast(pa.string())
+
+    text = _normalized(text, tb["cjk"][ta][img], (ta % 2 == 1)[img])
+    nonempty = pc.not_equal(text, "").to_numpy(zero_copy_only=False)
+
+    # arity gate: the first applicable mask whose kept regions hold exactly
+    # arity non-empty texts wins
+    shown = np.zeros((len(c), tb["keep"].shape[2]), dtype=bool)
+    shown[img[nonempty], region[nonempty]] = True
+    counts = (tb["keep"][key] & shown[:, None, :]).sum(axis=2)
     content_rows = (HEADER_BANDS + n_blocks) * BH
-    decoded: dict = {}  # region -> _band_key(...) | None
-    for mask_rows, regions in plan:
-        if mask_rows > content_rows:
-            continue  # size guard, as in extract_from_bytes
-        visible = []
-        for r in regions:
-            if r not in decoded:
-                decoded[r] = _band_key(p, r, tag, app)
-            if decoded[r] is not None:
-                visible.append(decoded[r])
-        texts = [t for t in order_rows(visible) if t]
-        span = _gated_span(texts, tag, app, fields)
-        if span is not None:
-            return span
-    return None
+    passed = (tb["rows"][key] <= content_rows[:, None]) & (counts == tb["arity"][ta][:, None])
+    won = passed.any(axis=1) & fast[c]
+    mask_j = passed.argmax(axis=1)
+
+    # the winning mask's visible bands in reading order (order_rows): a
+    # stable sort by (y, x) center, a row break where y moves >= ROW_GAP,
+    # then a stable sort by x within each row
+    sel = won[img] & tb["keep"][key[img], mask_j[img], region]
+    img, band, text, nonempty = img[sel], band[sel], text.filter(pa.array(sel)), nonempty[sel]
+    x, x_hi, y, y_hi, w, hgt = (data[band + k].astype(np.int64) for k in range(1, 7))
+    yc = (4 * (y | y_hi << 8) + 2 * hgt) / 4.0  # reading_order's box-corner sums, exact
+    xc = (4 * (x | x_hi << 8) + 2 * w) / 4.0
+    by_yx = np.lexsort((xc, yc, img))
+    first = np.ones(len(by_yx), dtype=bool)
+    first[1:] = (img[by_yx][1:] != img[by_yx][:-1]) | (np.abs(np.diff(yc[by_yx])) >= ROW_GAP)
+    order = by_yx[np.lexsort((xc[by_yx], np.cumsum(first)))]
+    order = order[nonempty[order]]
+
+    # span string: lead piece + text per position, one binary_join per image
+    per_img = np.bincount(img[order], minlength=len(c))[won]
+    pos = np.arange(len(order)) - np.repeat(np.cumsum(per_img) - per_img, per_img)
+    pieces = pc.binary_join_element_wise(
+        tb["leads"].take(ta[img[order]] * tb["width"] + pos), text.take(order), ""
+    )
+    spans = pc.binary_join(
+        pa.ListArray.from_arrays(pa.array(np.concatenate([[0], np.cumsum(per_img)]), pa.int32()), pieces),
+        "",
+    )
+
+    out_text = np.full(n, None, dtype=object)
+    out_reason = np.full(n, None, dtype=object)
+    out_text[c[won]] = spans.to_pylist()
+    out_reason[c[fast[c] & ~won]] = ALL_MASKS_FAILED
+    for i in np.flatnonzero(~fast):
+        out_text[i], out_reason[i] = _per_payload(payloads[i].as_py(), masks)
+    return pa.array(out_text, pa.string()), pa.array(out_reason, pa.string())
 
 
-def extract_batch(payloads, masks) -> list[tuple[str | None, str | None]]:
-    """The OCR stage's batch decoder: ``(text, reason)`` per payload, equal
-    to extract_from_bytes per payload — reason CORRUPT_PAYLOAD when it
-    raises (bad magic, wrong length, mangled text bytes), ALL_MASKS_FAILED
-    when every mask fails the gates, else None. Payloads the banded
-    decoder cannot vouch for (bad length, magic, version or tag, too few
-    bands, a fractional or non-band-uniform mask) take extract_from_bytes
-    unchanged."""
-    out = []
-    for p in payloads:
-        try:
-            txt = _extract_banded(p, masks)
-            if txt is _FALLBACK:
-                txt = extract_from_bytes(p, masks)
-        except Exception:
-            # F10 dead letter, NOT a task failure — one bad image at
-            # 10^12 docs must never abort the wave (the reference logs and
-            # continues, core/run.py:640-642)
-            out.append((None, CORRUPT_PAYLOAD))
-            continue
-        out.append((txt, None if txt is not None else ALL_MASKS_FAILED))
-    return out
+def _per_payload(p, masks) -> tuple[str | None, str | None]:
+    """extract_from_bytes as (text, reason) for one payload."""
+    try:
+        txt = extract_from_bytes(p, masks)
+    except Exception:
+        # F10 dead letter, NOT a task failure — one bad image at
+        # 10^12 docs must never abort the wave (the reference logs and
+        # continues, core/run.py:640-642)
+        return None, CORRUPT_PAYLOAD
+    return txt, (None if txt is not None else ALL_MASKS_FAILED)

@@ -185,12 +185,12 @@ def reading_order(blocks: list[dict]) -> list[dict]:
     Same observable behavior as the reference's paddle-position sort:
     pre-sort by (y_center, x_center); then a single pass where a block
     joins the current visual row iff |y_center - previous block's
-    y_center| < 20 (the comparison anchor is the PREVIOUS block, not the
+    y_center| < ROW_GAP (the comparison anchor is the PREVIOUS block, not the
     row start — order-dependent, so this cannot be a pure sort key);
     each completed row is re-sorted by x_center.
     """
     # centers computed ONCE per block; the explicit 4-term adds keep
-    # sum()'s left-fold float order (raw_image's banded decoder derives
+    # sum()'s left-fold float order (raw_image's Arrow decoder derives
     # the same centers straight from the band bytes)
     keyed = []
     for b in blocks:
@@ -201,19 +201,22 @@ def reading_order(blocks: list[dict]) -> list[dict]:
 
 _YX = itemgetter(0, 1)
 _X = itemgetter(1)
+ROW_GAP = 20  # px: a block starts a new visual row at |dy| >= ROW_GAP
 
 
 def order_rows(keyed: list[tuple]) -> list:
     """The chained row grouping behind reading_order over ``(y_center,
     x_center, item)`` triples: a stable sort by (y, x), then a triple joins
-    the current row iff |y - previous triple's y| < 20, and each row is
-    re-sorted (stably) by x. Returns the items; sorts ``keyed`` in place."""
+    the current row iff |y - previous triple's y| < ROW_GAP, and each row is
+    re-sorted (stably) by x. Returns the items; sorts ``keyed`` in place.
+    raw_image's Arrow decoder runs the same rule as a lexsort over a
+    whole batch, with the same ROW_GAP."""
     keyed.sort(key=_YX)
     out: list = []
     row: list[tuple] = []
     prev_y: float | None = None
     for t in keyed:
-        if not (prev_y is None or abs(t[0] - prev_y) < 20):
+        if not (prev_y is None or abs(t[0] - prev_y) < ROW_GAP):
             row.sort(key=_X)
             out += [r[2] for r in row]
             row = []
@@ -257,7 +260,20 @@ def reading_order_anchor(blocks: list[dict], threshold: float = 5.0) -> list[dic
 # Normalization chain (core/run.py:468-476 xhs; :622-627 tiktok)
 # ---------------------------------------------------------------------------
 
-_CJK_RE = re.compile(r"[一-鿿]+")
+# The two replace chains, in order, and the CJK strip that runs before the
+# xhs chain (except on note_traffic_analysis tags). normalize_ocr_text and
+# raw_image's Arrow decoder (pc.replace_substring steps) both read these.
+CJK_PATTERN = "[\u4e00-\u9fff]+"
+REPLACE_STEPS = {
+    "xhs": (("秒", ""), (" ", ""), ("o", "0"), ("<b>", ""), ("</b>", "")),
+    "tiktok": (("秒", ""), ("s", ""), (" ", ""), ("o", "0"), ("<b>", ""), ("</b>", "")),
+}
+_CJK_RE = re.compile(CJK_PATTERN)
+
+
+def strips_cjk(tag: str, app: str) -> bool:
+    """Whether normalization strips CJK runs for this (tag, app)."""
+    return app != "tiktok" and not tag.startswith(TRAFFIC_PREFIX)
 
 
 def normalize_ocr_text(text: str, tag: str, app: str) -> str:
@@ -266,24 +282,11 @@ def normalize_ocr_text(text: str, tag: str, app: str) -> str:
       note_traffic_analysis, then 秒 / space / o->0 / <b> / </b>;
     - tiktok (core/run.py:622-627): NO CJK strip, chain is
       秒 / s / space / o->0 / <b> / </b> (s removed before o->0)."""
-    if app == "tiktok":
-        return (
-            text.replace("秒", "")
-            .replace("s", "")
-            .replace(" ", "")
-            .replace("o", "0")
-            .replace("<b>", "")
-            .replace("</b>", "")
-        )
-    if not tag.startswith(TRAFFIC_PREFIX):
+    if strips_cjk(tag, app):
         text = _CJK_RE.sub("", text)
-    return (
-        text.replace("秒", "")
-        .replace(" ", "")
-        .replace("o", "0")
-        .replace("<b>", "")
-        .replace("</b>", "")
-    )
+    for old, new in REPLACE_STEPS["tiktok" if app == "tiktok" else "xhs"]:
+        text = text.replace(old, new)
+    return text
 
 
 def convert_chinese_number(text: str) -> str:

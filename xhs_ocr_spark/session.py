@@ -26,7 +26,7 @@ def spread(df: DataFrame, *cols) -> DataFrame:
     hashing on ``cols`` (round-robin without them). Raw scans of the
     single-file testdata parquet are one partition; every operator that
     derives heavily per row spreads through here first. The size-aware
-    span spread of the extraction pipeline (``_spread_flat``) is the one
+    chunk spread of the extraction pipeline (``_spread_flat``) is the one
     exchange sized otherwise."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism * 2, *cols)
 
