@@ -608,12 +608,13 @@ def main() -> None:
     # expansion runs inside the component labels' eager checkpoint jobs.)
     from xhs_ocr_spark.plans.corpus_pipeline import (
         corpus_funnel as _cf,
+        corpus_stages as _cs,
         doc_text_from_spans as _dts,
     )
 
     audit(
         "q48_corpus_pipeline_lazy",
-        _cf(_dts(Q.queries()["q30_extract_flagship"](spark, SF)), stage_checkpoints=False),
+        _cf(_cs(_dts(Q.queries()["q30_extract_flagship"](spark, SF)), stage_checkpoints=False)),
         [
             ("no parquet scan above the base checkpoint", r"(?m)^\(\d+\) Scan parquet", False),
             ("no python anywhere", r"EvalPython|MapInPandas|MapInArrow", False),

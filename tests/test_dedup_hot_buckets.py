@@ -90,20 +90,17 @@ def test_ngram_large_posting_under_max_df(spark):
     assert got == [(200, n * (n - 1) // 2)]
 
 
-def test_ngram_max_df_drop_is_audited(spark, mixed_corpus):
+def test_ngram_max_df_drop_is_audited(spark, mixed_corpus, monkeypatch):
     # the families collide in LSH bands and pair up under the default
     # max_df, so the drop below is not vacuous
     assert DF.lsh_candidate_pairs(mixed_corpus, "id", "text").count() > 0
     assert DF.ngram_jaccard_pairs(mixed_corpus, "id", "text", threshold=0.3).count() > 0
     # every family shingle has df=5; max_df=4 drops them all -> no pairs,
     # and the audit query reports the drop count (not silent).
-    out = DF.ngram_jaccard_pairs(
-        mixed_corpus, "id", "text", threshold=0.3, max_df=4
-    )
+    monkeypatch.setattr(DF, "NGRAM_MAX_DF", 4)
+    out = DF.ngram_jaccard_pairs(mixed_corpus, "id", "text", threshold=0.3)
     assert out.count() == 0
-    stats = DF.ngram_df_drop_stats(
-        mixed_corpus, "id", "text", max_df=4
-    ).collect()[0]
+    stats = DF.ngram_df_drop_stats(mixed_corpus, "id", "text").collect()[0]
     assert stats["dropped_postings"] > 0
     assert stats["max_posting"] == 40  # "shares almost all..." spans all 8 families x 5 variants
     assert stats["total_postings"] >= stats["dropped_postings"]

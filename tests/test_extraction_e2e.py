@@ -86,13 +86,16 @@ def test_chunk_boundaries_match_oracle(spark):
     """Documents around the CHUNK_SPANS boundary, through extract_spans,
     the flat form and the dead letters, against oracle.extract_document:
     K-1, K, K+1 and 2K+1 spans, offsets out of order across a chunk
-    boundary, duplicate offsets, empty and NULL span arrays, and a
-    document whose every span drops. Ties on a duplicate offset break by
-    (kind, text, media_ref), as sort_array over the span struct does."""
+    boundary, duplicate offsets (which keep input order, as the oracle's
+    stable sort does), a truncated payload (a corrupt_payload dead
+    letter), empty and NULL span arrays, and a document whose every span
+    drops."""
     K = CHUNK_SPANS
     rows = [(f"n{n}", [_boundary_span(f"n{n}", i, i) for i in range(n)]) for n in (K - 1, K, K + 1, 2 * K + 1)]
     rows.append(("shuffled", [_boundary_span("shuffled", i, (7 * i + 3) % (K + 9)) for i in range(K + 9)]))
-    rows.append(("dups", [_boundary_span("dups", i, i // 3) for i in range(K + 5)]))
+    dups = [_boundary_span("dups", i, i // 3) for i in range(K + 5)]
+    dups[4]["media_bytes"] = dups[4]["media_bytes"][:-3]
+    rows.append(("dups", dups))
     failing = [r for r in (f"mem://drop/{i}" for i in range(200)) if S.extract_media_span(r) is None]
     rows.append(("all_drop", [
         {"kind": "media", "text": "", "media_ref": ref, "offset": j, "media_bytes": render_media_image(ref)}
@@ -107,13 +110,15 @@ def test_chunk_boundaries_match_oracle(spark):
     exp_dead = []
     for doc_id, spans in rows:
         out = oracle.extract_document(doc_id, spans or [])
-        exp[doc_id] = sorted(out, key=lambda t: (t[3], t[0], t[1], t[2]))
+        exp[doc_id] = out
         kept = {(t[2], t[3]) for t in out if t[0] == "media"}
         exp_dead += [
-            (doc_id, s["media_ref"], s["offset"], "all_masks_failed")
+            (doc_id, s["media_ref"], s["offset"],
+             "corrupt_payload" if s is dups[4] else "all_masks_failed")
             for s in spans or [] if s["kind"] == "media" and (s["media_ref"], s["offset"]) not in kept
         ]
     assert exp["all_drop"] == [] and exp["dups"] and exp_dead
+    assert ("dups", dups[4]["media_ref"], 1, "corrupt_payload") in exp_dead
 
     got = {
         r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in r["spans_out"]]
@@ -124,7 +129,7 @@ def test_chunk_boundaries_match_oracle(spark):
     flat = {}
     for r in ok.collect():
         flat.setdefault(r["doc_id"], []).append((r["kind"], r["text"], r["media_ref"], r["order"]))
-    assert {d: sorted(v, key=lambda t: (t[3], t[0], t[1], t[2])) for d, v in flat.items()} == got
+    assert {d: sorted(v) for d, v in flat.items()} == {d: sorted(v) for d, v in got.items()}
     assert "all_drop" not in flat
     assert sorted(tuple(r) for r in dead.collect()) == sorted(exp_dead)
     assert _spread_flat(docs, None).count() == sum(-(-len(s or []) // K) for _, s in rows)

@@ -26,7 +26,7 @@ TEXTS = (
 def _jvm_band_keys(text_col, bands: int = DF.DEFAULT_BANDS, k: int = DF.DEFAULT_HASHES):
     """Band b = md5(b || '#' || minhashes b*r+1..b*r+r joined by ','),
     composed in the JVM over minhash_signature (the DuckDB twin's form)."""
-    sig = DF.minhash_signature(text_col, k)
+    sig = DF.minhash_signature(text_col)
     r = k // bands
     return F.array(
         *[

@@ -72,7 +72,7 @@ def test_mask_size_guard():
 
 
 def test_mask_library_dim_table(spark):
-    rows = RI.mask_library(RI.HW_VALUES)
+    rows = RI.mask_library()
     assert all(
         set(r) == {"app", "hw", "tag", "mask_order", "mask_bytes"} for r in rows
     )
@@ -231,7 +231,7 @@ def test_hw_dimension_lookup_is_real():
     assert set(hws.values()) == set(RI.HW_VALUES)  # both exercised
 
     full = RI.masks_by_key(RI.mask_library())
-    aibox_only = RI.masks_by_key(RI.mask_library(hws=("aibox",)))
+    aibox_only = RI.masks_by_key([m for m in RI.mask_library() if m["hw"] == "aibox"])
     for r in refs:
         want = S.extract_media_span(r)
         payload = RI.render_media_image(r)

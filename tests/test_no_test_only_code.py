@@ -8,6 +8,11 @@ line) somewhere outside its own definition: in the package, ``scripts/``,
 with its reason; an entry that gains a caller or stops existing fails
 too, so the list cannot go stale.
 
+Every defaulted parameter of those functions must likewise be set (by
+keyword or by position) by a call outside ``tests/``: an option that only
+ever holds its default is a module constant. The exceptions are listed
+in OPTIONS_ALLOWED, which is kept current the same way.
+
 Pure AST work: no Spark session.
 """
 
@@ -34,6 +39,29 @@ ALLOWED = {
     "extraction_stream": "streaming surface: the one incremental extraction writer",
     "streaming_corpus_funnel": "streaming surface: the corpus funnel as a stream",
     "generate_corpus": "synthetic docs table the e2e tests and the verify recipe run on",
+}
+
+# (function, parameter) -> why a default nobody outside tests/ overrides
+# stays a parameter
+_COLUMN = "column-name default of a public operator"
+_SURFACE = "library surface with no in-repo driver yet (ROADMAP item 7)"
+OPTIONS_ALLOWED = {
+    ("cosine_topk", "id_col"): _COLUMN,
+    ("cosine_topk", "vec_col"): _COLUMN,
+    ("fit_centroids_spark", "id_col"): _COLUMN,
+    ("fit_centroids_spark", "vec_col"): _COLUMN,
+    ("ivf_topk_kmeans", "id_col"): _COLUMN,
+    ("ivf_topk_kmeans", "vec_col"): _COLUMN,
+    ("lsh_near_neighbors", "id_col"): _COLUMN,
+    ("lsh_near_neighbors", "vec_col"): _COLUMN,
+    ("decontam_flags_join", "eval_text_col"): _COLUMN,
+    ("apply_layout", "blocks_col"): _COLUMN,
+    ("reading_order_anchor", "threshold"): "reference spec for the reading-order parity tests",
+    ("neardup_components", "checkpoint_dir"): "deployment path: reliable checkpoints on HDFS/S3",
+    ("package_zip", "dest_dir"): "deployment path, set by the Python heredoc in build_pyfiles_zip.sh",
+    ("write_docs_table", "n_buckets"): _SURFACE,
+    ("extraction_stream", "dedup_watermark"): _SURFACE,
+    ("generate_corpus", "partitions"): _SURFACE,
 }
 
 
@@ -100,3 +128,69 @@ def test_allowlist_is_current():
     assert not gone, f"allowlisted names that no longer exist: {gone}"
     called = sorted(set(ALLOWED) - _uncalled())
     assert not called, f"allowlisted names that now have a caller: {called}"
+
+
+def _options() -> dict[str, list[dict[str, int | None]]]:
+    """name -> per definition, {defaulted parameter: its position, or
+    None for a keyword-only one} of public top-level functions in the
+    package."""
+    out: dict[str, list[dict[str, int | None]]] = {}
+    for f in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not node.name.startswith("_"):
+                a = node.args
+                pos = [p.arg for p in a.posonlyargs + a.args]
+                first = len(pos) - len(a.defaults)
+                opts: dict[str, int | None] = {p: i for i, p in enumerate(pos) if i >= first}
+                opts.update({p.arg: None for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
+                out.setdefault(node.name, []).append(opts)
+    return out
+
+
+def _set_arguments() -> dict[str, set[str | int]]:
+    """name -> the keywords and positions that calls outside tests/ pass
+    to a function of that name (import aliases resolved)."""
+    out: dict[str, set[str | int]] = {}
+    for f in _scope_files():
+        tree = ast.parse(f.read_text())
+        alias = {
+            a.asname: a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            for a in node.names
+            if a.asname
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+            got = out.setdefault(alias.get(name, name), set())
+            got.update(range(len(node.args)))
+            got.update(k.arg for k in node.keywords if k.arg)
+    return out
+
+
+def _unset_options() -> set[tuple[str, str]]:
+    passed = _set_arguments()
+    return {
+        (name, p)
+        for name, sigs in _options().items()
+        for opts in sigs
+        for p, i in opts.items()
+        if not {p, i} & passed.get(name, set())
+    }
+
+
+def test_every_option_is_set_outside_tests():
+    unset = _unset_options()
+    bad = sorted(unset - set(OPTIONS_ALLOWED))
+    assert not bad, (
+        "defaulted parameters that no call outside tests/ sets (make each a "
+        f"module constant, or allowlist it with a reason): {bad}"
+    )
+    options = {(name, p) for name, sigs in _options().items() for opts in sigs for p in opts}
+    gone = sorted(set(OPTIONS_ALLOWED) - options)
+    assert not gone, f"allowlisted options that no longer exist: {gone}"
+    now_set = sorted(set(OPTIONS_ALLOWED) - unset)
+    assert not now_set, f"allowlisted options that a call now sets: {now_set}"

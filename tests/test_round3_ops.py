@@ -68,18 +68,19 @@ def test_lsh_near_neighbors_no_bucket_join(spark, small_embeddings):
         assert "vec" not in m.group(1), f"row-level vector join: {m.group(0)}"
 
 
-def test_lsh_near_neighbors_pairs_invariant_to_n_shards(spark, small_embeddings):
+def test_lsh_near_neighbors_pairs_invariant_to_n_shards(spark, small_embeddings, monkeypatch):
     """n_shards is a memory/placement knob only: with one shard every
     bucket verifies through the same-shard upper triangle, with 3 or 16
     mostly through the cross-shard min/max emission, and the verified
     pair set must be the same. min_cos=0 keeps every same-bucket pair
     whose vectors point the same way, not just the planted clusters."""
+    from xhs_ocr_spark.operators import dedup_fuzzy as DF
+
     def pairs(n_shards):
+        monkeypatch.setattr(DF, "DEFAULT_SHARDS", n_shards)
         return sorted(
             (r["id_a"], r["id_b"])
-            for r in SS.lsh_near_neighbors(
-                small_embeddings, dim=8, n_planes=4, min_cos=0.0, n_shards=n_shards
-            ).collect()
+            for r in SS.lsh_near_neighbors(small_embeddings, dim=8, n_planes=4, min_cos=0.0).collect()
         )
 
     base = pairs(1)

@@ -91,7 +91,7 @@ def _bucket_rows(spark, sizes):
     return spark.createDataFrame(rows)
 
 
-def test_sharded_pairs_shard_invariance(spark):
+def test_sharded_pairs_shard_invariance(spark, monkeypatch):
     """The pair set is invariant to n_shards — a pure memory/placement
     knob (round-3 verdict item 4)."""
     rows = _bucket_rows(spark, [1, 5, 40, 200])
@@ -104,15 +104,12 @@ def test_sharded_pairs_shard_invariance(spark):
         ids = [f"{b:02d}_{i:06d}" for i in range(n)]
         exp.extend(itertools.combinations(sorted(ids), 2))
     assert baseline == sorted(exp)
-    for kw in (
-        {"n_shards": 1},
-        {"n_shards": 3},
-        {"n_shards": 64},
-    ):
-        assert _pairs(DF.sharded_bucket_pairs(rows, ["band"], **kw)) == baseline, kw
+    for n_shards in (1, 3, 64):
+        monkeypatch.setattr(DF, "DEFAULT_SHARDS", n_shards)
+        assert _pairs(DF.sharded_bucket_pairs(rows, ["band"])) == baseline, n_shards
 
 
-def test_degenerate_bucket_bounded_aggregate_rows(spark):
+def test_degenerate_bucket_bounded_aggregate_rows(spark, monkeypatch):
     """A single bucket far above shard_cap: (1) no aggregate row holds
     more than ~|bucket|/n_shards ids, (2) the expanded pair set is exact."""
     n, shards = 3000, 8
@@ -132,14 +129,15 @@ def test_degenerate_bucket_bounded_aggregate_rows(spark):
     max_row = g.agg(F.max("sz")).collect()[0][0]
     assert max_row <= 2 * n // shards
 
-    pairs = DF.sharded_bucket_pairs(rows, ["band"], n_shards=shards)
+    monkeypatch.setattr(DF, "DEFAULT_SHARDS", shards)
+    pairs = DF.sharded_bucket_pairs(rows, ["band"])
     assert pairs.count() == n * (n - 1) // 2
     # and spot-check exactness on the extremes
     sample = pairs.where(F.col("id_a") == "id000000")
     assert sample.count() == n - 1
 
 
-def test_degenerate_million_id_bucket_streams(spark):
+def test_degenerate_million_id_bucket_streams(spark, monkeypatch):
     """10^6 ids in ONE bucket: the quadratic pair set (5*10^11) is
     inherently unmaterializable — the guard's job is that the plan
     STREAMS with bounded per-row memory instead of building a multi-GB
@@ -150,7 +148,8 @@ def test_degenerate_million_id_bucket_streams(spark):
         F.lit("hot").alias("band"),
         F.format_string("id%09d", F.col("id")).alias("id"),
     )
-    out = DF.sharded_bucket_pairs(rows, ["band"], n_shards=64)
+    monkeypatch.setattr(DF, "DEFAULT_SHARDS", 64)
+    out = DF.sharded_bucket_pairs(rows, ["band"])
     assert out.limit(100_000).count() == 100_000
 
 
@@ -212,14 +211,15 @@ def test_neardup_components_chain_and_star(spark):
     }
 
 
-def test_neardup_components_long_chain_converges(spark):
-    """A 30-node path graph: worst case for min-label propagation —
-    must still converge (and early-stop) within max_iter."""
+def test_neardup_components_long_chain_converges(spark, monkeypatch):
+    """A 30-node path graph: worst case for min-label propagation (29
+    rounds) — the forced distributed loop runs until no label changes."""
     n = 30
     pairs = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i+1:02d}") for i in range(n - 1)],
         schema="id_a string, id_b string",
     )
-    out = DF.neardup_components(pairs, max_iter=40).collect()
+    monkeypatch.setattr(DF, "NEARDUP_DRIVER_MAX_EDGES", -1)  # distributed loop
+    out = DF.neardup_components(pairs).collect()
     assert len(out) == n
     assert {r["comp"] for r in out} == {"n00"}

@@ -149,7 +149,7 @@ def test_bucket_keys_backfill_on_legacy_table(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# neardup_components: reliable checkpoint + convergence guard (r4 item 4)
+# neardup_components: reliable checkpoint, forced loop (r4 item 4)
 # ---------------------------------------------------------------------------
 
 
@@ -184,23 +184,16 @@ def test_neardup_components_reliable_checkpoint_dir(spark, tmp_path, monkeypatch
     assert found, "reliable checkpoint wrote nothing under checkpoint_dir"
 
 
-def test_neardup_components_nonconvergence_raises(spark, monkeypatch):
-    """The ITERATIVE route: a component with diameter > max_iter must
-    fail loudly, not return silently-wrong labels (ADVICE r4). Since r7
-    small graphs take the exact driver union-find route (which cannot
-    diverge), the iterative path is forced by zeroing the edge-count
-    cap — its guard must still hold for the at-scale graphs that really
-    use it."""
-    import pytest
-
+def test_neardup_components_forced_loop_bigint_chain(spark, monkeypatch):
+    """The ITERATIVE route on a 13-node chain of bigint ids: since r7
+    small graphs take the exact driver union-find route, the iterative
+    path is forced by zeroing the edge-count cap; it runs until no label
+    changes and labels the whole chain with its minimum id."""
     monkeypatch.setattr(DF, "NEARDUP_DRIVER_MAX_EDGES", -1)
     chain = spark.createDataFrame(
         [Row(id_a=i, id_b=i + 1) for i in range(12)]
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        DF.neardup_components(chain, max_iter=3)
-    # and with enough rounds the same chain is one component labeled 0
-    ok = {(r["id"], r["comp"]) for r in DF.neardup_components(chain, max_iter=15).collect()}
+    ok = {(r["id"], r["comp"]) for r in DF.neardup_components(chain).collect()}
     assert ok == {(i, 0) for i in range(13)}
 
 
@@ -268,9 +261,9 @@ def test_corpus_pipeline_planted_stage_drops(spark):
 
 
 def test_corpus_pipeline_funnel_counts_monotone(spark):
-    from xhs_ocr_spark.plans.corpus_pipeline import STAGES, corpus_funnel
+    from xhs_ocr_spark.plans.corpus_pipeline import STAGES, corpus_funnel, corpus_stages
 
-    rows = corpus_funnel(_planted_corpus(spark)).collect()
+    rows = corpus_funnel(corpus_stages(_planted_corpus(spark))).collect()
     by_idx = {r["stage_idx"]: (r["stage"], r["n_docs"]) for r in rows}
     assert [by_idx[i][0] for i in range(len(STAGES))] == STAGES
     counts = [by_idx[i][1] for i in range(len(STAGES))]
@@ -399,12 +392,14 @@ def test_model_scoring_deterministic_and_vectorized(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_token_budget_exact_prefix(spark):
+def test_token_budget_exact_prefix(spark, monkeypatch):
+    from xhs_ocr_spark.operators import selection as SEL
     from xhs_ocr_spark.operators.selection import token_budget_select
 
     rows = [Row(id=i, score=(i % 3) * 100, tokens=10 + i) for i in range(30)]
     df = spark.createDataFrame(rows)
-    got = token_budget_select(df, "id", "score", "tokens", budget=150, n_shards=4)
+    monkeypatch.setattr(SEL, "BUDGET_SHARDS", 4)
+    got = token_budget_select(df, "id", "score", "tokens", budget=150)
     out = {r["id"]: r["cum_tokens"] for r in got.collect()}
 
     # independent truth: sort by (score desc, shard, id), prefix-sum

@@ -76,7 +76,7 @@ def test_union_find_matches_iterative_components(spark, monkeypatch):
     # components; propagation needs diameter rounds (union-find doesn't)
     slow = {
         (r["id"], r["comp"])
-        for r in DF.neardup_components(pairs, max_iter=120).collect()
+        for r in DF.neardup_components(pairs).collect()
     }
     assert fast == slow
     assert len(fast) > 0
@@ -107,17 +107,17 @@ def test_components_routes_agree_on_random_graphs(spark, graph):
 
     from xhs_ocr_spark.operators import dedup_fuzzy as DF
 
-    n, edges = graph
+    _, edges = graph
     pairs = spark.createDataFrame(edges, "id_a string, id_b string")
     driver = sorted(tuple(r) for r in DF.neardup_components(pairs).collect())
     with mock.patch.object(DF, "NEARDUP_DRIVER_MAX_EDGES", -1):
         dist = sorted(
-            tuple(r) for r in DF.neardup_components(pairs, max_iter=n).collect()
+            tuple(r) for r in DF.neardup_components(pairs).collect()
         )
     assert driver == dist
 
 
-def test_ngram_window_guard_matches_python_jaccard(spark):
+def test_ngram_window_guard_matches_python_jaccard(spark, monkeypatch):
     """q27's one df guard drops a planted hot shingle (df > max_df) and
     keeps the rest: the result equals a pure-Python Jaccard in which the
     intersection counts only shared distinct 3-grams with df <= max_df,
@@ -138,9 +138,8 @@ def test_ngram_window_guard_matches_python_jaccard(spark):
         extra = f"alpha{i % 4} beta{i % 4} gamma{i % 4} delta{i % 4}"
         rows.append((f"d{i:03d}", f"zz zz zz {extra}", "en"))
     docs = spark.createDataFrame(rows, "doc_id string, text string, lang string")
-    out = DF.ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=threshold, scope_col="lang", max_df=max_df
-    )
+    monkeypatch.setattr(DF, "NGRAM_MAX_DF", max_df)
+    out = DF.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=threshold, scope_col="lang")
     # the plan before execution: an executed AQE plan prints its initial
     # plan next to the final one, so every node would count twice
     plan = out._sc._jvm.PythonSQLUtils.explainString(

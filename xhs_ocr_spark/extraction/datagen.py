@@ -57,6 +57,7 @@ BOILER_VOCAB = (
 
 SKEW_EVERY = 53
 HEAVY_SPANS = 48
+CHUNK_WORDS = 7  # words per text span in corpus_from_documents
 
 
 def _h64(s: str) -> int:
@@ -130,9 +131,9 @@ def generate_corpus(spark: SparkSession, n_docs: int, partitions: int | None = N
     )
 
 
-def corpus_from_documents(documents: DataFrame, chunk_words: int = 7) -> DataFrame:
+def corpus_from_documents(documents: DataFrame) -> DataFrame:
     """Derive an interleaved corpus from the driver-provided ``documents``
-    parquet table (doc_id, text, ...): split each text into ``chunk_words``
+    parquet table (doc_id, text, ...): split each text into CHUNK_WORDS
     word chunks -> text spans; insert a deterministic media span every 3rd
     position. Pure DataFrame ops (no Python row loop) so Catalyst sees the
     whole derivation; used by ``entry()`` and the benchmarks.
@@ -153,13 +154,13 @@ def corpus_from_documents(documents: DataFrame, chunk_words: int = 7) -> DataFra
     d = spread(
         documents.select(F.col("doc_id").cast("string").alias("doc_id"), "text"), "doc_id"
     ).select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("words"))
-    n_chunks = (F.size("words") + F.lit(chunk_words - 1)) / F.lit(chunk_words)
+    n_chunks = (F.size("words") + F.lit(CHUNK_WORDS - 1)) / F.lit(CHUNK_WORDS)
     d = d.select(
         "doc_id",
         F.transform(
             F.sequence(F.lit(0), n_chunks.cast("int") - 1),
             lambda c: F.concat_ws(
-                " ", F.slice(F.col("words"), c * chunk_words + 1, chunk_words)
+                " ", F.slice(F.col("words"), c * CHUNK_WORDS + 1, CHUNK_WORDS)
             ),
         ).alias("chunks"),
     )

@@ -25,9 +25,11 @@ def extract_document(doc_id: str, spans: list[dict]) -> list[tuple[str, str, str
     """Reference extraction for one document.
 
     Returns ordered list of (kind, text, media_ref, order); order is the
-    original span offset; failed media spans (all masks exhausted),
-    boilerplate text spans and spans of any other (or NULL) kind are
-    dropped, everything else keeps its offset.
+    original span offset, and spans with equal offsets keep their input
+    order (a stable sort); failed media spans (all masks exhausted, or a
+    payload that cannot be decoded — the reference logs it and continues,
+    core/run.py:640-642), boilerplate text spans and spans of any other
+    (or NULL) kind are dropped, everything else keeps its offset.
 
     Media spans carrying a raw RGBA payload go through the BYTES path
     (mask composite + pixel decode, raw_image.extract_from_bytes) — the
@@ -41,7 +43,10 @@ def extract_document(doc_id: str, spans: list[dict]) -> list[tuple[str, str, str
             if payload:
                 from .raw_image import extract_from_bytes
 
-                txt = extract_from_bytes(bytes(payload), _masks())
+                try:
+                    txt = extract_from_bytes(bytes(payload), _masks())
+                except Exception:  # any decode failure, as raw_image._per_payload
+                    txt = None
             else:
                 txt = extract_media_span(s["media_ref"])
             if txt is not None:

@@ -27,9 +27,9 @@ Plan shape (designed for 100 TB / 1000 executors, tested on local[N]):
       → where(size(ok) > 0) (stops at the python barrier — Catalyst never
       │ pushes predicates below a python eval, so nothing re-executes)
       → groupBy(doc_id) + sort_array(flatten(collect_list(ok)))
-        [exchange #2] restores original span order by offset (O7);
-        arrays_zip over the sorted array's fields reorders them without a
-        lambda.
+        [exchange #2] restores original span order by (offset, position
+        in the span array) (O7); arrays_zip over the sorted array's
+        fields reorders them without a lambda.
 
 The flat output and the dead letters are a narrow inline of the chunk
 lists (split_extracted), with no shuffle.
@@ -86,13 +86,15 @@ OUT_SPAN_SCHEMA = T.ArrayType(
 CHUNK_SPANS = 64  # spans per chunk row at most (see _spread_flat)
 
 # The OCR stage's output, one row per chunk: the surviving spans, as
-# structs ordered (order, kind, text, media_ref) so sort_array restores
-# offset order, and the media dead letters with their failure cause — the
+# structs led by (order, pos) so sort_array restores offset order and
+# keeps input order among equal offsets, as the oracle's stable sort does
+# (pos = the span's index in its document's span array, unique per
+# document), and the media dead letters with their failure cause — the
 # reference logs mask exhaustion (core/run.py:499-501) and decode errors
 # (core/run.py:640-642) distinctly, so the triage table must too (ADVICE r2)
 _CHUNK_OUT = (
     "doc_id string, "
-    "ok array<struct<order:int, kind:string, text:string, media_ref:string>>, "
+    "ok array<struct<order:int, pos:int, kind:string, text:string, media_ref:string>>, "
     "dead array<struct<order:int, media_ref:string, reason:string>>"
 )
 
@@ -147,6 +149,10 @@ def _make_ocr_routed(masks_bc):
             spans = batch.column("spans")
             parent = pc.list_parent_indices(spans).to_numpy()
             flat = pc.list_flatten(spans)
+            # index in the document's span array: chunk start + index in chunk
+            lens = pc.list_value_length(spans).fill_null(0).to_numpy()
+            first = CHUNK_SPANS * batch.column("chunk").to_numpy() - (np.cumsum(lens) - lens)
+            pos = pa.array(first[parent] + np.arange(len(flat)), pa.int32())
             col = dict(zip((f.name for f in flat.type), flat.flatten()))
             kind, ref = col["kind"], col["media_ref"]
             text = classify_text_arrow(col["text"])
@@ -174,8 +180,8 @@ def _make_ocr_routed(masks_bc):
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("doc_id"),
-                    _lists(parent, ok, batch.num_rows, order=order, kind=kind, text=text,
-                           media_ref=ref),
+                    _lists(parent, ok, batch.num_rows, order=order, pos=pos, kind=kind,
+                           text=text, media_ref=ref),
                     _lists(parent, dead, batch.num_rows, order=order, media_ref=ref,
                            reason=reason),
                 ],
@@ -208,9 +214,10 @@ def explode_spans(docs: DataFrame) -> DataFrame:
 def reassemble(extracted: DataFrame) -> DataFrame:
     """O7: regroup a document's chunk rows (one shuffle) and restore span
     order by offset: the chunks' ok lists are concatenated and sorted as
-    (order, kind, text, media_ref) structs, whose fields are zipped back
-    in OUT_SPAN_SCHEMA order — arrays_zip is codegen'd, a transform
-    lambda is interpreted per span."""
+    (order, pos, kind, text, media_ref) structs (pos is unique per
+    document, so equal offsets keep input order), whose fields are
+    zipped back in OUT_SPAN_SCHEMA order — arrays_zip is codegen'd, a
+    transform lambda is interpreted per span."""
     tmp = F.sort_array(F.flatten(F.collect_list("ok"))).alias("tmp")
     names = [f.name for f in OUT_SPAN_SCHEMA.elementType.fields]
     return extracted.where(F.size("ok") > 0).groupBy("doc_id").agg(tmp).select(

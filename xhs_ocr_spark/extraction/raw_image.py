@@ -217,7 +217,7 @@ def render_mask(tag: str, mask_order: int) -> bytes:
     return mask.tobytes()
 
 
-def mask_library(hws: tuple[str, ...] = HW_VALUES) -> list[dict]:
+def mask_library() -> list[dict]:
     """The full mask dim table rows: (app, hw, tag, mask_order, mask_bytes).
 
     Reference analog: the mask/<app>/<hw>/<tag>/*.png directory tree,
@@ -229,7 +229,7 @@ def mask_library(hws: tuple[str, ...] = HW_VALUES) -> list[dict]:
     device-specific mask drop-in needs no code change."""
     rows = []
     for app in ("xhs", "tiktok"):
-        for hw in hws:
+        for hw in HW_VALUES:
             for tag in TAGS:
                 for order in range(N_MASKS):
                     rows.append(

@@ -25,6 +25,10 @@ from .textops import ordered_join, words
 
 log = logging.getLogger(__name__)
 
+# The MinHash/LSH shape is a data format, not an option: the streaming
+# funnel persists band keys in its band/ index and probes new batches
+# against them, and the DuckDB twins hard-code the same numbers. Every
+# function reads these at call time (a test monkeypatches the module).
 DEFAULT_SHINGLE = 3
 DEFAULT_HASHES = 8
 DEFAULT_BANDS = 4  # rows-per-band = DEFAULT_HASHES / DEFAULT_BANDS = 2
@@ -35,45 +39,37 @@ DEFAULT_BANDS = 4  # rows-per-band = DEFAULT_HASHES / DEFAULT_BANDS = 2
 # built one multi-GB collect_set row).
 DEFAULT_SHARDS = 16
 
+# The n-gram document-frequency cap: postings of more documents are
+# dropped before pairing (ngram_jaccard_pairs, audited by
+# ngram_df_drop_stats).
+NGRAM_MAX_DF = 50_000
 
-def shingles(text_col, n: int = DEFAULT_SHINGLE):
-    """Word n-gram shingles as an array<string> (space-joined)."""
+
+def shingles(text_col):
+    """Word DEFAULT_SHINGLE-gram shingles as an array<string> (space-joined)."""
+    n = DEFAULT_SHINGLE
     ws = words(text_col)
     idx = F.sequence(F.lit(1), F.greatest(F.size(ws) - (n - 1), F.lit(1)))
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(ws, i, n)))
 
 
-def hashed_shingles(text_col, k: int = DEFAULT_HASHES, n: int = DEFAULT_SHINGLE):
-    """array<string>: per shingle, the concatenation of ceil(k/4) md5
-    digests (md5('<g>|' || shingle) for g = 0..). Each 8-hex-char chunk is
-    one 32-bit hash function — k functions from k/4 digests; md5 dominates
-    signature cost, so this is the thing to compute exactly once."""
-    sh = shingles(text_col, n)
+def minhash_signature(text_col):
+    """array<string> of k = DEFAULT_HASHES minhashes (engine-portable;
+    DuckDB twin in queries.py). Each shingle is hashed once into the
+    concatenation of ceil(k/4) md5 digests (md5('<g>|' || shingle) for
+    g = 0..); each 8-hex-char chunk is one 32-bit hash function, so k
+    functions cost k/4 digests, and minhash i = min over shingles of hex
+    chunk [i*8+1, i*8+8]. LSH band keys do not compose on this: they come
+    from lsh_band_rows' one Arrow stage."""
+    k = DEFAULT_HASHES
     groups = (k + 3) // 4
-    return F.transform(
-        sh,
-        lambda s: F.concat(
-            *[F.md5(F.concat(F.lit(f"{g}|"), s)) for g in range(groups)]
-        ),
+    hs = F.transform(
+        shingles(text_col),
+        lambda s: F.concat(*[F.md5(F.concat(F.lit(f"{g}|"), s)) for g in range(groups)]),
     )
-
-
-def signature_from_hashed(hs_col, k: int = DEFAULT_HASHES):
-    """minhash i = min over shingles of hex chunk [i*8+1, i*8+8]."""
     return F.array(
-        [
-            F.array_min(F.transform(hs_col, lambda h: F.substring(h, i * 8 + 1, 8)))
-            for i in range(k)
-        ]
+        [F.array_min(F.transform(hs, lambda h: F.substring(h, i * 8 + 1, 8))) for i in range(k)]
     )
-
-
-def minhash_signature(text_col, k: int = DEFAULT_HASHES, n: int = DEFAULT_SHINGLE):
-    """array<string> of k minhashes (engine-portable; DuckDB twin in
-    queries.py). Equivalent to signature_from_hashed(hashed_shingles(...)).
-    LSH band keys do not compose on this: they come from lsh_band_rows'
-    one Arrow stage."""
-    return signature_from_hashed(hashed_shingles(text_col, k, n), k)
 
 
 def _after(ids, i):
@@ -95,16 +91,12 @@ def expand_bucket_pairs(buckets: DataFrame) -> DataFrame:
     )
 
 
-def shard_pairs(
-    rows: DataFrame,
-    key_cols: list[str],
-    items,
-    n_shards: int = DEFAULT_SHARDS,
-) -> DataFrame:
+def shard_pairs(rows: DataFrame, key_cols: list[str], items) -> DataFrame:
     """The one (key, shard) self-join: (key..., id, ...) rows ->
     (key..., _s1, _i1, _s2, _i2) rows, one per pair of shards s1 <= s2
     of the same key, where ``_i1``/``_i2`` are the ``items`` aggregate
-    over each shard's rows. shard = xxhash64(id) % n_shards is global
+    over each shard's rows. shard = xxhash64(id) % n_shards, with
+    n_shards = DEFAULT_SHARDS read at call time, is global
     per id, so no aggregate row ever holds more than
     O(|bucket| / n_shards) items (round-3 verdict item 4: the
     single-level groupBy(key) shape built one multi-GB row for a
@@ -122,7 +114,7 @@ def shard_pairs(
     Project node to every consumer's plan."""
     g = (
         rows.withColumn(
-            "_shard", F.pmod(F.xxhash64(F.col("id").cast("string")), F.lit(n_shards))
+            "_shard", F.pmod(F.xxhash64(F.col("id").cast("string")), F.lit(DEFAULT_SHARDS))
         )
         .groupBy(*key_cols, "_shard")
         .agg(items.alias("_items"))
@@ -134,11 +126,7 @@ def shard_pairs(
     return spread(g1.join(g2, on=key_cols).where(F.col("_s1") <= F.col("_s2")))
 
 
-def sharded_bucket_pairs(
-    rows: DataFrame,
-    key_cols: list[str],
-    n_shards: int = DEFAULT_SHARDS,
-) -> DataFrame:
+def sharded_bucket_pairs(rows: DataFrame, key_cols: list[str]) -> DataFrame:
     """(key..., id) rows -> (id_a < id_b) candidate pairs, with no
     aggregate row or task ever holding more than O(bucket / n_shards)
     ids — and measured FASTER than the single-level
@@ -159,9 +147,7 @@ def sharded_bucket_pairs(
     set is invariant to n_shards (tested).
     """
     return (
-        shard_pairs(
-            rows.select(*key_cols, "id"), key_cols, F.sort_array(F.collect_set("id")), n_shards
-        )
+        shard_pairs(rows.select(*key_cols, "id"), key_cols, F.sort_array(F.collect_set("id")))
         .select(F.posexplode("_i1").alias("_i", "_a"), "_i1", "_i2", "_s1", "_s2")
         .select(
             "_a",
@@ -178,14 +164,7 @@ def sharded_bucket_pairs(
     )
 
 
-def lsh_band_rows(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = DEFAULT_HASHES,
-    bands: int = DEFAULT_BANDS,
-    n: int = DEFAULT_SHINGLE,
-) -> DataFrame:
+def lsh_band_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, band) rows: every MinHash LSH band key of every document, the
     one band-key derivation in the engine. Band b of a document is
     md5(b || '#' || its minhashes b*r .. b*r+r-1 joined by ','), over the
@@ -206,9 +185,9 @@ def lsh_band_rows(
     columns, cheap to store at any scale next to re-deriving."""
     import pyarrow as pa
 
+    k, bands, n_shingle = DEFAULT_HASHES, DEFAULT_BANDS, DEFAULT_SHINGLE
     groups = (k + 3) // 4
     rows_per_band = k // bands
-    n_shingle = n
 
     def band_rows(batches):
         from hashlib import md5
@@ -260,14 +239,7 @@ def lsh_band_rows(
     )
 
 
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = DEFAULT_HASHES,
-    bands: int = DEFAULT_BANDS,
-    n: int = DEFAULT_SHINGLE,
-) -> DataFrame:
+def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) sharing >=1 LSH band:
     lsh_band_rows -> sharded_bucket_pairs (collect at (band, shard)
     granularity — no O(|bucket|) aggregate row, see its docstring) ->
@@ -275,9 +247,7 @@ def lsh_candidate_pairs(
     2.8s Arrow bands, pair sets identical). Shuffles on
     uniformly-distributed md5 band keys; no self-join of ROW-level
     data. The pair set is n_shards-invariant (tested)."""
-    return sharded_bucket_pairs(
-        lsh_band_rows(df, id_col, text_col, k, bands, n), ["band"]
-    ).distinct()
+    return sharded_bucket_pairs(lsh_band_rows(df, id_col, text_col), ["band"]).distinct()
 
 
 # neardup_components: edge-count ceiling for the exact driver-side
@@ -319,9 +289,7 @@ def _union_find_components(edges: list[tuple]) -> dict:
     return {x: comp_min[find(x)] for x in parent}
 
 
-def neardup_components(
-    pairs: DataFrame, max_iter: int = 25, checkpoint_dir: str | None = None
-) -> DataFrame:
+def neardup_components(pairs: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     """Connected components over near-duplicate pairs -> (id, comp) with
     comp = the minimum id in the component — the step that turns
     candidate PAIRS into dedup DECISIONS (keep the component
@@ -333,10 +301,12 @@ def neardup_components(
     exact union-find runs on the driver (bounded metadata, ~10 ms).
     Past the cap the graph stays distributed, so driver memory does not
     grow with it: iterative min-label propagation joins labels across
-    the persisted edges, takes the neighborhood minimum and early-stops
-    when no label changes (rounds = component diameter; near-dup
-    clusters are clique-ish). Both routes return identical labels
-    (property-tested).
+    the persisted edges, takes the neighborhood minimum and stops when
+    no label changes. Every round lowers some label until each node
+    holds its component's minimum, which takes at most the component's
+    diameter rounds (near-dup clusters are clique-ish), so the loop
+    always converges to the exact transitive closure. Both routes return
+    identical labels (property-tested).
 
     Labels are checkpointed every round: persist alone is NOT enough for
     iterative algorithms — it caches data but the LOGICAL PLAN still
@@ -346,12 +316,8 @@ def neardup_components(
     (HDFS/S3 on a real cluster) makes the loop use RELIABLE checkpoint()
     instead. It does not pick the route.
 
-    If max_iter rounds pass with labels still changing (component
-    diameter > max_iter — e.g. a long chain of pairwise near-dups), the
-    returned labels would be WRONG for that component, so this raises
-    rather than silently diverging from the exact transitive closure
-    (ADVICE r4); raise max_iter, or switch to large-star/small-star if
-    diameters ever bite in practice.
+    A long chain of pairwise near-dups costs one round per hop; switch
+    to large-star/small-star if diameters ever bite in practice.
 
     This operator is the engine's one genuinely non-single-SQL
     computation; the DuckDB oracle uses a recursive-CTE transitive
@@ -395,8 +361,8 @@ def neardup_components(
         .distinct()
         .select("id", F.col("id").alias("comp"))
     )
-    changed = 0
-    for _ in range(max_iter):
+    changed = 1
+    while changed:
         nb = (
             edges.join(
                 labels.select(
@@ -420,16 +386,7 @@ def neardup_components(
             )
         )
         changed = labels.where("changed").count()
-        if changed == 0:
-            break
     edges.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"neardup_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing) — a component's diameter "
-            "exceeds max_iter, so its labels would be wrong. Raise "
-            "max_iter (rounds needed = component diameter)."
-        )
     return labels.select("id", "comp")
 
 
@@ -518,7 +475,6 @@ def decontam_flags_join(
     text_col: str,
     eval_df: DataFrame,
     eval_text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
     threshold_x1000: int = 500,
 ) -> DataFrame:
     """Benchmark decontamination — flag documents whose n-gram overlap
@@ -532,10 +488,10 @@ def decontam_flags_join(
     Exact integer arithmetic ((hits * 1000) DIV total, like
     q42_repetition) so the DuckDB oracle matches bit-for-bit.
     Returns (id, n_shingles, n_eval_hits, contaminated 0/1)."""
-    ex = _shingle_index(df, id_col, text_col, n, None)
+    ex = _shingle_index(df, id_col, text_col, None)
     ev = (
         eval_df.select(
-            F.explode(F.array_distinct(shingles(F.col(eval_text_col), n))).alias("sh")
+            F.explode(F.array_distinct(shingles(F.col(eval_text_col)))).alias("sh")
         ).distinct()
     )
     hits = (
@@ -545,7 +501,7 @@ def decontam_flags_join(
     )
     sizes = df.select(
         F.col(id_col).alias("id"),
-        F.size(F.array_distinct(shingles(F.col(text_col), n)))
+        F.size(F.array_distinct(shingles(F.col(text_col))))
         .cast("long")
         .alias("n_shingles"),
     )
@@ -760,7 +716,7 @@ def substring_dedup_stats(
     )
 
 
-def _shingle_index(df, id_col, text_col, n, scope_col, hash_keys: bool = False):
+def _shingle_index(df, id_col, text_col, scope_col, hash_keys: bool = False):
     """(id[, scope], sh) rows: one per distinct shingle per document.
 
     ``hash_keys=True`` replaces the raw shingle string with
@@ -773,7 +729,7 @@ def _shingle_index(df, id_col, text_col, n, scope_col, hash_keys: bool = False):
     is ~n^2/2^65 — negligible even at corpus scale, and the q27 DuckDB
     oracle (string keys) checks the hashed output. Raw keys stay the
     portable form (DuckDB cannot reproduce Spark's xxhash64)."""
-    sh = F.explode(F.array_distinct(shingles(F.col("__text"), n)))
+    sh = F.explode(F.array_distinct(shingles(F.col("__text"))))
     return (
         df.select(
             F.col(id_col).alias("id"),
@@ -795,14 +751,9 @@ def _shingle_index(df, id_col, text_col, n, scope_col, hash_keys: bool = False):
 
 
 def ngram_df_drop_stats(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = DEFAULT_SHINGLE,
-    scope_col: str | None = None,
-    max_df: int = 50_000,
+    df: DataFrame, id_col: str, text_col: str, scope_col: str | None = None
 ) -> DataFrame:
-    """Audit companion to ngram_jaccard_pairs' max_df policy: ONE row
+    """Audit companion to ngram_jaccard_pairs' NGRAM_MAX_DF policy: ONE row
     (dropped_postings, max_posting, total_postings) over the same shingle
     inverted index. Run it alongside (or instead of df.observe, which AQE
     can prune — see ngram_jaccard_pairs) whenever drops must be surfaced;
@@ -811,7 +762,7 @@ def ngram_df_drop_stats(
     itself is immune to the degenerate-posting row problem (the
     (id, shingle) index rows are distinct by construction, so count(*)
     per shingle equals the posting size)."""
-    ex = _shingle_index(df, id_col, text_col, n, scope_col)
+    ex = _shingle_index(df, id_col, text_col, scope_col)
     group_keys = ["sh", "scope"] if scope_col else ["sh"]
     sizes = (
         ex.groupBy(*group_keys)
@@ -820,7 +771,7 @@ def ngram_df_drop_stats(
     )
     return sizes.agg(
         F.coalesce(
-            F.sum((F.col("sz") > max_df).cast("long")),
+            F.sum((F.col("sz") > NGRAM_MAX_DF).cast("long")),
             F.lit(0).cast("long"),
         ).alias("dropped_postings"),
         F.coalesce(F.max("sz"), F.lit(0)).cast("long").alias("max_posting"),
@@ -832,10 +783,8 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = DEFAULT_SHINGLE,
     threshold: float = 0.5,
     scope_col: str | None = None,
-    max_df: int = 50_000,
 ) -> DataFrame:
     """Jaccard similarity over distinct word n-grams, computed via an
     inverted index (explode -> df guard -> group per shingle ->
@@ -850,10 +799,10 @@ def ngram_jaccard_pairs(
 
     Hot-posting policy (shingle document frequency is Zipfian, so hot
     postings are the COMMON case at 100 TB — round-1 verdict item 4):
-    postings with |ids| > max_df are DROPPED before aggregation — a
-    shingle shared by >max_df documents carries no discriminative signal
+    postings with |ids| > NGRAM_MAX_DF are DROPPED before aggregation — a
+    shingle shared by more documents carries no discriminative signal
     and its pair set is quadratic garbage — so every collect_set row
-    holds at most max_df ids. Drops are never silent: the policy is
+    holds at most NGRAM_MAX_DF ids. Drops are never silent: the policy is
     logged at plan-build time and ngram_df_drop_stats() returns the
     audited counts as a one-row DataFrame (df.observe is NOT used: AQE's
     empty-relation propagation prunes the CollectMetrics node whenever
@@ -861,7 +810,7 @@ def ngram_jaccard_pairs(
     empty metrics row). Dropping postings can only LOWER a pair's
     intersection count, so the result under-reports jaccard for pairs
     whose overlap is exclusively ultra-common shingles; with no posting
-    above max_df the result is exact (the DuckDB oracle runs in that
+    above NGRAM_MAX_DF the result is exact (the DuckDB oracle runs in that
     regime).
 
     Returns (id_a, id_b, jacc_x1000) with jacc >= threshold."""
@@ -875,20 +824,20 @@ def ngram_jaccard_pairs(
     # repartition barrier so shingling runs once — 3.2s -> 5.9s (shuffling
     # materialized UnsafeArrayData rows costs more than recomputing the
     # shingles from text). Recompute-over-shared-exchange wins.
-    ex = _shingle_index(df, id_col, text_col, n, scope_col, hash_keys=True)
+    ex = _shingle_index(df, id_col, text_col, scope_col, hash_keys=True)
     sizes = ex.groupBy("id").agg(F.count("*").alias("sz"))
     group_keys = ["sh", "scope"] if scope_col else ["sh"]
     log.warning(
         "ngram_jaccard_pairs: postings with document frequency > %d are "
         "dropped; run ngram_df_drop_stats(...) for the audited count.",
-        max_df,
+        NGRAM_MAX_DF,
     )
     # Hot-posting guard (round-5 ADVICE high): a window count(*) over
     # the posting partition, filtered BEFORE the collect_set; its
     # (sh, scope) exchange is reused by the aggregate, so the guard costs
     # one in-exchange sort, and the external sort keeps it memory-safe at
     # any df. This is the only guard. A map-side df count + left-anti
-    # join of the df > max_df keys spares one task the hottest posting's
+    # join of the df > NGRAM_MAX_DF keys spares one task the hottest posting's
     # rows, but no workload has a posting with df > 10^6, and taking it
     # on every run measured slower (q27, sf0.1, 4 CPUs, 5 interleaved
     # runs per side: 3.78 -> 4.49 s); a window sum of bucket sizes over
@@ -896,7 +845,7 @@ def ngram_jaccard_pairs(
     # expand_bucket_pairs measured 4.05 -> 4.63 s.
     guarded = ex.withColumn(
         "_df", F.count(F.lit(1)).over(Window.partitionBy(*group_keys))
-    ).where(F.col("_df") <= max_df)
+    ).where(F.col("_df") <= NGRAM_MAX_DF)
     buckets = guarded.groupBy(*group_keys).agg(
         F.sort_array(F.collect_set("id")).alias("ids")
     )
@@ -922,9 +871,6 @@ def incremental_dedup_status(
     corpus_df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = DEFAULT_HASHES,
-    bands: int = DEFAULT_BANDS,
-    n: int = DEFAULT_SHINGLE,
 ) -> DataFrame:
     """Incremental dedup: classify an INCOMING batch against an EXISTING
     corpus index — the steady-state shape of a production pipeline,
@@ -955,7 +901,7 @@ def incremental_dedup_status(
     newb = fps(new_df)
     corpus_fp = fps(corpus_df).select("fp").distinct()
     corpus_band = (
-        lsh_band_rows(corpus_df, id_col, text_col, k, bands, n)
+        lsh_band_rows(corpus_df, id_col, text_col)
         .select("band")
         .distinct()
     )
@@ -970,7 +916,7 @@ def incremental_dedup_status(
         .withColumn("_is_exact", F.lit(1))
     )
     near_ids = (
-        lsh_band_rows(new_df, id_col, text_col, k, bands, n)
+        lsh_band_rows(new_df, id_col, text_col)
         .join(corpus_band, "band", "left_semi")
         .select("id")
         .distinct()

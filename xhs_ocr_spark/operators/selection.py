@@ -15,11 +15,11 @@ Scale notes (the design constraint, not an afterthought):
   single-task sort of the whole corpus and dies at 10^12 rows. This
   implementation is the two-level form: rows are bucketed into
   (score, shard) groups; per-group token totals are aggregated (bounded
-  cardinality: |distinct scores| x n_shards, independent of row count);
+  cardinality: |distinct scores| x BUDGET_SHARDS, independent of row count);
   group prefix-offsets are computed with a window over THAT bounded
   aggregate; each row then needs only a cumulative sum WITHIN its own
   bounded (score, shard) partition plus its group's offset. No task
-  ever sees more than ~N / (|scores| x n_shards) rows, and the only
+  ever sees more than ~N / (|scores| x BUDGET_SHARDS) rows, and the only
   unpartitioned window runs over the tiny aggregate.
 
 * ``mix_resample`` computes per-domain acceptance rates from the data
@@ -37,6 +37,9 @@ from pyspark.sql.window import Window
 
 from .textops import sample_bucket_x1000
 
+BUDGET_SHARDS = 64  # token_budget_select's shards per score value
+EPOCH_SALT = "epoch-0"  # the default shuffle salt; pack_sequences always uses it
+
 
 def token_budget_select(
     df: DataFrame,
@@ -44,7 +47,6 @@ def token_budget_select(
     score_col: str,
     tokens_col: str,
     budget: int,
-    n_shards: int = 64,
 ) -> DataFrame:
     """Select rows in (score DESC, shard ASC, id ASC) order until the
     cumulative token count exceeds ``budget`` (a row is kept iff its
@@ -58,7 +60,7 @@ def token_budget_select(
     Returns (id, score, tokens, cum_tokens) for selected rows, column
     names preserved from the input.
     """
-    shard = (sample_bucket_x1000(F.col(id_col)) % n_shards).alias("_shard")
+    shard = (sample_bucket_x1000(F.col(id_col)) % BUDGET_SHARDS).alias("_shard")
     # Staging barrier (round-6 verdict item 1): ``base`` has TWO consumers
     # — the per-(score, shard) aggregate and the per-row window join —
     # and without a barrier Catalyst re-derives the WHOLE input subtree
@@ -84,7 +86,7 @@ def token_budget_select(
 
     # Prefix offset of each group in the global order. The window is
     # unpartitioned BY DESIGN: it runs over the bounded aggregate
-    # (|scores| x n_shards rows), not over the corpus.
+    # (|scores| x BUDGET_SHARDS rows), not over the corpus.
     w_off = (
         Window.orderBy(F.desc(score_col), F.asc("_shard"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -179,7 +181,7 @@ def two_level_cumsum(
 
 
 def epoch_shuffle_positions(
-    df: DataFrame, id_col: str, salt: str = "epoch-0", prefix_len: int = 2
+    df: DataFrame, id_col: str, salt: str = EPOCH_SALT, prefix_len: int = 2
 ) -> DataFrame:
     """Deterministic corpus shuffle for a training epoch: every row gets
     a global 1-based position under the pseudo-random total order
@@ -217,11 +219,11 @@ def pack_sequences(
     id_col: str,
     tokens_col: str,
     seq_len: int,
-    salt: str = "epoch-0",
     prefix_len: int = 2,
 ) -> DataFrame:
     """Pack documents into fixed-length training sequences: documents
-    are laid out in the deterministic epoch-shuffle order and cut into
+    are laid out in the deterministic epoch-shuffle order (EPOCH_SALT,
+    epoch_shuffle_positions' default) and cut into
     ``seq_len``-token bins by their global token offset — the
     "concatenate-and-chunk" packing every LLM pretraining pipeline
     runs between corpus assembly and the trainer.
@@ -236,7 +238,7 @@ def pack_sequences(
 
     Returns (id, tokens, seq_id, offset_in_seq).
     """
-    key = F.md5(F.concat(F.lit(f"{salt}|"), F.col(id_col).cast("string")))
+    key = F.md5(F.concat(F.lit(f"{EPOCH_SALT}|"), F.col(id_col).cast("string")))
     base = df.select(
         F.col(id_col),
         F.col(tokens_col),

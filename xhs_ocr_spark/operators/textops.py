@@ -232,16 +232,14 @@ def tfidf_topk(df, id_col: str, text_col: str, k: int = 3):
     )
 
 
-def exact_group_quantiles(
-    df,
-    group_col: str,
-    value_col: str,
-    q_x1000: tuple[int, ...] = (250, 500, 900),
-):
-    """Exact per-group quantiles of an INTEGER-valued metric — the
-    corpus data-card stat (p25/p50/p90 token counts per language)
-    computed exactly at any scale, where approx_percentile would give
-    engine-dependent answers.
+QUANTILES_X1000 = (250, 500, 900)  # exact_group_quantiles' p25/p50/p90
+
+
+def exact_group_quantiles(df, group_col: str, value_col: str):
+    """Exact per-group quantiles (QUANTILES_X1000) of an INTEGER-valued
+    metric — the corpus data-card stat (p25/p50/p90 token counts per
+    language) computed exactly at any scale, where approx_percentile
+    would give engine-dependent answers.
 
     Shape: value histogram groupBy(group, value) with map-side partial
     counts — bounded by |distinct values| per group (token counts,
@@ -265,7 +263,7 @@ def exact_group_quantiles(
     )
     ch = h.withColumn("_cum", F.sum("_cnt").over(w)).join(n, group_col)
     aggs = [F.min("_n").cast("long").alias("n_rows")]
-    for q in q_x1000:
+    for q in QUANTILES_X1000:
         target = F.expr(f"({int(q)} * _n + 999) DIV 1000")
         aggs.append(
             F.min(F.when(F.col("_cum") >= target, F.col(value_col)))

@@ -136,13 +136,11 @@ def corpus_stages(
     )
 
 
-def corpus_funnel(
-    doc_text: DataFrame, stage_checkpoints: bool = True
-) -> DataFrame:
-    """Funnel metrics: (stage_idx, stage, n_docs) — one row per stage.
-    Tiny aggregates over the staged frames; all heavy derivation sits
-    behind the localCheckpoints in corpus_stages."""
-    stages = corpus_stages(doc_text, stage_checkpoints=stage_checkpoints)
+def corpus_funnel(stages: dict[str, DataFrame]) -> DataFrame:
+    """Funnel metrics over corpus_stages' frames: (stage_idx, stage,
+    n_docs) — one row per stage. Tiny aggregates over the staged frames;
+    all heavy derivation sits behind the localCheckpoints in
+    corpus_stages."""
     counts = [
         stages[name]
         .agg(F.count("*").alias("n_docs"))

@@ -1718,9 +1718,9 @@ def q_corpus_pipeline(spark, sf):
     DuckDB starting from the precomputed extraction fixture (the same
     fixture q30 is checked against), so the row the driver hashes is the
     whole composed pipeline's behavior."""
-    from .plans.corpus_pipeline import corpus_funnel, doc_text_from_spans
+    from .plans.corpus_pipeline import corpus_funnel, corpus_stages, doc_text_from_spans
 
-    return corpus_funnel(doc_text_from_spans(q_extract_flagship(spark, sf)))
+    return corpus_funnel(corpus_stages(doc_text_from_spans(q_extract_flagship(spark, sf))))
 
 
 def q_corpus_assembly(spark, sf):
@@ -2030,7 +2030,7 @@ def _oracle_sf_dir() -> str:
 
 
 @lru_cache(maxsize=4)
-def _fit_centroids_oracle(sf_dir: str, n_cells: int = SS.N_CELLS) -> tuple:
+def _fit_centroids_oracle(sf_dir: str) -> tuple:
     """DuckDB-side twin of fit_centroids_spark: same count-derived sample
     modulus (ivf_sample_mod), same vec_id-hash sample, same Lloyd fitter.
     Cached — oracle_sql() is called repeatedly and the fit reads parquet
@@ -2045,7 +2045,7 @@ def _fit_centroids_oracle(sf_dir: str, n_cells: int = SS.N_CELLS) -> tuple:
         f"WHERE vec_id % {SS.ivf_sample_mod(n)} = 0 ORDER BY vec_id"
     ).fetchall()
     return tuple(
-        tuple(c) for c in SS.kmeans_centroids([list(r[0]) for r in rows], n_cells)
+        tuple(c) for c in SS.kmeans_centroids([list(r[0]) for r in rows], SS.N_CELLS)
     )
 
 

@@ -14,28 +14,26 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..extraction.raw_image import HW_VALUES, mask_library, masks_by_key
+from ..extraction.raw_image import mask_library, masks_by_key
 
 _BC_CACHE: dict = {}
 
 
-def broadcast_mask_library(spark: SparkSession, hws: tuple[str, ...] = HW_VALUES):
+def broadcast_mask_library(spark: SparkSession):
     """(app, hw, tag) -> [mask_bytes in mask_order] as a broadcast var,
     covering all hardware subtrees so the OCR stage can serve a mixed-hw
     corpus from one lookup.
 
-    Memoized per (application, hws): the flagship pipeline is re-planned
+    Memoized per application: the flagship pipeline is re-planned
     per wave by CheckpointedExtraction, and an unmemoized broadcast per
     call would accumulate driver/executor broadcast blocks over a long
     many-wave run (ADVICE r2). The library is immutable for a run, so one
     broadcast per session is the correct lifetime."""
     app_id = spark.sparkContext.applicationId
-    key = (app_id, tuple(hws))
-    bc = _BC_CACHE.get(key)
+    bc = _BC_CACHE.get(app_id)
     if bc is None:
         # drop entries from dead sessions (one live app per process)
-        for stale in [k for k in _BC_CACHE if k[0] != app_id]:
-            del _BC_CACHE[stale]
-        bc = spark.sparkContext.broadcast(masks_by_key(mask_library(hws)))
-        _BC_CACHE[key] = bc
+        _BC_CACHE.clear()
+        bc = spark.sparkContext.broadcast(masks_by_key(mask_library()))
+        _BC_CACHE[app_id] = bc
     return bc
