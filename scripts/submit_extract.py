@@ -6,8 +6,10 @@
         [n_buckets] [waves] [sink_table_dir]
 
 With a fifth argument, extracted spans land in a BucketedMergeTable at
-that path (insert_ignore on (doc_id, order): idempotent re-merge,
-copy-on-write per wave) instead of the plain spans_out parquet dir.
+that path (insert_ignore on (doc_id, pos), pos = the span's index in its
+document: idempotent re-merge, copy-on-write per wave) instead of the
+plain spans_out parquet dir. It prints the span rows written, the
+buckets completed and the media dead letters.
 
 On a cluster the SparkSession comes from spark-submit's conf (master,
 executors); locally it falls back to the session factory. The job is
@@ -46,7 +48,9 @@ def main() -> None:
     )
     out = runner.run(docs)
     buckets_ok = runner.lineage().where("status = 'ok'").count()
-    print(f"rows_out={out.count()} buckets_ok={buckets_ok}")
+    dead = runner.dead_letter()
+    dead_letters = 0 if dead is None else dead.count()
+    print(f"rows_out={out.count()} buckets_ok={buckets_ok} dead_letters={dead_letters}")
     spark.stop()
 
 

@@ -135,6 +135,38 @@ def test_chunk_boundaries_match_oracle(spark):
     assert _spread_flat(docs, None).count() == sum(-(-len(s or []) // K) for _, s in rows)
 
 
+def test_span_sink_keeps_spans_that_share_an_offset(spark, tmp_path):
+    """Offsets repeat within a document, so the span sink keys a span on
+    its index in the document (pos), not its offset: the checkpoint's
+    parquet and sink routes and the streaming writer all return the
+    multiset of spans that extract_spans_flat returns."""
+    import collections
+
+    from xhs_ocr_spark.extraction.checkpointed import CheckpointedExtraction, make_span_sink
+    from xhs_ocr_spark.streaming import extraction_stream
+
+    docs = spark.createDataFrame(
+        [("dups", [_boundary_span("dups", i, i // 3) for i in range(20)])], datagen.DOCS_SCHEMA
+    )
+    cols = ["doc_id", "kind", "text", "media_ref", "order"]
+
+    def spans(df):
+        return collections.Counter(tuple(r) for r in df.select(*cols).collect())
+
+    want = spans(extract_spans_flat(docs))
+    assert len({o for _, _, _, _, o in want}) < sum(want.values())  # offsets repeat
+    for route in ("parquet", "sink"):
+        sink = make_span_sink(spark, str(tmp_path / route / "table"), 4) if route == "sink" else None
+        ck = CheckpointedExtraction(spark, str(tmp_path / route / "run"), n_buckets=4, waves=2, span_sink=sink)
+        assert spans(ck.run(docs)) == want, route
+
+    docs.write.parquet(str(tmp_path / "in" / "batch0"))
+    sink = make_span_sink(spark, str(tmp_path / "stream" / "table"), 4)
+    q = extraction_stream(spark, str(tmp_path / "in" / "*"), str(tmp_path / "stream" / "ck"), sink)
+    q.trigger(availableNow=True).start().awaitTermination(300)
+    assert spans(sink.read()) == want
+
+
 def test_unknown_span_kinds_match_oracle(spark):
     """A span whose kind is neither text nor media, or is NULL, is dropped
     by the engine and the oracle alike — even when it carries plain text

@@ -8,6 +8,13 @@ line) somewhere outside its own definition: in the package, ``scripts/``,
 with its reason; an entry that gains a caller or stops existing fails
 too, so the list cannot go stale.
 
+Every public method of those public classes must likewise be read as an
+attribute of its name (``x.name``) outside ``tests/`` and outside its own
+body; the exceptions are METHODS_ALLOWED, kept current the same way.
+The match is by name only, so a method whose name is also a common
+attribute (``read``, ``append``, ``exists``, ``run``) always counts as
+called.
+
 Every defaulted parameter of those functions must likewise be set (by
 keyword or by position) by a call outside ``tests/``: an option that only
 ever holds its default is a module constant. The exceptions are listed
@@ -39,6 +46,11 @@ ALLOWED = {
     "extraction_stream": "streaming surface: the one incremental extraction writer",
     "streaming_corpus_funnel": "streaming surface: the corpus funnel as a stream",
     "generate_corpus": "synthetic docs table the e2e tests and the verify recipe run on",
+}
+
+# "Class.method" -> why a public method nobody outside tests/ calls stays
+METHODS_ALLOWED = {
+    "ParquetMergeTable.expire_snapshots": "K7 retention cleanup (COVERAGE K7 row)",
 }
 
 # (function, parameter) -> why a default nobody outside tests/ overrides
@@ -114,8 +126,36 @@ def _uncalled() -> set[str]:
     return out
 
 
+def _methods() -> dict[str, tuple[Path, int, int]]:
+    """"Class.method" -> (module, first line, last line) of every public
+    method of a public top-level class in the package."""
+    out: dict[str, tuple[Path, int, int]] = {}
+    for f in sorted(PACKAGE.rglob("*.py")):
+        for cls in ast.parse(f.read_text()).body:
+            if not isinstance(cls, ast.ClassDef) or cls.name.startswith("_"):
+                continue
+            for node in cls.body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not node.name.startswith("_"):
+                    first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+                    out[f"{cls.name}.{node.name}"] = (f, first, node.end_lineno)
+    return out
+
+
+def _uncalled_methods() -> set[str]:
+    reads: dict[str, list[tuple[Path, int]]] = {}
+    for f in _scope_files():
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                reads.setdefault(node.attr, []).append((f, node.lineno))
+    return {
+        qual
+        for qual, (df, lo, hi) in _methods().items()
+        if all(f == df and lo <= line <= hi for f, line in reads.get(qual.split(".")[1], []))
+    }
+
+
 def test_every_public_name_has_a_non_test_caller():
-    bad = sorted(_uncalled() - set(ALLOWED))
+    bad = sorted(_uncalled() - set(ALLOWED)) + sorted(_uncalled_methods() - set(METHODS_ALLOWED))
     assert not bad, (
         "public names that only tests reference (delete them, give them a "
         f"caller, or allowlist them with a reason): {bad}"
@@ -123,10 +163,9 @@ def test_every_public_name_has_a_non_test_caller():
 
 
 def test_allowlist_is_current():
-    defined = set(_definitions())
-    gone = sorted(set(ALLOWED) - defined)
+    gone = sorted(set(ALLOWED) - set(_definitions())) + sorted(set(METHODS_ALLOWED) - set(_methods()))
     assert not gone, f"allowlisted names that no longer exist: {gone}"
-    called = sorted(set(ALLOWED) - _uncalled())
+    called = sorted(set(ALLOWED) - _uncalled()) + sorted(set(METHODS_ALLOWED) - _uncalled_methods())
     assert not called, f"allowlisted names that now have a caller: {called}"
 
 

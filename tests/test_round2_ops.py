@@ -52,7 +52,7 @@ def test_bilingual_field_mapping_roundtrip(spark):
 def test_expire_snapshots(spark, tmp_path):
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"))
     for i in range(5):
-        t.append(spark.createDataFrame([(i,)], "v long"))
+        t.insert_ignore(spark.createDataFrame([(i,)], "v long"), ["v"])
     assert t.snapshot_ids() == [1, 2, 3, 4, 5]
     expired = t.expire_snapshots(keep_n=2)
     assert expired == [1, 2, 3]

@@ -58,12 +58,13 @@ def test_conflicting_batch_resolves_the_same_every_run(spark, tmp_path):
 def test_snapshot_isolation(spark, tmp_path):
     t = ParquetMergeTable(spark, str(tmp_path / "t3"))
     assert t.read() is None
-    t.overwrite(spark.createDataFrame([Row(k="a")]))
+    t.upsert(spark.createDataFrame([Row(k="x", v="a")]), ["k"])
     first = t.read()
-    t.overwrite(spark.createDataFrame([Row(k="b")]))
+    t.upsert(spark.createDataFrame([Row(k="x", v="b")]), ["k"])
     # old snapshot still readable (reader isolation), new one is LATEST
     assert first.count() == 1
-    assert [r["k"] for r in t.read().collect()] == ["b"]
+    assert [r["v"] for r in first.collect()] == ["a"]
+    assert [r["v"] for r in t.read().collect()] == ["b"]
 
 
 N_DOCS = 80
@@ -132,6 +133,25 @@ def test_resume_after_crash(spark, tmp_path):
         assert "staged_input" in plan
 
 
+def test_unreadable_lineage_fails_the_run(spark, tmp_path):
+    """A lineage table that exists but cannot be read fails the run;
+    read as empty, it would make the run silently redo every bucket. A
+    crashed first lineage write (only ``_temporary/``) is no table yet."""
+    import os
+
+    docs = datagen.generate_corpus(spark, 16, partitions=2)
+    ck = CheckpointedExtraction(spark, str(tmp_path / "run"), n_buckets=4, waves=1)
+    os.makedirs(os.path.join(ck.lineage_dir, "_temporary", "0"))
+    with open(os.path.join(ck.lineage_dir, "_temporary", "0", "part-0.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    assert ck.lineage() is None and ck.completed_buckets() == set()
+    with open(os.path.join(ck.lineage_dir, "part-junk.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        ck.run(docs)
+    assert not os.path.exists(ck.data_dir)  # no wave ran
+
+
 # -- BucketedMergeTable: copy-on-write at bucket granularity ------------------
 
 
@@ -149,13 +169,13 @@ def test_bucketed_semantics_match_flat(spark, tmp_path):
         ("upsert", [("a", "1"), ("b", "1")]),
         ("insert_ignore", [("a", "2"), ("c", "1")]),
         ("upsert", [("b", "2"), ("d", "1")]),
-        ("append", [("e", "1")]),
+        ("insert_ignore", [("e", "1")]),
         ("insert_ignore", [("e", "9"), ("f", "1")]),
     ]
     for op, rows in batches:
         df = spark.createDataFrame([Row(k=k, v=v) for k, v in rows])
-        getattr(flat, op)(df, ["k"]) if op != "append" else flat.append(df)
-        getattr(buck, op)(df, ["k"]) if op != "append" else buck.append(df)
+        getattr(flat, op)(df, ["k"])
+        getattr(buck, op)(df, ["k"])
     assert _rows(buck) == _rows(flat)
     assert _rows(buck) == [
         ("a", "1"), ("b", "2"), ("c", "1"), ("d", "1"), ("e", "1"), ("f", "1"),
@@ -382,8 +402,8 @@ def test_mor_scattered_upsert_writes_o_batch(spark, tmp_path):
 
 
 def test_mor_semantics_match_flat_and_compact(spark, tmp_path):
-    """While in MOR state every merge shape (upsert / insert_ignore /
-    append) must match the flat reference table row-for-row; compact()
+    """While in MOR state both merge shapes (upsert / insert_ignore)
+    must match the flat reference table row-for-row; compact()
     folds the deltas into a clean base with identical rows and restores
     copy-on-write for subsequent point merges."""
     import os as _os
@@ -396,15 +416,14 @@ def test_mor_semantics_match_flat_and_compact(spark, tmp_path):
 
     def both(op, rows):
         df = spark.createDataFrame([Row(k=k, v=v) for k, v in rows])
-        (getattr(flat, op)(df, ["k"]) if op != "append" else flat.append(df))
-        (getattr(t, op)(df, ["k"]) if op != "append" else t.append(df))
+        getattr(flat, op)(df, ["k"])
+        getattr(t, op)(df, ["k"])
 
     both("upsert", [(f"k{i}", "0") for i in range(40)])  # initial commit
     both("upsert", [(f"k{i}", "1") for i in range(0, 40, 2)])  # scattered -> MOR
     assert t.in_mor_state()
     both("insert_ignore", [("k0", "X"), ("zz", "fresh")])  # stays MOR
     both("upsert", [("k0", "2"), ("k1", "2")])  # point batch, but MOR state
-    both("append", [("k0", "dup")])  # duplicate-key row must survive reads
 
     def rows(table):
         return sorted(tuple(r) for r in table.read().select("k", "v").collect())
@@ -470,7 +489,7 @@ def test_mor_crashed_commit_retry(spark, tmp_path):
 
 def test_checkpoint_into_merge_sink_resume_no_dups(spark, tmp_path):
     """One resumable end-to-end job: extraction waves land in a
-    BucketedMergeTable via insert_ignore on (doc_id, order) — the
+    BucketedMergeTable via insert_ignore on (doc_id, pos) — the
     reference's idempotent INSERT OR IGNORE re-run (db/__init__.py:
     110-116) fused with checkpoint resume. After a crash: re-running
     produces ZERO duplicate rows through the sink; re-merging
@@ -587,61 +606,6 @@ def test_crash_after_commit_before_lineage_resumes_exactly_once(spark, tmp_path,
     assert dead.count() == dead.dropDuplicates(["doc_id", "order"]).count()
 
 
-# -- DELETE: the fourth MERGE shape -------------------------------------------
-
-
-def test_delete_semantics_match_flat(spark, tmp_path):
-    from xhs_ocr_spark.sinks import BucketedMergeTable
-
-    flat = ParquetMergeTable(spark, str(tmp_path / "df"))
-    buck = BucketedMergeTable(spark, str(tmp_path / "db"), keys=["k"], n_buckets=8)
-    seed = spark.createDataFrame([Row(k=f"k{i}", v="0") for i in range(40)])
-    flat.upsert(seed, ["k"]); buck.upsert(seed)
-    dels = spark.createDataFrame([Row(k="k3"), Row(k="k7"), Row(k="nope")])
-    flat.delete(dels, ["k"]); buck.delete(dels)
-    assert _rows(buck) == _rows(flat)
-    assert len(_rows(buck)) == 38  # 'nope' was a no-op
-    assert buck.lookup(k="k3").count() == 0
-    # point delete in clean state stays copy-on-write (no MOR trees)
-    assert not buck.in_mor_state()
-    # delete-then-upsert re-inserts the key
-    flat.upsert(spark.createDataFrame([Row(k="k3", v="back")]), ["k"])
-    buck.upsert(spark.createDataFrame([Row(k="k3", v="back")]))
-    assert _rows(buck) == _rows(flat)
-    assert {r["v"] for r in buck.lookup(k="k3").collect()} == {"back"}
-
-
-def test_scattered_delete_is_mor_and_obatch(spark, tmp_path):
-    """A delete scattering across >= half the buckets writes ONLY an
-    equality-delete key file (O(batch) bytes); reads mask it; a later
-    upsert re-inserts; compact() folds everything clean."""
-    import os as _os
-
-    from xhs_ocr_spark.sinks import BucketedMergeTable
-
-    path = str(tmp_path / "sd")
-    t = BucketedMergeTable(spark, path, keys=["k"], n_buckets=16)
-    t.upsert(
-        spark.createDataFrame(
-            [Row(k=f"k{i}", v=f"{i:05d}" * 20) for i in range(8000)]
-        )
-    )
-    t.delete(spark.createDataFrame([Row(k=f"k{i}") for i in range(0, 8000, 4)]))
-    assert t.in_mor_state()
-    snaps = t.snapshot_ids()
-    prev_dir = _os.path.join(path, "snapshots", f"{snaps[-2]:06d}")
-    new_dir = _os.path.join(path, "snapshots", f"{snaps[-1]:06d}")
-    _, base_bytes = _snap_inodes_and_bytes(prev_dir)
-    assert _new_bytes(prev_dir, new_dir) < base_bytes / 10  # key file only
-    assert t.read().count() == 6000
-    assert t.lookup(k="k4").count() == 0 and t.lookup(k="k5").count() == 1
-    t.upsert(spark.createDataFrame([Row(k="k4", v="revived")]))
-    assert {r["v"] for r in t.lookup(k="k4").collect()} == {"revived"}
-    t.compact()
-    assert not t.in_mor_state()
-    assert t.read().count() == 6001
-
-
 def test_expire_snapshots_in_mor_state_keeps_data(spark, tmp_path):
     """K7 retention while merge-on-read trees are hard-linked forward:
     expiring old snapshots only unlinks THEIR names — the latest
@@ -652,7 +616,7 @@ def test_expire_snapshots_in_mor_state_keeps_data(spark, tmp_path):
     t = BucketedMergeTable(spark, str(tmp_path / "exp"), keys=["k"], n_buckets=4)
     t.upsert(spark.createDataFrame([Row(k=f"k{i}", v="0") for i in range(40)]))
     t.upsert(spark.createDataFrame([Row(k=f"k{i}", v="1") for i in range(0, 40, 2)]))
-    t.delete(spark.createDataFrame([Row(k="k1"), Row(k="k3")]))
+    t.upsert(spark.createDataFrame([Row(k="k1", v="2"), Row(k="k3", v="2")]))
     assert t.in_mor_state()
     before = sorted(tuple(r) for r in t.read().select("k", "v").collect())
 

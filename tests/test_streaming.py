@@ -59,9 +59,9 @@ def test_incremental_extraction_into_merge_sink(spark, tmp_path):
 
     # simulate the replay window: the same extracted batch merged again
     n_before = sink.read().count()
-    from xhs_ocr_spark.extraction.pipeline import extract_spans_flat
+    from xhs_ocr_spark.extraction.pipeline import extract_spans_with_deadletter
 
-    replay = extract_spans_flat(spark.read.parquet(f"{tmp}/in/batch0"))
+    replay = extract_spans_with_deadletter(spark.read.parquet(f"{tmp}/in/batch0"))[0]
     sink.insert_ignore(replay)
     assert sink.read().count() == n_before  # exactly-once via the merge key
 

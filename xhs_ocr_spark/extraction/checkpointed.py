@@ -38,6 +38,9 @@ from pyspark.storagelevel import StorageLevel
 from ..sources.docs_table import doc_bucket
 from .pipeline import _extracted, split_extracted
 
+# the span sink's merge key: a span's document and its index there
+SPAN_KEYS = ["doc_id", "pos"]
+
 
 class CheckpointedExtraction:
     def __init__(
@@ -54,10 +57,11 @@ class CheckpointedExtraction:
         IGNORE re-run semantics (db/__init__.py:110-116) fused with the
         checkpoint loop: a wave re-run after a crash (data committed,
         lineage lost) re-merges the same spans and changes nothing. The
-        sink must merge on (doc_id, order) and bucket on doc_id with
-        this run's n_buckets, so a wave's commit touches exactly the
-        wave's own buckets (copy-on-write: untouched buckets are
-        hard-linked forward). Use make_span_sink() to build one."""
+        sink must merge on (doc_id, pos) — pos is the span's index in its
+        document; offsets repeat — and bucket on doc_id with this run's
+        n_buckets, so a wave's commit touches exactly the wave's own
+        buckets (copy-on-write: untouched buckets are hard-linked
+        forward). Use make_span_sink() to build one."""
         self.spark = spark
         self.out_dir = out_dir
         self.data_dir = os.path.join(out_dir, "spans_out")
@@ -67,36 +71,40 @@ class CheckpointedExtraction:
         self.n_buckets = n_buckets
         self.waves = waves
         self.span_sink = span_sink
-        if span_sink is not None:
-            if span_sink.n_buckets != n_buckets or span_sink.bucket_keys != ["doc_id"]:
-                raise ValueError(
-                    "span_sink must bucket on ['doc_id'] with n_buckets="
-                    f"{n_buckets} so waves touch only their own buckets; got "
-                    f"bucket_keys={span_sink.bucket_keys}, "
-                    f"n_buckets={span_sink.n_buckets}"
-                )
+        if span_sink is not None and (
+            span_sink.keys != SPAN_KEYS
+            or span_sink.bucket_keys != ["doc_id"]
+            or span_sink.n_buckets != n_buckets
+        ):
+            raise ValueError(
+                f"span_sink must merge on {SPAN_KEYS} and bucket on ['doc_id'] "
+                f"with n_buckets={n_buckets} so waves touch only their own "
+                f"buckets; got keys={span_sink.keys}, bucket_keys="
+                f"{span_sink.bucket_keys}, n_buckets={span_sink.n_buckets}"
+            )
         self.wave_plans: list[str] = []  # formatted plan per wave (audit)
 
     # -- lineage ---------------------------------------------------------------
 
+    def _read_table(self, path: str) -> DataFrame | None:
+        """One of the run's tables, or None before its first committed
+        write: a directory holding only what Spark skips (``_temporary/``
+        or ``.spark-staging-*`` of a crashed first write) is absent. A
+        table with data that cannot be read raises: treating it as empty
+        would silently redo every bucket."""
+        if not os.path.isdir(path) or all(n.startswith(("_", ".")) for n in os.listdir(path)):
+            return None
+        return self.spark.read.parquet(path)
+
     def completed_buckets(self) -> set[int]:
-        try:
-            rows = (
-                self.spark.read.parquet(self.lineage_dir)
-                .where(F.col("status") == "ok")
-                .select("bucket")
-                .distinct()
-                .collect()
-            )
-        except Exception:
+        lineage = self.lineage()
+        if lineage is None:
             return set()
-        return {r["bucket"] for r in rows}
+        ok = lineage.where(F.col("status") == "ok").select("bucket").distinct()
+        return {r["bucket"] for r in ok.collect()}
 
     def lineage(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self.lineage_dir)
-        except Exception:
-            return None
+        return self._read_table(self.lineage_dir)
 
     def _append_lineage(self, rows: list[dict]) -> None:
         df = self.spark.createDataFrame(
@@ -112,11 +120,8 @@ class CheckpointedExtraction:
         )
         df.coalesce(1).write.mode("append").parquet(self.lineage_dir)
 
-    def dead_letter(self):
-        try:
-            return self.spark.read.parquet(self.dead_dir)
-        except Exception:
-            return None
+    def dead_letter(self) -> DataFrame | None:
+        return self._read_table(self.dead_dir)
 
     # -- input staging -----------------------------------------------------------
 
@@ -216,7 +221,7 @@ class CheckpointedExtraction:
             # idempotent wave writes, two interchangeable mechanisms:
             # - parquet path: dynamic partition overwrite replaces only
             #   this wave's bucket partitions;
-            # - sink path: insert_ignore on (doc_id, order) — the
+            # - sink path: insert_ignore on (doc_id, pos) — the
             #   reference's INSERT OR IGNORE re-run (db/__init__.py:
             #   110-116) — so a re-merged wave adds zero rows, and the
             #   copy-on-write commit touches only the wave's buckets
@@ -262,18 +267,16 @@ class CheckpointedExtraction:
 
 
 def make_span_sink(spark: SparkSession, path: str, n_buckets: int = 64):
-    """Span-table sink for CheckpointedExtraction: merge identity
-    (doc_id, order) — one row per surviving span — physically bucketed
-    by doc_id alone so a document's spans colocate and a checkpoint
-    wave's merge touches exactly the wave's bucket set (the wave and
-    sink bucket functions are both pmod(xxhash64(doc_id), n): the
-    wave's is docs_table.doc_bucket)."""
+    """Span-table sink for CheckpointedExtraction and extraction_stream:
+    merge identity (doc_id, pos) — one row per surviving span; pos is
+    the span's index in its document, because two spans of a document
+    may share an offset (``order``) — physically bucketed by doc_id
+    alone so a document's spans colocate and a checkpoint wave's merge
+    touches exactly the wave's bucket set (the wave and sink bucket
+    functions are both pmod(xxhash64(doc_id), n): the wave's is
+    docs_table.doc_bucket)."""
     from ..sinks.merge_table import BucketedMergeTable
 
     return BucketedMergeTable(
-        spark,
-        path,
-        keys=["doc_id", "order"],
-        n_buckets=n_buckets,
-        bucket_keys=["doc_id"],
+        spark, path, keys=SPAN_KEYS, n_buckets=n_buckets, bucket_keys=["doc_id"]
     )

@@ -318,26 +318,29 @@ def extract_spans(docs: DataFrame) -> DataFrame:
 def split_extracted(ex: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The one ok/dead-letter split of the chunk frame: (ok_flat, dead).
 
-    ok = surviving spans (doc_id, kind, text, media_ref, order); dead =
-    media spans whose text came out NULL (doc_id, media_ref, order,
-    reason) — the python stage emits reason 'corrupt_payload' (decode
-    raised) vs 'all_masks_failed' (every mask failed the status/arity
-    gates), the two causes the reference logs distinctly. Both are a
-    narrow inline of the chunk lists, no shuffle."""
+    ok = surviving spans (doc_id, kind, text, media_ref, order, pos) —
+    pos, the span's index in its document, is the span's identity, since
+    offsets repeat within a document; dead = media spans whose text came
+    out NULL (doc_id, media_ref, order, reason) — the python stage emits
+    reason 'corrupt_payload' (decode raised) vs 'all_masks_failed'
+    (every mask failed the status/arity gates), the two causes the
+    reference logs distinctly. Both are a narrow inline of the chunk
+    lists, no shuffle."""
     return (
-        ex.select("doc_id", F.inline("ok")).select("doc_id", "kind", "text", "media_ref", "order"),
+        ex.select("doc_id", F.inline("ok")).select("doc_id", "kind", "text", "media_ref", "order", "pos"),
         ex.select("doc_id", F.inline("dead")).select("doc_id", "media_ref", "order", "reason"),
     )
 
 
 def extract_spans_flat(docs: DataFrame) -> DataFrame:
     """Flat variant: one row per surviving span (doc_id, kind, text,
-    media_ref, order) — handy for SQL-shaped comparisons and sinks."""
-    return split_extracted(_extracted(docs))[0]
+    media_ref, order) — handy for SQL-shaped comparisons."""
+    return split_extracted(_extracted(docs))[0].drop("pos")
 
 
 def extract_spans_with_deadletter(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(ok_flat, dead_letter): F10 routing as data instead of log lines.
+    """(ok_flat, dead_letter): F10 routing as data instead of log lines;
+    ok_flat carries ``pos`` (see split_extracted).
 
     dead_letter = media spans whose every mask failed the status/arity
     gates (doc_id, media_ref, order, reason) — at 10^12 docs these feed a

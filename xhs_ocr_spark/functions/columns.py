@@ -8,27 +8,27 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..extraction.semantics import CJK_PATTERN, REPLACE_STEPS, TRAFFIC_PREFIX
+
 
 def normalize_ocr_col(text: Column, tag: Column, app: Column) -> Column:
-    """X5-X7: exact replace chains per app branch.
+    """X5-X7: exact replace chains per app branch, the column form of
+    semantics.normalize_ocr_text over the same REPLACE_STEPS (no step
+    holds a regex metacharacter, so regexp_replace replaces literally).
 
     xhs (core/run.py:468-474): CJK strip unless note_traffic tag, then
     秒/space/o/<b>/</b>; tiktok (core/run.py:622-627): no CJK strip,
     秒/s/space/o/<b>/</b> (s before o->0)."""
 
-    def chain(c: Column, steps: list[tuple[str, str]]) -> Column:
-        for pat, rep in steps:
+    def chain(c: Column, app_name: str) -> Column:
+        for pat, rep in REPLACE_STEPS[app_name]:
             c = F.regexp_replace(c, pat, rep)
         return c
 
-    xhs_in = F.when(tag.startswith("note_traffic_analysis"), text).otherwise(
-        F.regexp_replace(text, "[一-鿿]+", "")
+    xhs_in = F.when(tag.startswith(TRAFFIC_PREFIX), text).otherwise(
+        F.regexp_replace(text, CJK_PATTERN, "")
     )
-    xhs = chain(xhs_in, [("秒", ""), (" ", ""), ("o", "0"), ("<b>", ""), ("</b>", "")])
-    tiktok = chain(
-        text, [("秒", ""), ("s", ""), (" ", ""), ("o", "0"), ("<b>", ""), ("</b>", "")]
-    )
-    return F.when(app == F.lit("tiktok"), tiktok).otherwise(xhs)
+    return F.when(app == F.lit("tiktok"), chain(text, "tiktok")).otherwise(chain(xhs_in, "xhs"))
 
 
 def chinese_number_to_long(c: Column) -> Column:

@@ -1,12 +1,13 @@
 """Snapshot-pointer parquet table with MERGE semantics.
 
-The sandbox has no Iceberg runtime jar, so this module emulates the three
+The sandbox has no Iceberg runtime jar, so this module emulates the two
 MERGE shapes the engine needs on plain parquet. On a real cluster each
 method is one Iceberg statement (noted per method); the call sites don't
 change. Snapshot isolation: every write lands in a fresh
-``snapshots/<n>`` directory and a tiny ``LATEST`` pointer file flips last,
-so readers never observe a half-written table and failed writes are
-invisible (the reference gets this for free from SQLite transactions,
+``snapshots/<n>`` directory and a tiny ``LATEST`` pointer file flips last
+(``_flip``, the one publish step of every commit), so readers never
+observe a half-written table and failed writes are invisible (the
+reference gets this for free from SQLite transactions,
 db/__init__.py:110-116).
 
 Reference sinks emulated:
@@ -19,7 +20,9 @@ Reference sinks emulated:
 
 from __future__ import annotations
 
+import functools
 import os
+import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -46,21 +49,25 @@ class ParquetMergeTable:
     def exists(self) -> bool:
         return self._latest_id() is not None
 
+    def _snap_path(self, sid: int) -> str:
+        return os.path.join(self._snap_dir, f"{sid:06d}")
+
     def read(self) -> DataFrame | None:
         sid = self._latest_id()
-        if sid is None:
-            return None
-        return self.spark.read.parquet(os.path.join(self._snap_dir, f"{sid:06d}"))
+        return None if sid is None else self.spark.read.parquet(self._snap_path(sid))
 
-    def _commit(self, df: DataFrame) -> None:
-        sid = (self._latest_id() or 0) + 1
-        out = os.path.join(self._snap_dir, f"{sid:06d}")
-        df.write.mode("overwrite").parquet(out)
-        os.makedirs(self.path, exist_ok=True)
+    def _flip(self, sid: int) -> None:
+        """Publish snapshot ``sid``: the atomic LATEST pointer flip, the
+        last step of every commit of both tables."""
         tmp = self._pointer + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(sid))
-        os.replace(tmp, self._pointer)  # atomic pointer flip
+        os.replace(tmp, self._pointer)
+
+    def _commit(self, df: DataFrame) -> None:
+        sid = (self._latest_id() or 0) + 1
+        df.write.mode("overwrite").parquet(self._snap_path(sid))
+        self._flip(sid)
 
     # -- MERGE shapes ---------------------------------------------------------
 
@@ -80,30 +87,25 @@ class ParquetMergeTable:
     @staticmethod
     def _resolve(cur: DataFrame, upd: DataFrame, keys: list[str], mode: str) -> DataFrame:
         """The one MERGE resolution of a table with a batch. ``mode``:
-        'insert_ignore' keeps the table's row on a key clash,
-        'upsert' keeps the batch's row, 'append' keeps both."""
+        'insert_ignore' keeps the table's row on a key clash, 'upsert'
+        keeps the batch's row."""
         if mode == "upsert":
             cur = cur.join(upd.select(keys).dropDuplicates(keys), on=keys, how="left_anti")
-        elif mode == "insert_ignore":
+        else:
             upd = upd.join(cur.select(keys).dropDuplicates(keys), on=keys, how="left_anti")
         return cur.unionByName(upd)
 
-    def _merge(self, updates: DataFrame, keys: list[str] | None, mode: str) -> None:
-        """Batch dedup on the keys (appends pass None: no dedup), then
-        resolve. A batch that holds two rows for one key keeps the
-        smallest whole row (pick_one), so it resolves the same way on
-        every run whatever its row order."""
-        if mode != "append":
-            updates = pick_one(updates, keys, [])
+    def _merge(self, updates: DataFrame, keys: list[str], mode: str) -> None:
+        """Batch dedup on the keys, then resolve. A batch that holds two
+        rows for one key keeps the smallest whole row (pick_one), so it
+        resolves the same way on every run whatever its row order."""
+        updates = pick_one(updates, keys, [])
         cur = self.read()
         if cur is None:
             self._commit(updates)
             return
         cur, updates = self._align(cur, updates)
         self._commit(self._resolve(cur, updates, keys, mode))
-
-    def overwrite(self, df: DataFrame) -> None:
-        self._commit(df)
 
     def insert_ignore(self, updates: DataFrame, keys: list[str]) -> None:
         """Iceberg: MERGE INTO ... WHEN NOT MATCHED THEN INSERT."""
@@ -113,22 +115,6 @@ class ParquetMergeTable:
         """Iceberg: MERGE INTO ... WHEN MATCHED UPDATE WHEN NOT MATCHED
         INSERT (last-write-wins on the key)."""
         self._merge(updates, keys, "upsert")
-
-    def append(self, updates: DataFrame) -> None:
-        self._merge(updates, None, "append")
-
-    def delete(self, keys_df: DataFrame, keys: list[str]) -> None:
-        """Iceberg: DELETE FROM t WHERE (keys) IN (...). Removes every
-        row whose key appears in ``keys_df``; a no-op on keys not
-        present (like SQL DELETE)."""
-        cur = self.read()
-        if cur is None:
-            return
-        self._commit(
-            cur.join(
-                keys_df.select(keys).dropDuplicates(keys), on=keys, how="left_anti"
-            )
-        )
 
     # -- retention (K7) ---------------------------------------------------------
 
@@ -148,8 +134,6 @@ class ParquetMergeTable:
         readers pinned to LATEST are unaffected (snapshot isolation), and
         a crash mid-expiry just leaves extra directories for the next run.
         Returns the expired snapshot ids."""
-        import shutil
-
         keep_n = max(1, keep_n)
         latest = self._latest_id()
         ids = self.snapshot_ids()
@@ -158,7 +142,7 @@ class ParquetMergeTable:
             keep.add(latest)
         expired = [i for i in ids if i not in keep]
         for i in expired:
-            shutil.rmtree(os.path.join(self._snap_dir, f"{i:06d}"), ignore_errors=True)
+            shutil.rmtree(self._snap_path(i), ignore_errors=True)
         return expired
 
 
@@ -205,8 +189,8 @@ class BucketedMergeTable(ParquetMergeTable):
     - ``_deltas/<seq>/_mt_bucket=K/``  delta rows of commit <seq>,
       bucket-partitioned like the base (lookup() still prunes);
     - ``_deletes/<seq>/``              that commit's equality-delete
-      keys (upserts only — appends delete nothing, insert_ignore
-      resolves freshness at write time so its delta needs no mask);
+      keys (upserts only — insert_ignore resolves freshness at write
+      time so its delta needs no mask);
     - the base bucket dirs and all prior delta/delete trees are
       HARD-LINKED forward from the previous snapshot (file ops only).
 
@@ -250,7 +234,7 @@ class BucketedMergeTable(ParquetMergeTable):
     ) -> None:
         """``bucket_keys`` decouples the physical partitioning from the
         merge identity (Iceberg: partition spec vs identifier fields) —
-        e.g. a span table merged on (doc_id, order) but bucketed on
+        e.g. a span table merged on (doc_id, pos) but bucketed on
         doc_id alone, so one document's spans share a bucket and a
         checkpoint wave touches exactly its own buckets. Must be a
         subset of ``keys`` (bucket placement must be a function of the
@@ -312,26 +296,17 @@ class BucketedMergeTable(ParquetMergeTable):
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(self.BUCKET_COL, self._bucket_expr())
 
-    def _snap_path(self, sid: int) -> str:
-        return os.path.join(self._snap_dir, f"{sid:06d}")
-
-    def _seq_dirs(self, sid: int, kind: str) -> list[int]:
+    def _delta_seqs(self, sid: int) -> list[int]:
+        """Sorted MOR commit sequence numbers present in a snapshot (every
+        MOR commit writes a delta)."""
         try:
             return sorted(
                 int(d)
-                for d in os.listdir(os.path.join(self._snap_path(sid), kind))
+                for d in os.listdir(os.path.join(self._snap_path(sid), "_deltas"))
                 if d.isdigit()
             )
         except FileNotFoundError:
             return []
-
-    def _delta_seqs(self, sid: int) -> list[int]:
-        """Sorted MOR commit sequence numbers present in a snapshot —
-        the union of delta and delete trees (a DELETE commit writes an
-        equality-delete file with no delta)."""
-        return sorted(
-            set(self._seq_dirs(sid, "_deltas")) | set(self._seq_dirs(sid, "_deletes"))
-        )
 
     def in_mor_state(self) -> bool:
         sid = self._latest_id()
@@ -359,8 +334,6 @@ class BucketedMergeTable(ParquetMergeTable):
         base = sequence 0). The bucket column is a partition column of
         base and deltas alike, so a bucket predicate on the resolved view
         still prunes every file scan."""
-        import functools
-
         sid = self._latest_id()
         if sid is None:
             return None
@@ -392,10 +365,7 @@ class BucketedMergeTable(ParquetMergeTable):
 
         out = masked(base, 0)
         for s in seqs:
-            d = os.path.join(snap, "_deltas", f"{s:06d}")
-            if not os.path.isdir(d):
-                continue  # delete-only commit: masks, no new rows
-            delta = self.spark.read.parquet(d)
+            delta = self.spark.read.parquet(os.path.join(snap, "_deltas", f"{s:06d}"))
             out = out.unionByName(masked(delta.select(out.columns), s))
         return out
 
@@ -434,7 +404,7 @@ class BucketedMergeTable(ParquetMergeTable):
         as the new snapshot; hard-link every other bucket's files from
         the previous snapshot."""
         sid = (self._latest_id() or 0) + 1
-        out = os.path.join(self._snap_dir, f"{sid:06d}")
+        out = self._snap_path(sid)
         # align tasks with buckets before partitionBy: without this every
         # task writes one file PER bucket it holds (tasks x buckets tiny
         # files — measured 10x slower than the flat rewrite at 256
@@ -457,12 +427,10 @@ class BucketedMergeTable(ParquetMergeTable):
             # pointer would pin an unreadable snapshot (parquet schema
             # inference has nothing to read). SQL MERGE of an empty batch
             # into a non-existent table is a no-op — stay non-existent.
-            import shutil
-
             shutil.rmtree(out, ignore_errors=True)
             return
         if prev_sid is not None:
-            prev = os.path.join(self._snap_dir, f"{prev_sid:06d}")
+            prev = self._snap_path(prev_sid)
             for d in os.listdir(prev):
                 if not d.startswith(f"{self.BUCKET_COL}="):
                     continue
@@ -472,13 +440,25 @@ class BucketedMergeTable(ParquetMergeTable):
                 for fn in os.listdir(os.path.join(prev, d)):
                     if fn.endswith(".parquet"):
                         os.link(os.path.join(prev, d, fn), os.path.join(out, d, fn))
-        self._finish_commit(sid)
+        self._flip(sid)
 
     def _touched(self, updates_b: DataFrame) -> set[int]:
         # bounded by n_buckets: metadata-sized driver collect by design
         return {
             r[0] for r in updates_b.select(self.BUCKET_COL).distinct().collect()
         }
+
+    def _flip(self, sid: int) -> None:
+        """Pin the layout (BUCKETS, BUCKET_KEYS) on the first commit, then
+        flip the pointer."""
+        for path, value in (
+            (self._buckets_file, str(self.n_buckets)),
+            (self._bucket_keys_file, ",".join(self.bucket_keys)),
+        ):
+            if not os.path.exists(path):
+                with open(path, "w") as f:
+                    f.write(value)
+        super()._flip(sid)
 
     # -- merge-on-read commit ---------------------------------------------------
 
@@ -495,30 +475,15 @@ class BucketedMergeTable(ParquetMergeTable):
                 os.makedirs(td, exist_ok=True)
                 os.link(os.path.join(root, fn), os.path.join(td, fn))
 
-    def _finish_commit(self, sid: int) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        if not os.path.exists(self._buckets_file):
-            with open(self._buckets_file, "w") as f:
-                f.write(str(self.n_buckets))
-        if not os.path.exists(self._bucket_keys_file):
-            with open(self._bucket_keys_file, "w") as f:
-                f.write(",".join(self.bucket_keys))
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(sid))
-        os.replace(tmp, self._pointer)  # atomic pointer flip
-
     def _mor_commit(self, updates_b: DataFrame, mode: str) -> None:
         """O(batch)-write commit: hard-link the previous snapshot's base
         buckets and delta/delete trees forward, then add this batch as a
         new ``_deltas/<sid>`` (bucket-partitioned) plus, for upserts, an
-        ``_deletes/<sid>`` equality-delete key file. ``mode`` is one of
-        'upsert' | 'insert_ignore' | 'append'. Crash-safe like the COW
+        ``_deletes/<sid>`` equality-delete key file. ``mode`` is
+        'upsert' or 'insert_ignore'. Crash-safe like the COW
         path: everything lands in the unreferenced new snapshot dir and
         the LATEST pointer flips last; a stale dir from a crashed commit
         is wiped on retry."""
-        import shutil
-
         prev = self._latest_id()
         assert prev is not None  # initial commits go through _commit_buckets
         if mode == "insert_ignore":
@@ -546,7 +511,7 @@ class BucketedMergeTable(ParquetMergeTable):
                     .coalesce(1)
                     .write.parquet(os.path.join(out, "_deletes", f"{sid:06d}"))
                 )
-            self._finish_commit(sid)
+            self._flip(sid)
         finally:
             updates_b.unpersist()
         self._maybe_auto_compact()
@@ -580,46 +545,6 @@ class BucketedMergeTable(ParquetMergeTable):
         between compactions."""
         return self.in_mor_state() or len(touched) >= max(1, self.n_buckets // 2)
 
-    def delete(self, keys_df: DataFrame, keys: list[str] | None = None) -> None:
-        """Iceberg: DELETE FROM t WHERE (keys) IN (...) — the fourth
-        MERGE shape, free once equality deletes exist. Point batches in
-        clean state commit copy-on-write (touched buckets rewritten
-        minus the keys; a bucket emptied entirely simply vanishes from
-        the new snapshot); scattered batches or MOR state commit an
-        equality-delete file alone — O(batch) bytes, no delta rows —
-        which the sequence rule applies to everything earlier. A later
-        upsert of the same key re-inserts it (higher sequence)."""
-        self._check_keys(keys)
-        prev = self._latest_id()
-        if prev is None:
-            return
-        kb = self._with_bucket(keys_df.select(self.keys).dropDuplicates(self.keys))
-        touched = self._touched(kb)
-        if not touched:
-            return
-        if not self._scattered(touched):
-            cur_t = self._read_raw().where(
-                F.col(self.BUCKET_COL).isin(sorted(touched))
-            )
-            merged = cur_t.join(
-                kb.select(self.keys), on=self.keys, how="left_anti"
-            )
-            self._commit_buckets(merged, touched, prev)
-            return
-        import shutil
-
-        sid = prev + 1
-        out = self._snap_path(sid)
-        shutil.rmtree(out, ignore_errors=True)  # stale crashed commit
-        self._link_tree(self._snap_path(prev), out)
-        (
-            kb.select(self.keys)
-            .coalesce(1)
-            .write.parquet(os.path.join(out, "_deletes", f"{sid:06d}"))
-        )
-        self._finish_commit(sid)
-        self._maybe_auto_compact()
-
     def compact(self) -> None:
         """Fold deltas and equality deletes back into the bucketed base —
         the explicit stand-in for Iceberg's background compaction
@@ -637,8 +562,7 @@ class BucketedMergeTable(ParquetMergeTable):
         key wins, every run), then copy-on-write or merge-on-read by
         _scattered."""
         self._check_keys(keys)
-        if mode != "append":
-            updates = pick_one(updates, self.keys, [])
+        updates = pick_one(updates, self.keys, [])
         prev = self._latest_id()
         if prev is None:
             self._commit_buckets(self._with_bucket(updates), set(), None)
@@ -670,8 +594,3 @@ class BucketedMergeTable(ParquetMergeTable):
 
     def upsert(self, updates: DataFrame, keys: list[str] | None = None) -> None:
         self._merge(updates, keys, "upsert")
-
-    def overwrite(self, df: DataFrame) -> None:
-        self._commit_buckets(
-            self._with_bucket(df), set(range(self.n_buckets)), self._latest_id()
-        )

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..extraction.datagen import DOCS_SCHEMA
-from ..extraction.pipeline import extract_spans_flat
+from ..extraction.pipeline import extract_spans_with_deadletter
 
 
 def extraction_stream(
@@ -35,7 +35,8 @@ def extraction_stream(
     dedup_watermark: str | None = None,
 ) -> DataStreamWriter:
     """readStream(parquet docs) -> extraction -> foreachBatch MERGE into
-    a BucketedMergeTable via insert_ignore on (doc_id, order). The caller
+    a BucketedMergeTable via insert_ignore on (doc_id, pos), the key of
+    make_span_sink (pos = the span's index in its document). The caller
     starts it with .trigger(availableNow=True).start() (batch-like
     catch-up) or a processingTime trigger (continuous ingest).
 
@@ -77,7 +78,7 @@ def extraction_stream(
             ts_col="_arrival",
             watermark=dedup_watermark,
         ).drop("_fp", "_arrival")
-    out = extract_spans_flat(docs)
+    out = extract_spans_with_deadletter(docs)[0]
 
     def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
         sink.insert_ignore(batch_df)
