@@ -353,14 +353,14 @@ def main() -> None:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q_df = emb.where(F.col("vec_id") < 5)
     truth = {
-        (r["q_id"], r["n_id"]) for r in SS.cosine_topk(emb, q_df, k=3).collect()
+        (r["q_id"], r["n_id"]) for r in SS.cosine_topk(emb, q_df).collect()
     }
     cents = SS.fit_centroids_spark(emb)
 
     def _recall(nprobe: int) -> float:
         got = {
             (r["q_id"], r["n_id"])
-            for r in SS.ivf_topk_kmeans(emb, q_df, cents, k=3, nprobe=nprobe).collect()
+            for r in SS.ivf_topk_kmeans(emb, q_df, cents, nprobe=nprobe).collect()
         }
         return round(len(got & truth) / len(truth), 3)
 

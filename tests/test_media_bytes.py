@@ -9,6 +9,7 @@ the BYTES (tamper test), not the ref."""
 
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
 from xhs_ocr_spark.extraction import raw_image as RI
 from xhs_ocr_spark.extraction import semantics as S
@@ -46,8 +47,8 @@ def test_composite_is_reference_pixel_math():
     byte-for-byte (alpha is binary by construction)."""
     ref = "mem://pixel/0"
     img = RI.decode_image(RI.render_media_image(ref))
-    tag, app, n_blocks = RI.read_header(img)
-    mask = RI.decode_image(MASKS[(app, RI.read_hw(img), tag)][0])
+    tag, app, hw, n_blocks = RI.read_header(img)
+    mask = RI.decode_image(MASKS[(app, hw, tag)][0])
     alpha = np.zeros(img.shape[:2])
     alpha[: mask.shape[0]] = mask[:, :, 3] / 255.0
     out = (img * alpha[:, :, np.newaxis]).astype(np.uint8)
@@ -58,17 +59,26 @@ def test_composite_is_reference_pixel_math():
 
 
 def test_mask_size_guard():
-    """A mask taller than the image's content extent cannot apply —
-    reference shape check core/run.py:396-399 == mask_regions None."""
-    ref = "mem://guard/1"
-    img_bytes = RI.render_media_image(ref)
-    tag, app, n_blocks = RI.read_header(RI.decode_image(img_bytes))
-    need = 8 if tag.startswith(S.TRAFFIC_PREFIX) else len(S.TAG_FIELDS[tag])
-    for order in range(S.N_MASKS):
-        mask = RI.decode_image(RI.render_mask(tag, order))
-        guard_trips = mask.shape[0] > (RI.HEADER_BANDS + n_blocks) * RI.BH
-        assert guard_trips == (S.mask_regions(tag, order, n_blocks) is None)
-    assert need > 0
+    """For every tag and mask order: a mask taller than the image's content
+    extent cannot apply — reference shape check core/run.py:396-399 ==
+    mask_regions None — and an applicable mask keeps the header band and
+    exactly mask_regions' block window."""
+    trips = set()
+    for tag in S.TAGS:
+        need = S.arity(tag)
+        assert need > 0
+        for order in range(S.N_MASKS):
+            mask = RI.decode_image(RI.render_mask(tag, order))
+            kept = (mask[:, :, 3] == 255).reshape(-1, RI.BH * RI.W).all(axis=1)
+            assert kept[: RI.HEADER_BANDS].all()
+            for n_blocks in range(need + S.N_MASKS):
+                guard_trips = mask.shape[0] > (RI.HEADER_BANDS + n_blocks) * RI.BH
+                regions = S.mask_regions(tag, order, n_blocks)
+                assert guard_trips == (regions is None)
+                trips.add(guard_trips)
+                if regions is not None:
+                    assert np.flatnonzero(kept[RI.HEADER_BANDS :]).tolist() == regions
+    assert trips == {True, False}
 
 
 def test_mask_library_dim_table(spark):
@@ -154,25 +164,35 @@ def test_generate_corpus_carries_bytes(spark):
 
 def test_raw_rgba_codec_real_ops(spark):
     """raw_media_metadata (q39) decodes the REAL raw-RGBA payload: its
-    header fields equal read_header/read_hw of the decoded pixels, and
-    an undecodable payload is dropped, not a task failure."""
+    header fields equal read_header of the decoded pixels, and every
+    payload read_header rejects is dropped, not a task failure."""
     from xhs_ocr_spark.operators.multimodal import raw_media_metadata
 
     refs = [f"mem://codec/{i}" for i in range(12)]
     payloads = {r: RI.render_media_image(r) for r in refs}
+    good = payloads[refs[0]]
+    bad = {
+        "bad:junk": b"junkjunkjunkjunk" * 8,
+        "bad:null": None,
+        "bad:empty": b"",
+        "bad:partial_row": good[:-1],
+        "bad:version": good[:2] + bytes([RI.VERSION + 1]) + good[3:],
+        "bad:tag": good[:3] + bytes([len(S.TAGS)]) + good[4:],
+    }
+    for payload in bad.values():
+        with pytest.raises(Exception):
+            RI.read_header(RI.decode_image(payload))
     media = spark.createDataFrame(
-        [(r, payloads[r]) for r in refs] + [("bad", b"junkjunkjunkjunk" * 8)],
+        [(r, payloads[r]) for r in refs] + list(bad.items()),
         "media_ref string, media_bytes binary",
     )
     got = {r["media_ref"]: r for r in raw_media_metadata(media).collect()}
-    assert set(got) == set(refs)  # bad payload dropped
+    assert set(got) == set(refs)  # bad payloads dropped
     for ref in refs:
         img = RI.decode_image(payloads[ref])
-        tag, app, n_blocks = RI.read_header(img)
+        tag, app, hw, n_blocks = RI.read_header(img)
         row = got[ref]
-        assert (row["tag"], row["app"], row["hw"], row["n_blocks"]) == (
-            tag, app, RI.read_hw(img), n_blocks
-        )
+        assert (row["tag"], row["app"], row["hw"], row["n_blocks"]) == (tag, app, hw, n_blocks)
         assert row["n_bytes"] == len(payloads[ref])
         # and the pixels carry what the renderer derived from the ref
         assert (tag, app) == (S.media_tag(ref), S.media_app(ref))

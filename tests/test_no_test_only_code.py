@@ -8,6 +8,9 @@ line) somewhere outside its own definition: in the package, ``scripts/``,
 with its reason; an entry that gains a caller or stops existing fails
 too, so the list cannot go stale.
 
+Every public module-level assignment (a constant, a schema) must likewise
+be read outside ``tests/`` and outside its own statement.
+
 Every public method of those public classes must likewise be read as an
 attribute of its name (``x.name``) outside ``tests/`` and outside its own
 body; the exceptions are METHODS_ALLOWED, kept current the same way.
@@ -16,8 +19,11 @@ attribute (``read``, ``append``, ``exists``, ``run``) always counts as
 called.
 
 Every defaulted parameter of those functions must likewise be set (by
-keyword or by position) by a call outside ``tests/``: an option that only
-ever holds its default is a module constant. The exceptions are listed
+keyword or by position) by a call outside ``tests/`` to a value other
+than its default: an option that only ever holds its default is a module
+constant. Values compare as literals, module constants resolved by name
+(``salt=EPOCH_SALT`` and ``salt="epoch-0"`` are the same value); a value
+that is not a literal counts as another value. The exceptions are listed
 in OPTIONS_ALLOWED, which is kept current the same way.
 
 Pure AST work: no Spark session.
@@ -57,6 +63,7 @@ METHODS_ALLOWED = {
 # stays a parameter
 _COLUMN = "column-name default of a public operator"
 _SURFACE = "library surface with no in-repo driver yet (ROADMAP item 7)"
+_BENCH = "perfbench/ passes it (its default); the benchmark's call shape stays"
 OPTIONS_ALLOWED = {
     ("cosine_topk", "id_col"): _COLUMN,
     ("cosine_topk", "vec_col"): _COLUMN,
@@ -74,6 +81,8 @@ OPTIONS_ALLOWED = {
     ("write_docs_table", "n_buckets"): _SURFACE,
     ("extraction_stream", "dedup_watermark"): _SURFACE,
     ("generate_corpus", "partitions"): _SURFACE,
+    ("decontam_flags_join", "threshold_x1000"): _BENCH,
+    ("paragraph_dedup_rebuild", "size"): _BENCH,
 }
 
 
@@ -112,10 +121,12 @@ def _references() -> dict[str, list[tuple[Path, int]]]:
     return refs
 
 
-def _uncalled() -> set[str]:
+def _unread(definitions: dict[str, list[tuple[Path, int, int]]]) -> set[str]:
+    """The names in ``definitions`` that no code reference outside their
+    own definitions reads."""
     refs = _references()
     out = set()
-    for name, sites in _definitions().items():
+    for name, sites in definitions.items():
         outside = [
             (f, line)
             for f, line in refs.get(name, [])
@@ -123,6 +134,21 @@ def _uncalled() -> set[str]:
         ]
         if not outside:
             out.add(name)
+    return out
+
+
+def _uncalled() -> set[str]:
+    return _unread(_definitions())
+
+
+def _public_constants() -> dict[str, list[tuple[Path, int, int]]]:
+    """name -> [(module, first line, last line)] of the package's public
+    module-level assignments."""
+    out: dict[str, list[tuple[Path, int, int]]] = {}
+    for f in sorted(PACKAGE.rglob("*.py")):
+        for name, node in _assignments(ast.parse(f.read_text())):
+            if not name.startswith("_"):
+                out.setdefault(name, []).append((f, node.lineno, node.end_lineno))
     return out
 
 
@@ -162,6 +188,13 @@ def test_every_public_name_has_a_non_test_caller():
     )
 
 
+def test_every_public_constant_is_read():
+    """A public module-level assignment that nothing outside tests/ reads
+    (outside its own statement) is dead."""
+    bad = sorted(_unread(_public_constants()))
+    assert not bad, f"public module-level names nothing outside tests/ reads: {bad}"
+
+
 def test_allowlist_is_current():
     gone = sorted(set(ALLOWED) - set(_definitions())) + sorted(set(METHODS_ALLOWED) - set(_methods()))
     assert not gone, f"allowlisted names that no longer exist: {gone}"
@@ -169,27 +202,65 @@ def test_allowlist_is_current():
     assert not called, f"allowlisted names that now have a caller: {called}"
 
 
-def _options() -> dict[str, list[dict[str, int | None]]]:
-    """name -> per definition, {defaulted parameter: its position, or
-    None for a keyword-only one} of public top-level functions in the
-    package."""
-    out: dict[str, list[dict[str, int | None]]] = {}
+def _options() -> dict[str, list[dict[str, tuple[int | None, ast.expr]]]]:
+    """name -> per definition, {defaulted parameter: (its position, or
+    None for a keyword-only one; its default)} of public top-level
+    functions in the package."""
+    out: dict[str, list[dict[str, tuple[int | None, ast.expr]]]] = {}
     for f in sorted(PACKAGE.rglob("*.py")):
         for node in ast.parse(f.read_text()).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not node.name.startswith("_"):
                 a = node.args
                 pos = [p.arg for p in a.posonlyargs + a.args]
                 first = len(pos) - len(a.defaults)
-                opts: dict[str, int | None] = {p: i for i, p in enumerate(pos) if i >= first}
-                opts.update({p.arg: None for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
+                opts = {p: (i, a.defaults[i - first]) for i, p in enumerate(pos) if i >= first}
+                opts.update({p.arg: (None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
                 out.setdefault(node.name, []).append(opts)
     return out
 
 
-def _set_arguments() -> dict[str, set[str | int]]:
-    """name -> the keywords and positions that calls outside tests/ pass
-    to a function of that name (import aliases resolved)."""
-    out: dict[str, set[str | int]] = {}
+_UNKNOWN = "<not a literal>"
+
+
+def _assignments(tree: ast.Module) -> list[tuple[str, ast.Assign | ast.AnnAssign]]:
+    """(name, statement) of each module-level ``name = value``."""
+    out = []
+    for node in tree.body:
+        if isinstance(node, ast.AnnAssign) and node.value is not None:
+            targets = [node.target]
+        else:
+            targets = node.targets if isinstance(node, ast.Assign) else []
+        out += [(t.id, node) for t in targets if isinstance(t, ast.Name)]
+    return out
+
+
+def _constants() -> dict[str, str]:
+    """NAME -> repr of the literal value of the package's module-level
+    ``NAME = <literal>`` assignments, for names that hold one value in
+    every module that assigns them."""
+    values: dict[str, set[str]] = {}
+    for f in sorted(PACKAGE.rglob("*.py")):
+        for name, node in _assignments(ast.parse(f.read_text())):
+            values.setdefault(name, set()).add(_literal(node.value, {}))
+    return {k: v.pop() for k, v in values.items() if len(v) == 1 and _UNKNOWN not in v}
+
+
+def _literal(node: ast.expr, constants: dict[str, str]) -> str:
+    """repr of the value ``node`` spells, module constants resolved by
+    name; _UNKNOWN when it is not a literal."""
+    if isinstance(node, (ast.Name, ast.Attribute)):
+        return constants.get(node.id if isinstance(node, ast.Name) else node.attr, _UNKNOWN)
+    try:
+        return repr(ast.literal_eval(node))
+    except ValueError:
+        return _UNKNOWN
+
+
+def _set_arguments(constants: dict[str, str]) -> dict[str, dict[str | int, set[str]]]:
+    """name -> {keyword or position: the literal values (reprs) that calls
+    outside tests/ pass there} for a function of that name (import
+    aliases resolved)."""
+    out: dict[str, dict[str | int, set[str]]] = {}
     for f in _scope_files():
         tree = ast.parse(f.read_text())
         alias = {
@@ -204,21 +275,29 @@ def _set_arguments() -> dict[str, set[str | int]]:
                 continue
             fn = node.func
             name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
-            got = out.setdefault(alias.get(name, name), set())
-            got.update(range(len(node.args)))
-            got.update(k.arg for k in node.keywords if k.arg)
+            got = out.setdefault(alias.get(name, name), {})
+            for i, arg in enumerate(node.args):
+                got.setdefault(i, set()).add(_literal(arg, constants))
+            for k in node.keywords:
+                if k.arg:
+                    got.setdefault(k.arg, set()).add(_literal(k.value, constants))
     return out
 
 
 def _unset_options() -> set[tuple[str, str]]:
-    passed = _set_arguments()
-    return {
-        (name, p)
-        for name, sigs in _options().items()
-        for opts in sigs
-        for p, i in opts.items()
-        if not {p, i} & passed.get(name, set())
-    }
+    """Options that no call outside tests/ sets to a value other than the
+    default: every value passed is the default's literal value. A value
+    that is not a literal counts as another value."""
+    constants = _constants()
+    passed = _set_arguments(constants)
+    out = set()
+    for name, sigs in _options().items():
+        for opts in sigs:
+            for p, (i, default) in opts.items():
+                values = passed.get(name, {}).get(p, set()) | passed.get(name, {}).get(i, set())
+                if values <= {_literal(default, constants)} - {_UNKNOWN}:
+                    out.add((name, p))
+    return out
 
 
 def test_every_option_is_set_outside_tests():

@@ -165,6 +165,24 @@ def test_batch_decoder_equals_per_payload_oracle(payloads, altered):
     assert _batch(payloads, masks) == [_per_payload(p, masks) for p in payloads]
 
 
+@settings(max_examples=100, deadline=None)
+@given(st.lists(_mangled(), min_size=1, max_size=25))
+@example(_MIXED)
+def test_read_headers_equals_read_header(payloads):
+    """read_headers keeps exactly the payloads read_header decodes, with
+    their first seven bytes."""
+    idx, h = RI.read_headers(pa.array(payloads, pa.binary()))
+    want = []
+    for i, p in enumerate(payloads):
+        try:
+            RI.read_header(RI.decode_image(p))
+        except Exception:
+            continue
+        want.append(i)
+    assert idx.tolist() == want
+    assert h.tolist() == [list(payloads[i][:7]) for i in want]
+
+
 def test_batch_decoder_covers_both_routes():
     """The altered keys really take the fallback, the rest stay banded,
     and both agree with the oracle over a fixed rendered sample."""

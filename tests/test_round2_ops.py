@@ -80,15 +80,13 @@ def test_ivf_nprobe_recall_monotone(spark):
     queries = e.where(F.col("vec_id") < 5)
     truth = {
         (r["q_id"], r["n_id"])
-        for r in SS.cosine_topk(e, queries, k=3).collect()
+        for r in SS.cosine_topk(e, queries).collect()
     }
 
     def recall(nprobe):
         got = {
             (r["q_id"], r["n_id"])
-            for r in SS.ivf_topk_kmeans(
-                e, queries, cents, k=3, nprobe=nprobe
-            ).collect()
+            for r in SS.ivf_topk_kmeans(e, queries, cents, nprobe=nprobe).collect()
         }
         return len(got & truth) / len(truth)
 

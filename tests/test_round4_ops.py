@@ -31,11 +31,11 @@ def test_decontam_flags_planted_eval_sentence(spark):
     assert 0 < out["trace"]["n_eval_hits"] < out["trace"]["n_shingles"] // 2
 
 
-def test_paragraph_dedup_planted_repeats(spark):
+def test_paragraph_dedup_planted_repeats(spark, monkeypatch):
     """A paragraph repeated within and across documents keeps only its
     first occurrence (min (doc_id, para_idx)); unique paragraphs all
     keep."""
-    boiler = "subscribe to our newsletter now"  # 5 words -> needs size=5
+    boiler = "subscribe to our newsletter now"  # 5 words -> needs PARAGRAPH_SIZE 5
     corpus = spark.createDataFrame(
         [
             Row(doc_id="a", text=f"{boiler} unique alpha words here one {boiler}"),
@@ -43,7 +43,8 @@ def test_paragraph_dedup_planted_repeats(spark):
             Row(doc_id="c", text="totally fresh paragraph without any repeats"),
         ]
     )
-    out = DF.paragraph_dedup(corpus, "doc_id", "text", size=5).collect()
+    monkeypatch.setattr(DF, "PARAGRAPH_SIZE", 5)
+    out = DF.paragraph_dedup(corpus, "doc_id", "text").collect()
     rows = {(r["doc_id"], r["para_idx"]): (r["fp"], r["keep"]) for r in out}
     boiler_rows = [
         k for k, (fp, _) in rows.items() if fp == rows[("a", 0)][0]
@@ -73,7 +74,7 @@ def test_paragraph_windows_cover_text_exactly(spark):
     assert got["nine"] == ["w1 w2 w3 w4", "w5 w6 w7 w8", "w9"]
     assert got["two"] == ["only two"]
     assert got["empty"] == [""]  # filtered out downstream by paragraph_dedup
-    deduped = DF.paragraph_dedup(corpus, "doc_id", "text", size=4)
+    deduped = DF.paragraph_dedup(corpus, "doc_id", "text")
     assert deduped.where(F.col("doc_id") == "empty").count() == 0
 
 

@@ -311,7 +311,7 @@ def test_substring_dedup_quote_flagged_in_exactly_one(spark):
     d = _docs(spark, [(1, a), (2, b), (3, c)])
     got = {
         r["id"]: (r["n_tokens"], r["n_dup_tokens"], r["dup_ratio_x1000"])
-        for r in DF.substring_dedup_stats(d, "doc_id", "text", k=8).collect()
+        for r in DF.substring_dedup_stats(d, "doc_id", "text").collect()
     }
     assert got[1][1] == 0  # first occurrence: nothing flagged
     assert got[3][1] == 0  # unrelated doc untouched
@@ -328,7 +328,7 @@ def test_substring_dedup_within_doc_repeat(spark):
     span = "w1 w2 w3 w4 w5 w6 w7 w8"  # exactly k tokens
     text = span + " filler1 filler2 filler3 " + span
     d = _docs(spark, [(7, text)])
-    row = DF.substring_dedup_stats(d, "doc_id", "text", k=8).collect()[0]
+    row = DF.substring_dedup_stats(d, "doc_id", "text").collect()[0]
     assert row["n_tokens"] == 19
     assert row["n_dup_tokens"] == 8  # the second occurrence's positions
 
@@ -561,12 +561,16 @@ def test_epoch_shuffle_prefix_len_invariant(spark):
         assert gotp == ref_pack
 
 
-def test_epoch_shuffle_salt_reshuffles(spark):
-    from xhs_ocr_spark.operators.selection import epoch_shuffle_positions
+def test_epoch_shuffle_salt_reshuffles(spark, monkeypatch):
+    from xhs_ocr_spark.operators import selection as SEL
 
     df = spark.createDataFrame([Row(id=i) for i in range(100)])
-    a = {r["id"]: r["pos"] for r in epoch_shuffle_positions(df, "id", salt="e1").collect()}
-    b = {r["id"]: r["pos"] for r in epoch_shuffle_positions(df, "id", salt="e2").collect()}
+
+    def positions(salt):
+        monkeypatch.setattr(SEL, "EPOCH_SALT", salt)
+        return {r["id"]: r["pos"] for r in SEL.epoch_shuffle_positions(df, "id").collect()}
+
+    a, b = positions("e1"), positions("e2")
     assert sorted(a.values()) == sorted(b.values()) == list(range(1, 101))
     assert a != b  # different epoch, different order
 
@@ -590,8 +594,8 @@ def test_pack_sequences_layout(spark):
     assert max(s for s, _ in got.values()) == (cum - rows[-1]["toks"] if False else max(expect.values())[0])
 
 
-def test_tfidf_topk_exact(spark):
-    from xhs_ocr_spark.operators.textops import tfidf_topk
+def test_tfidf_topk_exact(spark, monkeypatch):
+    from xhs_ocr_spark.operators import textops as TX
 
     docs = _docs(
         spark,
@@ -601,9 +605,10 @@ def test_tfidf_topk_exact(spark):
             (3, "apple cherry cherry common"),
         ],
     )
+    monkeypatch.setattr(TX, "TFIDF_K", 2)
     got = {
         (r["id"], r["rank"]): (r["term"], r["score_x1000"])
-        for r in tfidf_topk(docs, "doc_id", "text", k=2).collect()
+        for r in TX.tfidf_topk(docs, "doc_id", "text").collect()
     }
     # N=3; df: apple 2, banana 2, cherry 2, common 3
     # doc1: apple tf2 -> 2*1500=3000; common tf3 -> 3*1000=3000; banana 1500
@@ -647,7 +652,7 @@ def test_sessionize_gap_semantics(spark):
     df = spark.createDataFrame(rows)
     got = {
         r["event_id"]: (r["user_id"], r["session_idx"], r["is_start"])
-        for r in sessionize(df, "user_id", "ts", "event_id", gap_sec=1800).collect()
+        for r in sessionize(df, "user_id", "ts", "event_id").collect()
     }
     assert got == {
         1: (1, 1, 1),
@@ -784,9 +789,7 @@ def test_chunk_documents_layout(spark):
         Row(id="b", text="only three words"),  # single short chunk
         Row(id="c", text="   "),  # empty -> no chunks
     ]
-    out = chunk_documents(
-        spark.createDataFrame(rows), "id", "text", chunk=32, stride=24
-    ).collect()
+    out = chunk_documents(spark.createDataFrame(rows), "id", "text").collect()
     got = {(r["id"], r["chunk_idx"]): (r["n_tokens"], r["chunk_text"]) for r in out}
     assert {k[0] for k in got} == {"a", "b"}
     a_idx = sorted(i for (d, i) in got if d == "a")
@@ -804,9 +807,7 @@ def test_chunk_documents_overlap_covers_stream(spark):
     for n in (1, 31, 32, 33, 56, 57, 100):
         words = [f"t{i}" for i in range(n)]
         rows = [Row(id="d", text=" ".join(words))]
-        chunks = chunk_documents(
-            spark.createDataFrame(rows), "id", "text", chunk=32, stride=24
-        ).collect()
+        chunks = chunk_documents(spark.createDataFrame(rows), "id", "text").collect()
         covered = set()
         for r in chunks:
             toks = r["chunk_text"].split()

@@ -172,9 +172,7 @@ def test_lsh_near_neighbors_matches_hof_verify(spark, rand_vecs):
 
     new = sorted(
         (r["id_a"], r["id_b"])
-        for r in SS.lsh_near_neighbors(
-            rand_vecs, dim=64, n_planes=4, min_cos=0.05
-        ).collect()
+        for r in SS.lsh_near_neighbors(rand_vecs, n_planes=4, min_cos=0.05).collect()
     )
     # the pre-r7 shape: pairs joined to raw vectors, HOF cosine per pair
     v = rand_vecs.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))

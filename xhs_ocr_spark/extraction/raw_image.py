@@ -32,8 +32,13 @@ alpha would corrupt the encoded text, so the library only emits 0/255
 
 The invariant this module is tested against: for every media_ref,
 ``extract_from_bytes(render_media_image(ref), mask_library())`` equals
-``semantics.extract_media_span(ref)`` byte-for-byte — the hash-derived
-stand-in and the pixel path are two faces of one semantics definition.
+``semantics.extract_media_span(ref)`` byte-for-byte. The hash-derived
+stand-in and the pixel path are two faces of one semantics definition:
+they differ only in how a mask selects the visible blocks (region
+indexes vs composite + pixel decode), and both hand those blocks to the
+one mask-try body, ``semantics.masked_span``. ``extract_batch`` is the
+same flow over a whole Arrow column, checked against
+``extract_from_bytes`` payload by payload.
 """
 
 from __future__ import annotations
@@ -50,11 +55,11 @@ from .semantics import (
     TAG_FIELDS,
     TAGS,
     TRAFFIC_PREFIX,
+    arity,
     content_type,
+    masked_span,
     media_app,
     media_tag,
-    normalize_ocr_text,
-    reading_order,
     run_standin_ocr,
     strip_tag_digits,
     strips_cjk,
@@ -83,6 +88,7 @@ ALL_MASKS_FAILED = "all_masks_failed"
 # hardware captured it (header byte 6) and the engine looks its masks up
 # under that hw — exercised with BOTH values (round-2 verdict item 7).
 HW_VALUES = ("aibox", "futurecloud")
+APPS = ("xhs", "tiktok")  # header byte 4 == 1 reads tiktok, anything else xhs
 
 
 def media_hw(media_ref: str) -> str:
@@ -114,7 +120,7 @@ def render_media_image(media_ref: str, noise_rows: int = 0) -> bytes:
     header[0], header[1] = MAGIC
     header[2] = VERSION
     header[3] = TAGS.index(tag)
-    header[4] = 1 if app == "tiktok" else 0
+    header[4] = APPS.index(app)
     header[5] = n_blocks
     header[6] = HW_VALUES.index(media_hw(media_ref))
 
@@ -152,21 +158,30 @@ def decode_image(img_bytes: bytes) -> np.ndarray:
     return arr.reshape(rows, W, 4)
 
 
-def read_header(img: np.ndarray) -> tuple[str, str, int]:
-    """(tag, app, n_blocks) from the header band; raises on bad magic."""
+def read_header(img: np.ndarray) -> tuple[str, str, str, int]:
+    """(tag, app, hw, n_blocks) from the header band; raises on bad magic,
+    version or tag. hw is the hardware that captured the screenshot
+    (header byte 6, taken modulo len(HW_VALUES)). read_headers is the
+    same read over an Arrow column."""
     h = img[_band_rows(0)].reshape(-1)[:7].tolist()  # python ints (r7)
     if (h[0], h[1]) != MAGIC or h[2] != VERSION:
         raise ValueError("not a raw media image")
-    tag = TAGS[h[3]]
-    app = "tiktok" if h[4] == 1 else "xhs"
-    return tag, app, h[5]
+    return TAGS[h[3]], APPS[h[4] == 1], HW_VALUES[h[6] % len(HW_VALUES)], h[5]
 
 
-def read_hw(img: np.ndarray) -> str:
-    """Hardware that captured the screenshot (header byte 6). Legacy
-    payloads (byte 6 == 0) read as HW_VALUES[0]."""
-    h = img[_band_rows(0)].reshape(-1)
-    return HW_VALUES[int(h[6]) % len(HW_VALUES)]
+def read_headers(payloads: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """read_header over an Arrow binary column, with no per-row Python:
+    ``(idx, h)``, the indexes of the payloads whose header decodes
+    (non-NULL, whole pixel rows, at least the header band, MAGIC,
+    VERSION and a known tag index) and their header bytes 0-6, one int64
+    row per payload. The payloads read_header raises on are left out."""
+    starts, lengths, data, valid = _binary_view(payloads)
+    c = np.flatnonzero(
+        valid & (lengths % _ROW_BYTES == 0) & (lengths >= HEADER_BANDS * _BAND_BYTES)
+    )
+    h = data[starts[c, None] + np.arange(7)].astype(np.int64)
+    ok = (h[:, 0] == MAGIC[0]) & (h[:, 1] == MAGIC[1]) & (h[:, 2] == VERSION) & (h[:, 3] < len(TAGS))
+    return c[ok], h[ok]
 
 
 def decode_blocks(img: np.ndarray, n_blocks: int) -> list[dict]:
@@ -207,7 +222,7 @@ def render_mask(tag: str, mask_order: int) -> bytes:
     Mask height encodes the geometry guard: a mask taller than the
     image's content extent cannot apply (semantics.mask_regions returning
     None; reference shape check core/run.py:396-399)."""
-    need = 8 if tag.startswith(TRAFFIC_PREFIX) else len(TAG_FIELDS[tag])
+    need = arity(tag)
     lo = mask_order
     rows = (HEADER_BANDS + lo + need) * BH
     mask = np.zeros((rows, W, 4), dtype=np.uint8)
@@ -257,10 +272,7 @@ def masks_by_key(rows: list[dict]) -> dict[tuple[str, str, str], list[bytes]]:
 # Per-worker cache of DECODED masks (r7): extract_from_bytes used to
 # decode_image(mask_bytes) per image x mask try. The library is tiny and
 # immutable per run, so each worker decodes it once; keyed by id() of
-# the broadcast value (one object per worker). Each entry carries the
-# decoded alpha plane and whether it is binary {0, 255} — true for every
-# library mask by construction (the payload is byte-encoded; docstring
-# at the top of this file) — which enables the integer fast composite.
+# the broadcast value (one object per worker).
 _MASK_CACHE: dict = {}
 
 
@@ -273,25 +285,13 @@ def _mask_cache(masks) -> dict:
     return cache
 
 
-def _decoded_masks(masks, key):
+def _decoded_masks(masks, key) -> list[np.ndarray]:
+    """The alpha plane ``alpha / 255`` (float64, one row per pixel row)
+    of each mask of ``key`` in mask order, decoded once per worker."""
     cache = _mask_cache(masks)
-    entry = cache.get(key)
-    if entry is None:
-        entry = []
-        for mask_bytes in masks.get(key, []):
-            mask = decode_image(mask_bytes)
-            alpha_u8 = mask[:, :, 3]
-            is_binary = bool(np.isin(alpha_u8, (0, 255)).all())
-            entry.append(
-                (
-                    mask.shape[0],
-                    (alpha_u8 == 255).astype(np.uint8)[:, :, np.newaxis],
-                    alpha_u8 / 255.0,
-                    is_binary,
-                )
-            )
-        cache[key] = entry
-    return entry
+    if key not in cache:
+        cache[key] = [decode_image(m)[:, :, 3] / 255.0 for m in masks.get(key, [])]
+    return cache[key]
 
 
 def extract_from_bytes(
@@ -300,96 +300,51 @@ def extract_from_bytes(
 ) -> str | None:
     """The reference's per-image flow over REAL bytes (core/run.py:375-501):
     ordered mask fallback, size guard, alpha composite, OCR-decode of the
-    surviving regions, reading order, normalization, pairing + arity gates.
-    The (app, hw, tag) mask lookup key comes entirely from the image
-    header — like the reference derives it from the screenshot's
-    directory placement (core/run.py:364-373).
+    surviving regions, then semantics.masked_span (reading order,
+    normalization, pairing + arity gates). The (app, hw, tag) mask lookup
+    key comes entirely from the image header — like the reference derives
+    it from the screenshot's directory placement (core/run.py:364-373).
 
     Must equal semantics.extract_media_span(media_ref) for images rendered
     by render_media_image(media_ref) — enforced by the differential test."""
     img = decode_image(img_bytes)
-    tag, app, n_blocks = read_header(img)
-    hw = read_hw(img)
-    fields = TAG_FIELDS[tag]
+    tag, app, hw, n_blocks = read_header(img)
     content_rows = (HEADER_BANDS + n_blocks) * BH
 
-    for mask_rows, keep_u8, alpha_f64, is_binary in _decoded_masks(
-        masks, (app, hw, tag)
-    ):
+    for alpha in _decoded_masks(masks, (app, hw, tag)):
+        mask_rows = len(alpha)
         if mask_rows > content_rows:
             continue  # size guard (core/run.py:396-399): mask can't apply
         # THE reference pixel math (core/run.py:402-404): extract alpha,
         # normalize, multiply. Content rows beyond the mask extent are
         # zeroed (alpha 0), like regions outside the reference's mask.
-        # r7 fast path: the library's masks are binary {0,255} alpha by
-        # construction, and for binary alpha the float multiply is
-        # exactly x*1.0=x / x*0.0=0 — the uint8 multiply by the 0/1 keep
-        # plane is BIT-identical output for a fraction of the flops and
-        # no float64 round-trip. Any mask with fractional alpha (an
-        # external drop-in) takes the reference float path unchanged.
         composited = np.zeros_like(img)
-        if is_binary:
-            composited[:mask_rows] = img[:mask_rows] * keep_u8
-        else:
-            composited[:mask_rows] = (
-                img[:mask_rows] * alpha_f64[:, :, np.newaxis]
-            ).astype(np.uint8)
-
-        visible = decode_blocks(composited, n_blocks)
-        ordered = reading_order(visible)
-        texts = []
-        for b in ordered:
-            t = normalize_ocr_text(str(b["text"]), tag, app)
-            if t:
-                texts.append(t)
-        span = _gated_span(texts, tag, app, fields)
+        composited[:mask_rows] = (img[:mask_rows] * alpha[:, :, np.newaxis]).astype(np.uint8)
+        span = masked_span(decode_blocks(composited, n_blocks), tag, app)
         if span is not None:
             return span
     return None
 
 
-def _gated_span(texts: list[str], tag: str, app: str, fields: list[str]) -> str | None:
-    """Traffic pairing + F7 arity gate over one mask try's normalized
-    texts in reading order; None = the gate failed, try the next mask."""
-    if tag.startswith(TRAFFIC_PREFIX):
-        if len(texts) == 8:
-            texts = ["|".join(f"{texts[i]}:{texts[i+1]}" for i in range(0, 8, 2))]
-        else:
-            texts = []
-    if len(texts) != len(fields):
-        return None
-    body = "|".join(f"{f}={v}" for f, v in zip(fields, texts))
-    return f"{strip_tag_digits(tag)};{content_type(tag, app)};{body}"
-
-
 def _band_plan(masks, key) -> list[tuple[int, tuple[int, ...]]] | None:
-    """Per worker, once per (app, hw, tag): ``(mask_rows, kept regions)``
-    per mask in mask order when EVERY mask's keep plane is binary and
-    uniform over each band — then the composite is exactly band selection
-    (a kept band is copied whole, every other band is zeroed, and a zeroed
-    band can never show MARKER, which is non-zero). None otherwise."""
-    cache = _mask_cache(masks)
-    plan_key = ("band_plan",) + key
-    if plan_key not in cache:
-        plan = []
-        for mask_rows, keep_u8, _, is_binary in _decoded_masks(masks, key):
-            if not is_binary or mask_rows % BH:
-                plan = None
-                break
-            per_band = keep_u8.reshape(mask_rows // BH, -1)
-            if not (per_band == per_band[:, :1]).all():
-                plan = None
-                break
-            kept = per_band[:, 0].tolist()
-            regions = tuple(
-                r for r in range(len(kept) - HEADER_BANDS) if kept[HEADER_BANDS + r]
-            )
-            plan.append((mask_rows, regions))
-        cache[plan_key] = plan
-    return cache[plan_key]
-
-
-_APPS = ("xhs", "tiktok")  # header byte 4 == 1 reads tiktok, anything else xhs
+    """``(mask_rows, kept regions)`` per mask of ``key`` in mask order
+    when EVERY mask's alpha plane is 0 or 1 and uniform over each band —
+    then the composite is exactly band selection (a kept band is copied
+    whole, every other band is zeroed, and a zeroed band can never show
+    MARKER, which is non-zero). None otherwise."""
+    plan = []
+    for alpha in _decoded_masks(masks, key):
+        mask_rows = len(alpha)
+        if mask_rows % BH:
+            return None
+        per_band = alpha.reshape(mask_rows // BH, -1)
+        if not (np.isin(per_band, (0.0, 1.0)).all() and (per_band == per_band[:, :1]).all()):
+            return None
+        kept = per_band[:, 0].tolist()
+        plan.append(
+            (mask_rows, tuple(r for r in range(len(kept) - HEADER_BANDS) if kept[HEADER_BANDS + r]))
+        )
+    return plan
 
 
 def _arrow_tables(masks) -> dict:
@@ -400,12 +355,12 @@ def _arrow_tables(masks) -> dict:
     - ``vouched[key]``: the key's masks are pure band selection (_band_plan);
     - ``rows[key, j]`` / ``keep[key, j, r]``: mask j's height and its kept
       regions (a missing mask j never applies);
-    - per ``ta``: the gate arity and ``leads``, the pieces _gated_span puts
-      before the p-th text (the span prefix and field name before the
-      first), flat at ``ta * width + p``."""
+    - per ``ta``: the gate arity (semantics.arity) and ``leads``, the
+      pieces semantics.masked_span puts before the p-th text (the span
+      prefix and field name before the first), flat at ``ta * width + p``."""
     cache = _mask_cache(masks)
     if "arrow" not in cache:
-        keys = [(app, hw, tag) for tag in TAGS for app in _APPS for hw in HW_VALUES]
+        keys = [(app, hw, tag) for tag in TAGS for app in APPS for hw in HW_VALUES]
         plans = [_band_plan(masks, k) for k in keys]
         n_masks = max([1] + [len(p) for p in plans if p])
         n_regions = 1 + max([0] + [r for p in plans if p for _, rs in p for r in rs])
@@ -417,7 +372,7 @@ def _arrow_tables(masks) -> dict:
                 keep[k, j, list(regions)] = True
         leads = []
         for tag in TAGS:
-            for app in _APPS:
+            for app in APPS:
                 f = TAG_FIELDS[tag]
                 head = f"{strip_tag_digits(tag)};{content_type(tag, app)};{f[0]}="
                 if tag.startswith(TRAFFIC_PREFIX):  # 8 texts pair into f[0]
@@ -429,8 +384,8 @@ def _arrow_tables(masks) -> dict:
             "vouched": np.array([p is not None for p in plans]),
             "rows": rows,
             "keep": keep,
-            "arity": np.array([len(lead) for lead in leads]),
-            "cjk": np.array([strips_cjk(tag, app) for tag in TAGS for app in _APPS]),
+            "arity": np.array([arity(tag) for tag in TAGS for _ in APPS]),
+            "cjk": np.array([strips_cjk(tag, app) for tag in TAGS for app in APPS]),
             "width": width,
             "leads": pa.array([x for lead in leads for x in lead + [""] * (width - len(lead))]),
         }
@@ -502,20 +457,14 @@ def extract_batch(payloads: pa.Array, masks) -> tuple[pa.Array, pa.Array]:
     if not n:
         return pa.nulls(0, pa.string()), pa.nulls(0, pa.string())
     tb = _arrow_tables(masks)
-    starts, lengths, data, valid = _binary_view(payloads)
-    fast = np.zeros(n, dtype=bool)
-    c = np.flatnonzero(
-        valid & (lengths % _ROW_BYTES == 0) & (lengths >= HEADER_BANDS * _BAND_BYTES)
-    )
-    h = data[starts[c, None] + np.arange(7)].astype(np.int64)  # header bytes 0-6
+    starts, lengths, data, _ = _binary_view(payloads)
+    c, h = read_headers(payloads)
     n_blocks = h[:, 5]
-    ta = np.minimum(h[:, 3], len(TAGS) - 1) * 2 + (h[:, 4] == 1)
+    ta = h[:, 3] * 2 + (h[:, 4] == 1)
     key = ta * len(HW_VALUES) + h[:, 6] % len(HW_VALUES)
+    fast = np.zeros(n, dtype=bool)
     fast[c] = (
-        (h[:, 0] == MAGIC[0]) & (h[:, 1] == MAGIC[1]) & (h[:, 2] == VERSION)
-        & (h[:, 3] < len(TAGS)) & (n_blocks > 0)
-        & (lengths[c] >= (HEADER_BANDS + n_blocks) * _BAND_BYTES)
-        & tb["vouched"][key]
+        (n_blocks > 0) & (lengths[c] >= (HEADER_BANDS + n_blocks) * _BAND_BYTES) & tb["vouched"][key]
     )
 
     # one element per band that carries MARKER, in (image, region) order;

@@ -5,6 +5,10 @@ verbatim by BOTH the pure-Python reference oracle (tests) and the Spark
 pipeline's vectorized UDFs. That guarantees the BASELINE.json invariant
 (per-document span-sequence equality on (kind, text, media_ref, order))
 is checked against one implementation of the rules, not two drifting ones.
+The two faces of the media path (the hash-derived stand-in here and
+raw_image's pixel path) differ only in how a mask selects blocks; both
+run the one mask-try body, ``masked_span``, with the one tag arity,
+``arity``.
 
 Reference behaviors re-implemented (citations into /root/reference):
 - tag -> ordered field list registry            config.ini:1-12
@@ -83,6 +87,14 @@ def _h64(s: str) -> int:
 _VALUE_STYLES = 6
 
 
+def arity(tag: str) -> int:
+    """OCR texts a mask of this tag must show: the field count, except
+    that note_traffic_analysis needs the 8 texts that pair into its one
+    field. The reference gates on filename.startswith (core/run.py:478),
+    so video_traffic_analysis keeps its plain config arity (1)."""
+    return 8 if tag.startswith(TRAFFIC_PREFIX) else len(TAG_FIELDS[tag])
+
+
 def media_tag(media_ref: str) -> str:
     """Tag (screenshot kind) encoded by the media object."""
     return TAGS[_h64("tag:" + media_ref) % len(TAGS)]
@@ -133,11 +145,7 @@ def run_standin_ocr(media_ref: str) -> dict:
     """
     h = _h64("doc:" + media_ref)
     tag = media_tag(media_ref)
-    # only note_traffic_analysis needs the 8 pairing texts — the reference
-    # gates on filename.startswith (core/run.py:478), so
-    # video_traffic_analysis needs its plain config arity (1)
-    need = 8 if tag.startswith(TRAFFIC_PREFIX) else len(TAG_FIELDS[tag])
-    n_blocks = need + 2 + h % 3
+    n_blocks = arity(tag) + 2 + h % 3
     blocks = []
     for i in range(n_blocks):
         hb = _h64(f"box:{media_ref}:{i}")
@@ -167,7 +175,7 @@ def mask_regions(tag: str, mask_order: int, n_blocks: int) -> list[int] | None:
     Returns None when the mask geometry can't apply (reference analog:
     size-mismatch guard, core/run.py:396-399).
     """
-    need = 8 if tag.startswith(TRAFFIC_PREFIX) else len(TAG_FIELDS[tag])
+    need = arity(tag)
     lo = mask_order
     if lo + need > n_blocks:
         return None
@@ -331,7 +339,6 @@ def extract_media_span(media_ref: str) -> str | None:
     """
     tag = media_tag(media_ref)
     app = media_app(media_ref)
-    fields = TAG_FIELDS[tag]
     full = run_standin_ocr(media_ref)
     if full["code"] != 100:  # F5 status gate (core/run.py:446-450)
         return None
@@ -342,28 +349,30 @@ def extract_media_span(media_ref: str) -> str | None:
         regions = mask_regions(tag, mask_order, n_blocks)
         if regions is None:
             continue  # geometry guard — try next mask
-        visible = [by_region[r] for r in regions if r in by_region]
-        ordered = reading_order(visible)
-        texts = []
-        for b in ordered:
-            t = normalize_ocr_text(str(b["text"]), tag, app)
-            if t:
-                texts.append(t)
-        if tag.startswith(TRAFFIC_PREFIX):
-            # pairing gate: exactly 8 texts -> 1 combined value
-            # (note_traffic_analysis ONLY, per core/run.py:478)
-            if len(texts) == 8:
-                texts = ["|".join(f"{texts[i]}:{texts[i+1]}" for i in range(0, 8, 2))]
-            else:
-                texts = []
-        if len(texts) != len(fields):
-            continue  # F7 arity gate -> next mask
-        # NOTE: chinese-number conversion is NOT applied here — the
-        # reference applies it only on the JSON sidecar user-info path
-        # (core/run.py:320-323), never to OCR values.
-        body = "|".join(f"{f}={v}" for f, v in zip(fields, texts))
-        return f"{strip_tag_digits(tag)};{content_type(tag, app)};{body}"
+        span = masked_span([by_region[r] for r in regions if r in by_region], tag, app)
+        if span is not None:
+            return span
     return None
+
+
+def masked_span(visible: list[dict], tag: str, app: str) -> str | None:
+    """One mask try over the blocks the mask leaves visible: reading
+    order, normalization, empty texts dropped, the traffic pairing gate
+    (note_traffic_analysis ONLY, core/run.py:478-485: exactly 8 texts ->
+    1 combined value) and the F7 arity gate (core/run.py:486-490). None =
+    a gate failed, try the next mask.
+
+    Chinese-number conversion is NOT applied here: the reference applies
+    it only on the JSON sidecar user-info path (core/run.py:320-323),
+    never to OCR values."""
+    texts = [t for b in reading_order(visible) if (t := normalize_ocr_text(str(b["text"]), tag, app))]
+    if tag.startswith(TRAFFIC_PREFIX):
+        texts = ["|".join(f"{texts[i]}:{texts[i+1]}" for i in range(0, 8, 2))] if len(texts) == 8 else []
+    fields = TAG_FIELDS[tag]
+    if len(texts) != len(fields):
+        return None
+    body = "|".join(f"{f}={v}" for f, v in zip(fields, texts))
+    return f"{strip_tag_digits(tag)};{content_type(tag, app)};{body}"
 
 
 # ---------------------------------------------------------------------------

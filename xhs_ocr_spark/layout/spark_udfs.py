@@ -15,13 +15,6 @@ from pyspark.sql import DataFrame
 
 from . import get_parser
 
-BLOCK_SCHEMA = T.StructType(
-    [
-        T.StructField("box", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("score", T.DoubleType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
 BLOCK_OUT_SCHEMA = T.StructType(
     [
         T.StructField("box", T.ArrayType(T.ArrayType(T.DoubleType()))),

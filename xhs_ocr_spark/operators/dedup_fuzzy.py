@@ -390,7 +390,10 @@ def neardup_components(pairs: DataFrame, checkpoint_dir: str | None = None) -> D
     return labels.select("id", "comp")
 
 
-def simhash(text_col, bits: int = 16):
+SIMHASH_BITS = 16  # output bits of simhash
+
+
+def simhash(text_col):
     """SimHash over word hashes: bit j of the output is the sign of the
     sum over words of (+1 if bit j of h64(word) else -1).
 
@@ -410,7 +413,7 @@ def simhash(text_col, bits: int = 16):
             F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1
         ).otherwise(-1)
 
-    bit_votes = [F.aggregate(hs, F.lit(0), vote_for_bit(j)) for j in range(bits)]
+    bit_votes = [F.aggregate(hs, F.lit(0), vote_for_bit(j)) for j in range(SIMHASH_BITS)]
     out = F.lit(0).cast("long")
     for j, vote in enumerate(bit_votes):
         out = out + F.when(vote > 0, F.lit(2**j).cast("long")).otherwise(F.lit(0).cast("long"))
@@ -608,15 +611,16 @@ def rebuild_first_paragraphs(rows: DataFrame) -> DataFrame:
     return kept.groupBy("doc_id").agg(ordered_join("para_idx", "para").alias("text"))
 
 
-def paragraph_dedup(
-    df: DataFrame, id_col: str, text_col: str, size: int = 4
-) -> DataFrame:
+PARAGRAPH_SIZE = 4  # words per paragraph window of paragraph_dedup (q45)
+
+
+def paragraph_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Paragraph-level exact dedup (Falcon/RefinedWeb-style boilerplate
     killer): explode documents to normalized paragraphs, fingerprint
     each (paragraph_rows), keep the FIRST occurrence (min (doc_id,
     para_idx)) of every fingerprint and flag the rest
     (first_occurrence). Returns (doc_id, para_idx, fp, keep 0/1)."""
-    rows = paragraph_rows(df, id_col, text_col, size).drop("para")
+    rows = paragraph_rows(df, id_col, text_col, PARAGRAPH_SIZE).drop("para")
     return first_occurrence(rows, "fp", ["doc_id", "para_idx"]).select(
         "doc_id", "para_idx", "fp", F.col("is_first").cast("long").alias("keep")
     )
@@ -648,13 +652,15 @@ def substring_windows(text_col, k: int = 8):
     return F.when(n >= k, win).otherwise(F.array().cast("array<string>"))
 
 
-def substring_dedup_stats(
-    df: DataFrame, id_col: str, text_col: str, k: int = 8
-) -> DataFrame:
+SUBSTRING_K = 8  # window tokens of substring_dedup_stats (q49)
+
+
+def substring_dedup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Cross-document duplicate-SPAN detection (the last standard
     training-data dedup primitive, round-4 verdict item 5): a k-token
-    window whose fingerprint occurred earlier in the corpus — in another
-    document, or earlier in the same one — is a duplicate span; every
+    window (k = SUBSTRING_K) whose fingerprint occurred earlier in the
+    corpus — in another document, or earlier in the same one — is a
+    duplicate span; every
     token position it covers is flagged. First occurrence is the corpus
     order (doc_id, window_index), so a doc quoting another mid-paragraph
     is flagged in exactly one of the two (the later doc).
@@ -675,6 +681,7 @@ def substring_dedup_stats(
     group equality reaches the output, so the results agree bit-for-bit
     without a portable hash (unlike q24-q27, nothing hash-valued is
     emitted)."""
+    k = SUBSTRING_K
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
     w = (
         base.transform(spread, "id")

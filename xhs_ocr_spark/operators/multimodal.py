@@ -1,15 +1,17 @@
 """Multimodal columns: header metadata decoded from the engine's raw-RGBA
 screenshot payloads (extraction/raw_image.py), the q39 path.
 
-The decode is real numpy array math over the payload bytes inside one
-Arrow-batched Python stage; no external image library is needed.
+The decode is numpy array math over the payload column's Arrow buffers
+(raw_image.read_headers) inside one mapInArrow stage: no per-row Python
+and no external image library.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
@@ -30,22 +32,24 @@ def raw_media_metadata(media: DataFrame) -> DataFrame:
     over Arrow batches. Undecodable payloads drop (dead-letter by
     omission)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..extraction import raw_image as RI
 
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["media_ref"], pdf["media_bytes"]):
-                try:  # decode ONCE per payload
-                    img = RI.decode_image(bytes(content))
-                    tag, app, n_blocks = RI.read_header(img)
-                except Exception:
-                    continue
-                # hardware that captured the screenshot (header byte 6) —
-                # the reference's images/<app>/<hw>/ dimension
-                rows.append((ref, tag, app, RI.read_hw(img), n_blocks, len(content)))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "tag", "app", "hw", "n_blocks", "n_bytes"]
+        for batch in batches:
+            payloads = batch.column("media_bytes")
+            idx, h = RI.read_headers(payloads)
+            # header byte 6 is the hardware that captured the screenshot,
+            # the reference's images/<app>/<hw>/ dimension
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("media_ref").take(idx),
+                    pa.array(RI.TAGS).take(h[:, 3]),
+                    pa.array(RI.APPS).take((h[:, 4] == 1).astype(int)),
+                    pa.array(RI.HW_VALUES).take(h[:, 6] % len(RI.HW_VALUES)),
+                    pa.array(h[:, 5], pa.int32()),
+                    pc.binary_length(payloads).take(idx).cast(pa.int64()),
+                ],
+                names=RAW_META_SCHEMA.fieldNames(),
             )
 
-    return media.mapInPandas(run, schema=RAW_META_SCHEMA)
+    return media.mapInArrow(run, schema=RAW_META_SCHEMA)

@@ -38,7 +38,7 @@ from pyspark.sql.window import Window
 from .textops import sample_bucket_x1000
 
 BUDGET_SHARDS = 64  # token_budget_select's shards per score value
-EPOCH_SALT = "epoch-0"  # the default shuffle salt; pack_sequences always uses it
+EPOCH_SALT = "epoch-0"  # the shuffle salt of epoch_shuffle_positions and pack_sequences
 
 
 def token_budget_select(
@@ -181,11 +181,11 @@ def two_level_cumsum(
 
 
 def epoch_shuffle_positions(
-    df: DataFrame, id_col: str, salt: str = EPOCH_SALT, prefix_len: int = 2
+    df: DataFrame, id_col: str, prefix_len: int = 2
 ) -> DataFrame:
     """Deterministic corpus shuffle for a training epoch: every row gets
     a global 1-based position under the pseudo-random total order
-    md5(salt || id). Reshuffling is free (change the salt), reproducible
+    md5(EPOCH_SALT || id). Reshuffling is free (change the salt), reproducible
     across runs/cluster sizes, and — because the grouping key is a
     PREFIX of the order key — the (group, key) order IS the key order,
     so the oracle is a plain ``row_number() OVER (ORDER BY md5(...))``.
@@ -203,7 +203,7 @@ def epoch_shuffle_positions(
 
     Returns (id, shuffle_key, pos).
     """
-    key = F.md5(F.concat(F.lit(f"{salt}|"), F.col(id_col).cast("string")))
+    key = F.md5(F.concat(F.lit(f"{EPOCH_SALT}|"), F.col(id_col).cast("string")))
     base = df.select(
         F.col(id_col),
         key.alias("shuffle_key"),

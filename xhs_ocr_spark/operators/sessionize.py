@@ -18,18 +18,19 @@ from pyspark.sql.window import Window
 
 from ..session import spread
 
+SESSION_GAP_SEC = 1800  # a silence longer than this ends a session
+
 
 def sessionize(
     df: DataFrame,
     key_col: str,
     ts_col: str,
     order_col: str,
-    gap_sec: int = 1800,
 ) -> DataFrame:
     """Assign a 1-based ``session_idx`` per key under (ts, order) order;
     a new session starts when the gap to the previous event exceeds
-    ``gap_sec``. ``order_col`` must make the per-key order total (a
-    unique event id). Returns (order_col, key_col, session_idx,
+    SESSION_GAP_SEC seconds. ``order_col`` must make the per-key order
+    total (a unique event id). Returns (order_col, key_col, session_idx,
     is_start).
     """
     w = Window.partitionBy(key_col).orderBy(F.asc(ts_col), F.asc(order_col))
@@ -38,7 +39,7 @@ def sessionize(
         prev.isNull()
         | (
             F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev)
-            > F.lit(int(gap_sec))
+            > F.lit(SESSION_GAP_SEC)
         ),
         F.lit(1),
     ).otherwise(F.lit(0))
@@ -59,7 +60,6 @@ def sessionize_bucketed(
     key_col: str,
     ts_col: str,
     order_col: str,
-    gap_sec: int = 1800,
     bucket_sec: int = 86400,
 ) -> DataFrame:
     """Skew-safe sessionization, semantically IDENTICAL to sessionize():
@@ -72,13 +72,15 @@ def sessionize_bucketed(
     for years of days).
 
     Stitch: bucket b's first session merges into the previous ACTIVE
-    bucket's last session iff the boundary gap <= gap_sec (carry=1).
+    bucket's last session iff the boundary gap <= SESSION_GAP_SEC
+    (carry=1).
     Global index = offset + local_idx - carry, where offset is the
     per-key running sum of (local_sessions - carry) over previous
     buckets — chained merges (a session spanning many buckets) collapse
     correctly because each bucket's first session joins the running
-    previous one. Works for any bucket_sec, including < gap_sec (empty
-    buckets inside a long session are skipped by the active-bucket lag).
+    previous one. Works for any bucket_sec, including < SESSION_GAP_SEC
+    (empty buckets inside a long session are skipped by the active-bucket
+    lag).
     """
     u = F.unix_timestamp(F.col(ts_col))
     e = df.select(
@@ -94,7 +96,7 @@ def sessionize_bucketed(
     )
     prev = F.lag(F.col(ts_col)).over(w)
     brk = F.when(
-        prev.isNull() | (u - F.unix_timestamp(prev) > F.lit(int(gap_sec))),
+        prev.isNull() | (u - F.unix_timestamp(prev) > F.lit(SESSION_GAP_SEC)),
         F.lit(1),
     ).otherwise(F.lit(0))
     wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -120,7 +122,7 @@ def sessionize_bucketed(
         prev_last.isNotNull()
         & (
             F.unix_timestamp(F.col("_first_ts")) - F.unix_timestamp(prev_last)
-            <= F.lit(int(gap_sec))
+            <= F.lit(SESSION_GAP_SEC)
         ),
         F.lit(1),
     ).otherwise(F.lit(0))

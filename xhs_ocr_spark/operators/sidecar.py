@@ -24,13 +24,6 @@ from pyspark.sql import Column, DataFrame
 
 from ..functions.columns import chinese_number_to_long
 
-USER_INFO_FLAVORS = {
-    ("user_info.json", "tiktok"),
-    ("user_info.json", "weibo"),
-    ("profile_url.json", "xhs"),
-}
-POST_FLAVORS = {("post_data.json", "tiktok"), ("weibo_data.json", "weibo")}
-
 POST_SCHEMA = T.ArrayType(
     T.StructType(
         [

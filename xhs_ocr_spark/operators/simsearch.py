@@ -26,6 +26,8 @@ from .dedup_fuzzy import shard_pairs
 
 N_PLANES = 8
 PLANE_MOD = 997
+TOP_K = 3  # neighbors ranked per query (cosine_topk, ivf_topk_kmeans)
+LSH_DIM = 64  # embedding width lsh_near_neighbors draws its hyperplanes for
 
 
 def hyperplane(dim: int, p: int) -> list[float]:
@@ -67,11 +69,10 @@ def _rank_topk(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int,
     cells: tuple[Column, Column] | None = None,
     dedupe: bool = False,
 ) -> DataFrame:
-    """The one top-k body: (q_id, n_id, rank) for the k best cosine
+    """The one top-k body: (q_id, n_id, rank) for the TOP_K best cosine
     neighbors of each query, its own id excluded, ties to the lower
     n_id. The query side is broadcast. With ``cells`` = (corpus cell,
     query cell) column expressions over ``n_vec`` / ``q_vec`` it is
@@ -111,7 +112,7 @@ def _rank_topk(
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
         .select("q_id", "n_id", F.col("rank").cast("long").alias("rank"))
     )
 
@@ -121,12 +122,11 @@ def cosine_topk(
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 3,
 ) -> DataFrame:
-    """For each query vector: top-k corpus neighbors by cosine (self
+    """For each query vector: top-TOP_K corpus neighbors by cosine (self
     excluded), scoring every corpus vector against the broadcast query
     side."""
-    return _rank_topk(corpus, queries, id_col, vec_col, k)
+    return _rank_topk(corpus, queries, id_col, vec_col)
 
 
 def lsh_bucket(vec_col, dim: int, n_planes: int = N_PLANES):
@@ -249,15 +249,14 @@ def ivf_topk_kmeans(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 3,
     nprobe: int = 1,
     assign_cells: int = 2,
 ) -> DataFrame:
-    """IVF top-k with fitted centroids and multi-cell probing: each corpus
-    vector is indexed under its ``assign_cells`` nearest cells (redundant
-    assignment — the standard recall booster for boundary vectors: a true
-    neighbor sitting just across a Voronoi edge from the query's probed
-    cells is still found via its second-nearest cell; measured on the
+    """IVF top-k (k = TOP_K) with fitted centroids and multi-cell
+    probing: each corpus vector is indexed under its ``assign_cells``
+    nearest cells (redundant assignment — the standard recall booster
+    for boundary vectors: a true neighbor sitting just across a Voronoi
+    edge from the query's probed cells is still found via its second-nearest cell; measured on the
     bench corpus it lifts recall@3 at nprobe=4 from 0.73 to 0.92 for a 2x
     index size); each query probes its ``nprobe`` nearest cells and scores
     only those inverted lists. Raising nprobe trades compute for recall —
@@ -273,14 +272,13 @@ def ivf_topk_kmeans(
         F.explode(probe_cells(F.col("q_vec"), centroids, nprobe)),
     )
     dedupe = nprobe > 1 and assign_cells > 1
-    return _rank_topk(corpus, queries, id_col, vec_col, k, cells, dedupe)
+    return _rank_topk(corpus, queries, id_col, vec_col, cells, dedupe)
 
 
 def lsh_near_neighbors(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     n_planes: int = N_PLANES,
     min_cos: float = 0.6,
 ) -> DataFrame:
@@ -332,7 +330,7 @@ def lsh_near_neighbors(
         "id",
         "vec",
         norm(F.col("vec")).alias("nrm"),
-        lsh_bucket(F.col("vec"), dim, n_planes).alias("bucket"),
+        lsh_bucket(F.col("vec"), LSH_DIM, n_planes).alias("bucket"),
     )
     rows = shard_pairs(
         vb, ["bucket"], F.sort_array(F.collect_list(F.struct("id", "vec", "nrm")))

@@ -174,8 +174,11 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.concat_ws(" ", F.transform(words(text), F.lower)))
 
 
-def tfidf_topk(df, id_col: str, text_col: str, k: int = 3):
-    """Per-document top-k salient terms by an integer-exact TF-IDF-style
+TFIDF_K = 3  # salient terms kept per document (tfidf_topk)
+
+
+def tfidf_topk(df, id_col: str, text_col: str):
+    """Per-document top-TFIDF_K salient terms by an integer-exact TF-IDF-style
     score: score_x1000 = tf * ((N_docs * 1000) DIV df) — monotone in
     tf/df, all integer arithmetic so the DuckDB twin matches
     bit-for-bit (a float log-idf would make rank ties engine-dependent).
@@ -221,7 +224,7 @@ def tfidf_topk(df, id_col: str, text_col: str, k: int = 3):
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TFIDF_K)
         .select(
             F.col("id"),
             "term",
@@ -346,14 +349,19 @@ def unigram_rarity(df, id_col: str, text_col: str, keep_max_x1000: int = 200_000
     )
 
 
-def chunk_documents(df, id_col: str, text_col: str, chunk: int = 32, stride: int = 24):
+CHUNK_TOKENS = 32  # tokens per retrieval chunk (chunk_documents)
+CHUNK_STRIDE = 24  # tokens between chunk starts: 8-token overlap
+
+
+def chunk_documents(df, id_col: str, text_col: str):
     """Retrieval chunking: cut each document's token stream into
-    fixed-size windows with overlap (chunk=32, stride=24 -> 8-token
-    overlap) — the RAG-ingestion sibling of training-sequence packing
-    (q55 packs a global stream; this emits per-document chunks with
+    fixed-size windows with overlap (CHUNK_TOKENS tokens every
+    CHUNK_STRIDE tokens) — the RAG-ingestion sibling of training-sequence
+    packing (q55 packs a global stream; this emits per-document chunks with
     their text, the unit an embedding/retrieval index stores).
 
-    Chunk count is 1 + ceil((n - chunk) / stride) for n > chunk, else 1
+    Chunk count is 1 + ceil((n - c) / s) for n > c, else 1 (c, s the two
+    constants)
     (empty documents emit no chunks); the final chunk is the tail
     remainder. Pure JVM expressions (sequence + slice inside a single
     projection — no explode-then-join, no python), so it runs at scan
@@ -361,14 +369,14 @@ def chunk_documents(df, id_col: str, text_col: str, chunk: int = 32, stride: int
     size.
 
     Returns (id, chunk_idx, n_tokens, chunk_text)."""
-    c, s = int(chunk), int(stride)
+    c, s = CHUNK_TOKENS, CHUNK_STRIDE
     # round-6 ADVICE: stride > chunk silently skipped inter-chunk tokens
     # and could emit empty tail chunks; stride <= 0 looped forever in
     # spirit. Fail loudly — no valid caller wants either.
     if s <= 0 or s > c:
         raise ValueError(
-            f"chunk_documents requires 0 < stride <= chunk, got "
-            f"stride={s}, chunk={c}"
+            f"chunk_documents requires 0 < CHUNK_STRIDE <= CHUNK_TOKENS, got "
+            f"CHUNK_STRIDE={s}, CHUNK_TOKENS={c}"
         )
     toks = df.select(
         F.col(id_col).alias("id"), words(F.col(text_col)).alias("_ws")

@@ -730,7 +730,7 @@ def q_para_dedup(spark, sf):
     exploded to 4-word-window 'paragraphs' (the corpus carries no
     newline structure), fingerprinted, first occurrence keeps."""
     d = _t(spark, sf, "documents")
-    return DF.paragraph_dedup(d, "doc_id", "text", size=4)
+    return DF.paragraph_dedup(d, "doc_id", "text")
 
 
 SQL_PARA_DEDUP = r"""
@@ -955,7 +955,7 @@ FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
 
 def q_simhash(spark, sf):
     d = _t(spark, sf, "documents")
-    return d.select("doc_id", DF.simhash(F.col("text"), bits=16).alias("simhash16"))
+    return d.select("doc_id", DF.simhash(F.col("text")).alias("simhash16"))
 
 
 SQL_SIMHASH = r"""
@@ -1003,7 +1003,7 @@ WHERE inter / CAST(sa.sz + sb.sz - inter AS DOUBLE) >= 0.12
 
 def q_cosine_topk(spark, sf):
     e = _t(spark, sf, "embeddings")
-    return SS.cosine_topk(e, e.where(F.col("vec_id") < 10), k=3)
+    return SS.cosine_topk(e, e.where(F.col("vec_id") < 10))
 
 
 SQL_COSINE_TOPK = """
@@ -1025,7 +1025,7 @@ SELECT q_id, n_id, CAST(rank AS BIGINT) AS rank FROM (
 def q_embedding_neardup(spark, sf):
     """LSH-bucketed near-duplicate pairs over embeddings."""
     e = _t(spark, sf, "embeddings")
-    return SS.lsh_near_neighbors(e, dim=64, n_planes=4, min_cos=0.2)
+    return SS.lsh_near_neighbors(e, n_planes=4, min_cos=0.2)
 
 
 def _sql_embedding_neardup() -> str:
@@ -1058,7 +1058,7 @@ def q_ivf_ann(spark, sf):
     e = _t(spark, sf, "embeddings")
     cents = [SS.centroid(64, c) for c in range(SS.N_CELLS)]
     return SS.ivf_topk_kmeans(
-        e, e.where(F.col("vec_id") < 5), cents, k=3, nprobe=1, assign_cells=1
+        e, e.where(F.col("vec_id") < 5), cents, nprobe=1, assign_cells=1
     )
 
 
@@ -1117,7 +1117,7 @@ def q_substring_dedup(spark, sf):
     5). Per doc: total tokens, tokens covered by duplicate windows, and
     the removal ratio."""
     d = _t(spark, sf, "documents")
-    return DF.substring_dedup_stats(d, "doc_id", "text", k=8).withColumnRenamed(
+    return DF.substring_dedup_stats(d, "doc_id", "text").withColumnRenamed(
         "id", "doc_id"
     )
 
@@ -1332,7 +1332,7 @@ def q_epoch_shuffle(spark, sf):
     lets the oracle harness prove that at a second cardinality."""
     d = _t(spark, sf, "documents")
     plen = int(os.environ.get("XHS_SHUFFLE_PREFIX_LEN", "2"))
-    return SEL.epoch_shuffle_positions(d, "doc_id", salt="epoch-0", prefix_len=plen)
+    return SEL.epoch_shuffle_positions(d, "doc_id", prefix_len=plen)
 
 
 SQL_EPOCH_SHUFFLE = r"""
@@ -1387,7 +1387,7 @@ def q_tfidf_topk(spark, sf):
     per-doc tf table; N is a 1-row broadcast aggregate (collect-free);
     the per-doc top-k window is bounded by a doc's distinct terms."""
     d = _t(spark, sf, "documents")
-    return TX.tfidf_topk(d, "doc_id", "text", k=3).withColumnRenamed("id", "doc_id")
+    return TX.tfidf_topk(d, "doc_id", "text").withColumnRenamed("id", "doc_id")
 
 
 SQL_TFIDF_TOPK = r"""
@@ -1459,7 +1459,7 @@ def q_sessionize(spark, sf):
     ev = _t(spark, sf, "events")
     from .operators.sessionize import sessionize
 
-    return sessionize(ev, "user_id", "ts", "event_id", gap_sec=1800)
+    return sessionize(ev, "user_id", "ts", "event_id")
 
 
 SQL_SESSIONIZE = r"""
@@ -1497,7 +1497,7 @@ def q_sessionize_bucketed(spark, sf):
     from .operators.sessionize import sessionize_bucketed
 
     return sessionize_bucketed(
-        ev, "user_id", "ts", "event_id", gap_sec=1800, bucket_sec=3600
+        ev, "user_id", "ts", "event_id", bucket_sec=3600
     )
 
 
@@ -1597,7 +1597,7 @@ def q_chunk_documents(spark, sf):
     embedding index stores. Pure JVM sequence+slice in one projection
     (no explode-then-join, no python) — scan-speed at any corpus size."""
     d = _t(spark, sf, "documents")
-    return TX.chunk_documents(d, "doc_id", "text", chunk=32, stride=24)
+    return TX.chunk_documents(d, "doc_id", "text")
 
 
 SQL_CHUNK_DOCUMENTS = r"""
@@ -2018,7 +2018,7 @@ def q_ivf_kmeans(spark, sf):
     e = _t(spark, sf, "embeddings")
     cents = SS.fit_centroids_spark(e)
     return SS.ivf_topk_kmeans(
-        e, e.where(F.col("vec_id") < 5), cents, k=3, nprobe=2
+        e, e.where(F.col("vec_id") < 5), cents, nprobe=2
     )
 
 
@@ -2315,12 +2315,9 @@ WITH w AS (
 
 def _sql_need_case() -> str:
     """CASE tag_idx -> expected block count ('need') per tag."""
-    from .extraction.semantics import TAG_FIELDS, TAGS
+    from .extraction.semantics import TAGS, arity
 
-    return " ".join(
-        f"WHEN {i} THEN {8 if t.startswith('note_traffic_analysis') else len(TAG_FIELDS[t])}"
-        for i, t in enumerate(TAGS)
-    )
+    return " ".join(f"WHEN {i} THEN {arity(t)}" for i, t in enumerate(TAGS))
 
 
 def _sql_media_metadata() -> str:
@@ -2380,12 +2377,12 @@ def _sql_base64() -> str:
     import base64 as b64mod
 
     from .extraction.raw_image import BH, HEADER_BANDS, HW_VALUES, MAGIC, VERSION, W
-    from .extraction.semantics import TAG_FIELDS, TAGS
+    from .extraction.semantics import TAGS, arity
 
     row_bytes = W * 4 * BH
     head_cases = []
     for ti, tag in enumerate(TAGS):
-        need = 8 if tag.startswith("note_traffic_analysis") else len(TAG_FIELDS[tag])
+        need = arity(tag)
         for app_i in (0, 1):
             for extra in range(3):
                 for hw_i in range(len(HW_VALUES)):
